@@ -176,6 +176,42 @@ def bit_unpack(buf: bytes | np.ndarray, width: int, n: int, offset_bits: int = 0
     return out
 
 
+def byte_windows(raw: np.ndarray, stop: int) -> np.ndarray:
+    """The 8-byte big-endian window at every byte offset up to ``stop``,
+    for :func:`bit_unpack_runs` (a strided view; zero-padded when ``raw``
+    ends within 8 bytes of ``stop``)."""
+    if len(raw) < stop + 8:
+        pad = np.zeros(stop + 8, dtype=np.uint8)
+        pad[:stop] = raw[:stop]
+        raw = pad
+    return np.ndarray((stop + 1,), dtype=">u8", buffer=raw, strides=(1,))
+
+
+def bit_unpack_runs(win: np.ndarray, byte0, width, cnt) -> np.ndarray:
+    """MSB-first values of many bit-packed runs in one gather -> uint64,
+    run-major (one vector pass however many runs; RLEv2 decode).
+
+    Run ``r`` holds ``cnt[r]`` MSB-first values of ``width[r]`` bits from
+    byte ``byte0[r]``. A value at bit ``b`` is the window ``win[b >> 3]``
+    shifted left by ``b & 7`` and right by ``64 - width``: a table width
+    up to 56 plus a 7-bit phase fits the window, and width-64 runs are
+    byte-aligned, so their phase is 0."""
+    if len(cnt) == 1:  # one run: plain arithmetic, no per-run repeats
+        w = int(width[0])
+        b0 = int(byte0[0]) * 8
+        bitpos = np.arange(b0, b0 + int(cnt[0]) * w, w)
+        shr: np.ndarray | np.uint64 = np.uint64(64 - w)
+    else:
+        wv = np.repeat(width, cnt)
+        first = np.cumsum(cnt) - cnt
+        bitpos = np.repeat(byte0 * 8 - first * width, cnt) + np.arange(len(wv)) * wv
+        shr = (64 - wv).astype(np.uint64)
+    vals = win[bitpos >> 3].astype(np.uint64)
+    vals <<= (bitpos & 7).astype(np.uint64)
+    vals >>= shr
+    return vals
+
+
 def _unpack_window(raw: np.ndarray, width: int, n: int, offset_bits: int) -> np.ndarray:
     """Non-byte-aligned width 9..31, any bit offset: values whose index
     is congruent mod 8 share a bit phase and sit exactly ``width`` bytes

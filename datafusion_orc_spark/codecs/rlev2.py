@@ -14,7 +14,15 @@ Encoder strategy (the E9-adjacent run chooser, SURVEY.md §4.3 heuristic):
      monotonic -> DELTA; p90-width << max-width with <=31 outliers ->
      PATCHED_BASE; else DIRECT.
 
-Decode returns int64 and is loop-per-run (each run decodes vectorized).
+Decode returns int64 in two passes. Pass 1 walks the run headers in one
+scalar loop and records each run's kind, value count and payload
+position; pass 2 decodes each run kind for all of its runs in one vector
+pass (SHORT_REPEAT: one np.repeat; DIRECT and the bit-packed DELTA tails:
+one MSB-first gather; DELTA: one segmented cumsum). So the Python work per
+run is a few scalar steps, not a round of numpy calls. Invariants: the
+final run is clamped to the requested count, DIRECT payloads are
+MSB-first, the int64 wrap (unsigned values >= 2^63, DELTA sums) is exact,
+and a run whose bytes pass the end of the buffer raises ValueError.
 """
 
 from __future__ import annotations
@@ -22,20 +30,20 @@ from __future__ import annotations
 import numpy as np
 
 from datafusion_orc_spark.codecs.bitpack import (
+    WIDTH_TABLE,
     bit_pack,
-    bit_unpack,
+    bit_unpack_runs,
     bit_widths,
+    byte_windows,
     closest_fixed_width,
     decode_width,
     width_code,
 )
 from datafusion_orc_spark.codecs.varint import (
-    varint_decode,
     varint_decode_scalar,
     varint_encode,
     varint_encode_scalar,
     zigzag_decode,
-    zigzag_decode_scalar,
     zigzag_encode,
     zigzag_scalar,
 )
@@ -60,6 +68,9 @@ _SHORT_REPEAT = 0
 _DIRECT = 1
 _PATCHED_BASE = 2
 _DELTA = 3
+_KIND_NAMES = ("SHORT_REPEAT", "DIRECT", "PATCHED_BASE", "DELTA")
+_U64 = 1 << 64
+_BYTE_WIDTHS = {8: np.uint8, 16: ">u2", 32: ">u4", 64: ">u8"}
 
 
 def _msb_bytes(value: int, nbytes: int) -> bytes:
@@ -672,97 +683,235 @@ def rle_v2_encode(vals: np.ndarray, signed: bool = True) -> bytes:
     return bytes(out)
 
 
-def rle_v2_decode(buf: bytes | np.ndarray, n: int, signed: bool = True) -> np.ndarray:
+def _truncated(kind: str, pos: int, size: int) -> ValueError:
+    return ValueError(
+        f"truncated RLEv2 stream: {kind} run at byte {pos} runs past the end of the {size}-byte buffer"
+    )
+
+
+def _unpack_one(raw: np.ndarray, stop: int, byte0: int, width: int, cnt: int) -> np.ndarray:
+    """:func:`bit_unpack_runs` for a single run; a byte-aligned one is a
+    direct slice of ``raw``."""
+    if width in _BYTE_WIDTHS:
+        return raw[byte0 : byte0 + cnt * (width >> 3)].view(_BYTE_WIDTHS[width]).astype(np.uint64)
+    return bit_unpack_runs(byte_windows(raw, stop), (byte0,), (width,), (cnt,))
+
+
+def _patched_base_run(raw: np.ndarray, win: np.ndarray, pos: int, take: int) -> np.ndarray:
+    """The first ``take`` values of the PATCHED_BASE run at byte ``pos``
+    (rare: decoded one run at a time)."""
+    header = int(raw[pos])
+    w = decode_width((header >> 1) & 0x1F)
+    length = (((header & 1) << 8) | int(raw[pos + 1])) + 1
+    b3 = int(raw[pos + 2])
+    bw = (b3 >> 5) + 1
+    pw = decode_width(b3 & 0x1F)
+    b4 = int(raw[pos + 3])
+    pgw = (b4 >> 5) + 1
+    pl = b4 & 0x1F
+    p = pos + 4
+    base_field = int.from_bytes(raw[p : p + bw].tobytes(), "big")
+    sign_mask = 1 << (bw * 8 - 1)
+    base = -(base_field & ~sign_mask) if base_field & sign_mask else base_field
+    p += bw
+    data = bit_unpack_runs(win, (p,), (w,), (length,))
+    p += (length * w + 7) // 8
+    entries = bit_unpack_runs(win, (p,), (closest_fixed_width(pgw + pw),), (pl,))
+    gaps = (entries >> np.uint64(pw)).astype(np.int64)
+    patch_vals = entries & ((np.uint64(1) << np.uint64(pw)) - np.uint64(1))
+    data[np.cumsum(gaps)] |= patch_vals << np.uint64(w)
+    return (data.view(np.int64) + base)[:take]
+
+
+def _delta_runs(
+    base: list[int], d0: list[int], take, tail, mags: np.ndarray | None
+) -> np.ndarray:
+    """The first ``take[r]`` values of each DELTA run, run-major: a
+    segmented ``cumsum`` of the steps [base, d0, d0 or +-magnitude, ...],
+    whose int64 wrap is exact. ``tail`` indexes the runs with a
+    bit-packed tail; ``mags`` holds those magnitudes run-major, each run
+    taking the sign of its ``d0``."""
+    if len(base) == 1:
+        steps = np.full(int(take[0]), d0[0], dtype=np.int64)
+        steps[0] = base[0]
+        if mags is not None:
+            m = mags.view(np.int64)
+            steps[2:] = -m if d0[0] < 0 else m
+        return np.cumsum(steps)
+    base_a = np.array(base, dtype=np.int64)
+    d0_a = np.array(d0, dtype=np.int64)
+    first = np.cumsum(take) - take
+    steps = np.repeat(d0_a, take)
+    steps[first] = base_a
+    if mags is not None:
+        cnt = take[tail] - 2
+        m = mags.view(np.int64)
+        steps[_gather(first[tail] + 2, cnt)] = np.where(np.repeat(d0_a[tail] < 0, cnt), -m, m)
+    sums = np.cumsum(steps)
+    return sums - np.repeat(sums[first] - base_a, take)
+
+
+def rle_v2_decode(buf: bytes | memoryview | np.ndarray, n: int, signed: bool = True) -> np.ndarray:
     """Decode ``n`` values from a concatenation of RLEv2 runs -> int64.
 
-    The final run is CLAMPED to n: a bounded decode that starts
-    mid-stream (ROW_INDEX positional seek) may stop inside a run."""
-    raw = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
+    Two passes. Pass 1 walks the run headers in one scalar loop over the
+    bytes and records, per run, its kind and ``take`` plus the
+    SHORT_REPEAT value, the DIRECT payload's byte offset and width, or
+    the DELTA base, first delta and packed-tail offset and width; it
+    does no numpy work. Pass 2 decodes each run kind for all its runs at
+    once: SHORT_REPEAT is one ``np.repeat``; DIRECT values and DELTA tail
+    magnitudes are one MSB-first gather (:func:`bit_unpack_runs`); DELTA is
+    a segmented ``cumsum``; PATCHED_BASE, rare, decodes run by run. A
+    one-run stream (short ORC-Java streams, row-group seeks) decodes
+    straight from its run, so the fixed cost per call stays small.
+
+    Invariants:
+      - the final run is CLAMPED to ``n``: a bounded decode that starts
+        mid-stream (ROW_INDEX positional seek) may stop inside a run;
+      - DIRECT payloads are MSB-first, each run starting on a byte;
+      - the int64 wrap is exact: unsigned values >= 2^63 come back as
+        their int64 bit pattern, and DELTA sums wrap modulo 2^64 exactly
+        as a per-run ``cumsum`` does;
+      - every run's bytes must lie inside ``buf``: a truncated stream
+        raises ``ValueError`` naming the run's kind and byte offset.
+    """
+    if n <= 0:
+        return np.empty(n, dtype=np.int64)
+    raw = np.frombuffer(buf, dtype=np.uint8)  # signed memoryviews read as uint8
+    data = memoryview(raw)
+    size = len(raw)
+    widths = WIDTH_TABLE
+    kinds: list[int] = []
+    takes: list[int] = []
+    sr_vals: list[int] = []
+    d_byte: list[int] = []
+    d_w: list[int] = []
+    dl_base: list[int] = []
+    dl_d0: list[int] = []
+    dl_byte: list[int] = []
+    dl_w: list[int] = []  # 0: fixed delta, no packed tail
+    pb_pos: list[int] = []
+    pos = filled = 0
+    try:
+        while filled < n:
+            h = data[pos]
+            tag = h >> 6
+            if tag == _SHORT_REPEAT:
+                end = pos + 2 + ((h >> 3) & 7)
+                if end > size:
+                    raise _truncated(_KIND_NAMES[tag], pos, size)
+                u = data[pos + 1] if end == pos + 2 else int.from_bytes(data[pos + 1 : end], "big")
+                if signed:
+                    sr_vals.append((u >> 1) ^ -(u & 1))
+                else:
+                    sr_vals.append(u - _U64 if u >> 63 else u)  # int64 wrap
+                length = (h & 7) + 3
+            else:
+                length = (((h & 1) << 8) | data[pos + 1]) + 1
+                wc = (h >> 1) & 0x1F
+                w = widths[wc]
+                p = pos + 2
+                if tag == _DIRECT:
+                    end = p + (length * w + 7) // 8
+                    d_byte.append(p)
+                    d_w.append(w)
+                elif tag == _DELTA:
+                    u, p = varint_decode_scalar(data, p)
+                    if signed:
+                        dl_base.append((u >> 1) ^ -(u & 1))
+                    else:
+                        dl_base.append(u - _U64 if u >> 63 else u)  # int64 wrap
+                    u, p = varint_decode_scalar(data, p)
+                    dl_d0.append((u >> 1) ^ -(u & 1))
+                    dl_byte.append(p)
+                    if wc and length > 2:
+                        dl_w.append(w)
+                        end = p + ((length - 2) * w + 7) // 8
+                    else:
+                        dl_w.append(0)
+                        end = p
+                else:  # PATCHED_BASE: size the run here, decode it in pass 2
+                    b3 = data[p]
+                    b4 = data[p + 1]
+                    pgw_pw = (b4 >> 5) + 1 + widths[b3 & 0x1F]
+                    if pgw_pw > 64:
+                        raise ValueError(
+                            f"corrupt RLEv2 stream: PATCHED_BASE run at byte {pos} has "
+                            f"{pgw_pw}-bit patch entries"
+                        )
+                    end = (
+                        p + 2 + (b3 >> 5) + 1 + (length * w + 7) // 8
+                        + ((b4 & 0x1F) * closest_fixed_width(pgw_pw) + 7) // 8
+                    )
+                    pb_pos.append(pos)
+                if end > size:
+                    raise _truncated(_KIND_NAMES[tag], pos, size)
+            kinds.append(tag)
+            takes.append(length)
+            filled += length
+            pos = end
+    except IndexError:  # a header or varint byte lies past the end
+        raise _truncated(_KIND_NAMES[data[pos] >> 6] if pos < size else "header of a", pos, size) from None
+    takes[-1] -= filled - n  # clamp the final run to n
+
+    # ---- pass 2: one vector pass per run kind ----
+    if len(takes) == 1:  # one run (short ORC-Java streams, row-group seeks)
+        if sr_vals:
+            out = np.empty(takes[0], dtype=np.int64)
+            out.fill(sr_vals[0])
+            return out
+        if d_byte:
+            u = _unpack_one(raw, pos, d_byte[0], d_w[0], takes[0])
+            return zigzag_decode(u) if signed else u.view(np.int64)
+        if dl_base:
+            tail = [0] if dl_w[0] and takes[0] > 2 else []
+            mags = _unpack_one(raw, pos, dl_byte[0], dl_w[0], takes[0] - 2) if tail else None
+            return _delta_runs(dl_base, dl_d0, takes, tail, mags)
+        return _patched_base_run(raw, byte_windows(raw, pos), pb_pos[0], takes[0])
+    takes_a = np.array(takes, dtype=np.int64)
+    n_kinds = bool(sr_vals) + bool(d_byte) + bool(dl_base) + bool(pb_pos)
+    kinds_a = np.array(kinds, dtype=np.int8) if n_kinds > 1 else None
+
+    def kind_takes(k: int) -> np.ndarray:
+        return takes_a if kinds_a is None else takes_a[kinds_a == k]
+
+    parts: list[tuple[int, np.ndarray]] = []
+    if sr_vals:
+        sr = np.array(sr_vals, dtype=np.int64)
+        parts.append((_SHORT_REPEAT, np.repeat(sr, kind_takes(_SHORT_REPEAT))))
+
+    # DIRECT values and DELTA tail magnitudes share one gather
+    segs = []
+    if d_byte:
+        d_take = kind_takes(_DIRECT)
+        segs.append((np.array(d_byte, dtype=np.int64), np.array(d_w, dtype=np.int64), d_take))
+    if dl_base:
+        dl_take = kind_takes(_DELTA)
+        dl_w_a = np.array(dl_w, dtype=np.int64)
+        tail = np.flatnonzero((dl_w_a > 0) & (dl_take > 2))
+        if len(tail):
+            segs.append((np.array(dl_byte, dtype=np.int64)[tail], dl_w_a[tail], dl_take[tail] - 2))
+    win = byte_windows(raw, pos) if segs or pb_pos else None
+    if segs:
+        cols = segs[0] if len(segs) == 1 else map(np.concatenate, zip(*segs))
+        packed = bit_unpack_runs(win, *cols)
+    nd = 0
+    if d_byte:
+        nd = int(d_take.sum())
+        u = packed[:nd]
+        parts.append((_DIRECT, zigzag_decode(u) if signed else u.view(np.int64)))
+    if dl_base:
+        mags = packed[nd:] if len(tail) else None
+        parts.append((_DELTA, _delta_runs(dl_base, dl_d0, dl_take, tail, mags)))
+    if pb_pos:
+        pb_take = kind_takes(_PATCHED_BASE).tolist()
+        runs = [_patched_base_run(raw, win, p, t) for p, t in zip(pb_pos, pb_take)]
+        parts.append((_PATCHED_BASE, np.concatenate(runs)))
+
+    if kinds_a is None:
+        return parts[0][1]
     out = np.empty(n, dtype=np.int64)
-    filled = 0
-    pos = 0
-    while filled < n:
-        header = int(raw[pos])
-        tag = header >> 6
-        if tag == _SHORT_REPEAT:
-            w = ((header >> 3) & 0x7) + 1
-            count = (header & 0x7) + 3
-            u = int.from_bytes(raw[pos + 1 : pos + 1 + w].tobytes(), "big")
-            if signed:
-                val = zigzag_decode_scalar(u)
-            else:
-                val = u - (1 << 64) if u >= (1 << 63) else u  # int64 wrap
-            take = min(count, n - filled)
-            out[filled : filled + take] = val
-            filled += take
-            pos += 1 + w
-        elif tag == _DIRECT:
-            wc = (header >> 1) & 0x1F
-            w = decode_width(wc)
-            length = (((header & 1) << 8) | int(raw[pos + 1])) + 1
-            nbytes = (length * w + 7) // 8
-            u = bit_unpack(raw[pos + 2 : pos + 2 + nbytes], w, length)
-            take = min(length, n - filled)
-            dec = zigzag_decode(u) if signed else u.view(np.int64)
-            out[filled : filled + take] = dec[:take]
-            filled += take
-            pos += 2 + nbytes
-        elif tag == _PATCHED_BASE:
-            wc = (header >> 1) & 0x1F
-            w = decode_width(wc)
-            length = (((header & 1) << 8) | int(raw[pos + 1])) + 1
-            b3 = int(raw[pos + 2])
-            bw = (b3 >> 5) + 1
-            pw = decode_width(b3 & 0x1F)
-            b4 = int(raw[pos + 3])
-            pgw = (b4 >> 5) + 1
-            pl = b4 & 0x1F
-            p = pos + 4
-            base_field = int.from_bytes(raw[p : p + bw].tobytes(), "big")
-            sign_mask = 1 << (bw * 8 - 1)
-            base = -(base_field & ~sign_mask) if base_field & sign_mask else base_field
-            p += bw
-            data_bytes = (length * w + 7) // 8
-            data = bit_unpack(raw[p : p + data_bytes], w, length)
-            p += data_bytes
-            combined = closest_fixed_width(pgw + pw)
-            patch_bytes = (pl * combined + 7) // 8
-            entries = bit_unpack(raw[p : p + patch_bytes], combined, pl)
-            p += patch_bytes
-            gaps = (entries >> np.uint64(pw)).astype(np.int64)
-            patch_vals = entries & ((np.uint64(1) << np.uint64(pw)) - np.uint64(1))
-            idx = np.cumsum(gaps)
-            data[idx] |= patch_vals << np.uint64(w)
-            take = min(length, n - filled)
-            out[filled : filled + take] = (data.view(np.int64) + base)[:take]
-            filled += take
-            pos = p
-        else:  # DELTA
-            wc = (header >> 1) & 0x1F
-            length = (((header & 1) << 8) | int(raw[pos + 1])) + 1
-            p = pos + 2
-            ub, p = varint_decode_scalar(raw, p)
-            if signed:
-                base = zigzag_decode_scalar(ub)
-            else:
-                base = ub - (1 << 64) if ub >= (1 << 63) else ub  # int64 wrap
-            ud, p = varint_decode_scalar(raw, p)
-            d0 = zigzag_decode_scalar(ud)
-            steps = np.empty(length, dtype=np.int64)
-            steps[0] = base
-            if length > 1:
-                steps[1] = d0
-            if wc == 0:
-                if length > 2:
-                    steps[2:] = d0
-            else:
-                w = decode_width(wc)
-                nbytes = ((length - 2) * w + 7) // 8
-                mags = bit_unpack(raw[p : p + nbytes], w, length - 2).view(np.int64)
-                steps[2:] = -mags if d0 < 0 else mags
-                p += nbytes
-            take = min(length, n - filled)
-            out[filled : filled + take] = np.cumsum(steps)[:take]
-            filled += take
-            pos = p
+    at = np.repeat(kinds_a, takes_a)
+    for k, vals in parts:
+        out[at == k] = vals
     return out

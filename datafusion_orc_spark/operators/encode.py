@@ -520,6 +520,75 @@ def encode_files(
     )
 
 
+def _plan_row_splits(
+    rg_sizes: list[tuple[str, int, int]], target: int, stripe_rows: int
+) -> list[tuple[str, int, int, int]]:
+    """Split parquet row groups ``(path, rg, n_rows)`` into
+    ``(path, rg, row_start, row_end)`` task ranges for ``target`` tasks.
+
+    At least ``target`` row groups: one split each. Fewer: stripe-aligned
+    row-range subdivision into exactly ``min(target, total stripes)``
+    splits. Two balance rules (measured on the 6-row-group sf1.0 shape,
+    where the old round()-per-row-group planner made 36 splits for
+    target 32 — so 4 of the 32 static partitions carried TWO splits and
+    the stage wall was 2x a median task):
+     1. apportion split counts by largest remainder so the total is
+        exactly the budget — one split per task, no double-loaded
+        partition. Every row group keeps at least one split, so the
+        floors can overshoot the budget (two 1-row groups plus one huge
+        group); the overshoot is taken back from groups holding more
+        than one split, smallest fractional remainder first;
+     2. ranges are whole stripes, apportioned uniformly by largest
+        remainder (sizes differ by <=1 stripe), remainder stripes
+        assigned to the EARLIEST ranges: a range [s, e) also pays a
+        leading decode ~ e (iter_batches decodes from row 0 up to e),
+        but a per-task least-squares fit on the 6-row-group sf1.0 shape
+        measured that lead at ~0.12 us/row vs ~3 us/row of encode/decode
+        work (4%) — smaller than one stripe's worth of work at bench
+        chunk sizes, so a cost-tapered boundary model snapped to stripe
+        quanta just produced 1-vs-2-stripe jitter (measured 2x task
+        spread at sf0.1); front-loading the remainder stripes
+        counteracts the 4% without breaking the quantum.
+    """
+    if len(rg_sizes) >= target:
+        return [(p, rg, 0, n) for p, rg, n in rg_sizes]
+    total_rows = sum(n for _, _, n in rg_sizes)
+    n_stripes = {(p, rg): max(1, (n + stripe_rows - 1) // stripe_rows) for p, rg, n in rg_sizes}
+    budget = min(target, sum(n_stripes.values()))
+    quota = {(p, rg): min(n_stripes[(p, rg)], budget * n / max(1, total_rows)) for p, rg, n in rg_sizes}
+    k_of = {k2: max(1, int(q)) for k2, q in quota.items()}
+    rem = {k2: q - int(q) for k2, q in quota.items()}
+    left = budget - sum(k_of.values())
+    # each sweep moves at least one split: stripes cap every group and
+    # sum to >= budget, and the budget is >= one split per group
+    while left > 0:
+        for k2 in sorted(quota, key=rem.__getitem__, reverse=True):
+            if left and k_of[k2] < n_stripes[k2]:
+                k_of[k2] += 1
+                left -= 1
+    while left < 0:
+        for k2 in sorted(quota, key=rem.__getitem__):
+            if left and k_of[k2] > 1:
+                k_of[k2] -= 1
+                left += 1
+    splits: list[tuple[str, int, int, int]] = []
+    for p, rg, n in rg_sizes:
+        k = k_of[(p, rg)]
+        if k <= 1:
+            splits.append((p, rg, 0, n))
+            continue
+        n_str = n_stripes[(p, rg)]
+        per = [n_str // k] * k
+        for i in range(n_str % k):
+            per[i] += 1
+        pos = 0
+        for c in per:
+            s, e = pos * stripe_rows, min(n, (pos + c) * stripe_rows)
+            splits.append((p, rg, s, e))
+            pos += c
+    return splits
+
+
 def roundtrip_files(
     spark,
     path_or_glob,
@@ -608,62 +677,7 @@ def roundtrip_files(
             n = md.row_group(rg).num_rows
             if n:
                 rg_sizes.append((p, rg, n))
-    total_rows = sum(n for _, _, n in rg_sizes)
-    splits: list[tuple[str, int, int, int]] = []  # (path, rg, row_start, row_end)
-    if len(rg_sizes) >= target:
-        splits = [(p, rg, 0, n) for p, rg, n in rg_sizes]
-    else:
-        # parallelism floor: stripe-aligned row-range subdivision.
-        # Two balance rules (measured on the 6-row-group sf1.0 shape,
-        # where the old round()-per-row-group planner made 36 splits for
-        # target 32 — so 4 of the 32 static partitions carried TWO
-        # splits and the stage wall was 2x a median task):
-        #  1. apportion split counts by largest remainder so the total
-        #     is exactly min(target, total stripes) — one split per
-        #     task, no double-loaded partition;
-        #  2. ranges are whole stripes, apportioned uniformly by largest
-        #     remainder (sizes differ by <=1 stripe), remainder stripes
-        #     assigned to the EARLIEST ranges: a range [s, e) also pays
-        #     a leading decode ~ e (iter_batches decodes from row 0 up
-        #     to e), but a per-task least-squares fit on the 6-row-group
-        #     sf1.0 shape measured that lead at ~0.12 us/row vs ~3
-        #     us/row of encode/decode work (4%) — smaller than one
-        #     stripe's worth of work at bench chunk sizes, so a
-        #     cost-tapered boundary model snapped to stripe quanta just
-        #     produced 1-vs-2-stripe jitter (measured 2x task spread at
-        #     sf0.1); front-loading the remainder stripes counteracts
-        #     the 4% without breaking the quantum.
-        n_stripes = {(p, rg): max(1, (n + stripe_rows - 1) // stripe_rows) for p, rg, n in rg_sizes}
-        budget = min(target, sum(n_stripes.values()))
-        quota = {k2: min(n_stripes[k2], budget * rg_n / max(1, total_rows))
-                 for k2, rg_n in (((p, rg), n) for p, rg, n in rg_sizes)}
-        k_of = {k2: max(1, int(q)) for k2, q in quota.items()}
-        left = budget - sum(k_of.values())
-        if left > 0:
-            by_rem = sorted(quota, key=lambda k2: quota[k2] - int(quota[k2]), reverse=True)
-            for k2 in by_rem:
-                if left <= 0:
-                    break
-                if k_of[k2] < n_stripes[k2]:
-                    k_of[k2] += 1
-                    left -= 1
-        for p, rg, n in rg_sizes:
-            k = k_of[(p, rg)]
-            if k <= 1:
-                splits.append((p, rg, 0, n))
-                continue
-            n_str = n_stripes[(p, rg)]
-            per = [n_str // k] * k
-            for i in range(n_str % k):
-                per[i] += 1
-            pos = 0
-            for c in per:
-                if c <= 0:
-                    continue
-                s, e = pos * stripe_rows, min(n, (pos + c) * stripe_rows)
-                if e > s:
-                    splits.append((p, rg, s, e))
-                pos += c
+    splits = _plan_row_splits(rg_sizes, target, stripe_rows)
     n_parts = min(len(splits), target)
     if n_parts < len(splits):
         # strided reorder: round-robin sample of files per parallelize slice

@@ -193,6 +193,33 @@ def test_rlev2_random_fuzz():
         _roundtrip(v)
 
 
+def test_rlev2_truncated_direct_stream_raises():
+    """Dropping the last 200 bytes of a 512-value, 20-bit DIRECT stream
+    used to decode the missing tail as zeros."""
+    v = (lcg(512) % np.uint64(1 << 20)).astype(np.int64)
+    v[0] = (1 << 20) - 1  # pin the run width at 20 bits
+    enc = rle_v2_encode(v, signed=False)
+    assert enc[0] >> 6 == 1 and len(enc) == 2 + 512 * 20 // 8
+    with pytest.raises(ValueError, match="DIRECT run at byte 0"):
+        rle_v2_decode(enc[:-200], 512, signed=False)
+
+
+@pytest.mark.parametrize(
+    "vals, cut, where",
+    [
+        ([1000] * 4, 2, "SHORT_REPEAT run at byte 0"),  # 2-byte SR value, one byte kept
+        (list(range(0, 5000, 10)), 3, "DELTA run at byte 0"),  # inside a varint
+        ([2**40] * 5 + [1, 2, 3], 0, "header of a run at byte"),  # n past the stream
+    ],
+)
+def test_rlev2_truncated_stream_names_run(vals, cut, where):
+    enc = rle_v2_encode(np.array(vals, dtype=np.int64))
+    buf = enc[:cut] if cut else enc
+    n = len(vals) + (0 if cut else 1)
+    with pytest.raises(ValueError, match=where):
+        rle_v2_decode(buf, n)
+
+
 def test_runfor_roundtrip_shapes():
     """RUN+FoR codec: runs + FoR/PFOR literals, all vectorized."""
     from datafusion_orc_spark.codecs.runfor import runfor_decode, runfor_encode

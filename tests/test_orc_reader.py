@@ -157,3 +157,55 @@ def test_nested_roundtrip_via_pyarrow_writer(tmp_path):
     ours = read_orc(path)
     for name in tbl.schema.names:
         assert ours.column(name).to_pylist() == tbl.column(name).to_pylist(), name
+
+
+def _lineitem_shaped(rows: int, seed: int) -> pa.Table:
+    """Run-heavy lineitem columns: sorted keys repeated 1-7x (SHORT_REPEAT
+    and DIRECT runs) and 3- and 2-value strings (dictionary-index runs)."""
+    rng = np.random.default_rng(seed)
+    lines = rng.integers(1, 8, size=rows)
+    ends = np.cumsum(lines)
+    n_keys = int(np.searchsorted(ends, rows)) + 1
+    keys = np.repeat(np.arange(n_keys, dtype=np.int64) * 32, lines[:n_keys])[:rows]
+    linenumber = np.arange(rows) - np.repeat(ends[:n_keys] - lines[:n_keys], lines[:n_keys])[:rows] + 1
+    day0 = np.datetime64("1995-01-02", "us")
+    return pa.table({
+        "l_orderkey": keys,
+        "l_partkey": rng.integers(0, rows // 30, size=rows, dtype=np.int64),
+        "l_linenumber": linenumber.astype(np.int32),
+        "l_quantity": rng.integers(1, 51, size=rows).astype(np.float64),
+        "l_returnflag": np.array(["A", "N", "R"])[rng.integers(0, 3, size=rows)],
+        "l_linestatus": np.array(["F", "O"])[rng.integers(0, 2, size=rows)],
+        "l_shipdate": pa.array(day0 + rng.integers(0, 2499, size=rows).astype("timedelta64[D]")),
+    })
+
+
+def test_engine_written_run_heavy_stripes_match_pyarrow(tmp_path):
+    """Stripe-scale run-heavy streams (five 8192-row stripes, 1000-row
+    index groups) through the full read and through the pruned read,
+    whose surviving row groups are entered by positional seek, often in
+    the middle of an RLEv2 run."""
+    from datafusion_orc_spark.format.orc_writer import write_orc
+
+    rows, stripe_rows, stride = 40_000, 8192, 1000
+    path = str(tmp_path / "lineitem.orc")
+    write_orc(_lineitem_shaped(rows, seed=7), path, stripe_rows=stripe_rows,
+              compression="snappy", row_index_stride=stride)
+    oracle = pyarrow.orc.ORCFile(path).read()
+    reader = OrcReader(path)
+    assert len(reader.footer.stripes) == 5
+    _assert_tables_equal(reader.read(), oracle)
+
+    keys = oracle.column("l_orderkey").to_numpy()
+    lo, hi = int(keys[13_000]), int(keys[21_000])
+    pruned = pa.Table.from_batches(list(reader.iter_stripes(prune={"l_orderkey": (lo, hi)})))
+    # expected: every row group (within its stripe) whose key span meets [lo, hi]
+    kept = []
+    for s0 in range(0, rows, stripe_rows):
+        for g0 in range(s0, min(s0 + stripe_rows, rows), stride):
+            g1 = min(g0 + stride, s0 + stripe_rows, rows)
+            if keys[g0] <= hi and keys[g1 - 1] >= lo:
+                kept.append(oracle.slice(g0, g1 - g0))
+    expected = pa.concat_tables(kept)
+    assert 0 < pruned.num_rows < rows
+    _assert_tables_equal(pruned, expected)

@@ -11,10 +11,14 @@ import pyarrow as pa
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from datafusion_orc_spark.codecs.bitpack import bit_pack, width_code
 from datafusion_orc_spark.codecs.byterle import bool_rle_decode, bool_rle_encode
-from datafusion_orc_spark.codecs.rlev2 import rle_v2_decode, rle_v2_encode
+from datafusion_orc_spark.codecs.rlev2 import _try_encode_patched_base, rle_v2_decode, rle_v2_encode
+from datafusion_orc_spark.codecs.varint import varint_encode_scalar, zigzag_scalar
+from datafusion_orc_spark.operators.encode import _plan_row_splits
 from datafusion_orc_spark.codecs.strings import fsst_decode, fsst_encode, fsst_train
 from datafusion_orc_spark.format.stripe import decode_column, encode_column
+from tests.rlev2_reference import rle_v2_decode_reference
 
 settings.register_profile("default", max_examples=40, suppress_health_check=[HealthCheck.too_slow], deadline=None)
 settings.register_profile("long", max_examples=500, suppress_health_check=[HealthCheck.too_slow], deadline=None)
@@ -116,3 +120,131 @@ def test_rlev2_segment_shapes(segs, rnd):
         vv = np.abs(v) if not signed else v
         enc = rle_v2_encode(vv, signed=signed)
         assert np.array_equal(rle_v2_decode(enc, len(vv), signed=signed), vv)
+
+
+# ---- batched RLEv2 decode == the per-run reference -------------------------
+
+I64_EDGES = [-(2**63), -(2**63) + 1, -1, 0, 1, 2**62, 2**63 - 1]
+
+
+def _buffers(buf: bytes) -> list:
+    """The input types callers hand the decoder: bytes, a SIGNED
+    memoryview (indexing it yields negative ints) and a uint8 ndarray."""
+    return [buf, memoryview(buf).cast("b"), np.frombuffer(buf, dtype=np.uint8)]
+
+
+def _assert_batched_matches(buf: bytes, n: int, signed: bool) -> None:
+    expect = rle_v2_decode_reference(buf, n, signed)
+    for b in _buffers(buf):
+        got = rle_v2_decode(b, n, signed)
+        assert got.dtype == np.int64
+        assert np.array_equal(got, expect)
+
+
+@given(
+    st.one_of(
+        st.lists(st.one_of(i64, st.sampled_from(I64_EDGES)), min_size=1, max_size=1500),
+        st.lists(st.sampled_from(I64_EDGES + [5, 7, 2**40]), min_size=1, max_size=3000),
+    ),
+    st.booleans(),
+    st.data(),
+)
+def test_rlev2_batched_matches_reference_on_encoder_output(vals, signed, data):
+    """Signed and unsigned encoder streams, including int64 min/max and,
+    unsigned, the bit patterns of negative values (u >= 2^63: the int64
+    wrap); ``n`` may stop the decode inside a run."""
+    v = np.array(vals, dtype=np.int64)
+    enc = rle_v2_encode(v, signed=signed)
+    assert np.array_equal(rle_v2_decode(enc, len(v), signed), v)
+    _assert_batched_matches(enc, data.draw(st.integers(1, len(v))), signed)
+
+
+def _sr_run(w: int, count: int, u: int) -> bytes:
+    return bytes([((w - 1) << 3) | (count - 3)]) + u.to_bytes(w, "big")
+
+
+def _direct_run(w: int, vals: list[int]) -> bytes:
+    m = len(vals)
+    head = bytes([(1 << 6) | (width_code(w) << 1) | ((m - 1) >> 8), (m - 1) & 0xFF])
+    return head + bit_pack(np.array(vals, dtype=np.uint64), w)
+
+
+def _delta_run(m: int, ubase: int, d0: int, w: int, mags: list[int]) -> bytes:
+    head = bytes([(3 << 6) | ((width_code(w) if w else 0) << 1) | ((m - 1) >> 8), (m - 1) & 0xFF])
+    body = varint_encode_scalar(ubase) + varint_encode_scalar(zigzag_scalar(d0))
+    return head + body + (bit_pack(np.array(mags, dtype=np.uint64), w) if w else b"")
+
+
+@st.composite
+def _rlev2_run(draw) -> tuple[bytes, int]:
+    """One hand-built run of any kind -> (bytes, value count)."""
+    kind = draw(st.sampled_from(["sr", "direct", "delta_fixed", "delta_packed", "patched"]))
+    if kind == "sr":
+        w = draw(st.integers(1, 8))
+        count = draw(st.integers(3, 10))
+        return _sr_run(w, count, draw(st.integers(0, 2 ** (8 * w) - 1))), count
+    if kind == "direct":
+        w = draw(st.sampled_from([1, 24, 26, 56, 64, 3, 8, 16, 20, 32]))
+        vals = draw(st.lists(st.integers(0, 2**w - 1), min_size=1, max_size=512))
+        return _direct_run(w, vals), len(vals)
+    ubase = draw(st.integers(0, 2**64 - 1))
+    d0 = draw(st.one_of(i64, st.integers(-3, 3)))
+    if kind == "delta_fixed":
+        m = draw(st.integers(1, 512))
+        return _delta_run(m, ubase, d0, 0, []), m
+    if kind == "delta_packed":
+        w = draw(st.sampled_from([2, 5, 24, 26, 56, 64]))
+        mags = draw(st.lists(st.integers(0, 2**w - 1), min_size=1, max_size=510))
+        return _delta_run(len(mags) + 2, ubase, d0, w, mags), len(mags) + 2
+    m = draw(st.integers(64, 256))
+    small = np.array(draw(st.lists(st.integers(0, 15), min_size=m, max_size=m)), dtype=np.int64)
+    idx = draw(st.lists(st.integers(0, m - 1), min_size=1, max_size=4, unique=True))
+    small[idx] = 2**30 + np.arange(len(idx))
+    out = bytearray()
+    assert _try_encode_patched_base(out, small + draw(st.integers(-(2**40), 2**40)), signed=True)
+    return bytes(out), m
+
+
+@given(st.lists(_rlev2_run(), min_size=1, max_size=12), st.booleans(), st.data())
+def test_rlev2_batched_matches_reference_on_mixed_headers(runs, signed, data):
+    """Hand-built streams mixing all four headers: SHORT_REPEAT widths
+    1-8, DIRECT widths 1, 24, 26, 56 and 64, DELTA with a fixed delta and
+    with a negative first delta, PATCHED_BASE. ``n`` may stop the decode
+    mid-run."""
+    buf = b"".join(r for r, _ in runs)
+    total = sum(c for _, c in runs)
+    _assert_batched_matches(buf, total, signed)
+    _assert_batched_matches(buf, data.draw(st.integers(1, total)), signed)
+
+
+# ---- roundtrip_files split planner -----------------------------------------
+
+
+@given(
+    st.lists(
+        st.one_of(st.integers(1, 10), st.integers(1, 200_000), st.integers(1, 6_000_000)),
+        min_size=1,
+        max_size=40,
+    ),
+    st.integers(1, 64),
+    st.sampled_from([1000, 8192, 32768, 65536]),
+)
+def test_plan_row_splits_covers_rows_and_hits_budget(rows, target, stripe_rows):
+    groups = [(f"f{i % 3}", i, n) for i, n in enumerate(rows)]
+    splits = _plan_row_splits(groups, target, stripe_rows)
+    total_stripes = sum(-(-n // stripe_rows) for n in rows)
+    expect = len(groups) if len(groups) >= target else min(target, total_stripes)
+    assert len(splits) == expect
+    for p, rg, n in groups:
+        ranges = [(s, e) for sp, srg, s, e in splits if (sp, srg) == (p, rg)]
+        assert ranges[0][0] == 0 and ranges[-1][1] == n  # exact row coverage
+        for (_, e0), (s1, _) in zip(ranges, ranges[1:]):
+            assert e0 == s1 and s1 % stripe_rows == 0
+        assert all(s < e for s, e in ranges)
+
+
+def test_plan_row_splits_no_overshoot_on_skewed_groups():
+    """Two 1-row groups plus one 6M-row group: the per-group floor of one
+    split used to push the total to 33 for a target of 32."""
+    groups = [("a", 0, 1), ("a", 1, 1), ("b", 0, 6_000_000)]
+    assert len(_plan_row_splits(groups, 32, 32768)) == 32
