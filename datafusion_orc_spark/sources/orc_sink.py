@@ -45,11 +45,12 @@ def write_orc_distributed(
 
     Returns the (lazy) per-file stats DataFrame; the write happens when
     it is consumed (``.collect()``/``.count()`` — same contract as
-    encode_files). Files are written through the object-store seam
-    (local rename-for-atomicity; object stores rely on atomic PUT) and
-    are readable by ORC C++ / ORC-Java / Spark / our own reader
+    encode_files). Files are written through the object-store seam,
+    staged per task attempt like encode_files' part files (local:
+    attempt-suffixed tmp name, then rename; object stores: one atomic
+    PUT), and are readable by ORC C++ / ORC-Java / Spark / our own reader
     (conformance: tests/test_orc_sink.py)."""
-    from datafusion_orc_spark.operators.encode import _ensure_workers_can_import
+    from datafusion_orc_spark.operators.encode import _ensure_workers_can_import, _open_part, _task_init
     from datafusion_orc_spark.sources.objectstore import resolve_store
 
     _ensure_workers_can_import(df)
@@ -57,16 +58,13 @@ def write_orc_distributed(
     store.makedirs(out_path)
 
     def sink(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow as _pa
-
         from pyspark import TaskContext
 
         from datafusion_orc_spark.format.orc_writer import write_orc
-        from datafusion_orc_spark.sources.objectstore import LocalStore
 
-        _pa.set_cpu_count(1)
-        _pa.set_io_thread_count(2)
-        part_id = TaskContext.get().partitionId()
+        _task_init()
+        tc = TaskContext.get()
+        part_id, attempt = tc.partitionId(), tc.attemptNumber()
         k = 0
         pending: list[pa.RecordBatch] = []
         n_pending = 0
@@ -90,13 +88,9 @@ def write_orc_distributed(
                 bloom_filter_fpp=bloom_filter_fpp,
             )
             raw = buf.getvalue()
-            if isinstance(store, LocalStore):
-                with open(f"{out_path}/.{name}.tmp", "wb") as fh:
-                    fh.write(raw)
-                store.rename(f"{out_path}/.{name}.tmp", f"{out_path}/{name}")
-            else:
-                with store.open_output(f"{out_path}/{name}") as fh:
-                    fh.write(raw)
+            fh, publish = _open_part(store, out_path, name, attempt)
+            fh.write(raw)
+            publish()
             yield pa.RecordBatch.from_pydict({
                 "path": [f"{out_path}/{name}"],
                 "part": [part_id],

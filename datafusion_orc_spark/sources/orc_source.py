@@ -159,6 +159,7 @@ def read_orc_distributed(
 
     from datafusion_orc_spark.operators.encode import (
         _ensure_workers_can_import,
+        _list_inputs,
         prune_bounds_from_predicate,
     )
     from datafusion_orc_spark.sources.objectstore import (
@@ -172,19 +173,12 @@ def read_orc_distributed(
         if derived:
             prune = {**derived, **(prune or {})}
     if opener is None:
-        store, norm = resolve_store(path_or_glob)
-        if any(c in norm for c in "*?["):
-            paths = store.glob(norm)
-        elif store.isdir(norm):
-            paths = store.list(norm, suffix=file_extension)
-        else:
-            paths = [norm]
+        paths = _list_inputs(path_or_glob, file_extension)
+        store, _ = resolve_store(path_or_glob)
         if not isinstance(store, LocalStore):
             opener = StoreOpener(store)
     else:
         paths = [path_or_glob]
-    if not paths:
-        raise FileNotFoundError(path_or_glob)
     if file_extension is not None:
         bad = [p for p in paths if not p.endswith(file_extension)]
         if bad:

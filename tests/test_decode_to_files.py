@@ -90,3 +90,38 @@ def test_streaming_files_sink_rejects_where(spark, tmp_path):
             spark, str(tmp_path), seqs.schema, str(tmp_path / "o"),
             str(tmp_path / "c"), where="n_tok > 5", sink="files",
         )
+
+
+def test_scattered_blob_table_raises_the_streaming_fallback_message(spark, tmp_path):
+    """streaming/incremental.py retries a micro-batch with shuffle=True
+    only when the partition-local decode fails with "missing columns
+    within their partition": both local decode paths must raise it on a
+    blob table whose stripes span partitions, and the shuffle decode
+    must return the input rows."""
+    from datafusion_orc_spark.operators.encode import decode_table, decode_to_files, encode_table
+    from datafusion_orc_spark.sources.tokens import tokenized_sequences
+
+    seqs = tokenized_sequences(spark, SF_DIR)
+    blobs = encode_table(seqs.coalesce(1), stripe_rows=256, job_token=11)
+    scattered = blobs.repartition(4, "column").cache()
+    spans = (
+        scattered.withColumn("p", F.spark_partition_id())
+        .groupBy("stripe_id")
+        .agg(F.countDistinct("p").alias("parts"))
+        .filter("parts > 1")
+    )
+    assert spans.count() > 0  # a stripe's columns really are scattered
+    msg = "missing columns within their partition"
+    with pytest.raises(Exception, match=msg):
+        decode_table(scattered, None, seqs.schema).agg(F.count(F.lit(1))).collect()
+    with pytest.raises(Exception, match=msg):
+        decode_to_files(scattered, seqs.schema, str(tmp_path / "dec")).collect()
+
+    def h(df):
+        cols = [F.col(c).cast("string") for c in df.columns]
+        return tuple(df.agg(
+            F.count(F.lit(1)), F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))
+        ).collect()[0])
+
+    assert h(decode_table(scattered, None, seqs.schema, shuffle=True)) == h(seqs)
+    scattered.unpersist()

@@ -60,9 +60,9 @@ def test_encode_files_parallelism_cap(spark):
     from pyspark.sql import functions as F
 
     df2 = encode_files(spark, SRC, stripe_rows=2000, job_token=3, parallelism=2)
-    # capped at min(parallelism, n_splits): SRC is a single-row-group file
-    # (1 split), so asking for 2 yields 1 partition — never an empty task
-    assert df2.rdd.getNumPartitions() == 1
+    # SRC is a single-row-group file: asking for 2 splits it into 2
+    # stripe-aligned row ranges (_plan_row_splits) — never an empty task
+    assert df2.rdd.getNumPartitions() == 2
     df3 = encode_files(
         spark, [SRC, SRC.replace("lineitem", "orders")],
         stripe_rows=2000, job_token=3, parallelism=2,

@@ -107,3 +107,36 @@ def test_sink_rolls_files_at_bytes_per_file(spark, tmp_path):
         [pyarrow.orc.ORCFile(f).read() for f in sorted(glob.glob(f"{out}/*.orc"))]
     )
     assert sorted(got.column("k").to_pylist()) == list(range(4_000))
+
+
+def test_sink_staging_fences_interleaved_attempts(tmp_path):
+    """Two attempts of one part file (a zombie and its retry, or two
+    speculative attempts) each stage through their own tmp file, so
+    interleaved writes never mix: the published file is exactly one
+    attempt's ORC bytes and no .tmp is left behind."""
+    import io
+    import os
+
+    from datafusion_orc_spark.format.orc_writer import write_orc
+    from datafusion_orc_spark.operators.encode import _open_part
+    from datafusion_orc_spark.sources.objectstore import LocalStore
+
+    def orc_bytes(base):
+        buf = io.BytesIO()
+        write_orc(pa.table({"k": pa.array(range(base, base + 5000), pa.int64())}), buf, stripe_rows=1000)
+        return buf.getvalue()
+
+    raw = {0: orc_bytes(0), 1: orc_bytes(10**9)}
+    name = "part-00000-000.orc"
+    final = tmp_path / name
+    staged = {a: _open_part(LocalStore(), str(tmp_path), name, a) for a in (0, 1)}
+    for lo, hi in ((0, 0.5), (0.5, 1)):
+        for a in (0, 1):
+            n = len(raw[a])
+            staged[a][0].write(raw[a][int(lo * n) : int(hi * n)])
+    staged[1][1]()  # the retry publishes first
+    assert final.read_bytes() == raw[1]
+    staged[0][1]()  # the zombie's late publish replaces it whole
+    assert final.read_bytes() == raw[0]
+    assert os.listdir(tmp_path) == [name]
+    assert pyarrow.orc.ORCFile(str(final)).read().column("k").to_pylist() == list(range(5000))

@@ -8,6 +8,7 @@ import os
 
 import numpy as np
 import pyarrow as pa
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -15,7 +16,7 @@ from datafusion_orc_spark.codecs.bitpack import bit_pack, width_code
 from datafusion_orc_spark.codecs.byterle import bool_rle_decode, bool_rle_encode
 from datafusion_orc_spark.codecs.rlev2 import _try_encode_patched_base, rle_v2_decode, rle_v2_encode
 from datafusion_orc_spark.codecs.varint import varint_encode_scalar, zigzag_scalar
-from datafusion_orc_spark.operators.encode import _plan_row_splits
+from datafusion_orc_spark.operators.encode import _encode_stream, _plan_row_splits, _stripes
 from datafusion_orc_spark.codecs.strings import fsst_decode, fsst_encode, fsst_train
 from datafusion_orc_spark.format.stripe import decode_column, encode_column
 from tests.rlev2_reference import rle_v2_decode_reference
@@ -248,3 +249,81 @@ def test_plan_row_splits_no_overshoot_on_skewed_groups():
     split used to push the total to 33 for a target of 32."""
     groups = [("a", 0, 1), ("a", 1, 1), ("b", 0, 6_000_000)]
     assert len(_plan_row_splits(groups, 32, 32768)) == 32
+
+
+# ---- shared stripe buffer and stripe_id packing ----------------------------
+
+
+@st.composite
+def _batched_rows(draw):
+    """One record batch and a random split of it into consecutive
+    batches; repeated cut points give empty batches."""
+    n = draw(st.integers(0, 400))
+    rb = pa.record_batch({
+        "a": pa.array(range(n), pa.int64()),
+        "s": pa.array([None if i % 5 == 0 else f"v{i % 7}" for i in range(n)], pa.string()),
+    })
+    cuts = sorted(draw(st.lists(st.integers(0, n), max_size=12)))
+    bounds = [0, *cuts, n]
+    return rb, [rb.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])]
+
+
+@given(_batched_rows(), st.integers(1, 150))
+def test_stripes_are_exact_and_independent_of_batching(drawn, stripe_rows):
+    rb, batches = drawn
+    stripes = list(_stripes(iter(batches), stripe_rows))
+    assert len(stripes) == -(-rb.num_rows // stripe_rows)
+    assert all(s.num_rows == stripe_rows for s in stripes[:-1])
+    assert all(s.num_rows > 0 for s in stripes)
+    assert pa.Table.from_batches(stripes, schema=rb.schema).equals(pa.Table.from_batches([rb]))
+    # multi-flush == single-flush: one batch gives the same stripes
+    single = list(_stripes(iter([rb]), stripe_rows))
+    assert len(single) == len(stripes) and all(a.equals(b) for a, b in zip(stripes, single))
+
+
+@given(
+    st.lists(st.integers(0, (1 << 15) - 1), min_size=1, max_size=4, unique=True),
+    st.integers(1, 4),
+    st.integers(0, 0xFFFF),
+    st.integers(1, 0xFFFF),
+)
+def test_encode_stream_stripe_ids_distinct_and_positive(windows, per_split, part_id, job_token):
+    """Splits of one task encode in their own ``k << 16`` seq windows,
+    as encode_files runs them; every stripe_id unpacks to its token,
+    partition and seq."""
+    ids = []
+    for k in windows:
+        stripes = (pa.record_batch({"a": pa.array([k, i], pa.int64())}) for i in range(per_split))
+        for bb in _encode_stream(stripes, part_id, job_token, k << 16, (k + 1) << 16):
+            sids = set(bb.column("stripe_id").to_pylist())
+            assert len(sids) == 1 and bb.num_rows == 1
+            ids.append(sids.pop())
+    assert len(ids) == len(set(ids)) == len(windows) * per_split
+    assert all(0 < i < (1 << 63) for i in ids)
+    assert all(i >> 47 == job_token and (i >> 31) & 0xFFFF == part_id for i in ids)
+    assert sorted(i & ((1 << 31) - 1) for i in ids) == sorted(
+        (k << 16) + s for k in windows for s in range(per_split)
+    )
+
+
+@given(st.integers(0, (1 << 15) - 2), st.integers(1, 3))
+def test_encode_stream_raises_past_split_window(k, over):
+    """A split that runs past its 65,536-stripe window would reuse the
+    next split's stripe_ids: it raises instead. The window is entered two
+    stripes before its end so the test encodes only a few stripes."""
+    end = (k + 1) << 16
+    stripes = (pa.record_batch({"a": pa.array([i], pa.int64())}) for i in range(2 + over))
+    out = _encode_stream(stripes, 3, 7, end - 2, end)
+    assert next(out).num_rows == 1 and next(out).num_rows == 1
+    with pytest.raises(ValueError, match="window end"):
+        next(out)
+
+
+def test_encode_stream_raises_on_packing_overflow():
+    one = [pa.record_batch({"a": pa.array([1], pa.int64())})] * 2
+    out = _encode_stream(iter(one), 0, 1, (1 << 31) - 1)
+    next(out)
+    with pytest.raises(ValueError, match="packing overflow"):
+        next(out)
+    with pytest.raises(ValueError, match="part_id=65536"):
+        next(_encode_stream(iter(one), 1 << 16, 1))
