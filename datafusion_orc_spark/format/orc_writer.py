@@ -287,9 +287,9 @@ def _dictionary_streams(dense: pa.Array) -> tuple[np.ndarray, list[bytes]] | Non
     if n_vals == 0:
         return None
     d = dense.combine_chunks().dictionary_encode() if isinstance(dense, pa.ChunkedArray) else dense.dictionary_encode()
-    vals = d.dictionary.cast(pa.large_binary()).to_pylist()
-    if len(vals) > DICT_KEY_THRESHOLD * n_vals:
+    if len(d.dictionary) > DICT_KEY_THRESHOLD * n_vals:
         return None
+    vals = d.dictionary.cast(pa.large_binary()).to_pylist()
     order = np.argsort(np.array(vals, dtype=object), kind="stable")
     rank = np.empty(len(order), dtype=np.int64)
     rank[order] = np.arange(len(order))

@@ -12,8 +12,8 @@ are composed from one copy of each piece:
   listing and parquet opens through the object-store seam
   (sources/objectstore.py, the reference's ``ObjectStoreReader``);
 - ``_split_frame``: driver-side planning from parquet footers
-  (``_plan_row_splits``), sliced into tasks by ``parallelize``;
-  ``_splits`` and ``_read_range`` stream a task's row ranges;
+  (``_plan_row_splits``) over a ``spark.range`` ``_task_frame``;
+  ``_task_splits`` and ``_read_range`` stream a task's row ranges;
 - ``_stripes``: re-slices any batch stream into stripes of
   ``stripe_rows`` rows (the reference's scan batch unit,
   file_source.rs:31, and the ORC stripe, SURVEY.md §1.4/§1.5);
@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import glob
 import os
+import tempfile
 import uuid
 from collections.abc import Iterator
 
@@ -126,20 +127,31 @@ def _ensure_workers_can_import(df: DataFrame) -> None:
     sc = df.sparkSession.sparkContext
     if getattr(sc, "_dos_pyfile_added", False):
         return
+    sc.addPyFile(_package_zip(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
+    sc._dos_pyfile_added = True
+
+
+def _package_zip(pkg_dir: str) -> str:
+    """Zip the ``.py`` files of ``pkg_dir`` into the temp dir under a name
+    keyed on their paths and contents: an existing zip of that name holds
+    exactly this code and is reused; changed code gets a new name."""
+    import hashlib
     import zipfile
 
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zip_path = os.path.join("/tmp", f"datafusion_orc_spark_{os.getpid()}.zip")
+    root = os.path.dirname(pkg_dir)
+    files = sorted(os.path.join(d, fn) for d, _, fns in os.walk(pkg_dir) for fn in fns if fn.endswith(".py"))
+    h = hashlib.sha256()
+    for full in files:
+        with open(full, "rb") as f:
+            h.update(os.path.relpath(full, root).encode() + b"\0" + hashlib.sha256(f.read()).digest())
+    zip_path = os.path.join(tempfile.gettempdir(), f"{os.path.basename(pkg_dir)}_{h.hexdigest()[:16]}.zip")
     if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                        zf.write(full, rel)
-    sc.addPyFile(zip_path)
-    sc._dos_pyfile_added = True
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for full in files:
+                zf.write(full, os.path.relpath(full, root))
+        os.replace(tmp, zip_path)
+    return zip_path
 
 
 def _task_init() -> None:
@@ -326,16 +338,27 @@ def _plan_row_splits(
     return splits
 
 
-def _split_frame(spark, path_or_glob, stripe_rows: int, target: int | None) -> tuple[DataFrame, int]:
-    """The task frame of a parquet scan and its partition count.
+def _task_frame(spark, n_splits: int, n_parts: int) -> DataFrame:
+    """``spark.range`` ids over ``n_parts`` partitions, partition ``i``
+    holding ``[i*n/p, (i+1)*n/p)``; the split list rides in the task
+    closure (``_task_splits``). Not a parallelize()d split list: that
+    frame runs a second Python worker per task to make its JVM rows."""
+    sdf = spark.range(0, n_splits, 1, n_parts)
+    _ensure_workers_can_import(sdf)
+    return sdf
 
-    Splits ``(path, rg, row_start, row_end)`` are planned by
-    ``_plan_row_splits`` from footers alone; ``target=None`` plans one
-    split per non-empty row group. ``parallelize`` slices them into
-    ``min(target, splits)`` partitions: a createDataFrame +
-    repartition() here planned an Exchange, a whole extra stage barrier
-    and AQE replan per job whose row data never touches the JVM.
-    """
+
+def _task_splits(batches: Iterator[pa.RecordBatch], splits: list) -> Iterator[tuple]:
+    """The splits of one task of a ``_task_frame``, in id order."""
+    for b in batches:
+        for i in b.column(0).to_pylist():
+            yield splits[i]
+
+
+def _split_frame(spark, path_or_glob, stripe_rows: int, target: int | None) -> tuple[DataFrame, list, int]:
+    """The task frame of a parquet scan, its ``(path, rg, row_start,
+    row_end)`` splits, planned from footers alone (``target=None``: one
+    per non-empty row group), and its ``min(target, splits)`` partitions."""
     rg_sizes: list[tuple[str, int, int]] = []
     for p in _list_inputs(path_or_glob, ".parquet"):
         md = _open_parquet(p).metadata
@@ -346,23 +369,10 @@ def _split_frame(spark, path_or_glob, stripe_rows: int, target: int | None) -> t
     splits = _plan_row_splits(rg_sizes, target, stripe_rows)
     n_parts = max(1, min(target, len(splits)))
     if n_parts < len(splits):
-        # strided reorder so each contiguous parallelize slice gets a
-        # round-robin sample of files (balances skewed file sizes the way
-        # repartition's round-robin did, without the shuffle)
+        # strided reorder: each contiguous id range gets a round-robin
+        # sample of files, balancing skewed file sizes without a shuffle
         splits = [splits[i] for k in range(n_parts) for i in range(k, len(splits), n_parts)]
-    sdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(splits, n_parts),
-        "path string, rg int, row_start long, row_end long",
-    )
-    _ensure_workers_can_import(sdf)
-    return sdf, n_parts
-
-
-def _splits(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[str, int, int, int]]:
-    """The ``(path, rg, row_start, row_end)`` rows of one task's slice of
-    a ``_split_frame``."""
-    for b in batches:
-        yield from zip(*(b.column(i).to_pylist() for i in range(4)))
+    return _task_frame(spark, len(splits), n_parts), splits, n_parts
 
 
 def _read_range(
@@ -557,7 +567,7 @@ def encode_files(
     re-run/benchmark output directories.
     """
     job_token = _job_token(job_token)
-    sdf, n_parts = _split_frame(spark, path_or_glob, stripe_rows, parallelism)
+    sdf, splits, n_parts = _split_frame(spark, path_or_glob, stripe_rows, parallelism)
     if recycle_output and output_dir is not None:
         # in-place overwrite has no tmp+rename fence, so two CONCURRENT
         # attempts of one task (speculative execution) could interleave
@@ -591,7 +601,7 @@ def encode_files(
         if output_dir is not None and not discard_output:
             # blob bytes are entropy-packed already: snappy costs CPU for ~0% gain
             writer = _PartWriter(output_dir, _BLOB_PA_SCHEMA, bytes_per_file, recycle_output, compression="none")
-        for k, (path, rg, r0, r1) in enumerate(_splits(batches)):
+        for k, (path, rg, r0, r1) in enumerate(_task_splits(batches, splits)):
             # read at stripe_rows: wide token rows make 64k-row batches large
             src = _read_range(path, rg, r0, r1, stripe_rows, columns)
             for bb in _encode_stream(_stripes(src, stripe_rows), part_id, job_token, k << 16, (k + 1) << 16):
@@ -652,7 +662,7 @@ def roundtrip_files(
     job_token = _job_token(job_token)
     if (batch_transform is None) != (transform_schema is None):
         raise ValueError("batch_transform and transform_schema must be passed together")
-    sdf, _ = _split_frame(spark, path_or_glob, stripe_rows, parallelism or spark.sparkContext.defaultParallelism)
+    sdf, splits, _ = _split_frame(spark, path_or_glob, stripe_rows, parallelism or spark.sparkContext.defaultParallelism)
     if columns is not None:
         unknown = set(columns) - {f.name for f in spark_schema.fields}
         if unknown:
@@ -671,7 +681,7 @@ def roundtrip_files(
         _task_init()
         decoded: list[pa.RecordBatch] = []
         decoded_rows = 0
-        for path, rg, r0, r1 in _splits(batches):
+        for path, rg, r0, r1 in _task_splits(batches, splits):
             # reads bigger than a stripe decode ~20% faster
             src = _read_range(path, rg, r0, r1, max(stripe_rows, 65536))
             for stripe in _stripes(src, stripe_rows):

@@ -158,8 +158,9 @@ def read_orc_distributed(
     from pyspark.sql.pandas.types import from_arrow_schema
 
     from datafusion_orc_spark.operators.encode import (
-        _ensure_workers_can_import,
         _list_inputs,
+        _task_frame,
+        _task_splits,
         prune_bounds_from_predicate,
     )
     from datafusion_orc_spark.sources.objectstore import (
@@ -202,49 +203,36 @@ def read_orc_distributed(
     spark_schema = from_arrow_schema(merged)
     out_names = list(merged.names)
 
-    # parallelize(n) slices the split list directly into one partition
-    # per split — createDataFrame(...).repartition() here planned an
-    # Exchange over the (tiny) split list: an extra stage barrier + AQE
-    # replan per scan, the exact scheduler tax encode_files removes the
-    # same way (operators/encode.py parallelize slicing)
-    sdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(p, s, n) for p, s, n in splits], len(splits)
-        ),
-        "path string, first_stripe int, n_stripes int",
-    )
-    _ensure_workers_can_import(sdf)
+    # one task per split, no Exchange (operators/encode.py _task_frame)
+    sdf = _task_frame(spark, len(splits), len(splits))
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from datafusion_orc_spark.format.orc_reader import OrcReader
 
-        for b in batches:
-            for path, first, cnt in zip(
-                b.column(0).to_pylist(), b.column(1).to_pylist(), b.column(2).to_pylist()
+        for path, first, cnt in _task_splits(batches, splits):
+            if cnt == 0:
+                continue
+            r = OrcReader(path, opener=opener)
+            have = set(r.schema().names)
+            local_cols = [c for c in out_names if c in have]
+            for rb in r.iter_stripes(
+                columns=local_cols,
+                stripes=list(range(first, first + cnt)),
+                batch_rows=batch_rows,
+                prune=prune,
             ):
-                if cnt == 0:
-                    continue
-                r = OrcReader(path, opener=opener)
-                have = set(r.schema().names)
-                local_cols = [c for c in out_names if c in have]
-                for rb in r.iter_stripes(
-                    columns=local_cols,
-                    stripes=list(range(first, first + cnt)),
-                    batch_rows=batch_rows,
-                    prune=prune,
-                ):
-                    # pad fields this file lacks with nulls, order to merged
-                    arrays = []
-                    for name in out_names:
-                        want = merged.field(name).type
-                        if name in have:
-                            a = rb.column(rb.schema.get_field_index(name))
-                            if a.type != want:  # ns -> us boundary cast (floor)
-                                a = _boundary_cast(a, want)
-                            arrays.append(a)
-                        else:
-                            arrays.append(pa.nulls(rb.num_rows, want))
-                    yield pa.RecordBatch.from_arrays(arrays, schema=merged)
+                # pad fields this file lacks with nulls, order to merged
+                arrays = []
+                for name in out_names:
+                    want = merged.field(name).type
+                    if name in have:
+                        a = rb.column(rb.schema.get_field_index(name))
+                        if a.type != want:  # ns -> us boundary cast (floor)
+                            a = _boundary_cast(a, want)
+                        arrays.append(a)
+                    else:
+                        arrays.append(pa.nulls(rb.num_rows, want))
+                yield pa.RecordBatch.from_arrays(arrays, schema=merged)
 
     out = sdf.mapInArrow(scan, spark_schema)
     if where is not None:

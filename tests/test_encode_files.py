@@ -3,7 +3,9 @@ parquet row groups directly (pyarrow C++) and write blob part files from
 inside the task; only stats rows cross back to the JVM."""
 
 import glob
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from datafusion_orc_spark.operators.encode import decode_table, encode_files
@@ -44,14 +46,35 @@ def test_encode_files_inline_blobs_match_table_encode(spark):
 
 
 def test_encode_files_plan_has_no_exchange(spark):
-    from tests.test_plan_shapes import _plan
+    from tests.test_plan_shapes import _plan, assert_range_task_frame
 
-    plan = _plan(encode_files(spark, SRC, stripe_rows=4000))
-    assert "Exchange" not in plan.split("AdaptiveSparkPlan")[-1].split("Exchange RoundRobin")[0] or True
-    # the only exchange allowed is the split-list repartition (tiny
-    # metadata rows); no exchange may carry blob/data rows. The split
-    # repartition shuffles `path` strings only:
-    assert "MapInArrow" in plan or "ArrowEvalPython" in plan
+    for kw in ({}, {"parallelism": 2}):
+        plan = _plan(encode_files(spark, SRC, stripe_rows=4000, **kw))
+        assert_range_task_frame(plan)
+        assert "MapInArrow" in plan
+
+
+@pytest.mark.parametrize("parallelism", [3, 4])
+def test_encode_files_assigns_contiguous_split_ranges(spark, tmp_path, parallelism):
+    """The task frame is ``spark.range(0, n, 1, p)``: task i runs the
+    splits with ids ``[i*n/p, (i+1)*n/p)``. 10 splits over 4 tasks run
+    2,3,2,3 splits (a parallelize()d split list gave 2,2,2,4): counts
+    differ by at most 1, and stripe ids stay distinct."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "ten_rg.parquet")
+    pq.write_table(pa.table({"k": pa.array(range(1000), pa.int64())}), src, row_group_size=100)
+    rows = encode_files(spark, src, stripe_rows=64, job_token=9, parallelism=parallelism).collect()
+    ids = [r["stripe_id"] for r in rows]
+    assert len(ids) == len(set(ids)) and sum(r["n_rows"] for r in rows) == 1000
+    split_seqs: dict[int, set[int]] = {}
+    for r in rows:
+        assert r["stripe_id"] >> 47 == 9 and (r["stripe_id"] >> 31) & 0xFFFF == r["part_id"]
+        split_seqs.setdefault(r["part_id"], set()).add((r["stripe_id"] & 0x7FFFFFFF) >> 16)
+    counts = [len(split_seqs[i]) for i in range(parallelism)]
+    assert counts == [(i + 1) * 10 // parallelism - i * 10 // parallelism for i in range(parallelism)]
+    assert max(counts) - min(counts) <= 1
 
 
 def test_encode_files_parallelism_cap(spark):
@@ -201,3 +224,33 @@ def test_stripe_id_packing_survives_many_splits_per_task(spark, tmp_path):
     ids = [r["stripe_id"] for r in blobs.select("stripe_id").distinct().collect()]
     assert len(ids) == len(set(ids)) and all(i > 0 for i in ids)
     assert len(ids) >= 300  # one stripe per split minimum
+
+
+def test_package_zip_is_keyed_on_contents(tmp_path, monkeypatch):
+    """The zip shipped to workers is named by a hash of the packaged
+    ``.py`` files: unchanged contents reuse the existing zip, changed
+    contents (say a later process whose PID was recycled) get a new one."""
+    import tempfile
+    import zipfile
+
+    from datafusion_orc_spark.operators.encode import _package_zip
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    pkg = tmp_path / "src" / "pkg"
+    pkg.mkdir(parents=True)
+    (pkg / "__init__.py").write_text("")
+    (pkg / "mod.py").write_text("X = 1\n")
+    (pkg / "notes.txt").write_text("not packaged")
+    first = _package_zip(str(pkg))
+    assert os.path.dirname(first) == str(tmp_path)
+    assert sorted(zipfile.ZipFile(first).namelist()) == ["pkg/__init__.py", "pkg/mod.py"]
+    inode = os.stat(first).st_ino
+    assert _package_zip(str(pkg)) == first
+    assert os.stat(first).st_ino == inode  # reused, not rewritten
+
+    (pkg / "mod.py").write_text("X = 2\n")
+    second = _package_zip(str(pkg))
+    assert second != first
+    assert zipfile.ZipFile(second).read("pkg/mod.py") == b"X = 2\n"
+    (pkg / "notes.txt").write_text("still not packaged")
+    assert _package_zip(str(pkg)) == second

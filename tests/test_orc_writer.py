@@ -523,3 +523,28 @@ def test_char_varchar_footer_type_preserved(spark, tmp_path):
         write_orc(t, p, string_kinds={"v": ("varchar", 3)})
     with _pytest.raises(TypeError):
         write_orc(pa.table({"k": pa.array([1, 2])}), p, string_kinds={"k": ("char", 2)})
+
+
+def test_high_cardinality_strings_stay_direct_v2(tmp_path):
+    """A mostly-unique string column fails the dictionary heuristic on
+    its distinct count, before its dictionary becomes Python objects: it
+    stays DIRECT_V2, reads back equal through ORC C++, and its file
+    bytes are pinned."""
+    import hashlib
+
+    from datafusion_orc_spark.format import orc_proto as proto
+    from datafusion_orc_spark.format.orc_reader import OrcReader, _StripeReader
+
+    n = 3000
+    vals = [None if i % 97 == 0 else ("rep" if i % 50 == 0 else f"u{(i * 7919) % 100003:06d}") for i in range(n)]
+    tbl = pa.table({"s": pa.array(vals), "k": pa.array(range(n), pa.int64())})
+    path = str(tmp_path / "hc.orc")
+    write_orc(tbl, path, stripe_rows=1000)
+    r = OrcReader(path)
+    col_s = r.footer.types[0].subtypes[r.footer.types[0].field_names.index("s")]
+    for info in r.footer.stripes:
+        assert _StripeReader(r, info).encodings[col_s].kind == proto.E_DIRECT_V2
+    assert pyarrow.orc.ORCFile(path).read().equals(tbl)
+    with open(path, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()
+    assert digest == "3552ae457e422f311cce4612fbff42b0ad3b21b0884c4990e0de35237e478a5b"

@@ -13,6 +13,18 @@ def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
+def assert_range_task_frame(plan: str) -> None:
+    """A split-planned job's frame: ``MapInArrow`` straight over a
+    ``Range`` leaf. No ``ExistingRDD`` scan (a parallelize()d split list
+    runs a Python stage per task to build its rows) and no Exchange."""
+    import re
+
+    assert re.search(r"^\+- (\* )?Range \(\d+\)$", plan, flags=re.M), plan
+    assert re.search(r"^\(\d+\) Range ", plan, flags=re.M), plan
+    assert "ExistingRDD" not in plan, plan
+    assert "Exchange" not in plan, plan
+
+
 def test_filter_pushdown_reaches_scan(spark):
     df = (
         spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
@@ -164,9 +176,9 @@ def test_min_label_components_raises_beyond_max_rounds(spark):
 
 def test_orc_scan_plan_has_no_exchange(spark, tmp_path):
     """read_orc_distributed must not plan an Exchange over its split
-    list: splits are sliced via parallelize() exactly like encode_files
-    (r3 verdict #4 — the repartition() variant added a stage barrier +
-    AQE replan per scan)."""
+    list: its task frame is the ``spark.range`` frame encode_files uses
+    (a repartition() frame added a stage barrier + AQE replan per scan;
+    a parallelize() frame a Python stage per task)."""
     import numpy as np
     import pyarrow as pa
 
@@ -177,8 +189,8 @@ def test_orc_scan_plan_has_no_exchange(spark, tmp_path):
     p = str(tmp_path / "scan.orc")
     write_orc(t, p, stripe_rows=1000)
     df = read_orc_distributed(spark, p, split_bytes=1)
-    plan = _plan(df)
-    assert "Exchange" not in plan, plan
+    assert_range_task_frame(_plan(df))
+    assert df.rdd.getNumPartitions() == 5  # one task per stripe split
     assert df.agg(F.sum("a")).collect()[0][0] == 5000 * 4999 // 2
 
 

@@ -157,6 +157,20 @@ def test_fused_roundtrip_plan_shape(spark):
     assert plan.count("Exchange") <= 4  # node + detail each for agg/sort only
 
 
+def test_roundtrip_files_plan_is_a_range_task_frame(spark):
+    """Without a transform the fused roundtrip is one MapInArrow over
+    the ``spark.range`` task frame: no Exchange, no parallelize()d
+    split list, no parquet scan."""
+    from datafusion_orc_spark.operators.encode import roundtrip_files
+    from tests.test_plan_shapes import _plan, assert_range_task_frame
+
+    schema = spark.read.parquet(f"{SF}/lineitem.parquet").schema
+    for par in (None, 2):
+        plan = _plan(roundtrip_files(spark, f"{SF}/lineitem.parquet", schema, ["l_orderkey"], parallelism=par))
+        assert_range_task_frame(plan)
+        assert "Scan parquet" not in plan
+
+
 def test_roundtrip_files_transform_args_must_pair(spark):
     from datafusion_orc_spark.operators.encode import roundtrip_files
 
