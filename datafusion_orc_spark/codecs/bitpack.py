@@ -92,8 +92,8 @@ def bit_pack(vals: np.ndarray, width: int) -> bytes:
     low ``width`` bit columns -> np.packbits. Measured against a 40-bit
     OR-scatter window kernel and a per-phase strided kernel on this
     hardware: packbits wins or ties at every width (it is SIMD inside),
-    so the bit-matrix stays. (The strided window DOES win for unpack —
-    see _unpack_window.)
+    so the bit-matrix stays. (A window gather DOES win for unpack — see
+    bit_unpack.)
     """
     n = len(vals)
     if n == 0:
@@ -162,7 +162,11 @@ def bit_unpack(buf: bytes | np.ndarray, width: int, n: int, offset_bits: int = 0
             return raw[o : o + n * wb].view(be).astype(np.uint64)
         packed = raw[o : o + n * wb].reshape(n, wb)
     elif 9 <= width < 32:
-        return _unpack_window(raw, width, n, offset_bits)
+        # one MSB-first gather: a value's width plus its bit phase (<= 38
+        # bits) fits the 8-byte window at its first byte
+        bitpos = np.arange(offset_bits, offset_bits + n * width, width)
+        win = byte_windows(raw, (offset_bits + n * width + 7) >> 3)
+        return _gather(win, bitpos, np.uint64(64 - width))
     else:
         total_bits = offset_bits + n * width
         nbytes = (total_bits + 7) // 8
@@ -206,39 +210,13 @@ def bit_unpack_runs(win: np.ndarray, byte0, width, cnt) -> np.ndarray:
         first = np.cumsum(cnt) - cnt
         bitpos = np.repeat(byte0 * 8 - first * width, cnt) + np.arange(len(wv)) * wv
         shr = (64 - wv).astype(np.uint64)
+    return _gather(win, bitpos, shr)
+
+
+def _gather(win: np.ndarray, bitpos: np.ndarray, shr) -> np.ndarray:
+    """The MSB-first value at each bit position: its byte's window,
+    shifted left by the bit phase and right by ``shr`` (64 - width)."""
     vals = win[bitpos >> 3].astype(np.uint64)
     vals <<= (bitpos & 7).astype(np.uint64)
     vals >>= shr
     return vals
-
-
-def _unpack_window(raw: np.ndarray, width: int, n: int, offset_bits: int) -> np.ndarray:
-    """Non-byte-aligned width 9..31, any bit offset: values whose index
-    is congruent mod 8 share a bit phase and sit exactly ``width`` bytes
-    apart, so each phase group reads a constant-shift (m, 5)-byte
-    strided window (w+7 <= 38 bits fits the 40-bit window), fuses it to
-    uint64, shifts and masks. 8 groups x 5 strided column reads — no
-    index arrays, no bit expansion; measured ~1.3-2x faster than the
-    unpackbits matrix at w>=11 on this hardware."""
-    from numpy.lib.stride_tricks import as_strided
-
-    # pad so the 5-byte window of the LAST value is in-bounds
-    need = ((offset_bits + (n - 1) * width) >> 3) + 5
-    pad = np.zeros(need, dtype=np.uint8)
-    m0 = min(len(raw), need)
-    pad[:m0] = raw[:m0]
-    out = np.empty(n, dtype=np.uint64)
-    mask = np.uint64((1 << width) - 1)
-    for r in range(8):
-        m = len(range(r, n, 8))
-        if m == 0:
-            break
-        start_bit = offset_bits + r * width
-        b0 = start_bit >> 3
-        sh = np.uint64(40 - width - (start_bit & 7))
-        win = as_strided(pad[b0:], shape=(m, 5), strides=(width, 1))
-        acc = win[:, 0].astype(np.uint64)
-        for j in range(1, 5):
-            acc = (acc << np.uint64(8)) | win[:, j]
-        out[r::8] = (acc >> sh) & mask
-    return out

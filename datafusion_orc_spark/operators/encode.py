@@ -22,9 +22,12 @@ are composed from one copy of each piece:
 - ``_PartWriter``: byte-rolled parquet part files written from inside
   the task, staged per task attempt by ``_open_part`` (which the ORC
   sink shares);
-- ``_decode_setup``, ``_stripe_groups`` and ``_stripe_batch``:
-  projection and stripe pruning on the blob table, partition-local
-  regrouping of a stripe's blob rows, and the decode of one stripe.
+- ``_decode_setup``: projection and stripe pruning on the blob table;
+- ``_stripe_groups``: the one loop that regroups blob rows into stripes
+  (zero-copy blob slices, ``prune`` drops stripes on their
+  [vmin, vmax]); ``_stripe_batches`` decodes each stripe it yields,
+  with sub-block pruning. The stripeblob DataSource
+  (sources/stripeblob_datasource.py) reads through the same two.
 
 The entry points:
 
@@ -35,10 +38,10 @@ The entry points:
 - ``roundtrip_files``: ``_split_frame`` -> ``_read_range`` ->
   ``_stripes`` -> encode every column -> decode the projection, with an
   optional partial aggregate before the JVM.
-- ``decode_table``: ``_decode_setup`` -> ``_stripe_groups`` ->
-  ``_stripe_batch``. Encode emits a stripe's columns contiguously from
-  one task, so the decode needs no Exchange; ``shuffle=True`` falls back
-  to ``groupBy(stripe_id).applyInArrow`` for scattered blob tables.
+- ``decode_table``: ``_decode_setup`` -> ``_stripe_batches``. Encode
+  emits a stripe's columns contiguously from one task, so the decode
+  needs no Exchange; ``shuffle=True`` falls back to
+  ``groupBy(stripe_id).applyInArrow`` for scattered blob tables.
 - ``decode_to_files``: ``decode_table``'s partition-local path into a
   ``_PartWriter``.
 
@@ -55,6 +58,7 @@ import tempfile
 import uuid
 from collections.abc import Iterator
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -702,6 +706,21 @@ def roundtrip_files(
 
 
 _PRED_RE = None
+_INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def _tighten_bound(bounds: dict[str, tuple[int, int]], col: str, op: str, val: int) -> None:
+    """AND ``col <op> val`` (op in >, >=, <, <=, =, ==) into the
+    {column: (lo, hi)} prune bounds. An open end is the full int64 range:
+    any narrower sentinel would become a real bound and drop the stripes
+    whose values lie beyond it."""
+    lo, hi = bounds.get(col, (_INT64_MIN, _INT64_MAX))
+    eq = op in ("=", "==")
+    if eq or op[0] == ">":
+        lo = max(lo, val + 1 if op == ">" else val)
+    if eq or op[0] == "<":
+        hi = min(hi, val - 1 if op == "<" else val)
+    bounds[col] = (lo, hi)
 
 
 def prune_bounds_from_predicate(where: str) -> dict[str, tuple[int, int]]:
@@ -724,8 +743,7 @@ def prune_bounds_from_predicate(where: str) -> dict[str, tuple[int, int]]:
         )
     if re.search(r"\bor\b", where, flags=re.IGNORECASE):
         return {}
-    out: dict[str, list] = {}
-    _LO, _HI = -(1 << 62), (1 << 62)
+    out: dict[str, tuple[int, int]] = {}
     for conj in re.split(r"\band\b", where, flags=re.IGNORECASE):
         m = _PRED_RE.match(conj.strip().strip("()"))
         if not m:
@@ -736,19 +754,8 @@ def prune_bounds_from_predicate(where: str) -> dict[str, tuple[int, int]]:
             # mirrored literal-first form: flip the operator
             col, val = m.group("col2"), int(m.group("val2"))
             op = {"<": ">", ">": "<", "<=": ">=", ">=": "<="}.get(m.group("op2"), m.group("op2"))
-        lo, hi = out.get(col, [_LO, _HI])
-        if op in ("=", "=="):
-            lo, hi = max(lo, val), min(hi, val)
-        elif op == ">":
-            lo = max(lo, val + 1)
-        elif op == ">=":
-            lo = max(lo, val)
-        elif op == "<":
-            hi = min(hi, val - 1)
-        elif op == "<=":
-            hi = min(hi, val)
-        out[col] = [lo, hi]
-    return {c: (lo, hi) for c, (lo, hi) in out.items()}
+        _tighten_bound(out, col, op, val)
+    return out
 
 
 def _decode_setup(
@@ -787,39 +794,68 @@ def _decode_setup(
     return blobs_df, schema, names
 
 
-def _stripe_groups(batches: Iterator[pa.RecordBatch], expected: set[str]) -> Iterator[dict[str, bytes]]:
+def _stripe_groups(
+    batches: Iterator[pa.RecordBatch], expected: set[str], prune: dict[str, tuple[int, int]] | None
+) -> Iterator[dict[str, memoryview]]:
     """Partition-local group-by: collect blob rows per stripe_id and
     yield each stripe's ``{column: blob}`` as soon as it holds every
-    ``expected`` column. A stripe still incomplete at the end of the
-    partition was scattered by a repartition after encode: raise."""
-    pending: dict[int, dict[str, bytes]] = {}
+    ``expected`` column, so only stripes still being assembled are held.
+
+    Each blob is a slice of the batch's Arrow ``data`` buffer (no
+    per-blob copy; the slice pins the buffer), cast to unsigned bytes:
+    pa.Buffer's memoryview is SIGNED ('b'), and ``blob[i]`` then gave
+    negative ints for bytes >= 0x80 — the FSST table parser read a
+    221-symbol count as -35 and decoded every string to b"".
+
+    ``prune``: a stripe with any blob row whose [vmin, vmax] misses its
+    column's (lo, hi) bound is dropped, with its columns already held."""
+    pending: dict[int, dict[str, memoryview]] = {}
+    skipped: set[int] = set()
     for b in batches:
-        for sid, col, blob in zip(
-            b.column("stripe_id").to_pylist(), b.column("column").to_pylist(), b.column("data").to_pylist()
-        ):
-            if col not in expected:
+        if not b.num_rows:
+            continue
+        data = b.column("data")
+        bufs = data.buffers()
+        width = 8 if pa.types.is_large_binary(data.type) else 4
+        offs = np.frombuffer(bufs[1], f"<i{width}", len(data) + 1, data.offset * width).tolist()
+        mv = memoryview(bufs[2]).cast("B")
+        sids, cols = b.column("stripe_id").to_pylist(), b.column("column").to_pylist()
+        if prune:
+            vmins, vmaxs = b.column("vmin").to_pylist(), b.column("vmax").to_pylist()
+        for i, (sid, col) in enumerate(zip(sids, cols)):
+            if sid in skipped or col not in expected:
                 continue
+            if prune and col in prune and vmins[i] is not None:
+                lo, hi = prune[col]
+                if vmaxs[i] < lo or vmins[i] > hi:
+                    skipped.add(sid)
+                    pending.pop(sid, None)
+                    continue
             got = pending.setdefault(sid, {})
-            got[col] = blob
+            got[col] = mv[offs[i] : offs[i + 1]]
             if len(got) == len(expected):
                 yield pending.pop(sid)
     if pending:
         raise ValueError(
             f"stripes {sorted(pending)[:8]} are missing columns within their "
-            f"partition — the blob table was repartitioned after encode; "
-            f"decode with decode_table(shuffle=True)"
+            f"partition: either the blob table was repartitioned after encode "
+            f"(decode with decode_table(shuffle=True)), or a blob file was "
+            f"truncated or rewritten mid-read"
         )
 
 
-def _stripe_batch(blob_by_col: dict, schema: pa.Schema, names: list[str], prune) -> pa.RecordBatch | None:
-    """Decode one stripe, applying sub-block (D19 ROW_INDEX-stride)
-    pruning when bounds are known: blocks whose local [min, max] cannot
-    match are dropped before Arrow assembly; a stripe whose every block
-    fails gives None."""
-    ranges = prune_row_ranges(blob_by_col, prune) if prune else None
-    if ranges == []:
-        return None
-    return decode_stripe(blob_by_col, schema, columns=names, row_ranges=ranges)
+def _stripe_batches(
+    batches: Iterator[pa.RecordBatch], schema: pa.Schema, names: list[str], prune
+) -> Iterator[pa.RecordBatch]:
+    """Decode the ``names`` projection of every stripe ``_stripe_groups``
+    assembles, with sub-block (D19 ROW_INDEX-stride) pruning when bounds
+    are known: blocks whose local [min, max] cannot match are dropped
+    before Arrow assembly, and a stripe whose every block fails yields
+    nothing."""
+    for blobs in _stripe_groups(batches, set(names), prune):
+        ranges = prune_row_ranges(blobs, prune) if prune else None
+        if ranges != []:
+            yield decode_stripe(blobs, schema, columns=names, row_ranges=ranges)
 
 
 def decode_table(
@@ -869,18 +905,14 @@ def decode_table(
         proj = pa.schema([schema.field(nm) for nm in names])
 
         def decode_fn(table: pa.Table) -> pa.Table:
-            blob_by_col = dict(zip(table.column("column").to_pylist(), table.column("data").to_pylist()))
-            batch = _stripe_batch(blob_by_col, schema, names, prune)
-            return pa.Table.from_batches([batch] if batch is not None else [], schema=proj)
+            batches = list(_stripe_batches(table.to_batches(), schema, names, prune))
+            return pa.Table.from_batches(batches, schema=proj)
 
         out = blobs_df.groupBy("stripe_id").applyInArrow(decode_fn, spark_schema)
     else:
 
         def decode_local(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for blob_by_col in _stripe_groups(batches, set(names)):
-                batch = _stripe_batch(blob_by_col, schema, names, prune)
-                if batch is not None:
-                    yield batch
+            yield from _stripe_batches(batches, schema, names, prune)
 
         out = blobs_df.mapInArrow(decode_local, spark_schema)
     return out.filter(where) if where is not None else out
@@ -927,10 +959,8 @@ def decode_to_files(
     def dec_write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _task_init()
         writer = _PartWriter(output_dir, proj, _BYTES_PER_FILE, **_DECODED_PARQUET)
-        for blob_by_col in _stripe_groups(batches, set(names)):
-            batch = _stripe_batch(blob_by_col, schema, names, prune)
-            if batch is not None:
-                writer.write(batch)
+        for batch in _stripe_batches(batches, schema, names, prune):
+            writer.write(batch)
         writer.close()
         yield pa.record_batch(
             [

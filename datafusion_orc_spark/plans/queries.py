@@ -604,49 +604,6 @@ GROUP BY e.event_type ORDER BY e.event_type
 # 2. encode-engine queries (the north-rule surface)
 # --------------------------------------------------------------------------
 
-def q_roundtrip_lineitem_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """encode→decode lineitem with our codecs, then aggregate the DECODED
-    rows; the DuckDB oracle aggregates the RAW parquet — equal results
-    prove the round-trip is value-identical.
-
-    Encode parallelism is scale-adaptive (defaultParallelism, i.e. the
-    session's core count), not a constant: the r7 shape repartitioned to
-    8, which capped the mapInArrow encode+decode stage at 8 concurrent
-    tasks on a 32-core box (r8 measurement: 7.5 s -> 3.0 s at sf1.0 from
-    this change alone; guide §2/§6 — parallelism must derive from the
-    environment, not a literal tuned to one input size)."""
-    from datafusion_orc_spark.operators.encode import decode_table, encode_table
-
-    # hash-repartition on the high-cardinality key rather than round-robin:
-    # keyless repartition pays a local sort of its input (sortBeforeRepartition,
-    # guide §2.5) — ~6M rows sorted for nothing; hash partitioning does not
-    li = _t(spark, sf_dir, "lineitem").repartition(
-        spark.sparkContext.defaultParallelism, F.col("l_orderkey")
-    )
-    blobs = encode_table(li, stripe_rows=16384)
-    # projection pushdown through the engine's own format (guide §6:
-    # column pruning must reach the scan; the reference's S10 analogue):
-    # every column is still ENCODED, but only the 4 columns the
-    # aggregate reads are decoded and cross the Python boundary back —
-    # the other 7 columns' blobs are filtered out between the two
-    # mapInArrow operators and never reach the decode worker
-    dec = decode_table(
-        blobs, None, li.schema,
-        columns=["l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag"],
-    )
-    return (
-        dec.groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("l_quantity").alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-            F.min("l_orderkey").alias("min_ok"),
-            F.max("l_orderkey").alias("max_ok"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
 def _li_rt_partial(t):
     """Per-task partial aggregate of the decoded roundtrip projection
     (pyarrow, guide §2.3 'aggregate before you shuffle' / §4.2): count,
@@ -2802,9 +2759,8 @@ QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] 
     "cube_revenue": (q_cube_revenue, SQL_CUBE_REVENUE),
     # encode engine
     # registry points at the FUSED shape (r8: in-task scan+encode+decode+
-    # partial-agg, see q_roundtrip_lineitem_fused); q_roundtrip_lineitem_agg
-    # keeps the unfused encode_table+decode_table plan and is pinned equal
-    # to the fused one by tests/test_roundtrip_fused.py
+    # partial-agg, see q_roundtrip_lineitem_fused); tests/test_roundtrip_fused.py
+    # pins it equal to the unfused encode_table+decode_table plan
     "roundtrip_lineitem_agg": (q_roundtrip_lineitem_fused, SQL_ROUNDTRIP_LINEITEM_AGG),
     "roundtrip_tokens_agg": (q_roundtrip_tokens_agg, SQL_ROUNDTRIP_TOKENS_AGG),
     "roundtrip_datasource_agg": (q_roundtrip_datasource_agg, SQL_ROUNDTRIP_DATASOURCE_AGG),

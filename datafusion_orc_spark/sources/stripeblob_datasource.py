@@ -22,10 +22,14 @@ src/file_format.rs:118-124):
   DataSource API does not forward Spark's column pruning yet): only the
   requested blob rows are decoded AND retained (physical_exec.rs:69-78
   analogue).
-- **streaming reads**: each partition iterates its blob file's parquet
-  row groups, keeps blob bytes as Arrow buffers (memoryviews, no
-  per-blob copy), and decodes each stripe as soon as its projected
-  columns are complete — peak memory is O(stripe), not O(file).
+- **streaming reads** through the engine's one blob-stripe path
+  (operators/encode.py ``_stripe_groups`` -> ``_stripe_batches``, as
+  ``decode_table``): each partition iterates its blob file's parquet
+  row groups, keeps blob bytes as Arrow buffer slices (no per-blob
+  copy), and decodes each stripe as soon as its projected columns are
+  complete — peak memory is O(stripe), not O(file). Within a surviving
+  stripe, sub-block (ROW_INDEX-stride) stats drop blocks that cannot
+  match the pushed filters.
 
 Paths resolve through sources/objectstore.py, so s3://-style blob
 tables work wherever local ones do.
@@ -49,7 +53,10 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from datafusion_orc_spark.operators.encode import _stripe_batches, _tighten_bound
 from datafusion_orc_spark.sources.objectstore import LocalStore, resolve_store
+
+_OPS = {GreaterThan: ">", GreaterThanOrEqual: ">=", LessThan: "<", LessThanOrEqual: "<=", EqualTo: "="}
 
 
 class _BlobFilePartition(InputPartition):
@@ -68,7 +75,7 @@ def _load_manifest(store, path: str) -> dict | None:
 class StripeBlobReader(DataSourceReader):
     def __init__(self, path: str, schema: StructType):
         self._schema = schema
-        self._prune: dict[str, list] = {}
+        self._prune: dict[str, tuple[int, int]] = {}
         store, norm = resolve_store(path)
         manifest = _load_manifest(store, norm)
         if manifest is not None and "chunks" in manifest:
@@ -86,94 +93,27 @@ class StripeBlobReader(DataSourceReader):
         every filter so Spark still applies exact row filtering."""
         int_cols = {f.name for f in self._schema.fields if f.dataType.typeName() in ("integer", "long", "short")}
         for f in filters:
-            attr = getattr(f, "attribute", None)
-            col = attr[0] if attr and len(attr) == 1 else None
-            val = getattr(f, "value", None)
-            if col in int_cols and isinstance(val, int):
-                bounds = self._prune.setdefault(col, [None, None])  # [lo, hi]
-                if isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                    lo = val + 1 if isinstance(f, GreaterThan) else val
-                    bounds[0] = lo if bounds[0] is None else max(bounds[0], lo)
-                elif isinstance(f, (LessThan, LessThanOrEqual)):
-                    hi = val - 1 if isinstance(f, LessThan) else val
-                    bounds[1] = hi if bounds[1] is None else min(bounds[1], hi)
-                elif isinstance(f, EqualTo):
-                    bounds[0] = val if bounds[0] is None else max(bounds[0], val)
-                    bounds[1] = val if bounds[1] is None else min(bounds[1], val)
+            op = _OPS.get(type(f))
+            if op and len(f.attribute) == 1 and f.attribute[0] in int_cols and isinstance(f.value, int):
+                _tighten_bound(self._prune, f.attribute[0], op, f.value)
             yield f  # unsupported-for-exactness: Spark re-applies all
 
     def partitions(self) -> list[InputPartition]:
         return [_BlobFilePartition(p) for p in self._files]
 
     def read(self, partition: _BlobFilePartition):
-        import numpy as np
-        import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from datafusion_orc_spark.format.stripe import decode_stripe
-
-        arrow_schema = to_arrow_schema(self._schema)
-        names = list(arrow_schema.names)
-        expected = set(names)
-
+        schema = to_arrow_schema(self._schema)
         store, norm = resolve_store(partition.path)
         pf = pq.ParquetFile(norm if isinstance(store, LocalStore) else store.open_input(norm))
-
-        # Streamed + buffer-backed: iterate parquet row groups, hold each
-        # blob as a memoryview into the Arrow data buffer (the memoryview
-        # pins the batch buffer alive — no per-blob bytes copy), decode a
-        # stripe the moment its projected columns are all present, drop it.
-        pending: dict[int, dict[str, memoryview]] = {}
-        skipped: set[int] = set()
-        for batch in pf.iter_batches(
+        batches = pf.iter_batches(
             batch_size=1 << 16,
             columns=["stripe_id", "column", "data", "vmin", "vmax"],
             use_threads=False,
-        ):
-            sids = batch.column(0).to_pylist()
-            cols = batch.column(1).to_pylist()
-            data_arr = batch.column(2)
-            vmins = batch.column(3).to_pylist()
-            vmaxs = batch.column(4).to_pylist()
-            bufs = data_arr.buffers()
-            width = 8 if data_arr.type.equals(pa.large_binary()) else 4
-            off_dt = np.int64 if width == 8 else np.int32
-            offs = np.frombuffer(
-                bufs[1], dtype=off_dt, count=len(data_arr) + 1,
-                offset=data_arr.offset * width,
-            )
-            # pa.Buffer's memoryview is SIGNED ('b'): single-byte indexing
-            # (blob[i]) then yields negative ints for bytes >= 0x80 — the
-            # FSST table deserializer read a 221-symbol count as -35 and
-            # silently decoded every string to b"" (caught at sf0.1, the
-            # first fixture whose doc_id stripes are big enough for the
-            # selector to pick str_fsst). Cast once to unsigned so every
-            # downstream parser sees bytes-like semantics.
-            mv = memoryview(bufs[2]).cast("B")
-            for i, (sid, col) in enumerate(zip(sids, cols)):
-                if sid in skipped or col not in expected:
-                    continue
-                lo, hi = vmins[i], vmaxs[i]
-                if lo is not None and col in self._prune:
-                    plo, phi = self._prune[col]
-                    if (plo is not None and hi < plo) or (phi is not None and lo > phi):
-                        # stripe provably empty under the filters: drop it,
-                        # including columns of it buffered earlier
-                        skipped.add(sid)
-                        pending.pop(sid, None)
-                        continue
-                got = pending.setdefault(sid, {})
-                got[col] = mv[offs[i] : offs[i + 1]]
-                if len(got) == len(expected):
-                    yield decode_stripe(got, arrow_schema, columns=names)
-                    del pending[sid]
-        if pending:
-            raise ValueError(
-                f"stripeblob: {len(pending)} stripe(s) ended the file with "
-                f"missing columns (e.g. {sorted(pending)[:4]}) — blob table "
-                f"is truncated or was rewritten mid-read"
-            )
+        )
+        yield from _stripe_batches(batches, schema, list(schema.names), self._prune)
 
 
 class StripeBlobDataSource(DataSource):

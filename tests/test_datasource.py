@@ -55,6 +55,53 @@ def test_datasource_filter_pushdown_prunes(spark, encoded_dir):
     )
 
 
+def test_reader_pushed_filters_prune_stripes_and_sub_blocks(tmp_path, monkeypatch):
+    """pushFilters -> read: a stripe whose [vmin, vmax] misses a bound is
+    never decoded, and inside a surviving stripe the sub-block
+    (ROW_INDEX-stride) stats drop the blocks that cannot match."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.datasource import LessThan, LessThanOrEqual
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    import datafusion_orc_spark.format.stripe as stripe_mod
+    from datafusion_orc_spark.operators.encode import _encode_stream
+    from datafusion_orc_spark.sources.stripeblob_datasource import StripeBlobReader
+
+    n = 3 * stripe_mod.SUB_BLOCK_ROWS  # k: no nulls -> a K_ROWIDX block index
+
+    def stripe(k0, n0):
+        k = np.arange(k0, k0 + n, dtype=np.int64)
+        # nn: int with nulls -> [vmin, vmax] stats but no block index
+        nn = pa.array([None if i % 5 == 0 else n0 + i % 100 for i in range(n)], pa.int32())
+        return pa.record_batch({"k": k, "nn": nn})
+
+    # the second stripe's k overlaps the k bound; only its nn misses
+    blobs = pa.Table.from_batches(list(_encode_stream(iter([stripe(0, 0), stripe(50, 1000)]), 0, 1)))
+    pq.write_table(blobs, str(tmp_path / "part-0.parquet"))
+    rows = blobs.to_pylist()
+    missed = {r["data"] for r in rows if r["stripe_id"] != rows[0]["stripe_id"]}
+
+    decoded = []
+    real = stripe_mod.decode_column
+
+    def spy(blob, typ, row_ranges=None):
+        decoded.append((bytes(blob), row_ranges))
+        return real(blob, typ, row_ranges=row_ranges)
+
+    monkeypatch.setattr(stripe_mod, "decode_column", spy)
+    schema = StructType([StructField("k", LongType()), StructField("nn", IntegerType())])
+    reader = StripeBlobReader(str(tmp_path), schema)
+    pushed = [LessThanOrEqual(("nn",), 500), LessThan(("k",), 100)]
+    assert list(reader.pushFilters(pushed)) == pushed  # Spark re-applies all
+    got = pa.Table.from_batches(list(reader.read(reader.partitions()[0])))
+    assert decoded and not any(b in missed for b, _ in decoded)  # second stripe never decoded
+    # of the first stripe, only k's first block is decoded
+    assert got.num_rows == stripe_mod.SUB_BLOCK_ROWS
+    assert got.column("k").to_pylist() == list(range(stripe_mod.SUB_BLOCK_ROWS))
+
+
 def test_datasource_reads_encode_files_job_output(spark, tmp_path):
     """Full fast-path storage round-trip: encode_files_job (pyarrow part
     files written from inside tasks) -> stripeblob DataSource scan."""

@@ -154,41 +154,52 @@ def test_stripeblob_reader_projection_decodes_subset(spark, monkeypatch):
     from pyspark.sql.types import StructType
 
     from datafusion_orc_spark.sources.stripeblob_datasource import StripeBlobReader
-    import datafusion_orc_spark.format.stripe as stripe_mod
+    import datafusion_orc_spark.operators.encode as encode_mod
 
     base, df = _blob_table_to_memory(spark)
     proj = StructType([f for f in df.schema.fields if f.name in ("id", "grp")])
 
-    decoded_names = []
-    real_stripe = stripe_mod.decode_stripe
+    decoded_names, held_names = [], set()
+    real_stripe = encode_mod.decode_stripe
 
-    def spy_stripe(blobs, schema, columns=None):
+    def spy_stripe(blobs, schema, columns=None, row_ranges=None):
         decoded_names.extend(columns if columns is not None else schema.names)
-        return real_stripe(blobs, schema, columns=columns)
+        held_names.update(blobs)
+        return real_stripe(blobs, schema, columns=columns, row_ranges=row_ranges)
 
-    monkeypatch.setattr(
-        "datafusion_orc_spark.format.stripe.decode_stripe", spy_stripe
-    )
+    monkeypatch.setattr(encode_mod, "decode_stripe", spy_stripe)
     reader = StripeBlobReader(base, proj)
     got = pa.Table.from_batches(list(reader.read(reader.partitions()[0])))
     assert got.schema.names == ["id", "grp"]
     assert got.num_rows == 2000
-    assert set(decoded_names) == {"id", "grp"}  # name column never decoded
+    # the name column is never decoded, nor even held for decode
+    assert set(decoded_names) == held_names == {"id", "grp"}
 
 
 def test_stripeblob_reader_streaming_memory_bound(spark):
     """Stripes decode as they complete: peak pending stripes stays far
     below the stripe count of the file (O(stripe) memory, not O(file))."""
+    import gc
+    import types
+
+    from datafusion_orc_spark.operators.encode import _stripe_groups
     from datafusion_orc_spark.sources.stripeblob_datasource import StripeBlobReader
+
+    def live_groupers():
+        return [
+            g for g in gc.get_objects()
+            if isinstance(g, types.GeneratorType) and g.gi_code is _stripe_groups.__code__ and g.gi_frame
+        ]
 
     base, df = _blob_table_to_memory(spark)
     reader = StripeBlobReader(base, df.schema)
+    before = {id(g) for g in live_groupers()}
     gen = reader.read(reader.partitions()[0])
     first = next(gen)
     # after the first yield, remaining stripes must not all be buffered:
-    # generator state exposes the pending dict via gi_frame locals
-    pending = gen.gi_frame.f_locals["pending"]
-    n_stripes = 2000 // 256 + 2
+    # the read's suspended grouping loop exposes its pending dict
+    (grouper,) = [g for g in live_groupers() if id(g) not in before]
+    pending = grouper.gi_frame.f_locals["pending"]
     assert len(pending) <= 1, f"{len(pending)} stripes buffered"
     rest = list(gen)
     assert first.num_rows + sum(b.num_rows for b in rest) == 2000

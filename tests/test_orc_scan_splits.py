@@ -144,6 +144,15 @@ def test_where_auto_prunes_and_filters_exactly(spark, tmp_path):
     assert ks == list(range(55000, 55200))
 
 
+@pytest.mark.parametrize("where,base", [("k > 5", (1 << 62) + 1), ("k < 5", -(1 << 62) - 3001)])
+def test_where_keeps_rows_beyond_2_62(spark, tmp_path, where, base):
+    """A one-sided predicate must not prune stripes whose stats lie past
+    +-2^62 (the old open-end sentinels) on the open side."""
+    path = str(tmp_path / "big.orc")
+    write_orc(pa.table({"k": np.arange(3000, dtype=np.int64) + base}), path, stripe_rows=1000)
+    assert read_orc_distributed(spark, path, where=where).count() == 3000
+
+
 def test_register_orc_matches_reference_example(spark):
     """The reference's own example workflow (examples/
     datafusion_integration.rs + lib.rs:179-207): register the corpus

@@ -12,7 +12,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from datafusion_orc_spark.codecs.bitpack import bit_pack, width_code
+from datafusion_orc_spark.codecs.bitpack import bit_pack, bit_unpack, width_code
 from datafusion_orc_spark.codecs.byterle import bool_rle_decode, bool_rle_encode
 from datafusion_orc_spark.codecs.rlev2 import _try_encode_patched_base, rle_v2_decode, rle_v2_encode
 from datafusion_orc_spark.codecs.varint import varint_encode_scalar, zigzag_scalar
@@ -27,6 +27,21 @@ settings.load_profile(os.environ.get("HYPOTHESIS_PROFILE", "default"))
 
 i64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
 i32 = st.integers(min_value=-(2**31), max_value=2**31 - 1)
+
+
+@pytest.mark.parametrize("width", range(1, 65))
+def test_bit_unpack_any_width_at_any_bit_offset(width):
+    """bit_unpack(bit_pack(v, w), w, n, offset_bits) == v for every width,
+    with the packed values preceded by a random number of random bits."""
+    rng = np.random.default_rng(width)
+    for n in (1, 7, 8, 9, 512, 8192):
+        v = rng.integers(0, 2**64 - 1, n, dtype=np.uint64, endpoint=True) >> np.uint64(64 - width)
+        v[0] = (1 << width) - 1  # every bit of the width set
+        bits = np.unpackbits(np.frombuffer(bit_pack(v, width), np.uint8))[: n * width]
+        for off in (0, int(rng.integers(1, 8)), int(rng.integers(8, 200))):
+            pre = rng.integers(0, 2, off, dtype=np.uint8)
+            buf = np.packbits(np.concatenate([pre, bits])).tobytes()
+            assert np.array_equal(bit_unpack(buf, width, n, off), v), (n, off)
 
 
 @given(st.lists(i64, min_size=1, max_size=1500))

@@ -13,11 +13,47 @@ import pytest
 SF = "/root/testdata/sf0.001"
 
 
-def test_fused_equals_unfused_lineitem(spark):
-    from datafusion_orc_spark.plans.queries import (
-        q_roundtrip_lineitem_agg,
-        q_roundtrip_lineitem_fused,
+def q_roundtrip_lineitem_agg(spark, sf_dir: str):
+    """The unfused roundtrip_lineitem_agg plan: encode_table over the
+    lineitem parquet, decode_table of the four aggregated columns, then
+    the Spark aggregate over the decoded rows."""
+    from pyspark.sql import functions as F
+
+    from datafusion_orc_spark.operators.encode import decode_table, encode_table
+    from datafusion_orc_spark.plans.queries import _t
+
+    # hash-repartition on the high-cardinality key rather than round-robin:
+    # keyless repartition pays a local sort of its input (sortBeforeRepartition,
+    # guide §2.5) — ~6M rows sorted for nothing; hash partitioning does not
+    li = _t(spark, sf_dir, "lineitem").repartition(
+        spark.sparkContext.defaultParallelism, F.col("l_orderkey")
     )
+    blobs = encode_table(li, stripe_rows=16384)
+    # projection pushdown through the engine's own format (guide §6:
+    # column pruning must reach the scan; the reference's S10 analogue):
+    # every column is still ENCODED, but only the 4 columns the
+    # aggregate reads are decoded and cross the Python boundary back —
+    # the other 7 columns' blobs are filtered out between the two
+    # mapInArrow operators and never reach the decode worker
+    dec = decode_table(
+        blobs, None, li.schema,
+        columns=["l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag"],
+    )
+    return (
+        dec.groupBy("l_returnflag")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("l_quantity").alias("sum_qty"),
+            F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
+            F.min("l_orderkey").alias("min_ok"),
+            F.max("l_orderkey").alias("max_ok"),
+        )
+        .orderBy("l_returnflag")
+    )
+
+
+def test_fused_equals_unfused_lineitem(spark):
+    from datafusion_orc_spark.plans.queries import q_roundtrip_lineitem_fused
 
     unfused = [tuple(r) for r in q_roundtrip_lineitem_agg(spark, SF).collect()]
     fused = [tuple(r) for r in q_roundtrip_lineitem_fused(spark, SF).collect()]

@@ -6,8 +6,10 @@ read a 221-symbol count as -35 and returned an empty table, which made
 every str_fsst column decode to empty strings with no error — first hit
 by the stripeblob DataSource at sf0.1, the first fixture whose doc_id
 stripes are large enough for the codec selector to pick str_fsst.
-Two guards are pinned here: the deserializer masks its byte reads, and
-the DataSource casts its Arrow-buffer memoryview to unsigned.
+Two guards hold: the deserializer masks its byte reads (pinned here),
+and the one blob-stripe grouping loop (operators/encode.py
+``_stripe_groups``, which decode_table and the DataSource both read
+through) casts its Arrow-buffer memoryview to unsigned.
 """
 import numpy as np
 import pyarrow as pa
@@ -83,3 +85,22 @@ def test_fsst_roundtrip_signed_memoryview_stream():
 
     dec = fsst_decode(_signed_mv(bytes(enc)), FsstTable.deserialize(_signed_mv(table.serialize())))
     assert dec == blob
+
+
+@pytest.mark.parametrize("typ", [pa.binary(), pa.large_binary()])
+def test_stripe_groups_yield_unsigned_slices_of_sliced_batches(typ):
+    """The blob grouping loop hands out unsigned views of the Arrow data
+    buffer for binary and large_binary blobs, through batch slice offsets."""
+    from datafusion_orc_spark.operators.encode import _encode_stream, _stripe_batches, _stripe_groups
+
+    vals = [f"doc-{i:012d}" for i in range(600)]
+    batch = pa.record_batch({"doc_id": pa.array(vals), "n": pa.array(range(600), pa.int64())})
+    blobs = pa.Table.from_batches(list(_encode_stream(iter([batch, batch]), 0, 1)))
+    blobs = blobs.set_column(blobs.schema.get_field_index("data"), "data", blobs["data"].cast(typ))
+    rows = blobs.combine_chunks().to_batches()[0]
+    one_row = [rows.slice(i, 1) for i in range(rows.num_rows)]
+    groups = list(_stripe_groups(iter(one_row), {"doc_id", "n"}, None))
+    assert len(groups) == 2
+    assert all(b.format == "B" for g in groups for b in g.values())
+    out = list(_stripe_batches(iter(one_row), batch.schema, ["doc_id", "n"], None))
+    assert [b.to_pydict() for b in out] == [batch.to_pydict()] * 2

@@ -68,6 +68,17 @@ def test_prune_bounds_from_predicate_parser():
     assert "l_comment" not in b and "l_quantity" not in b  # non-int: ignored
     # OR disables pruning entirely (a disjunct can rescue dropped rows)
     assert prune_bounds_from_predicate("l_orderkey > 100 OR l_partkey = 1") == {}
+    # an open end is the full int64 range, not a narrower sentinel
+    assert prune_bounds_from_predicate("x > 5") == {"x": (6, 2**63 - 1)}
+
+
+@pytest.mark.parametrize("where,base", [("x > 5", (1 << 62) + 1), ("x < 5", -(1 << 62) - 20001)])
+def test_decode_where_keeps_values_beyond_2_62(spark, where, base):
+    """A one-sided predicate must not prune a stripe whose values all lie
+    past +-2^62 (the old open-end sentinels) on the open side."""
+    df = spark.range(20000).selectExpr(f"id + {base} as x")
+    blobs = encode_table(df.coalesce(1), stripe_rows=20000)
+    assert decode_table(blobs, None, df.schema, where=where).count() == 20000
 
 
 def test_decode_where_auto_prunes_and_filters(spark):
