@@ -216,7 +216,9 @@ def bit_unpack_runs(win: np.ndarray, byte0, width, cnt) -> np.ndarray:
 def _gather(win: np.ndarray, bitpos: np.ndarray, shr) -> np.ndarray:
     """The MSB-first value at each bit position: its byte's window,
     shifted left by the bit phase and right by ``shr`` (64 - width)."""
-    vals = win[bitpos >> 3].astype(np.uint64)
+    # the fancy index already copies: byteswap that copy in place
+    # rather than a second n-sized ``astype`` copy
+    vals = win[bitpos >> 3].byteswap(inplace=True).view(np.uint64)
     vals <<= (bitpos & 7).astype(np.uint64)
     vals >>= shr
     return vals

@@ -29,7 +29,7 @@ from decimal import Decimal
 import numpy as np
 import pyarrow as pa
 
-from datafusion_orc_spark.codecs.byterle import bool_rle_decode, byte_rle_decode
+from datafusion_orc_spark.codecs.byterle import byte_rle_decode
 from datafusion_orc_spark.codecs.rlev1 import rle_v1_decode
 from datafusion_orc_spark.codecs.rlev2 import rle_v2_decode
 from datafusion_orc_spark.codecs.varint import (
@@ -204,9 +204,7 @@ class _StripeReader:
 
         Compressed: pos = [chunk byte offset, offset in decompressed
         chunk, ...codec]; uncompressed: [byte offset, ...codec]."""
-        raw = self.streams.get((column, kind))
-        if raw is None:
-            return b"", pos[1:]
+        raw = self.streams.get((column, kind), b"")
         comp = self.orc.postscript.compression
         if comp == 0:
             return raw[pos[0] :], pos[1:]
@@ -216,73 +214,76 @@ class _StripeReader:
     # raw byte streams 1, RLE streams 2, boolean bit streams 3
     _POS_RAW, _POS_RLE, _POS_BOOL = 1, 2, 3
 
-    def decode_column_range(
-        self, col: int, group: int, n_rows: int, entries_for
+    def decode_column(
+        self, col: int, n: int, group: int | None = None, entries_for=None
     ) -> pa.Array | None:
-        """Decode ``n_rows`` rows of this column starting at row-group
-        ``group``'s boundary, SEEKING every stream via the group's
-        RowIndexEntry positions (ORC-Java's reader machinery, mirrored;
-        the reference delegates the same seek to orc-rust,
-        physical_exec.rs:83-88): each stream is entered at its recorded
-        (chunk, offset) and the codec skips (values-into-run / bit
-        offset) are decoded-and-dropped. ``entries_for(col)`` returns a
-        column's parsed row index — nested children (LIST/MAP/STRUCT/
-        UNION subtypes) recurse with their OWN index entries, which ORC
-        records at the same row-group boundaries; the parent's decoded
-        LENGTH/tag stream supplies how many child values the group owns.
-        Covers RLEv1 (ORC 0.11) and RLEv2 files, DECIMAL, TIMESTAMP and
-        all nested kinds. Returns None only when a needed index entry is
-        missing (caller falls back to full stripe decode + slice)."""
+        """Decode ``n`` rows of this column, recursively over the type tree.
+
+        ``group=None`` decodes from the stripe's first row. With a row
+        group, every stream is SEEKED via that group's RowIndexEntry
+        positions (ORC-Java's reader machinery, mirrored; the reference
+        delegates the same seek to orc-rust, physical_exec.rs:83-88):
+        each stream is entered at its recorded (chunk, offset) and the
+        codec skips (values-into-run / bit offset) are decoded and
+        dropped. A whole-stripe decode is the same walk with every
+        position at zero. ``entries_for(col)`` returns a column's parsed
+        row index — nested children (LIST/MAP/STRUCT/UNION subtypes)
+        recurse with their OWN index entries, which ORC records at the
+        same row-group boundaries; the parent's decoded LENGTH/tag
+        stream supplies how many child values the group owns. Returns
+        None only when a seek's index entry is missing (the caller then
+        decodes from the stripe start and slices)."""
         t = self.orc.footer.types[col]
         enc = self.encodings[col].kind
-        entries = entries_for(col)
-        if group >= len(entries):
-            return None
-        comp_extra = 1 if self.orc.postscript.compression else 0
-        pos = list(entries[group]["positions"])
-        i = 0
+        if group is None:
 
-        def take(arity: int) -> list[int]:
-            nonlocal i
-            a = arity + comp_extra
-            p = pos[i : i + a]
-            i += a
-            return p
+            def at(kind: int, arity: int) -> tuple[bytes, list[int]]:
+                return self.stream(col, kind), [0] * (arity - 1)
 
-        valid = np.ones(n_rows, dtype=bool)
-        if self.has_stream(col, proto.S_PRESENT):
-            buf, rest = self.stream_at(col, proto.S_PRESENT, take(self._POS_BOOL))
-            byte_skip, bit = rest
+        else:
+            entries = entries_for(col)
+            if group >= len(entries):
+                return None
+            comp_extra = 1 if self.orc.postscript.compression else 0
+            pos = list(entries[group]["positions"])
+
+            def at(kind: int, arity: int) -> tuple[bytes, list[int]]:
+                nonlocal pos
+                a = arity + comp_extra
+                p, pos = pos[:a], pos[a:]
+                return self.stream_at(col, kind, p)
+
+        def bools(kind: int, n_bits: int) -> np.ndarray:
+            buf, (byte_skip, bit) = at(kind, self._POS_BOOL)
             packed = byte_rle_decode(
-                np.frombuffer(buf, dtype=np.uint8), byte_skip + (bit + n_rows + 7) // 8
+                np.frombuffer(buf, dtype=np.uint8), byte_skip + (bit + n_bits + 7) // 8
             )[byte_skip:]
-            valid = np.unpackbits(packed)[bit : bit + n_rows].astype(bool)
-        n_vals = int(valid.sum())
-        k = t.kind
-        # v1 (ORC 0.11 DIRECT/DICTIONARY) positions carry the same
-        # [byte offset, values-into-run] shape as v2
+            return np.unpackbits(packed, count=bit + n_bits)[bit:].astype(bool)
+
+        # integer-stream decoder: v1 for DIRECT/DICTIONARY (ORC 0.11),
+        # v2 for *_V2 (HIVE-8732+) — both verified vs ORC-Java writers;
+        # v1 positions carry the same [byte offset, values-into-run] shape
         int_dec = rle_v1_decode if enc in (proto.E_DIRECT, proto.E_DICTIONARY) else rle_v2_decode
 
-        def rle_at(kind: int, n: int, signed: bool) -> np.ndarray:
-            buf, rest = self.stream_at(col, kind, take(self._POS_RLE))
-            skip = rest[0]
-            return int_dec(np.frombuffer(buf, dtype=np.uint8), skip + n, signed=signed)[skip:]
+        def rle(kind: int, m: int, signed: bool | None) -> np.ndarray:
+            """``m`` values of an RLE stream; ``signed=None`` = byte RLE."""
+            buf, (skip,) = at(kind, self._POS_RLE)
+            b = np.frombuffer(buf, dtype=np.uint8)
+            if signed is None:
+                return byte_rle_decode(b, skip + m)[skip:]
+            return int_dec(b, skip + m, signed=signed)[skip:]
 
+        valid = np.ones(n, dtype=bool)
+        if self.has_stream(col, proto.S_PRESENT):
+            valid = bools(proto.S_PRESENT, n)
+        n_vals = int(valid.sum())
+        k = t.kind
         if k == proto.BOOLEAN:
-            buf, rest = self.stream_at(col, proto.S_DATA, take(self._POS_BOOL))
-            byte_skip, bit = rest
-            packed = byte_rle_decode(
-                np.frombuffer(buf, dtype=np.uint8), byte_skip + (bit + n_vals + 7) // 8
-            )[byte_skip:]
-            vals = np.unpackbits(packed)[bit : bit + n_vals].astype(bool)
-            return self._primitive(pa.bool_(), vals, valid, n_rows)
+            return self._primitive(pa.bool_(), bools(proto.S_DATA, n_vals), valid, n)
         if k == proto.BYTE:
-            buf, rest = self.stream_at(col, proto.S_DATA, take(self._POS_RLE))
-            skip = rest[0]
-            vals = byte_rle_decode(np.frombuffer(buf, dtype=np.uint8), skip + n_vals)[skip:]
-            return self._primitive(pa.int8(), vals.view(np.int8), valid, n_rows)
+            return self._primitive(pa.int8(), rle(proto.S_DATA, n_vals, None).view(np.int8), valid, n)
         if k in (proto.SHORT, proto.INT, proto.LONG, proto.DATE):
-            vals = rle_at(proto.S_DATA, n_vals, signed=True)
+            vals = rle(proto.S_DATA, n_vals, signed=True)
             typ = {
                 proto.SHORT: pa.int16(),
                 proto.INT: pa.int32(),
@@ -290,193 +291,57 @@ class _StripeReader:
                 proto.DATE: pa.date32(),
             }[k]
             np_t = np.int32 if k == proto.DATE else typ.to_pandas_dtype()
-            return self._primitive(typ, vals.astype(np_t), valid, n_rows)
+            return self._primitive(typ, vals.astype(np_t), valid, n)
         if k in (proto.FLOAT, proto.DOUBLE):
-            buf, _rest = self.stream_at(col, proto.S_DATA, take(self._POS_RAW))
-            dt = "<f4" if k == proto.FLOAT else "<f8"
-            vals = np.frombuffer(buf, dtype=dt, count=n_vals)
-            return self._primitive(pa.float32() if k == proto.FLOAT else pa.float64(), vals, valid, n_rows)
+            buf, _ = at(proto.S_DATA, self._POS_RAW)
+            vals = np.frombuffer(buf, dtype="<f4" if k == proto.FLOAT else "<f8", count=n_vals)
+            return self._primitive(pa.float32() if k == proto.FLOAT else pa.float64(), vals, valid, n)
         if k in (proto.STRING, proto.VARCHAR, proto.CHAR, proto.BINARY):
             typ = pa.binary() if k == proto.BINARY else pa.string()
             if enc in (proto.E_DICTIONARY, proto.E_DICTIONARY_V2):
-                idx = rle_at(proto.S_DATA, n_vals, signed=False)
+                # the dictionary itself is stripe-wide: never seeked
+                idx = rle(proto.S_DATA, n_vals, signed=False)
                 blob = self.stream(col, proto.S_DICTIONARY_DATA)
                 dict_size = self.encodings[col].dictionary_size
-                dl_ = int_dec(self.stream(col, proto.S_LENGTH), dict_size, signed=False)
+                dict_lens = int_dec(self.stream(col, proto.S_LENGTH), dict_size, signed=False)
                 offsets = np.zeros(dict_size + 1, dtype=np.int64)
-                np.cumsum(dl_, out=offsets[1:])
+                np.cumsum(dict_lens, out=offsets[1:])
                 starts = offsets[idx]
                 lens = offsets[idx + 1] - starts
                 out_off = np.zeros(n_vals + 1, dtype=np.int64)
                 np.cumsum(lens, out=out_off[1:])
                 b = np.frombuffer(blob, dtype=np.uint8)
+                # vectorized gather (same trick as codecs.strings.dict_decode)
                 flat_idx = np.repeat(starts - out_off[:-1], lens) + np.arange(int(out_off[-1]))
                 gather = b[flat_idx] if n_vals else np.empty(0, np.uint8)
-                return self._varlen(typ, out_off, gather.tobytes(), valid, n_rows)
-            buf, _rest = self.stream_at(col, proto.S_DATA, take(self._POS_RAW))
-            lengths = rle_at(proto.S_LENGTH, n_vals, signed=False)
+                return self._varlen(typ, out_off, gather.tobytes(), valid, n)
+            buf, _ = at(proto.S_DATA, self._POS_RAW)
+            lengths = rle(proto.S_LENGTH, n_vals, signed=False)
             offsets = np.zeros(n_vals + 1, dtype=np.int64)
             np.cumsum(lengths, out=offsets[1:])
-            return self._varlen(typ, offsets, buf[: int(offsets[-1])], valid, n_rows)
+            return self._varlen(typ, offsets, buf[: int(offsets[-1])], valid, n)
         if k in (proto.TIMESTAMP, proto.TIMESTAMP_INSTANT):
-            secs = rle_at(proto.S_DATA, n_vals, signed=True)
-            nanos_enc = rle_at(proto.S_SECONDARY, n_vals, signed=False)
+            secs = rle(proto.S_DATA, n_vals, signed=True)
+            nanos_enc = rle(proto.S_SECONDARY, n_vals, signed=False)
+            # low 3 bits = removed trailing zeros (0 => none, z => 10^(z+1));
+            # the payload is SIGNED via two's complement (the ORC C++ writer
+            # emits negative sub-second parts for pre-1970 instants), so use
+            # an arithmetic shift — verified against pyarrow-written streams.
             zeros = (nanos_enc.view(np.uint64) & np.uint64(7)).astype(np.int64)
             nanos = (nanos_enc >> 3) * np.power(10, np.where(zeros > 0, zeros + 1, 0))
-            abs_secs = secs + 1420070400
+            abs_secs = secs + 1420070400  # 2015-01-01T00:00:00Z
+            # ORC pre-1970 convention (ORC-Java writers, incl. ours):
+            # positive-nanos rows before 1970 are stored one second ahead;
+            # the reader subtracts it back. C++-written streams carry
+            # SIGNED nanos instead (handled above) and never hit this.
             abs_secs -= ((abs_secs < 0) & (nanos > 999999)).astype(np.int64)
             total = abs_secs * 1_000_000_000 + nanos
-            return self._primitive(
-                pa.timestamp("ns", tz="UTC" if k == proto.TIMESTAMP_INSTANT else None),
-                total,
-                valid,
-                n_rows,
-            )
+            typ = pa.timestamp("ns", tz="UTC" if k == proto.TIMESTAMP_INSTANT else None)
+            return self._primitive(typ, total, valid, n)
         if k == proto.DECIMAL:
             # DATA = unbounded varint mantissas (raw stream: 1 position),
             # SECONDARY = per-value scales (RLE)
-            buf, _rest = self.stream_at(col, proto.S_DATA, take(self._POS_RAW))
-            if (t.precision or 38) > 18:
-                big, _ = varint_decode_big(buf, n_vals)
-                mantissa = [(m >> 1) ^ -(m & 1) for m in big]
-            else:
-                u, _ = varint_decode(buf, n_vals)
-                mantissa = zigzag_decode(u)
-            scales = rle_at(proto.S_SECONDARY, n_vals, signed=True)
-            return _decimal_array(t, mantissa, scales, valid, n_rows)
-        if k in (proto.LIST, proto.MAP):
-            # the group's LENGTH values say how many child values it owns;
-            # each child column then seeks via its OWN RowIndexEntry
-            # (ORC records child positions at the same row-group
-            # boundaries, already offset past earlier groups' values)
-            lengths = rle_at(proto.S_LENGTH, n_vals, signed=False)
-            full = np.zeros(n_rows, dtype=np.int64)
-            full[valid] = lengths
-            offsets = np.zeros(n_rows + 1, dtype=np.int32)
-            offsets[1:] = np.cumsum(full)
-            n_items = int(full.sum())
-            if k == proto.LIST:
-                child = self.decode_column_range(t.subtypes[0], group, n_items, entries_for)
-                if child is None:
-                    return None
-                return pa.ListArray.from_buffers(
-                    pa.list_(child.type), n_rows,
-                    [_validity_buffer(valid), pa.py_buffer(offsets.tobytes())],
-                    children=[child],
-                )
-            keys = self.decode_column_range(t.subtypes[0], group, n_items, entries_for)
-            items = self.decode_column_range(t.subtypes[1], group, n_items, entries_for)
-            if keys is None or items is None:
-                return None
-            entry_fields = [pa.field("key", keys.type, nullable=False), pa.field("value", items.type)]
-            struct = pa.StructArray.from_arrays([keys, items], fields=entry_fields)
-            return pa.MapArray.from_buffers(
-                pa.map_(keys.type, items.type), n_rows,
-                [_validity_buffer(valid), pa.py_buffer(offsets.tobytes())],
-                children=[struct],
-            )
-        if k == proto.STRUCT:
-            children = [
-                self.decode_column_range(sc, group, n_vals, entries_for)
-                for sc in t.subtypes
-            ]
-            if any(c is None for c in children):
-                return None
-            names = t.field_names
-            if n_vals == n_rows:
-                return pa.StructArray.from_arrays(children, names)
-            mask = pa.array(~valid)
-            # all-null range: children are EMPTY arrays, so the take-by-0
-            # expansion below would raise ArrowIndexError — emit typed
-            # null children directly
-            if n_vals == 0:
-                return pa.StructArray.from_arrays(
-                    [pa.nulls(n_rows, type=ch.type) for ch in children],
-                    names, mask=mask,
-                )
-            expanded = []
-            for ch in children:
-                idx = np.full(n_rows, -1, dtype=np.int64)
-                idx[valid] = np.arange(n_vals)
-                expanded.append(ch.take(pa.array(np.where(valid, idx, 0))))
-            return pa.StructArray.from_arrays(expanded, names, mask=mask)
-        if k == proto.UNION and n_vals == n_rows:
-            buf, rest = self.stream_at(col, proto.S_DATA, take(self._POS_RLE))
-            skip = rest[0]
-            tags = byte_rle_decode(np.frombuffer(buf, dtype=np.uint8), skip + n_vals)[skip:].astype(np.int8)
-            offsets = np.zeros(n_vals, dtype=np.int32)
-            children = []
-            for ci, sub in enumerate(t.subtypes):
-                m = tags == ci
-                offsets[m] = np.arange(int(m.sum()), dtype=np.int32)
-                child = self.decode_column_range(sub, group, int(m.sum()), entries_for)
-                if child is None:
-                    return None
-                children.append(child)
-            return pa.UnionArray.from_dense(
-                pa.array(tags, type=pa.int8()), pa.array(offsets, type=pa.int32()), children
-            )
-        return None  # union-with-nulls: caller falls back (and raises there)
-
-    # ---- column decode (recursive over the type tree) ----
-
-    def decode_column(self, col: int, n: int) -> pa.Array:
-        t = self.orc.footer.types[col]
-        valid = np.ones(n, dtype=bool)
-        if self.has_stream(col, proto.S_PRESENT):
-            valid = bool_rle_decode(self.stream(col, proto.S_PRESENT), n)
-        n_vals = int(valid.sum())
-        enc = self.encodings[col].kind
-        # integer-stream decoder: v1 for DIRECT/DICTIONARY (ORC 0.11),
-        # v2 for *_V2 (HIVE-8732+) — both verified vs ORC-Java writers
-        int_dec = rle_v1_decode if enc in (proto.E_DIRECT, proto.E_DICTIONARY) else rle_v2_decode
-
-        k = t.kind
-        if k == proto.BOOLEAN:
-            vals = bool_rle_decode(self.stream(col, proto.S_DATA), n_vals)
-            return self._primitive(pa.bool_(), vals, valid, n)
-        if k == proto.BYTE:
-            vals = byte_rle_decode(self.stream(col, proto.S_DATA), n_vals).view(np.int8)
-            return self._primitive(pa.int8(), vals, valid, n)
-        if k in (proto.SHORT, proto.INT, proto.LONG):
-            vals = int_dec(self.stream(col, proto.S_DATA), n_vals, signed=True)
-            typ = {proto.SHORT: pa.int16(), proto.INT: pa.int32(), proto.LONG: pa.int64()}[k]
-            return self._primitive(typ, vals.astype(typ.to_pandas_dtype()), valid, n)
-        if k == proto.FLOAT:
-            vals = np.frombuffer(self.stream(col, proto.S_DATA), dtype="<f4", count=n_vals)
-            return self._primitive(pa.float32(), vals, valid, n)
-        if k == proto.DOUBLE:
-            vals = np.frombuffer(self.stream(col, proto.S_DATA), dtype="<f8", count=n_vals)
-            return self._primitive(pa.float64(), vals, valid, n)
-        if k == proto.DATE:
-            vals = int_dec(self.stream(col, proto.S_DATA), n_vals, signed=True)
-            return self._primitive(pa.date32(), vals.astype(np.int32), valid, n)
-        if k in (proto.STRING, proto.VARCHAR, proto.CHAR, proto.BINARY):
-            typ = pa.binary() if k == proto.BINARY else pa.string()
-            if enc in (proto.E_DICTIONARY, proto.E_DICTIONARY_V2):
-                blob = self.stream(col, proto.S_DICTIONARY_DATA)
-                dict_size = self.encodings[col].dictionary_size
-                lengths = int_dec(self.stream(col, proto.S_LENGTH), dict_size, signed=False)
-                offsets = np.zeros(dict_size + 1, dtype=np.int64)
-                np.cumsum(lengths, out=offsets[1:])
-                idx = int_dec(self.stream(col, proto.S_DATA), n_vals, signed=False)
-                starts = offsets[idx]
-                lens = offsets[idx + 1] - starts
-                out_off = np.zeros(n_vals + 1, dtype=np.int64)
-                np.cumsum(lens, out=out_off[1:])
-                b = np.frombuffer(blob, dtype=np.uint8)
-                total = int(out_off[-1])
-                # vectorized gather (same trick as codecs.strings.dict_decode)
-                flat_idx = np.repeat(starts - out_off[:-1], lens) + np.arange(total)
-                gather = b[flat_idx] if n_vals else np.empty(0, np.uint8)
-                return self._varlen(typ, out_off, gather.tobytes(), valid, n)
-            blob = self.stream(col, proto.S_DATA)
-            lengths = int_dec(self.stream(col, proto.S_LENGTH), n_vals, signed=False)
-            offsets = np.zeros(n_vals + 1, dtype=np.int64)
-            np.cumsum(lengths, out=offsets[1:])
-            return self._varlen(typ, offsets, blob, valid, n)
-        if k == proto.DECIMAL:
-            buf = self.stream(col, proto.S_DATA)
+            buf, _ = at(proto.S_DATA, self._POS_RAW)
             if (t.precision or 38) > 18:
                 # unbounded varint mantissas (python ints) for >64-bit
                 big, _ = varint_decode_big(buf, n_vals)
@@ -484,52 +349,54 @@ class _StripeReader:
             else:
                 u, _ = varint_decode(buf, n_vals)
                 mantissa = zigzag_decode(u)
-            scales = int_dec(self.stream(col, proto.S_SECONDARY), n_vals, signed=True)
+            scales = rle(proto.S_SECONDARY, n_vals, signed=True)
             return _decimal_array(t, mantissa, scales, valid, n)
-        if k == proto.TIMESTAMP or k == proto.TIMESTAMP_INSTANT:
-            secs = int_dec(self.stream(col, proto.S_DATA), n_vals, signed=True)
-            nanos_enc = int_dec(self.stream(col, proto.S_SECONDARY), n_vals, signed=False)
-            # low 3 bits = removed trailing zeros (0 => none, z => 10^(z+1));
-            # the payload is SIGNED via two's complement (the ORC C++ writer
-            # emits negative sub-second parts for pre-1970 instants), so use
-            # an arithmetic shift — verified against pyarrow-written streams.
-            zeros = (nanos_enc.view(np.uint64) & np.uint64(7)).astype(np.int64)
-            nanos = (nanos_enc >> 3) * np.power(10, np.where(zeros > 0, zeros + 1, 0))
-            epoch_2015 = 1420070400  # 2015-01-01T00:00:00Z
-            abs_secs = secs + epoch_2015
-            # ORC pre-1970 convention (ORC-Java writers, incl. ours):
-            # positive-nanos rows before 1970 are stored one second ahead;
-            # the reader subtracts it back. C++-written streams carry
-            # SIGNED nanos instead (handled above) and never hit this.
-            abs_secs -= ((abs_secs < 0) & (nanos > 999999)).astype(np.int64)
-            total = abs_secs * 1_000_000_000 + nanos
-            return self._primitive(pa.timestamp("ns", tz="UTC" if k == proto.TIMESTAMP_INSTANT else None), total, valid, n)
-        if k == proto.LIST:
-            lengths = int_dec(self.stream(col, proto.S_LENGTH), n_vals, signed=False)
-            full = np.zeros(n, dtype=np.int64)
-            full[valid] = lengths
-            offsets = np.zeros(n + 1, dtype=np.int32)
-            offsets[1:] = np.cumsum(full)
-            child = self.decode_column(t.subtypes[0], int(full.sum()))
-            typ = pa.list_(child.type)
-            return pa.ListArray.from_buffers(
-                typ, n, [_validity_buffer(valid), pa.py_buffer(offsets.astype(np.int32).tobytes())], children=[child]
-            )
-        if k == proto.MAP:
-            lengths = int_dec(self.stream(col, proto.S_LENGTH), n_vals, signed=False)
+        if k in (proto.LIST, proto.MAP):
+            # the LENGTH values say how many child values these rows own;
+            # a seeking child enters via its OWN RowIndexEntry (ORC records
+            # child positions at the same row-group boundaries, already
+            # offset past earlier groups' values)
+            lengths = rle(proto.S_LENGTH, n_vals, signed=False)
             full = np.zeros(n, dtype=np.int64)
             full[valid] = lengths
             offsets = np.zeros(n + 1, dtype=np.int32)
             offsets[1:] = np.cumsum(full)
             n_items = int(full.sum())
-            keys = self.decode_column(t.subtypes[0], n_items)
-            items = self.decode_column(t.subtypes[1], n_items)
-            typ = pa.map_(keys.type, items.type)
+            children = [self.decode_column(sc, n_items, group, entries_for) for sc in t.subtypes]
+            if any(c is None for c in children):
+                return None
+            buffers = [_validity_buffer(valid), pa.py_buffer(offsets.tobytes())]
+            if k == proto.LIST:
+                return pa.ListArray.from_buffers(
+                    pa.list_(children[0].type), n, buffers, children=children
+                )
+            keys, items = children
             entry_fields = [pa.field("key", keys.type, nullable=False), pa.field("value", items.type)]
-            struct = pa.StructArray.from_arrays([keys, items], fields=entry_fields)
+            struct = pa.StructArray.from_arrays(children, fields=entry_fields)
             return pa.MapArray.from_buffers(
-                typ, n, [_validity_buffer(valid), pa.py_buffer(offsets.astype(np.int32).tobytes())], children=[struct]
+                pa.map_(keys.type, items.type), n, buffers, children=[struct]
             )
+        if k == proto.STRUCT:
+            children = [self.decode_column(sc, n_vals, group, entries_for) for sc in t.subtypes]
+            if any(c is None for c in children):
+                return None
+            names = t.field_names
+            if n_vals == n:
+                return pa.StructArray.from_arrays(children, names)
+            # expand children through validity
+            mask = pa.array(~valid)
+            # all-null rows: children are EMPTY arrays, so the take-by-0
+            # expansion below would raise ArrowIndexError — emit typed
+            # null children directly
+            if n_vals == 0:
+                return pa.StructArray.from_arrays(
+                    [pa.nulls(n, type=ch.type) for ch in children],
+                    names, mask=mask,
+                )
+            idx = np.full(n, -1, dtype=np.int64)
+            idx[valid] = np.arange(n_vals)
+            take = pa.array(np.where(valid, idx, 0))
+            return pa.StructArray.from_arrays([ch.take(take) for ch in children], names, mask=mask)
         if k == proto.UNION:
             # ORC UNION: DATA = per-row child tag (byte RLE); child i holds
             # only the rows tagged i, densely — exactly Arrow's DENSE union
@@ -542,36 +409,19 @@ class _StripeReader:
                     "validity; no writer in this sandbox produces one to "
                     "verify a convention against"
                 )
-            tags = byte_rle_decode(self.stream(col, proto.S_DATA), n_vals).astype(np.int8)
+            tags = rle(proto.S_DATA, n_vals, None).astype(np.int8)
             offsets = np.zeros(n_vals, dtype=np.int32)
             children = []
-            for i, sub in enumerate(t.subtypes):
-                m = tags == i
+            for ci, sub in enumerate(t.subtypes):
+                m = tags == ci
                 offsets[m] = np.arange(int(m.sum()), dtype=np.int32)
-                children.append(self.decode_column(sub, int(m.sum())))
+                child = self.decode_column(sub, int(m.sum()), group, entries_for)
+                if child is None:
+                    return None
+                children.append(child)
             return pa.UnionArray.from_dense(
                 pa.array(tags, type=pa.int8()), pa.array(offsets, type=pa.int32()), children
             )
-        if k == proto.STRUCT:
-            children = [self.decode_column(sc, n_vals) for sc in t.subtypes]
-            names = t.field_names
-            if n_vals == n:
-                return pa.StructArray.from_arrays(children, names)
-            # expand children through validity
-            mask = pa.array(~valid)
-            # all-null column: empty children make take-by-0 raise — emit
-            # typed null children directly
-            if n_vals == 0:
-                return pa.StructArray.from_arrays(
-                    [pa.nulls(n, type=ch.type) for ch in children],
-                    names, mask=mask,
-                )
-            expanded = []
-            for ch in children:
-                idx = np.full(n, -1, dtype=np.int64)
-                idx[valid] = np.arange(n_vals)
-                expanded.append(ch.take(pa.array(np.where(valid, idx, 0))))
-            return pa.StructArray.from_arrays(expanded, names, mask=mask)
         raise NotImplementedError(f"ORC type kind {k}")
 
     def _primitive(self, typ: pa.DataType, vals: np.ndarray, valid: np.ndarray, n: int) -> pa.Array:
@@ -828,7 +678,7 @@ class OrcReader:
                     if sr.has_stream(col, proto.S_ROW_INDEX)
                 }
                 groups = surviving_row_groups(idx, prune_ids)
-                n_groups_all = -(-info.number_of_rows // stride)
+                n_groups = -(-info.number_of_rows // stride)
                 if groups != []:
                     # POINT predicates (lo == hi) additionally consult the
                     # column's bloom filter index when the writer emitted
@@ -837,24 +687,23 @@ class OrcReader:
                     # can — groups whose filter proves absence drop here
                     # without decoding a value
                     groups = self._bloom_surviving_groups(
-                        sr, prune_ids, groups, n_groups_all
+                        sr, prune_ids, groups, n_groups
                     )
                 if groups == []:
                     continue
-                if groups is not None:
-                    n_groups = -(-info.number_of_rows // stride)
-                    if len(groups) < n_groups:
-                        row_ranges = [
-                            (g * stride, min((g + 1) * stride, info.number_of_rows))
-                            for g in groups
-                        ]
+                if groups is not None and len(groups) < n_groups:
+                    row_ranges = [
+                        (g * stride, min((g + 1) * stride, info.number_of_rows))
+                        for g in groups
+                    ]
             batch = None
             if row_ranges is not None:
                 # positional seek: enter every stream at the surviving
                 # group's recorded positions and decode ONLY those rows —
                 # decode CPU inside foreign stripes scales with surviving
-                # rows, not stripe rows. Any column outside the seek fast
-                # path falls back to full decode + slice below.
+                # rows, not stripe rows. A column whose row index lacks
+                # the group's entry falls back to decoding from the stripe
+                # start + slice below.
                 from datafusion_orc_spark.format.orc_index import parse_row_index
 
                 col_entries: dict[int, list] = {}
@@ -870,29 +719,13 @@ class OrcReader:
                         )
                     return col_entries[cid]
 
-                range_batches = []
-                ok = True
-                for s, e in row_ranges:
-                    g0 = s // stride
-                    arrays = []
-                    for i in sel:
-                        arr = sr.decode_column_range(
-                            root.subtypes[i], g0, e - s, entries_for
-                        )
-                        if arr is None:
-                            ok = False
-                            break
-                        arrays.append(arr)
-                    if not ok:
-                        break
-                    range_batches.append(arrays)
-                if ok and range_batches:
+                per_column = [
+                    [sr.decode_column(root.subtypes[i], e - s, s // stride, entries_for) for s, e in row_ranges]
+                    for i in sel
+                ]
+                if all(a is not None for arrays in per_column for a in arrays):
                     batch = pa.RecordBatch.from_arrays(
-                        [
-                            pa.concat_arrays([rb[j] for rb in range_batches])
-                            for j in range(len(sel))
-                        ],
-                        out_names,
+                        [pa.concat_arrays(arrays) for arrays in per_column], out_names
                     )
             if batch is None:
                 arrays = [sr.decode_column(root.subtypes[i], info.number_of_rows) for i in sel]

@@ -42,6 +42,7 @@ from datafusion_orc_spark.codecs.varint import (
     varint_decode_signed,
     varint_encode_signed,
 )
+from datafusion_orc_spark.format.orc_reader import _validity_buffer
 
 FORMAT_VERSION = 2  # v2: runfor RUN_POS/EXC_POS switched to delta+bitpack
 
@@ -210,12 +211,6 @@ def _binary_parts(arr: pa.Array) -> tuple[bytes, np.ndarray]:
     return blob, lengths.astype(np.int64)
 
 
-def _validity_buffer(valid: np.ndarray) -> pa.Buffer | None:
-    if valid.all():
-        return None
-    return pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
-
-
 def _encode_for_bp(vals: np.ndarray, vmin: int | None = None, vmax: int | None = None) -> bytes:
     mn = int(vmin) if vmin is not None else (int(vals.min()) if len(vals) else 0)
     mx = int(vmax) if vmax is not None else (int(vals.max()) if len(vals) else 0)
@@ -230,10 +225,12 @@ def _encode_for_bp(vals: np.ndarray, vmin: int | None = None, vmax: int | None =
     return meta, bit_pack_view(reduced, width)
 
 
-def _decode_for_bp(meta: bytes, data: bytes, n: int) -> np.ndarray:
+def _decode_for_bp(meta: bytes, data: bytes, start: int, stop: int) -> np.ndarray:
+    """Values ``start..stop`` of a FoR bit-packed stream (a seek is a
+    bit offset: every value has the same width)."""
     base, pos = varint_decode_signed(meta, 1)
     width = meta[pos]
-    return bit_unpack(data, width, n).view(np.int64) + int(base[0])
+    return bit_unpack(data, width, stop - start, offset_bits=start * width).view(np.int64) + int(base[0])
 
 
 # runfor stream-key -> stripe stream-kind mapping
@@ -242,6 +239,11 @@ _RUNFOR_KINDS = {
     5: K_EXC_POS, 6: K_EXC_HIGH,
 }
 _RUNFOR_KEYS = {v: k for k, v in _RUNFOR_KINDS.items()}
+
+
+def _runfor_streams(streams: dict[int, bytes]) -> dict[int, bytes]:
+    """A column's stripe streams keyed the way ``codecs.runfor`` expects."""
+    return {_RUNFOR_KEYS[k]: b for k, b in streams.items() if k in _RUNFOR_KEYS}
 
 
 def _int_data_streams(
@@ -293,7 +295,7 @@ def _decode_column_ranged(
     if codec == "int_runfor" and not pa.types.is_date32(typ) and not pa.types.is_timestamp(typ):
         from datafusion_orc_spark.codecs.runfor import runfor_decode_range
 
-        rf = {_RUNFOR_KEYS[k]: b for k, b in streams.items() if k in _RUNFOR_KEYS}
+        rf = _runfor_streams(streams)
         parts = [runfor_decode_range(rf, n, s, e) for s, e in row_ranges]
         vals = np.concatenate(parts) if len(parts) > 1 else parts[0]
         np_t = _INT_TYPES[typ]
@@ -301,13 +303,7 @@ def _decode_column_ranged(
             typ, len(vals), [None, pa.py_buffer(np.ascontiguousarray(vals.astype(np_t)).tobytes())]
         )
     if codec == "int_for_bp" and not pa.types.is_date32(typ) and not pa.types.is_timestamp(typ):
-        meta = streams[K_META]
-        base, pos = varint_decode_signed(meta, 1)
-        width = meta[pos]
-        parts = [
-            bit_unpack(streams[K_DATA], width, e - s, offset_bits=s * width).view(np.int64) + int(base[0])
-            for s, e in row_ranges
-        ]
+        parts = [_decode_for_bp(streams[K_META], streams[K_DATA], s, e) for s, e in row_ranges]
         vals = np.concatenate(parts) if len(parts) > 1 else parts[0]
         np_t = _INT_TYPES[typ]
         return pa.Array.from_buffers(
@@ -337,16 +333,9 @@ def _decode_column_ranged(
             if codec == "arr_int_runfor":
                 from datafusion_orc_spark.codecs.runfor import runfor_decode_range
 
-                rf = {_RUNFOR_KEYS[k]: b for k, b in streams.items() if k in _RUNFOR_KEYS}
-                parts.append(runfor_decode_range(rf, n_items, i0, i1))
+                parts.append(runfor_decode_range(_runfor_streams(streams), n_items, i0, i1))
             elif codec == "arr_int_for_bp":
-                meta = streams[K_META]
-                base, pos = varint_decode_signed(meta, 1)
-                width = meta[pos]
-                parts.append(
-                    bit_unpack(streams[K_DATA], width, i1 - i0, offset_bits=i0 * width).view(np.int64)
-                    + int(base[0])
-                )
+                parts.append(_decode_for_bp(streams[K_META], streams[K_DATA], i0, i1))
             else:
                 np_t = np.float32 if child_typ == pa.float32() else np.float64
                 raw = np.frombuffer(streams[K_DATA], dtype=np_t)
@@ -373,7 +362,7 @@ def _decode_column_ranged(
 
 def _int_data_decode(codec: str, streams: dict[int, bytes], n: int) -> np.ndarray:
     if codec.endswith("int_for_bp"):
-        return _decode_for_bp(streams[K_META], streams[K_DATA], n)
+        return _decode_for_bp(streams[K_META], streams[K_DATA], 0, n)
     if codec.endswith("int_pfor"):
         from datafusion_orc_spark.codecs.pfor import pfor_decode
 
@@ -383,9 +372,7 @@ def _int_data_decode(codec: str, streams: dict[int, bytes], n: int) -> np.ndarra
     if codec.endswith("int_runfor"):
         from datafusion_orc_spark.codecs.runfor import runfor_decode
 
-        return runfor_decode(
-            {_RUNFOR_KEYS[k]: b for k, b in streams.items() if k in _RUNFOR_KEYS}, n
-        )
+        return runfor_decode(_runfor_streams(streams), n)
     return rle_v2_decode(streams[K_DATA], n, signed=not codec.endswith("int_rle2u"))
 
 

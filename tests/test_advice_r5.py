@@ -42,8 +42,8 @@ def test_all_null_struct_column_full_decode(tmp_path):
 
 def test_all_null_struct_range_decode(tmp_path):
     """A pruned read whose surviving row group holds ONLY null struct
-    rows (n_vals == 0 in decode_column_range) must succeed and match the
-    full-decode slice."""
+    rows (n_vals == 0 in a row-group decode_column) must succeed and
+    match the full-decode slice."""
     t = _struct_table()
     p = str(tmp_path / "range_null_struct.orc")
     write_orc(t, p, stripe_rows=30000)  # 3 row groups of 10k

@@ -5,6 +5,7 @@ exactly the groups that can match."""
 
 import numpy as np
 import pyarrow as pa
+import pytest
 
 from datafusion_orc_spark.format import orc_proto as proto
 from datafusion_orc_spark.format.orc_index import (
@@ -172,7 +173,7 @@ def test_pruned_read_skips_stripes_and_row_groups(spark, tmp_path):
 
 
 def test_positional_seek_matches_full_decode(spark, tmp_path):
-    """decode_column_range must reproduce full-decode slices exactly for
+    """decode_column(group=) must reproduce full-decode slices exactly for
     every seekable stream shape on an ORC-Java-written file (snappy,
     multi-group), including PRESENT, dictionary and direct strings,
     bool, tinyint, floats and timestamps."""
@@ -206,20 +207,8 @@ def test_positional_seek_matches_full_decode(spark, tmp_path):
         ), name
     assert got.num_rows == 10000  # exactly one row group decoded
     # the seek path must not fall back to whole-stripe decode
-    import pytest as _pytest
-    from datafusion_orc_spark.format import orc_reader as orr
-
-    mp = _pytest.MonkeyPatch()
-    try:
-        mp.setattr(
-            orr._StripeReader,
-            "decode_column",
-            lambda *a, **k: (_ for _ in ()).throw(AssertionError("full decode on seek path")),
-        )
-        again = OrcReader(f).read(prune={"k": (23000, 23500)})
-        assert again.num_rows == 10000
-    finally:
-        mp.undo()
+    again = _seek_with_no_fallback(f, {"k": (23000, 23500)})
+    assert again.num_rows == 10000
 
 
 def test_positional_seek_on_our_writers_files(tmp_path):
@@ -257,19 +246,23 @@ def test_positional_seek_on_our_writers_files(tmp_path):
 
 
 def _seek_with_no_fallback(path, prune):
-    """read(prune=) with decode_column monkeypatched to prove the
-    positional-seek path never falls back to whole-stripe decode."""
-    import pytest as _pytest
-
+    """read(prune=) with decode_column wrapped to prove the
+    positional-seek path never falls back to whole-stripe decode: a
+    call without a row group raises (children recurse with their
+    parent's group, so only a top-level whole-stripe call can fire),
+    seeking calls run the real decoder."""
     from datafusion_orc_spark.format import orc_reader as orr
 
-    mp = _pytest.MonkeyPatch()
+    real = orr._StripeReader.decode_column
+
+    def guarded(self, col, n, group=None, entries_for=None):
+        if group is None:
+            raise AssertionError("full decode on seek path")
+        return real(self, col, n, group, entries_for)
+
+    mp = pytest.MonkeyPatch()
     try:
-        mp.setattr(
-            orr._StripeReader,
-            "decode_column",
-            lambda *a, **k: (_ for _ in ()).throw(AssertionError("full decode on seek path")),
-        )
+        mp.setattr(orr._StripeReader, "decode_column", guarded)
         return OrcReader(path).read(prune=prune)
     finally:
         mp.undo()
@@ -396,6 +389,76 @@ def test_decode_column_range_on_reference_corpus_nested():
 
     n = r.footer.stripes[0].number_of_rows
     for i, name in enumerate(root.field_names):
-        arr = sr.decode_column_range(root.subtypes[i], 0, n, entries_for)
+        arr = sr.decode_column(root.subtypes[i], n, 0, entries_for)
         assert arr is not None, name
         assert arr.equals(full.column(name).combine_chunks()), name
+
+
+@pytest.mark.parametrize("compression", ["none", "snappy", "zlib"])
+def test_every_row_group_seeks_to_its_slice(tmp_path, compression):
+    """decode_column(group=g) for EVERY row group of every stripe —
+    the partial last group included — must equal the matching slice of
+    the full read, uncompressed (positions carry no chunk-offset slot)
+    as well as compressed. Covers PRESENT streams with an all-null
+    group (int64 and bool), nullable dictionary and direct strings,
+    list<int32>, a struct and a double."""
+    n, stripe_rows, stride = 25000, 12500, 2000
+    i = np.arange(n)
+    in_group = (i % stripe_rows) // stride
+    lens = (i * 7) % 5
+    off = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(lens, out=off[1:])
+    t = pa.table({
+        "k": pa.array(i.astype(np.int64)),
+        # group 1 of each stripe is all null
+        "nint": pa.array(
+            [None if g == 1 or v % 7 == 0 else int(v) * 3 for v, g in zip(i, in_group)],
+            type=pa.int64(),
+        ),
+        # group 3 of each stripe is all null; elsewhere 1333-1334 values
+        # per group, so DATA seeks land mid-byte
+        "nflag": pa.array(
+            [None if g == 3 or v % 3 == 1 else bool(v % 4) for v, g in zip(i, in_group)],
+            type=pa.bool_(),
+        ),
+        "s_dict": pa.array([None if v % 3 == 0 else f"d-{v % 20:02d}" for v in i]),
+        "s_uniq": pa.array([None if v % 11 == 0 else f"u-{v:08d}" for v in i]),
+        "lst": pa.ListArray.from_arrays(pa.array(off), pa.array((np.arange(off[-1]) % 1000).astype(np.int32))),
+        "st": pa.StructArray.from_arrays(
+            [pa.array(i.astype(np.int64) * 5), pa.array([f"s{v % 13}" for v in i])],
+            names=["a", "b"],
+            mask=pa.array(i % 9 == 0),
+        ),
+        "d": pa.array(i / 7.0),
+    })
+    p = str(tmp_path / f"every_group_{compression}.orc")
+    write_orc(t, p, stripe_rows=stripe_rows, compression=compression, row_index_stride=stride)
+    r = OrcReader(p)
+    full = r.read()
+    assert full.equals(t)
+    root = r.footer.types[0]
+    names = list(root.field_names)
+    assert len(r.footer.stripes) == 2
+    row0 = 0
+    for info in r.footer.stripes:
+        sr = _StripeReader(r, info)
+        kinds = {nm: sr.encodings[root.subtypes[j]].kind for j, nm in enumerate(names)}
+        assert kinds["s_dict"] in (proto.E_DICTIONARY, proto.E_DICTIONARY_V2)
+        assert kinds["s_uniq"] in (proto.E_DIRECT, proto.E_DIRECT_V2)
+        entries = {}
+
+        def entries_for(cid, sr=sr, entries=entries):
+            if cid not in entries:
+                entries[cid] = parse_row_index(sr.stream(cid, proto.S_ROW_INDEX))
+            return entries[cid]
+
+        n_groups = -(-info.number_of_rows // stride)
+        assert n_groups == 7  # six full groups + a partial one
+        for g in range(n_groups):
+            rows = min(stride, info.number_of_rows - g * stride)
+            for j, nm in enumerate(names):
+                got = sr.decode_column(root.subtypes[j], rows, g, entries_for)
+                assert got is not None, (info, g, nm)
+                expect = full.column(nm).slice(row0 + g * stride, rows).combine_chunks()
+                assert got.equals(expect), (row0, g, nm)
+        row0 += info.number_of_rows
