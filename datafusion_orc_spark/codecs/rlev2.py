@@ -751,8 +751,9 @@ def _delta_runs(
     return sums - np.repeat(sums[first] - base_a, take)
 
 
-def rle_v2_decode(buf: bytes | memoryview | np.ndarray, n: int, signed: bool = True) -> np.ndarray:
-    """Decode ``n`` values from a concatenation of RLEv2 runs -> int64.
+def rle_v2_decode(buf: bytes | memoryview | np.ndarray, n: int | None, signed: bool = True) -> np.ndarray:
+    """Decode ``n`` values from a concatenation of RLEv2 runs -> int64;
+    ``n=None`` decodes every run in ``buf``.
 
     Two passes. Pass 1 walks the run headers in one scalar loop over the
     bytes and records, per run, its kind and ``take`` plus the
@@ -775,7 +776,7 @@ def rle_v2_decode(buf: bytes | memoryview | np.ndarray, n: int, signed: bool = T
       - every run's bytes must lie inside ``buf``: a truncated stream
         raises ``ValueError`` naming the run's kind and byte offset.
     """
-    if n <= 0:
+    if n is not None and n <= 0:
         return np.empty(n, dtype=np.int64)
     raw = np.frombuffer(buf, dtype=np.uint8)  # signed memoryviews read as uint8
     data = memoryview(raw)
@@ -792,8 +793,9 @@ def rle_v2_decode(buf: bytes | memoryview | np.ndarray, n: int, signed: bool = T
     dl_w: list[int] = []  # 0: fixed delta, no packed tail
     pb_pos: list[int] = []
     pos = filled = 0
+    limit = n if n is not None else 1 << 62  # n=None: the loop ends at the end of buf
     try:
-        while filled < n:
+        while filled < limit:
             h = data[pos]
             tag = h >> 6
             if tag == _SHORT_REPEAT:
@@ -851,7 +853,11 @@ def rle_v2_decode(buf: bytes | memoryview | np.ndarray, n: int, signed: bool = T
             filled += length
             pos = end
     except IndexError:  # a header or varint byte lies past the end
-        raise _truncated(_KIND_NAMES[data[pos] >> 6] if pos < size else "header of a", pos, size) from None
+        if n is not None or pos < size:
+            raise _truncated(_KIND_NAMES[data[pos] >> 6] if pos < size else "header of a", pos, size) from None
+        if not filled:  # n=None: a header read at the end of buf is the normal end
+            return np.empty(0, dtype=np.int64)
+        n = filled
     takes[-1] -= filled - n  # clamp the final run to n
 
     # ---- pass 2: one vector pass per run kind ----

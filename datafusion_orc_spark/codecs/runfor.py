@@ -15,8 +15,9 @@ whole-array numpy pass:
                               wider than w become PFOR exceptions
                               (positions RLEv2, high bits bit-packed)
 
-Decode is the mirror image: bit_unpack literals, np.repeat the runs,
-and interleave through a coverage mask — three vector passes.
+Decode seeks: literals are fixed-width, so any row window [start, stop)
+is one ranged bit_unpack of its literals plus the run side lists clipped
+to the window, and a whole column is the window [0, n).
 """
 
 from __future__ import annotations
@@ -30,7 +31,6 @@ from datafusion_orc_spark.codecs.bitpack import (
     bit_widths,
     closest_fixed_width,
 )
-from datafusion_orc_spark.codecs.pfor import choose_pfor_width
 from datafusion_orc_spark.codecs.rlev2 import rle_v2_decode, rle_v2_encode
 from datafusion_orc_spark.codecs.varint import (
     varint_decode_scalar,
@@ -40,6 +40,9 @@ from datafusion_orc_spark.codecs.varint import (
 )
 
 MIN_RUN = 32
+
+_POS_COST_BITS = 5  # amortized bits per exception position (RLEv2 of the
+# ascending position list measures ~4.6 bits/exception at 10-40% density)
 
 # stream keys within the returned dict
 META, LIT, RUN_POS, RUN_LEN, RUN_VAL, EXC_POS, EXC_HIGH = range(7)
@@ -54,6 +57,22 @@ def _coverage_mask(n: int, r_pos: np.ndarray, r_len: np.ndarray) -> np.ndarray:
     np.add.at(delta, r_pos, 1)
     np.add.at(delta, r_pos + r_len, -1)
     return np.cumsum(delta[:n], dtype=np.int8).view(bool)
+
+
+def choose_pfor_width(widths: np.ndarray, wm: int) -> tuple[int, int]:
+    """-> (w, estimated total bits): the literal width minimizing
+    n*w + n_exc*((wm - w) + pos_cost). widths = per-value bit widths of
+    the base-subtracted values; wm = closest_fixed(max width)."""
+    n = len(widths)
+    hist = np.bincount(widths, minlength=wm + 1)
+    cum = np.cumsum(hist)
+    best_w, best_bits = wm, n * wm
+    for w in range(1, wm):
+        n_exc = n - int(cum[w])
+        bits = n * w + n_exc * ((wm - w) + _POS_COST_BITS)
+        if bits < best_bits:
+            best_w, best_bits = w, bits
+    return best_w, best_bits
 
 
 def sorted_pos_encode(pos: np.ndarray) -> bytes:
@@ -347,40 +366,44 @@ def runfor_size(streams: dict[int, bytes]) -> int:
     return sum(len(b) for b in streams.values())
 
 
-def runfor_decode_range(streams: dict[int, bytes], n: int, start: int, stop: int) -> np.ndarray:
-    """Decode only rows [start, stop) — the D19 sub-block fast path.
+def runfor_decode(
+    streams: dict[int, bytes], n: int, start: int = 0, stop: int | None = None
+) -> np.ndarray:
+    """Values ``start..stop`` (default: all ``n``) of a runfor stream.
 
     Fixed-width literals are seekable by bit arithmetic: the literal
-    index of row r is r minus the run coverage before r, so the range's
-    literals are one ranged ``bit_unpack`` at offset_bits = la*w instead
-    of a full-stream decode. Run side lists are tiny and decoded whole.
-    Exactly equal to runfor_decode(...)[start:stop].
+    index of row r is r minus the run coverage before r, so a window's
+    literals are one ranged ``bit_unpack`` at offset_bits = la*w. Run side
+    lists are tiny and decoded whole, then clipped to the window.
     """
-    start, stop = max(0, int(start)), min(int(n), int(stop))
+    start, stop = max(0, int(start)), int(n) if stop is None else min(int(n), int(stop))
     m = stop - start
     if m <= 0:
         return np.empty(0, dtype=np.int64)
     meta = np.frombuffer(streams[META], dtype=np.uint8)
     n_runs, p = varint_decode_scalar(meta, 0)
-    n_lit, p = varint_decode_scalar(meta, p)
+    _n_lit, p = varint_decode_scalar(meta, p)
     zz, p = varint_decode_scalar(meta, p)
     base = zigzag_decode_scalar(zz)
     w, p = varint_decode_scalar(meta, p)
     wm, p = varint_decode_scalar(meta, p)
     n_exc, p = varint_decode_scalar(meta, p)
 
+    la, lb = start, stop  # the window's literal index range
     if n_runs:
         r_pos = sorted_pos_decode(streams[RUN_POS], n_runs)
         r_len = rle_v2_decode(streams[RUN_LEN], n_runs, signed=False)
         r_val = rle_v2_decode(streams[RUN_VAL], n_runs, signed=True)
-        r_end = r_pos + r_len
         # run coverage before a row r: sum over runs of overlap with [0, r)
-        cov = lambda r: int(np.minimum(np.maximum(r - r_pos, 0), r_len).sum())  # noqa: E731
-    else:
-        r_pos = r_len = r_val = r_end = np.empty(0, dtype=np.int64)
-        cov = lambda r: 0  # noqa: E731
+        la -= int(np.minimum(np.maximum(start - r_pos, 0), r_len).sum())
+        lb -= int(np.minimum(np.maximum(stop - r_pos, 0), r_len).sum())
+        # the runs overlapping the window, clipped to it
+        r_end = r_pos + r_len
+        sel = (r_pos < stop) & (r_end > start)
+        r_pos, r_end, r_val = r_pos[sel], r_end[sel], r_val[sel]
+        r_pos = np.maximum(r_pos, start) - start
+        r_len = np.minimum(r_end, stop) - start - r_pos
 
-    la, lb = start - cov(start), stop - cov(stop)
     if lb > la:
         lit = bit_unpack(streams[LIT], w, lb - la, offset_bits=la * w)
         if n_exc:
@@ -397,52 +420,12 @@ def runfor_decode_range(streams: dict[int, bytes], n: int, start: int, stop: int
 
     if not n_runs:
         return lit
-    # clip runs to the window and reassemble locally
-    sel = (r_pos < stop) & (r_end > start)
-    c_pos = np.maximum(r_pos[sel], start) - start
-    c_len = np.minimum(r_end[sel], stop) - start - c_pos
     out = np.empty(m, dtype=np.int64)
-    covered = _coverage_mask(m, c_pos, c_len)
-    out[covered] = np.repeat(r_val[sel], c_len)
-    out[~covered] = lit
-    return out
-
-
-def runfor_decode(streams: dict[int, bytes], n: int) -> np.ndarray:
-    meta = np.frombuffer(streams[META], dtype=np.uint8)
-    n_runs, p = varint_decode_scalar(meta, 0)
-    n_lit, p = varint_decode_scalar(meta, p)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    zz, p = varint_decode_scalar(meta, p)
-    base = zigzag_decode_scalar(zz)
-    w, p = varint_decode_scalar(meta, p)
-    wm, p = varint_decode_scalar(meta, p)
-    n_exc, p = varint_decode_scalar(meta, p)
-
-    if n_lit:
-        lit = bit_unpack(streams[LIT], w, n_lit)
-        if n_exc:
-            pos = sorted_pos_decode(streams[EXC_POS], n_exc)
-            high = bit_unpack(streams[EXC_HIGH], wm - w, n_exc)
-            lit[pos] |= high << np.uint64(w)
-        lit = lit.view(np.int64)
-        if base:
-            lit += base
-    else:
-        lit = np.empty(0, dtype=np.int64)
-
-    if not n_runs:
-        return lit
-    r_pos = sorted_pos_decode(streams[RUN_POS], n_runs)
-    r_len = rle_v2_decode(streams[RUN_LEN], n_runs, signed=False)
-    r_val = rle_v2_decode(streams[RUN_VAL], n_runs, signed=True)
-    out = np.empty(n, dtype=np.int64)
-    if n_runs <= 4096:
+    if len(r_pos) <= 4096:
         # few runs (the token-stream shape: runs are LONG, so there are
         # not many): literal gaps are contiguous in BOTH lit and out, so
         # assembly is 2 slice memcpys per run — ~6x faster than the
-        # coverage-mask + two masked-scatter passes over all n values
+        # coverage-mask + two masked-scatter passes over all m values
         pos = lo = 0
         for p, ln, v in zip(r_pos.tolist(), r_len.tolist(), r_val.tolist()):
             gap = p - pos
@@ -451,10 +434,10 @@ def runfor_decode(streams: dict[int, bytes], n: int) -> np.ndarray:
                 lo += gap
             out[p : p + ln] = v
             pos = p + ln
-        if pos < n:
+        if pos < m:
             out[pos:] = lit[lo:]
         return out
-    covered = _coverage_mask(n, r_pos, r_len)
+    covered = _coverage_mask(m, r_pos, r_len)
     out[covered] = np.repeat(r_val, r_len)
     out[~covered] = lit
     return out

@@ -6,7 +6,7 @@ A *stripe* is one Arrow batch of rows; each column encodes independently
 into a self-describing blob mirroring ORC's stripe layout (§1.4: streams
 concatenated, offsets = prefix sums, per-column encoding kind):
 
-    u8  format version (1)
+    u8  format version (2)
     u8  codec id
     u32 n_rows          (LE)
     u32 n_nulls
@@ -31,6 +31,7 @@ import pyarrow.compute as pc
 from datafusion_orc_spark.codecs.bitpack import bit_pack, bit_pack_view, bit_unpack, closest_fixed_width
 from datafusion_orc_spark.codecs.byterle import bool_rle_decode, bool_rle_encode
 from datafusion_orc_spark.codecs.rlev2 import rle_v2_decode, rle_v2_encode
+from datafusion_orc_spark.codecs.runfor import runfor_decode, runfor_encode, runfor_size
 from datafusion_orc_spark.codecs.selector import choose_int_codec, choose_string_codec
 from datafusion_orc_spark.codecs.strings import (
     dict_decode,
@@ -64,10 +65,7 @@ CODECS = {
     # less vector pass
     "int_rle2u": 12,
     "arr_int_rle2u": 13,
-    # PFOR with unlimited exceptions (codecs/pfor.py) — beats ORC's
-    # PATCHED_BASE on Zipf-skewed token distributions (>31 outliers/512)
-    "int_pfor": 14,
-    "arr_int_pfor": 15,
+    # 14, 15: retired (int_pfor / arr_int_pfor, now runfor's literal path)
     # RUN+FoR (codecs/runfor.py): long runs as side lists + FoR/PFOR
     # literals — smaller AND ~5x faster than RLEv2 on token streams
     "int_runfor": 16,
@@ -174,8 +172,13 @@ def _assemble(codec: str, n_rows: int, n_nulls: int, streams: list[tuple[int, by
 
 
 def _parse(blob: bytes) -> tuple[str, int, int, dict[int, bytes]]:
-    assert blob[0] == FORMAT_VERSION, f"bad stripe blob version {blob[0]}"
-    codec = CODEC_NAMES[blob[1]]
+    if len(blob) < 11 or len(blob) < 11 + 9 * blob[10]:
+        raise ValueError(f"malformed stripe blob: {len(blob)} bytes is shorter than its header")
+    if blob[0] != FORMAT_VERSION:
+        raise ValueError(f"bad stripe blob version {blob[0]} (expected {FORMAT_VERSION})")
+    codec = CODEC_NAMES.get(blob[1])
+    if codec is None:
+        raise ValueError(f"unknown stripe blob codec id {blob[1]}")
     n_rows = int.from_bytes(blob[2:6], "little")
     n_nulls = int.from_bytes(blob[6:10], "little")
     n_streams = blob[10]
@@ -185,6 +188,10 @@ def _parse(blob: bytes) -> tuple[str, int, int, dict[int, bytes]]:
         kinds.append(blob[pos])
         lens.append(int.from_bytes(blob[pos + 1 : pos + 9], "little"))
         pos += 9
+    if pos + sum(lens) != len(blob):
+        raise ValueError(
+            f"malformed stripe blob: header and streams take {pos + sum(lens)} bytes, blob has {len(blob)}"
+        )
     streams = {}
     for kind, ln in zip(kinds, lens):
         streams[kind] = blob[pos : pos + ln]
@@ -225,14 +232,6 @@ def _encode_for_bp(vals: np.ndarray, vmin: int | None = None, vmax: int | None =
     return meta, bit_pack_view(reduced, width)
 
 
-def _decode_for_bp(meta: bytes, data: bytes, start: int, stop: int) -> np.ndarray:
-    """Values ``start..stop`` of a FoR bit-packed stream (a seek is a
-    bit offset: every value has the same width)."""
-    base, pos = varint_decode_signed(meta, 1)
-    width = meta[pos]
-    return bit_unpack(data, width, stop - start, offset_bits=start * width).view(np.int64) + int(base[0])
-
-
 # runfor stream-key -> stripe stream-kind mapping
 _RUNFOR_KINDS = {
     0: K_META, 1: K_DATA, 2: K_RUN_POS, 3: K_RUN_LEN, 4: K_RUN_VAL,
@@ -252,8 +251,6 @@ def _int_data_streams(
     vmin: int | None = None,
     vmax: int | None = None,
 ) -> tuple[str, list[tuple[int, bytes]]]:
-    from datafusion_orc_spark.codecs.runfor import runfor_encode, runfor_size
-
     codec, stats = choose_int_codec(vals, vmin=vmin, vmax=vmax)
     if codec == "int_for_bp":
         meta, data = _encode_for_bp(vals, stats["min"], stats["max"])
@@ -280,100 +277,31 @@ def _int_data_streams(
     return codec_prefix + "int_rle2", [(K_DATA, rle_bytes)]
 
 
-def _decode_column_ranged(
-    codec: str,
-    n: int,
-    n_nulls: int,
-    streams: dict[int, bytes],
-    typ: pa.DataType,
-    row_ranges: list[tuple[int, int]],
-) -> pa.Array | None:
-    """Seeking range decode for the codecs where it is cheap, or None
-    (caller falls back to full decode + slice)."""
-    if n_nulls or not row_ranges:
-        return None  # dense<->row mapping needs the PRESENT prefix sums
-    if codec == "int_runfor" and not pa.types.is_date32(typ) and not pa.types.is_timestamp(typ):
-        from datafusion_orc_spark.codecs.runfor import runfor_decode_range
-
-        rf = _runfor_streams(streams)
-        parts = [runfor_decode_range(rf, n, s, e) for s, e in row_ranges]
-        vals = np.concatenate(parts) if len(parts) > 1 else parts[0]
-        np_t = _INT_TYPES[typ]
-        return pa.Array.from_buffers(
-            typ, len(vals), [None, pa.py_buffer(np.ascontiguousarray(vals.astype(np_t)).tobytes())]
-        )
-    if codec == "int_for_bp" and not pa.types.is_date32(typ) and not pa.types.is_timestamp(typ):
-        parts = [_decode_for_bp(streams[K_META], streams[K_DATA], s, e) for s, e in row_ranges]
-        vals = np.concatenate(parts) if len(parts) > 1 else parts[0]
-        np_t = _INT_TYPES[typ]
-        return pa.Array.from_buffers(
-            typ, len(vals), [None, pa.py_buffer(np.ascontiguousarray(vals.astype(np_t)).tobytes())]
-        )
-    if codec == "float_raw":
-        np_t = np.float32 if typ == pa.float32() else np.float64
-        raw = np.frombuffer(streams[K_DATA], dtype=np_t)
-        vals = np.concatenate([raw[s:e] for s, e in row_ranges])
-        return pa.Array.from_buffers(
-            typ, len(vals), [None, pa.py_buffer(np.ascontiguousarray(vals).tobytes())]
-        )
-    if codec in ("arr_int_runfor", "arr_int_for_bp", "arr_float_raw"):
-        # array columns (the expensive ones — token streams): decode the
-        # LENGTH stream whole (n values, tiny next to items), map row
-        # ranges to item ranges, then seek inside the item stream
-        lengths = rle_v2_decode(streams[K_LENGTH], n, signed=False)
-        item_off = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lengths, out=item_off[1:])
-        n_items = int(item_off[-1])
-        child_typ = typ.value_type
-        parts = []
-        for s, e in row_ranges:
-            i0, i1 = int(item_off[s]), int(item_off[e])
-            if i1 <= i0:
-                continue
-            if codec == "arr_int_runfor":
-                from datafusion_orc_spark.codecs.runfor import runfor_decode_range
-
-                parts.append(runfor_decode_range(_runfor_streams(streams), n_items, i0, i1))
-            elif codec == "arr_int_for_bp":
-                parts.append(_decode_for_bp(streams[K_META], streams[K_DATA], i0, i1))
-            else:
-                np_t = np.float32 if child_typ == pa.float32() else np.float64
-                raw = np.frombuffer(streams[K_DATA], dtype=np_t)
-                parts.append(raw[i0:i1])
-        if parts:
-            items = np.concatenate(parts) if len(parts) > 1 else parts[0]
-        else:
-            items = np.empty(0, dtype=np.int64)
-        if codec == "arr_float_raw":
-            child = pa.array(items, type=child_typ)
-        else:
-            child = pa.array(items.astype(_INT_TYPES[child_typ]), type=child_typ)
-        out_lens = np.concatenate([lengths[s:e] for s, e in row_ranges]) if row_ranges else np.empty(0, np.int64)
-        offsets = np.zeros(len(out_lens) + 1, dtype=np.int64)
-        np.cumsum(out_lens, out=offsets[1:])
-        out = pa.ListArray.from_buffers(
-            pa.list_(child_typ), len(out_lens),
-            [None, pa.py_buffer(offsets.astype(np.int32).tobytes())],
-            children=[child],
-        )
-        return out.cast(typ) if out.type != typ else out
-    return None
+def _cat(parts: list[np.ndarray], dtype=np.int64) -> np.ndarray:
+    """Concatenate window parts; one part comes back as is (a view)."""
+    if len(parts) == 1:
+        return parts[0]
+    return np.concatenate(parts) if parts else np.empty(0, dtype=dtype)
 
 
-def _int_data_decode(codec: str, streams: dict[int, bytes], n: int) -> np.ndarray:
+def _int_values(
+    codec: str, streams: dict[int, bytes], n: int, windows: list[tuple[int, int]]
+) -> np.ndarray:
+    """int64 values of the ``windows`` ([start, stop) value slices) of an
+    ``n``-value int stream, concatenated. FoR and runfor seek to each
+    window (value i sits at bit i*w); RLEv2 decodes whole and slices."""
     if codec.endswith("int_for_bp"):
-        return _decode_for_bp(streams[K_META], streams[K_DATA], 0, n)
-    if codec.endswith("int_pfor"):
-        from datafusion_orc_spark.codecs.pfor import pfor_decode
-
-        return pfor_decode(
-            streams[K_META], streams[K_DATA], streams[K_EXC_POS], streams[K_EXC_HIGH], n
-        )
+        base, pos = varint_decode_signed(streams[K_META], 1)
+        w, base = streams[K_META][pos], int(base[0])
+        return _cat([
+            bit_unpack(streams[K_DATA], w, e - s, offset_bits=s * w).view(np.int64) + base
+            for s, e in windows
+        ])
     if codec.endswith("int_runfor"):
-        from datafusion_orc_spark.codecs.runfor import runfor_decode
-
-        return runfor_decode(_runfor_streams(streams), n)
-    return rle_v2_decode(streams[K_DATA], n, signed=not codec.endswith("int_rle2u"))
+        rf = _runfor_streams(streams)
+        return _cat([runfor_decode(rf, n, s, e) for s, e in windows])
+    vals = rle_v2_decode(streams[K_DATA], n, signed=not codec.endswith("int_rle2u"))
+    return _cat([vals[s:e] for s, e in windows])
 
 
 # ------------------------------------------------------------- encode
@@ -517,70 +445,75 @@ def encode_column(
 
 # ------------------------------------------------------------- decode
 
+# codecs that decode whole and are then sliced to the row windows (as is
+# any column with nulls: the dense<->row mapping needs PRESENT prefix sums)
+_WHOLE_CODECS = ("raw_ipc", "bool_rle", "str_direct", "str_dict", "str_fsst")
+
+
+def _offsets(lens: np.ndarray) -> pa.Buffer:
+    offsets = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    return pa.py_buffer(offsets.astype(np.int32).tobytes())
+
+
 def decode_column(
     blob: bytes, typ: pa.DataType, row_ranges: list[tuple[int, int]] | None = None
 ) -> pa.Array:
     """Inverse of :func:`encode_column` — bit-identical values.
 
-    ``row_ranges``: decode only these [start, stop) row slices (D19
-    sub-block pruning). Null-free scalar int (runfor / FoR+bitpack) and
-    float columns SEEK — non-matching blocks cost no decode CPU (ranged
-    bit_unpack at computed bit offsets); other codecs fall back to full
-    decode + slice, same result either way."""
+    ``row_ranges``: decode only these [start, stop) row windows (D19
+    sub-block pruning); None is the one window [0, n). Null-free int,
+    float and list columns SEEK — non-matching blocks cost no decode CPU
+    (ranged bit_unpack at computed bit offsets); the other codecs, and
+    any column with nulls, decode whole and slice, same result either
+    way."""
     codec, n, n_nulls, streams = _parse(blob)
-    if row_ranges is not None:
+    if row_ranges is None:
+        windows = [(0, n)]
+    else:
         # prune_row_ranges emits SUB_BLOCK_ROWS-aligned ranges; the
         # stripe's last block is usually partial, so clamp to the stripe
         # row count — an unclamped end would reshape-crash the ranged
         # bit_unpack or (widths 9..31) fabricate base-valued phantom rows
-        row_ranges = [(max(0, s), min(n, e)) for s, e in row_ranges if s < n]
-        if not row_ranges:
-            return decode_column(blob, typ).slice(0, 0)
-        fast = _decode_column_ranged(codec, n, n_nulls, streams, typ, row_ranges)
-        if fast is not None:
-            return fast
-        full = decode_column(blob, typ)
-        return pa.concat_arrays([full.slice(s, e - s) for s, e in row_ranges])
+        windows = [(max(0, s), min(n, e)) for s, e in row_ranges if s < n]
+    whole = bool(n_nulls) or codec in _WHOLE_CODECS
+    rows = [(0, n)] if whole else windows  # the row windows decoded here
+    dense = [(0, n - n_nulls)] if n_nulls else rows  # ... as dense value slices
+    m = sum(e - s for s, e in rows)
+    valid = bool_rle_decode(streams[K_PRESENT], n) if n_nulls else None
+    validity = _validity_buffer(valid) if n_nulls else None
+
+    def expand(vals: np.ndarray) -> np.ndarray:
+        """Dense values -> one per row, zero under the nulls."""
+        if not n_nulls:
+            return vals
+        full = np.zeros(n, dtype=vals.dtype)
+        full[valid] = vals
+        return full
+
     if codec == "raw_ipc":
         with pa.ipc.open_stream(pa.BufferReader(streams[K_DATA])) as r:
-            return r.read_all().column("c").combine_chunks()
-    valid = bool_rle_decode(streams[K_PRESENT], n) if n_nulls else np.ones(n, dtype=bool)
-    n_dense = n - n_nulls
-
-    def expand_primitive(vals: np.ndarray, out_typ: pa.DataType, byte_view: np.dtype | None = None) -> pa.Array:
-        if n_nulls:
-            full = np.zeros(n, dtype=vals.dtype)
-            full[valid] = vals
+            arr = r.read_all().column("c").combine_chunks()
+    elif codec.startswith("arr_"):
+        lengths = rle_v2_decode(streams[K_LENGTH], n - n_nulls, signed=False)
+        item_off = np.zeros(len(lengths) + 1, dtype=np.int64)
+        np.cumsum(lengths, out=item_off[1:])
+        items = [(int(item_off[s]), int(item_off[e])) for s, e in dense]
+        child_typ = typ.value_type
+        if codec == "arr_float_raw":
+            raw = np.frombuffer(streams[K_DATA], dtype=child_typ.to_pandas_dtype())
+            child = pa.array(_cat([raw[a:b] for a, b in items], raw.dtype), type=child_typ)
         else:
-            full = vals
-        if out_typ == pa.bool_():
-            buf = pa.py_buffer(np.packbits(full.astype(bool), bitorder="little").tobytes())
-        else:
-            buf = pa.py_buffer(np.ascontiguousarray(full).tobytes())
-        return pa.Array.from_buffers(out_typ, n, [_validity_buffer(valid), buf])
-
-    if codec in ("int_rle2", "int_rle2u", "int_for_bp", "int_pfor", "int_runfor"):
-        vals = _int_data_decode(codec, streams, n_dense)
-        if pa.types.is_date32(typ):
-            return expand_primitive(vals.astype(np.int32), pa.int32()).cast(typ)
-        if pa.types.is_timestamp(typ):
-            return expand_primitive(vals, pa.int64()).cast(typ)
-        np_t = _INT_TYPES[typ]
-        return expand_primitive(vals.astype(np_t), typ)
-
-    if codec == "bool_rle":
-        flags = bool_rle_decode(streams[K_DATA], n_dense)
-        return expand_primitive(flags, pa.bool_())
-
-    if codec == "float_raw":
-        np_t = np.float32 if typ == pa.float32() else np.float64
-        vals = np.frombuffer(streams[K_DATA], dtype=np_t)
-        return expand_primitive(vals, typ)
-
-    if codec in ("str_direct", "str_dict", "str_fsst"):
+            vals = _int_values(codec, streams, int(item_off[-1]), items)
+            child = pa.array(vals.astype(_INT_TYPES[child_typ]), type=child_typ)
+        lens = expand(_cat([lengths[s:e] for s, e in dense]))
+        arr = pa.ListArray.from_buffers(
+            pa.list_(child_typ), m, [validity, _offsets(lens)], children=[child]
+        )
+    elif codec.startswith("str_"):
+        n_dense = n - n_nulls
         if codec == "str_dict":
-            dlens_n = _count_rle_values(streams[K_DICT_LENGTH])
-            dlens = rle_v2_decode(streams[K_DICT_LENGTH], dlens_n, signed=False)
+            dlens = rle_v2_decode(streams[K_DICT_LENGTH], None, signed=False)
             idx = rle_v2_decode(streams[K_DATA], n_dense, signed=False)
             blob_b, lengths = dict_decode(streams[K_DICT_DATA], dlens, idx)
         elif codec == "str_fsst":
@@ -589,84 +522,33 @@ def decode_column(
         else:
             lengths = rle_v2_decode(streams[K_LENGTH], n_dense, signed=False)
             blob_b = streams[K_DATA]
-        full_lens = np.zeros(n, dtype=np.int64)
-        full_lens[valid] = lengths
-        offsets = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(full_lens, out=offsets[1:])
         out_typ = pa.binary() if pa.types.is_binary(typ) else pa.string()
         arr = pa.Array.from_buffers(
-            out_typ, n,
-            [_validity_buffer(valid), pa.py_buffer(offsets.astype(np.int32).tobytes()), pa.py_buffer(blob_b)],
+            out_typ, n, [validity, _offsets(expand(lengths)), pa.py_buffer(blob_b)]
         )
-        return arr.cast(typ) if arr.type != typ else arr
-
-    if codec in ("arr_int_rle2", "arr_int_rle2u", "arr_int_pfor", "arr_int_for_bp", "arr_int_runfor", "arr_float_raw"):
-        lengths = rle_v2_decode(streams[K_LENGTH], n_dense, signed=False)
-        n_items = int(lengths.sum())
-        child_typ = typ.value_type
-        if codec == "arr_float_raw":
-            np_t = np.float32 if child_typ == pa.float32() else np.float64
-            child_vals = np.frombuffer(streams[K_DATA], dtype=np_t)
-            child = pa.array(child_vals, type=child_typ)
+    elif codec == "bool_rle":
+        flags = expand(bool_rle_decode(streams[K_DATA], n - n_nulls))
+        buf = np.packbits(flags.astype(bool), bitorder="little")
+        arr = pa.Array.from_buffers(pa.bool_(), n, [validity, pa.py_buffer(buf.tobytes())])
+    else:
+        if codec == "float_raw":
+            raw = np.frombuffer(streams[K_DATA], dtype=typ.to_pandas_dtype())
+            vals, out_typ = _cat([raw[s:e] for s, e in dense], raw.dtype), typ
         else:
-            vals = _int_data_decode(codec, streams, n_items)
-            child = pa.array(vals.astype(_INT_TYPES[child_typ]), type=child_typ)
-        full_lens = np.zeros(n, dtype=np.int64)
-        full_lens[valid] = lengths
-        offsets = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(full_lens, out=offsets[1:])
-        out = pa.ListArray.from_buffers(
-            pa.list_(child_typ), n,
-            [_validity_buffer(valid), pa.py_buffer(offsets.astype(np.int32).tobytes())],
-            children=[child],
-        )
-        return out.cast(typ) if out.type != typ else out
-
-    raise NotImplementedError(codec)
-
-
-def _count_rle_values(buf: bytes) -> int:
-    """Count values in an RLEv2 stream by walking run headers only."""
-    raw = np.frombuffer(buf, dtype=np.uint8)
-    from datafusion_orc_spark.codecs.bitpack import decode_width
-    from datafusion_orc_spark.codecs.varint import varint_decode_scalar
-
-    pos, total = 0, 0
-    while pos < len(raw):
-        header = int(raw[pos])
-        tag = header >> 6
-        if tag == 0:
-            w = ((header >> 3) & 0x7) + 1
-            total += (header & 0x7) + 3
-            pos += 1 + w
-        elif tag == 1:
-            w = decode_width((header >> 1) & 0x1F)
-            ln = (((header & 1) << 8) | int(raw[pos + 1])) + 1
-            total += ln
-            pos += 2 + (ln * w + 7) // 8
-        elif tag == 2:
-            w = decode_width((header >> 1) & 0x1F)
-            ln = (((header & 1) << 8) | int(raw[pos + 1])) + 1
-            b3, b4 = int(raw[pos + 2]), int(raw[pos + 3])
-            bw = (b3 >> 5) + 1
-            pw = decode_width(b3 & 0x1F)
-            pgw = (b4 >> 5) + 1
-            pl = b4 & 0x1F
-            combined = closest_fixed_width(pgw + pw)
-            pos += 4 + bw + (ln * w + 7) // 8 + (pl * combined + 7) // 8
-            total += ln
-        else:
-            wc = (header >> 1) & 0x1F
-            ln = (((header & 1) << 8) | int(raw[pos + 1])) + 1
-            p = pos + 2
-            _, p = varint_decode_scalar(raw, p)
-            _, p = varint_decode_scalar(raw, p)
-            if wc:
-                w = decode_width(wc)
-                p += ((ln - 2) * w + 7) // 8
-            total += ln
-            pos = p
-    return total
+            vals = _int_values(codec, streams, n - n_nulls, dense)
+            if pa.types.is_date32(typ):
+                vals, out_typ = vals.astype(np.int32), pa.int32()
+            elif pa.types.is_timestamp(typ):
+                out_typ = pa.int64()
+            else:
+                vals, out_typ = vals.astype(_INT_TYPES[typ]), typ
+        buf = pa.py_buffer(np.ascontiguousarray(expand(vals)).tobytes())
+        arr = pa.Array.from_buffers(out_typ, m, [validity, buf])
+    if codec != "raw_ipc" and arr.type != typ:  # raw_ipc keeps its stored type
+        arr = arr.cast(typ)
+    if windows == rows:
+        return arr
+    return pa.concat_arrays([arr.slice(s, e - s) for s, e in windows]) if windows else arr.slice(0, 0)
 
 
 # ------------------------------------------------------------- stripe level

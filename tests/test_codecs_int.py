@@ -220,6 +220,26 @@ def test_rlev2_truncated_stream_names_run(vals, cut, where):
         rle_v2_decode(buf, n)
 
 
+def test_rlev2_decode_all_runs_without_n():
+    """``n=None`` decodes every run in the buffer: on streams mixing
+    SHORT_REPEAT, DIRECT, DELTA and PATCHED_BASE runs it returns exactly
+    the encoder's input, and a truncated stream still raises."""
+    patched = (lcg(1024) % np.uint64(100)).astype(np.int64)
+    patched[::97] = 10**9
+    mixed = np.concatenate([
+        np.full(6, 7), (lcg(700, seed=9) % np.uint64(1 << 20)).astype(np.int64),
+        np.arange(0, 9000, 9), patched,
+    ])
+    for signed in (True, False):
+        for v in (mixed, mixed[:1], mixed[:5], mixed[6:900]):
+            enc = rle_v2_encode(v, signed=signed)
+            assert np.array_equal(rle_v2_decode(enc, None, signed=signed), v)
+    assert len(rle_v2_decode(b"", None)) == 0
+    enc = rle_v2_encode(mixed)
+    with pytest.raises(ValueError, match="truncated RLEv2 stream"):
+        rle_v2_decode(enc[:-3], None)
+
+
 def test_runfor_roundtrip_shapes():
     """RUN+FoR codec: runs + FoR/PFOR literals, all vectorized."""
     from datafusion_orc_spark.codecs.runfor import runfor_decode, runfor_encode

@@ -7,11 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from datafusion_orc_spark.codecs.byterle import byte_rle_decode, byte_rle_encode
-from datafusion_orc_spark.codecs.runfor import (
-    runfor_decode,
-    runfor_decode_range,
-    runfor_encode,
-)
+from datafusion_orc_spark.codecs.runfor import runfor_decode, runfor_encode
 
 
 @st.composite
@@ -41,7 +37,27 @@ def test_runfor_range_equals_full_slice(v, data):
     assert np.array_equal(full, v)
     s = data.draw(st.integers(0, n - 1))
     e = data.draw(st.integers(s + 1, n))
-    assert np.array_equal(runfor_decode_range(streams, n, s, e), v[s:e])
+    assert np.array_equal(runfor_decode(streams, n, s, e), v[s:e])
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.data())
+def test_runfor_many_runs_windows(data):
+    """Above 4096 runs the decoder assembles through a coverage mask
+    instead of per-run slice copies: the whole decode and any window
+    over that branch must equal the input."""
+    rng = np.random.default_rng(data.draw(st.integers(0, 2**31)))
+    runs = rng.integers(-(2**20), 2**20, 6000)
+    lits = rng.integers(0, 1 << 12, (6000, 3))
+    v = np.concatenate([np.append(np.full(40, r), lit) for r, lit in zip(runs, lits)])
+    n = len(v)
+    streams = runfor_encode(v)
+    assert np.array_equal(runfor_decode(streams, n), v)
+    assert np.array_equal(runfor_decode(streams, n, 17, n - 17), v[17 : n - 17])  # clips two runs
+    for _ in range(5):
+        s = data.draw(st.integers(0, n - 1))
+        e = data.draw(st.integers(s + 1, n))
+        assert np.array_equal(runfor_decode(streams, n, s, e), v[s:e])
 
 
 @settings(max_examples=60, deadline=None)

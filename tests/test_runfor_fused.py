@@ -66,7 +66,7 @@ def test_fused_skipped_when_base_nonzero(monkeypatch):
 
 
 def test_fused_ranged_decode_matches(monkeypatch):
-    """runfor_decode_range over a fused-encoded stream: the D19 seek path
+    """A windowed runfor_decode over a fused-encoded stream: the D19 seek path
     reads the same bytes, so ranges must slice exactly."""
     rng = np.random.default_rng(8)
     n = 300_000
@@ -76,5 +76,5 @@ def test_fused_ranged_decode_matches(monkeypatch):
     v[0] = 0
     enc = RF.runfor_encode(v, vmin=0, vmax=int(v.max()))
     for a, b in [(0, n), (1, n - 1), (4990, 6010), (250_000, 300_000), (0, 1)]:
-        got = RF.runfor_decode_range(enc, n, a, b)
+        got = RF.runfor_decode(enc, n, a, b)
         np.testing.assert_array_equal(got, v[a:b].astype(np.int64))

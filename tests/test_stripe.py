@@ -101,6 +101,24 @@ def test_raw_ipc_fallback():
     assert stats["codec"] == "raw_ipc"
 
 
+def test_malformed_blob_raises():
+    """A blob whose streams do not end exactly at its last byte, whose
+    version is not the current one, or whose codec id is unknown raises
+    ValueError instead of decoding wrong values or a bare KeyError."""
+    flags = pa.array(np.random.default_rng(4).random(5000) < 0.5)
+    blob, stats = encode_column(flags)
+    assert stats["codec"] == "bool_rle"
+    for cut in (1, 7, 100, len(blob) - 20, len(blob) - 5):
+        with pytest.raises(ValueError, match="malformed stripe blob"):
+            decode_column(blob[:-cut], pa.bool_())
+    with pytest.raises(ValueError, match="malformed stripe blob"):
+        decode_column(blob + b"\0", pa.bool_())
+    with pytest.raises(ValueError, match="version"):
+        decode_column(bytes([1]) + blob[1:], pa.bool_())
+    with pytest.raises(ValueError, match="codec id 99"):
+        decode_column(blob[:1] + bytes([99]) + blob[2:], pa.bool_())
+
+
 @pytest.mark.parametrize("table", ["lineitem", "orders", "events", "documents", "embeddings"])
 def test_driver_tables_roundtrip(table):
     t = pq.read_table(f"/root/testdata/sf0.001/{table}.parquet")

@@ -180,7 +180,7 @@ def test_runfor_decode_range_equals_full_slice():
     exception-carrying, head/tail."""
     import numpy as np
 
-    from datafusion_orc_spark.codecs.runfor import runfor_decode, runfor_decode_range, runfor_encode
+    from datafusion_orc_spark.codecs.runfor import runfor_decode, runfor_encode
 
     rng = np.random.default_rng(11)
     n = 100_000
@@ -194,7 +194,7 @@ def test_runfor_decode_range_equals_full_slice():
     assert np.array_equal(full, v)
     for s, e in [(0, 1), (0, n), (4_990, 9_010), (41_000, 50_000), (8_191, 16_385),
                  (n - 100, n), (0, 8_192), (73_000, 73_001), (39_999, 73_001)]:
-        got = runfor_decode_range(streams, n, s, e)
+        got = runfor_decode(streams, n, s, e)
         assert np.array_equal(got, v[s:e]), (s, e)
 
 
@@ -205,7 +205,7 @@ def test_decode_column_ranged_seeks_and_matches(monkeypatch):
     import numpy as np
     import pyarrow as pa
 
-    from datafusion_orc_spark.codecs import runfor as rf_mod
+    from datafusion_orc_spark.codecs.runfor import runfor_decode
     from datafusion_orc_spark.format import stripe as st
 
     n = 50_000
@@ -242,7 +242,12 @@ def test_decode_column_ranged_seeks_and_matches(monkeypatch):
     def boom(*a, **k):
         raise AssertionError("full-stream decode called on seekable column")
 
-    monkeypatch.setattr(rf_mod, "runfor_decode", boom)
+    def windows_only(streams, n, start=0, stop=None):
+        if start == 0 and (stop is None or stop >= n):
+            boom()
+        return runfor_decode(streams, n, start, stop)
+
+    monkeypatch.setattr(st, "runfor_decode", windows_only)
     st.decode_column(blobs["tokens"], cols["tokens"].type, row_ranges=ranges)
     monkeypatch.setattr(st, "rle_v2_decode", boom)  # forbp/f never touch RLE
     for name in ("forbp", "f"):

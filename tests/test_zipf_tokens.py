@@ -24,23 +24,8 @@ def test_zipf_rlev2_roundtrip():
     dec = rle_v2_decode(enc, len(v), signed=False)
     assert np.array_equal(dec, v)
     # RLEv2 alone is capped by PATCHED_BASE's 31-patch limit on this
-    # distribution (~15 bits/tok); the stripe-level PFOR codec goes below
+    # distribution (~15 bits/tok); runfor's PFOR literal path goes below
     assert len(enc) * 8 / len(v) < 16.5
-
-
-def test_zipf_pfor_beats_rlev2():
-    from datafusion_orc_spark.codecs.pfor import pfor_decode, pfor_encode
-
-    v = _zipf_tokens(200_000)
-    rle = rle_v2_encode(v, signed=False)
-    p = pfor_encode(v)
-    assert p is not None
-    meta, data, exc_pos, exc_high = p
-    total = len(meta) + len(data) + len(exc_pos) + len(exc_high)
-    assert total < 0.85 * len(rle), (total, len(rle))
-    assert total * 8 / len(v) < 13
-    out = pfor_decode(meta, data, exc_pos, exc_high, len(v))
-    assert np.array_equal(out, v)
 
 
 def test_zipf_stripe_selects_runfor():
