@@ -576,52 +576,8 @@ def _encode_orc_column(
     return streams, enc, dict_size, positions
 
 
-def write_orc(
-    table: pa.Table,
-    path: str,
-    stripe_rows: int = 65536,
-    compression: str = "none",
-    block_size: int = 262144,
-    row_index_stride: int | None = None,
-    string_kinds: dict[str, tuple[str, int]] | None = None,
-    bloom_filter_columns: list[str] | None = None,
-    bloom_filter_fpp: float = 0.05,
-) -> None:
-    """Write an Arrow table as an ORC v1 file.
-
-    ``string_kinds``: {column: ("char"|"varchar", max_len)} footer-type
-    overrides for string columns — preserves CHAR/VARCHAR declarations
-    (with maximumLength) across a read-modify-write of a foreign file
-    instead of silently widening to STRING (see _reorder_root_first).
-
-    ``compression``: none|snappy|zlib|lzo|lz4|zstd — applied per-stream (and
-    to stripe/file footers) in <=block_size chunks, matching the corpus
-    the reference ships (SNAPPY, block 262144).
-
-    ``row_index_stride``: ROW_INDEX granularity; defaults to
-    max(10000, stripe_rows) so each stripe holds exactly ONE row group —
-    every index entry's positions are the stream starts (all zeros, with
-    the spec arity per stream kind), which keeps seek semantics trivially
-    correct while giving external readers (ORC-Java SearchArgument, ORC
-    C++) real min/max row-group stats to skip stripes with. 0 disables
-    the index. Per-stripe + file-level ColumnStatistics are always
-    written (footer field 7 + the Metadata section), enabling stats-only
-    answers (e.g. Spark's ORC aggregate pushdown) without touching rows.
-
-    ``bloom_filter_columns``: top-level string/binary/int/date/float
-    columns that get a BLOOM_FILTER_UTF8 index stream (spec "Bloom
-    Filter Index"): one filter per row group, sized for
-    ``row_index_stride`` entries at ``bloom_filter_fpp``, hashed with
-    the spec's Murmur3-64 (strings, seed 104729) / Thomas Wang mix
-    (ints, IEEE-754 bits for floats) so ORC C++/Java readers can use
-    them. Our reader consults them for POINT predicates (prune lo==hi)
-    where min/max stats cannot discriminate — the 100-TB point-lookup
-    path (codecs/bloom.py; beyond the reference, whose scan machinery
-    stubs stats entirely, file_format.rs:108-116).
-    """
-    comp = _COMPRESSION_KINDS[compression.lower()]
-    table = table.combine_chunks()
-    for cname, (_kind, max_len) in (string_kinds or {}).items():
+def _check_string_kinds(table: pa.Table, string_kinds: dict[str, tuple[str, int]]) -> None:
+    for cname, (_kind, max_len) in string_kinds.items():
         col = table.column(cname)
         if col.type != pa.string():
             raise TypeError(f"string_kinds[{cname!r}]: column is {col.type}, not string")
@@ -631,48 +587,90 @@ def write_orc(
                 f"string_kinds[{cname!r}]: value length {longest} exceeds "
                 f"declared maximumLength {max_len}"
             )
-    if row_index_stride is None:
-        row_index_stride = 10000  # ORC default; multiple row groups/stripe
-    # pre-order ORC type ids, root struct = 0
-    types, _arrow_types = _reorder_root_first(table.schema, string_kinds)
 
-    bloom_ids: dict[int, str] = {}  # ORC column id -> hash kind
-    if bloom_filter_columns and not row_index_stride:
-        # bloom streams live inside ROW_INDEX row groups; with the index
-        # disabled the emission block below would silently skip them and
-        # the caller would believe blooms were written (ADVICE r6)
-        raise ValueError(
-            "bloom_filter_columns requires a row_index_stride (>0); "
-            "row_index_stride=0 disables the row-group index that bloom "
-            "filters attach to"
-        )
-    if bloom_filter_columns:
-        by_name: dict[str, tuple[int, pa.DataType]] = {}
-        nid = 1
-        for f in table.schema:
-            by_name[f.name] = (nid, f.type)
-            nid += _type_width(f.type)
-        for cname in bloom_filter_columns:
-            cid, ctyp = by_name[cname]
-            hkind = _BLOOM_HASH_KINDS.get(ctyp)
-            if hkind is None:
-                raise TypeError(
-                    f"bloom_filter_columns[{cname!r}]: no ORC bloom hash "
-                    f"for type {ctyp} (string/binary/int/date/float only)"
-                )
-            bloom_ids[cid] = hkind
 
-    out = bytearray(MAGIC)
-    stripe_infos: list[bytes] = []
-    stripe_stats: list[list[dict]] = []  # per stripe: per ORC column id
-    total_rows = table.num_rows
+class OrcWriter:
+    """Stream an ORC v1 file one stripe at a time: each ``write_table``
+    encodes its table as ONE stripe and writes the stripe's bytes
+    straight to ``where``; ``close()`` writes the Metadata section,
+    footer and postscript. Memory is one stripe, not one file.
 
-    for start in range(0, max(total_rows, 1), stripe_rows):
-        batch_tbl = table.slice(start, stripe_rows)
-        if batch_tbl.num_rows == 0 and total_rows > 0:
-            break
-        stripe_offset = len(out)
-        n_rows = batch_tbl.num_rows
+    ``where``: a path, or a writable file-like object (the object-store
+    sink seam), which ``close()`` leaves open. The ``write_table`` /
+    ``close`` surface is ``pq.ParquetWriter``'s, so the part-file roller
+    (operators/encode.py ``_PartWriter``) drives either. Options are
+    ``write_orc``'s."""
+
+    def __init__(
+        self,
+        where,
+        schema: pa.Schema,
+        compression: str = "none",
+        block_size: int = 262144,
+        row_index_stride: int | None = None,
+        string_kinds: dict[str, tuple[str, int]] | None = None,
+        bloom_filter_columns: list[str] | None = None,
+        bloom_filter_fpp: float = 0.05,
+    ):
+        self.comp = _COMPRESSION_KINDS[compression.lower()]
+        self.block_size = block_size
+        self.schema = schema
+        self.string_kinds = string_kinds or {}
+        if row_index_stride is None:
+            row_index_stride = 10000  # ORC default; multiple row groups/stripe
+        self.row_index_stride = row_index_stride
+        self.bloom_filter_fpp = bloom_filter_fpp
+        # pre-order ORC type ids, root struct = 0
+        self.types = _reorder_root_first(schema, string_kinds)
+
+        self.bloom_ids: dict[int, str] = {}  # ORC column id -> hash kind
+        if bloom_filter_columns and not row_index_stride:
+            # bloom streams live inside ROW_INDEX row groups; with the index
+            # disabled write_table would silently skip them and the caller
+            # would believe blooms were written (ADVICE r6)
+            raise ValueError(
+                "bloom_filter_columns requires a row_index_stride (>0); "
+                "row_index_stride=0 disables the row-group index that bloom "
+                "filters attach to"
+            )
+        if bloom_filter_columns:
+            by_name: dict[str, tuple[int, pa.DataType]] = {}
+            nid = 1
+            for f in schema:
+                by_name[f.name] = (nid, f.type)
+                nid += _type_width(f.type)
+            for cname in bloom_filter_columns:
+                cid, ctyp = by_name[cname]
+                hkind = _BLOOM_HASH_KINDS.get(ctyp)
+                if hkind is None:
+                    raise TypeError(
+                        f"bloom_filter_columns[{cname!r}]: no ORC bloom hash "
+                        f"for type {ctyp} (string/binary/int/date/float only)"
+                    )
+                self.bloom_ids[cid] = hkind
+
+        self.stripe_infos: list[bytes] = []
+        self.stripe_stats: list[list[dict]] = []  # per stripe: per ORC column id
+        self.n_rows = 0
+        self.owns_file = not hasattr(where, "write")
+        self.fh = open(where, "wb") if self.owns_file else where
+        self.pos = 0
+        self._put(MAGIC)
+
+    def _put(self, *chunks: bytes) -> None:
+        for chunk in chunks:
+            self.fh.write(chunk)
+            self.pos += len(chunk)
+
+    def write_table(self, table: pa.Table) -> None:
+        """Encode ``table`` as one stripe and write it."""
+        if not table.schema.equals(self.schema):
+            raise ValueError(f"OrcWriter: table schema {table.schema} does not match the file's {self.schema}")
+        table = table.combine_chunks()
+        _check_string_kinds(table, self.string_kinds)
+        comp, block_size, row_index_stride = self.comp, self.block_size, self.row_index_stride
+        stripe_offset = self.pos
+        n_rows = table.num_rows
         # row groups within this stripe (>=1; one entry per stride)
         if row_index_stride and row_index_stride < n_rows:
             row_group_starts = list(range(0, n_rows, row_index_stride))
@@ -682,7 +680,7 @@ def write_orc(
         # maps ORC ids -> (array, type, group starts in the column's own
         # row space — list children translate row groups to value ranges)
         col_arrays: dict[int, tuple[pa.Array, pa.DataType, list[int]]] = {}
-        _assign_arrays(table.schema, batch_tbl, col_arrays, row_group_starts)
+        _assign_arrays(self.schema, table, col_arrays, row_group_starts)
         data_bytes: list[bytes] = []
         data_meta: list[tuple[int, int, int]] = []  # (column, kind, length)
         encodings: list[tuple[int, int]] = [(proto.E_DIRECT, 0)]  # root struct
@@ -753,7 +751,7 @@ def write_orc(
                 ri = compress_stream(body, comp, block_size)
                 index_meta.append((col_id, proto.S_ROW_INDEX, len(ri)))
                 index_bytes.append(ri)
-        if row_index_stride and bloom_ids:
+        if row_index_stride and self.bloom_ids:
             from datafusion_orc_spark.codecs.bloom import (
                 bloom_build,
                 optimal_params,
@@ -762,8 +760,8 @@ def write_orc(
 
             # sized for the stride (not each group's actual count) so k
             # is constant per column — matches ORC writer behavior
-            m_bits, n_hash = optimal_params(row_index_stride, bloom_filter_fpp)
-            for col_id, hkind in bloom_ids.items():
+            m_bits, n_hash = optimal_params(row_index_stride, self.bloom_filter_fpp)
+            for col_id, hkind in self.bloom_ids.items():
                 arr_b, typ_b, gst = col_arrays[col_id]
                 gb_b = [int(g) for g in gst] + [len(arr_b)]
                 filters = [
@@ -782,10 +780,6 @@ def write_orc(
                 index_bytes.append(bb)
         index_len = sum(len(b) for b in index_bytes)
         data_len = sum(len(b) for b in data_bytes)
-        for b in index_bytes:
-            out += b
-        for b in data_bytes:
-            out += b
         # stripe footer (index streams listed first, matching byte layout)
         sf = b""
         for col, kind, length in index_meta + data_meta:
@@ -796,61 +790,113 @@ def write_orc(
                 body += _field_varint(2, dict_size)
             sf += _field_bytes(2, body)
         sf = compress_stream(sf, comp, block_size)
-        out += sf
-        si = (
+        self._put(*index_bytes, *data_bytes, sf)
+        self.stripe_infos.append(
             _field_varint(1, stripe_offset)
             + _field_varint(2, index_len)
             + _field_varint(3, data_len)
             + _field_varint(4, len(sf))
-            + _field_varint(5, batch_tbl.num_rows)
+            + _field_varint(5, n_rows)
         )
-        stripe_infos.append(si)
-        stripe_stats.append(stats)
-        if total_rows == 0:
-            break
+        self.stripe_stats.append(stats)
+        self.n_rows += n_rows
 
-    content_length = len(out)
-    # Metadata section: per-stripe ColumnStatistics (what ORC-Java's
-    # SearchArgument evaluates to skip whole stripes before any row read)
-    metadata = b""
-    for stats in stripe_stats:
-        ss = b"".join(_field_bytes(1, _serialize_stats(s)) for s in stats)
-        metadata += _field_bytes(1, ss)
-    metadata = compress_stream(metadata, comp, block_size)
-    out += metadata
+    def close(self) -> None:
+        """Write the Metadata section, footer and postscript; close the
+        file if this writer opened it."""
+        comp, block_size = self.comp, self.block_size
+        content_length = self.pos
+        # Metadata section: per-stripe ColumnStatistics (what ORC-Java's
+        # SearchArgument evaluates to skip whole stripes before any row read)
+        metadata = b""
+        for stats in self.stripe_stats:
+            ss = b"".join(_field_bytes(1, _serialize_stats(s)) for s in stats)
+            metadata += _field_bytes(1, ss)
+        metadata = compress_stream(metadata, comp, block_size)
 
-    footer = _field_varint(1, 3) + _field_varint(2, content_length)
-    for si in stripe_infos:
-        footer += _field_bytes(3, si)
-    for tb in types:
-        footer += _field_bytes(4, tb)
-    footer += _field_varint(6, total_rows)
-    # file-level ColumnStatistics: per-column merge across stripes
-    if stripe_stats:
-        n_cols = len(stripe_stats[0])
-        for col_id in range(n_cols):
-            merged = stripe_stats[0][col_id]
-            for stats in stripe_stats[1:]:
-                merged = _merge_stats(merged, stats[col_id])
-            footer += _field_bytes(7, _serialize_stats(merged))
-    footer += _field_varint(8, row_index_stride)
-    footer = compress_stream(footer, comp, block_size)
-    out += footer
-    ps = (
-        _field_varint(1, len(footer))
-        + _field_varint(2, comp)
-        + _field_varint(3, block_size)
-        + _packed_varints(4, [0, 12])
-        + _field_varint(5, len(metadata))
-        + _field_bytes(8000, MAGIC)
+        footer = _field_varint(1, 3) + _field_varint(2, content_length)
+        for si in self.stripe_infos:
+            footer += _field_bytes(3, si)
+        for tb in self.types:
+            footer += _field_bytes(4, tb)
+        footer += _field_varint(6, self.n_rows)
+        # file-level ColumnStatistics: per-column merge across stripes
+        if self.stripe_stats:
+            n_cols = len(self.stripe_stats[0])
+            for col_id in range(n_cols):
+                merged = self.stripe_stats[0][col_id]
+                for stats in self.stripe_stats[1:]:
+                    merged = _merge_stats(merged, stats[col_id])
+                footer += _field_bytes(7, _serialize_stats(merged))
+        footer += _field_varint(8, self.row_index_stride)
+        footer = compress_stream(footer, comp, block_size)
+        ps = (
+            _field_varint(1, len(footer))
+            + _field_varint(2, comp)
+            + _field_varint(3, block_size)
+            + _packed_varints(4, [0, 12])
+            + _field_varint(5, len(metadata))
+            + _field_bytes(8000, MAGIC)
+        )
+        self._put(metadata, footer, ps, bytes([len(ps)]))
+        if self.owns_file:
+            self.fh.close()
+
+
+def write_orc(
+    table: pa.Table,
+    path: str,
+    stripe_rows: int = 65536,
+    compression: str = "none",
+    block_size: int = 262144,
+    row_index_stride: int | None = None,
+    string_kinds: dict[str, tuple[str, int]] | None = None,
+    bloom_filter_columns: list[str] | None = None,
+    bloom_filter_fpp: float = 0.05,
+) -> None:
+    """Write an Arrow table as an ORC v1 file: ``OrcWriter`` fed one
+    ``stripe_rows`` slice per stripe (an empty table gets one 0-row
+    stripe). ``path`` is a path or a writable file-like object.
+
+    ``string_kinds``: {column: ("char"|"varchar", max_len)} footer-type
+    overrides for string columns — preserves CHAR/VARCHAR declarations
+    (with maximumLength) across a read-modify-write of a foreign file
+    instead of silently widening to STRING (see _reorder_root_first).
+    Checked over the whole table before any byte reaches ``path``.
+
+    ``compression``: none|snappy|zlib|lzo|lz4|zstd — applied per-stream (and
+    to stripe/file footers) in <=block_size chunks, matching the corpus
+    the reference ships (SNAPPY, block 262144).
+
+    ``row_index_stride``: ROW_INDEX granularity; defaults to 10000 (the
+    ORC default), so a stripe of more rows holds several row groups,
+    each RowIndexEntry carrying real per-stream seek positions and that
+    group's min/max stats for external readers (ORC-Java SearchArgument,
+    ORC C++) and our reader to skip row groups with. 0 disables
+    the index. Per-stripe + file-level ColumnStatistics are always
+    written (footer field 7 + the Metadata section), enabling stats-only
+    answers (e.g. Spark's ORC aggregate pushdown) without touching rows.
+
+    ``bloom_filter_columns``: top-level string/binary/int/date/float
+    columns that get a BLOOM_FILTER_UTF8 index stream (spec "Bloom
+    Filter Index"): one filter per row group, sized for
+    ``row_index_stride`` entries at ``bloom_filter_fpp``, hashed with
+    the spec's Murmur3-64 (strings, seed 104729) / Thomas Wang mix
+    (ints, IEEE-754 bits for floats) so ORC C++/Java readers can use
+    them. Our reader consults them for POINT predicates (prune lo==hi)
+    where min/max stats cannot discriminate — the 100-TB point-lookup
+    path (codecs/bloom.py; beyond the reference, whose scan machinery
+    stubs stats entirely, file_format.rs:108-116).
+    """
+    table = table.combine_chunks()
+    _check_string_kinds(table, string_kinds or {})
+    writer = OrcWriter(
+        path, table.schema, compression, block_size, row_index_stride,
+        string_kinds, bloom_filter_columns, bloom_filter_fpp,
     )
-    out += ps
-    out.append(len(ps))
-    if hasattr(path, "write"):  # file-like (object-store sink seam)
-        path.write(bytes(out))
-    else:
-        with open(path, "wb") as f:
-            f.write(bytes(out))
+    for start in range(0, max(table.num_rows, 1), stripe_rows):
+        writer.write_table(table.slice(start, stripe_rows))
+    writer.close()
 
 
 def _type_width(typ: pa.DataType) -> int:
@@ -907,7 +953,7 @@ def _bloom_group_hashes(arr, typ: pa.DataType, lo: int, hi: int, hkind: str) -> 
 
 def _reorder_root_first(
     schema: pa.Schema, string_kinds: dict[str, tuple[str, int]] | None = None
-) -> tuple[list[bytes], list]:
+) -> list[bytes]:
     """Serialize the type tree with proper pre-order ORC ids (root=0).
 
     ``string_kinds``: {top-level column name: ("char"|"varchar",
@@ -925,7 +971,6 @@ def _reorder_root_first(
     for f in schema:
         root += _field_bytes(3, f.name.encode())
     ordered: list[bytes] = [root]
-    arrow_ordered: list = [None]
     _CHAR_KINDS = {"char": proto.CHAR, "varchar": proto.VARCHAR}
     overrides = {
         sid: string_kinds[f.name]
@@ -939,10 +984,8 @@ def _reorder_root_first(
             ordered.append(
                 _field_varint(1, _CHAR_KINDS[kind.lower()]) + _field_varint(4, int(max_len))
             )
-            arrow_ordered.append(typ)
         elif typ in _PRIM_KINDS:
             ordered.append(_field_varint(1, _PRIM_KINDS[typ]))
-            arrow_ordered.append(typ)
         elif pa.types.is_timestamp(typ):
             # tz-aware Arrow timestamps -> TIMESTAMP_INSTANT (kind 18),
             # naive -> TIMESTAMP; the stream encoding is identical (UTC
@@ -950,23 +993,19 @@ def _reorder_root_first(
             ordered.append(
                 _field_varint(1, proto.TIMESTAMP_INSTANT if typ.tz else proto.TIMESTAMP)
             )
-            arrow_ordered.append(typ)
         elif pa.types.is_decimal(typ):
             ordered.append(
                 _field_varint(1, proto.DECIMAL)
                 + _field_varint(5, typ.precision)
                 + _field_varint(6, typ.scale)
             )
-            arrow_ordered.append(typ)
         elif pa.types.is_list(typ):
             ordered.append(_field_varint(1, proto.LIST) + _packed_varints(2, [my_id + 1]))
-            arrow_ordered.append(typ)
             add2(typ.value_type, my_id + 1)
         elif pa.types.is_map(typ):
             kid = my_id + 1
             vid = kid + _type_width(typ.key_type)
             ordered.append(_field_varint(1, proto.MAP) + _packed_varints(2, [kid, vid]))
-            arrow_ordered.append(typ)
             add2(typ.key_type, kid)
             add2(typ.item_type, vid)
         elif pa.types.is_struct(typ):
@@ -979,7 +1018,6 @@ def _reorder_root_first(
             for f in typ:
                 ent += _field_bytes(3, f.name.encode())
             ordered.append(ent)
-            arrow_ordered.append(typ)
             for f, cid in zip(typ, cids):
                 add2(f.type, cid)
         elif pa.types.is_union(typ):
@@ -990,7 +1028,6 @@ def _reorder_root_first(
                 cids.append(nid)
                 nid += _type_width(f.type)
             ordered.append(_field_varint(1, proto.UNION) + _packed_varints(2, cids))
-            arrow_ordered.append(typ)
             for f, cid in zip(fields, cids):
                 add2(f.type, cid)
         else:
@@ -998,7 +1035,7 @@ def _reorder_root_first(
 
     for f, sid in zip(schema, sub_ids):
         add2(f.type, sid)
-    return ordered, arrow_ordered
+    return ordered
 
 
 def _assign_arrays(schema: pa.Schema, tbl: pa.Table, out: dict, group_starts: list[int]) -> None:

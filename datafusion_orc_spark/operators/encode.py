@@ -19,9 +19,9 @@ are composed from one copy of each piece:
   file_source.rs:31, and the ORC stripe, SURVEY.md §1.4/§1.5);
 - ``_encode_stream``: encodes each stripe column by column with the
   E9-selected codec and packs its stripe_id;
-- ``_PartWriter``: byte-rolled parquet part files written from inside
-  the task, staged per task attempt by ``_open_part`` (which the ORC
-  sink shares);
+- ``_PartWriter``: byte-rolled part files written from inside the task
+  through a writer factory (parquet here, ORC in sources/orc_sink.py),
+  staged per task attempt by ``_open_part``;
 - ``_decode_setup``: projection and stripe pruning on the blob table;
 - ``_stripe_groups``: the one loop that regroups blob rows into stripes
   (zero-copy blob slices, ``prune`` drops stripes on their
@@ -52,6 +52,7 @@ table, the Spark-side analogue of the reference's projection pushdown
 
 from __future__ import annotations
 
+import functools
 import glob
 import os
 import tempfile
@@ -434,16 +435,20 @@ def _open_part(store, path: str, name: str, attempt: int, in_place: bool = False
 
 
 class _PartWriter:
-    """Streams one task's batches into parquet part files
-    ``part-{partition:05d}-{seq:03d}.parquet`` under ``output_dir``, one
-    row group per batch.
+    """Streams one task's batches into part files
+    ``part-{partition:05d}-{seq:03d}{suffix}`` under ``output_dir``, one
+    ``write_table`` per batch (a parquet row group, an ORC stripe) on the
+    writer ``open_writer(fh, schema)`` returns: ``pq.ParquetWriter`` or
+    ``OrcWriter`` with their options bound.
 
-    A file rolls to the next name once ``bytes_per_file`` in-memory bytes
-    went through it, so a task writes few large files (object stores and
-    shuffle-free decode scans both want big files), its stores spread
-    over the task's lifetime instead of bursting at task end, and it
-    never holds more than one batch in write-side memory. Roll points
-    are deterministic, so a re-run writes the same names.
+    A file rolls to the next name at the first batch boundary after
+    ``bytes_per_file`` in-memory bytes went through it, so a task writes
+    few large files (object stores and shuffle-free decode scans both
+    want big files), its stores spread over the task's lifetime instead
+    of bursting at task end, and it never holds more than one batch in
+    write-side memory. Roll points are deterministic, so a re-run writes
+    the same names. ``files`` lists each published file's path, rows and
+    on-disk bytes.
 
     ``recycle`` (local stores only): attempt 0 overwrites the part files
     in place (see ``encode_files``); retries stage through an
@@ -452,24 +457,26 @@ class _PartWriter:
     by a previous run whose roll layout was longer.
     """
 
-    def __init__(self, output_dir: str, schema: pa.Schema, bytes_per_file: int, recycle: bool = False, **parquet_options):
+    def __init__(self, output_dir: str, open_writer, suffix: str, bytes_per_file: int, recycle: bool = False):
         tc = TaskContext.get()
         self.part_id, self.attempt = tc.partitionId(), tc.attemptNumber()
         self.store, self.path = resolve_store(output_dir)
         self.store.makedirs(self.path)
         self.recycle = recycle and isinstance(self.store, LocalStore)
-        self.schema, self.bytes_per_file, self.options = schema, bytes_per_file, parquet_options
+        self.open_writer, self.suffix, self.bytes_per_file = open_writer, suffix, bytes_per_file
         self.writer = None
-        self.n_files = self.rows = self.bytes = self.file_bytes = 0
+        self.files: list[tuple[str, int, int]] = []
+        self.rows = self.bytes = self.file_rows = self.file_bytes = 0
 
     def write(self, batch: pa.RecordBatch) -> None:
         if self.writer is None:
-            name = f"part-{self.part_id:05d}-{self.n_files:03d}.parquet"
+            self.name = f"part-{self.part_id:05d}-{len(self.files):03d}{self.suffix}"
             in_place = self.recycle and self.attempt == 0
-            fh, self.publish = _open_part(self.store, self.path, name, self.attempt, in_place)
-            self.writer = pq.ParquetWriter(fh, self.schema, **self.options)
-        self.writer.write_table(pa.Table.from_batches([batch], schema=self.schema))
+            self.fh, self.publish = _open_part(self.store, self.path, self.name, self.attempt, in_place)
+            self.writer = self.open_writer(self.fh, batch.schema)
+        self.writer.write_table(pa.Table.from_batches([batch]))
         self.rows += batch.num_rows
+        self.file_rows += batch.num_rows
         self.bytes += batch.nbytes
         self.file_bytes += batch.nbytes
         if self.file_bytes >= self.bytes_per_file:
@@ -479,21 +486,22 @@ class _PartWriter:
         if self.writer is None:
             return
         self.writer.close()
+        size = self.fh.tell()
         self.publish()
+        self.files.append((f"{self.path}/{self.name}", self.file_rows, size))
         self.writer = None
-        self.file_bytes = 0
-        self.n_files += 1
+        self.file_rows = self.file_bytes = 0
 
     def close(self) -> None:
         self._roll()
         if not self.recycle:
             return
-        for p in glob.glob(f"{self.path}/part-{self.part_id:05d}-*.parquet"):
+        for p in glob.glob(f"{self.path}/part-{self.part_id:05d}-*{self.suffix}"):
             try:
                 seq = int(p.rsplit("-", 1)[1].split(".")[0])
             except ValueError:
                 continue
-            if seq >= self.n_files:
+            if seq >= len(self.files):
                 os.unlink(p)
 
 
@@ -512,6 +520,7 @@ def encode_table(df: DataFrame, stripe_rows: int = DEFAULT_STRIPE_ROWS, job_toke
     job_token = _job_token(job_token)
 
     def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _task_init()
         yield from _encode_stream(_stripes(batches, stripe_rows), TaskContext.get().partitionId(), job_token)
 
     return df.mapInArrow(encode_fn, BLOB_SCHEMA)
@@ -604,7 +613,8 @@ def encode_files(
         writer = None
         if output_dir is not None and not discard_output:
             # blob bytes are entropy-packed already: snappy costs CPU for ~0% gain
-            writer = _PartWriter(output_dir, _BLOB_PA_SCHEMA, bytes_per_file, recycle_output, compression="none")
+            open_writer = functools.partial(pq.ParquetWriter, compression="none")
+            writer = _PartWriter(output_dir, open_writer, ".parquet", bytes_per_file, recycle_output)
         for k, (path, rg, r0, r1) in enumerate(_task_splits(batches, splits)):
             # read at stripe_rows: wide token rows make 64k-row batches large
             src = _read_range(path, rg, r0, r1, stripe_rows, columns)
@@ -758,6 +768,13 @@ def prune_bounds_from_predicate(where: str) -> dict[str, tuple[int, int]]:
     return out
 
 
+def _merge_where(prune: dict | None, where: str | None) -> dict | None:
+    """``prune`` plus the bounds ``prune_bounds_from_predicate`` derives
+    from ``where``; an explicit ``prune`` bound wins over a derived one."""
+    derived = prune_bounds_from_predicate(where) if where is not None else {}
+    return {**derived, **(prune or {})} if derived else prune
+
+
 def _decode_setup(
     blobs_df: DataFrame, schema: pa.Schema | None, spark_schema, columns: list[str] | None, prune
 ) -> tuple[DataFrame, pa.Schema, list[str]]:
@@ -895,8 +912,7 @@ def decode_table(
     ``groupBy(stripe_id).applyInArrow`` for blob tables whose stripes
     were scattered across partitions by an arbitrary repartition.
     """
-    if where is not None:
-        prune = {**prune_bounds_from_predicate(where), **(prune or {})}
+    prune = _merge_where(prune, where)
     blobs_df, schema, names = _decode_setup(blobs_df, schema, spark_schema, columns, prune)
     if columns is not None:
         spark_schema = StructType([f for f in spark_schema.fields if f.name in columns])
@@ -905,6 +921,7 @@ def decode_table(
         proj = pa.schema([schema.field(nm) for nm in names])
 
         def decode_fn(table: pa.Table) -> pa.Table:
+            _task_init()
             batches = list(_stripe_batches(table.to_batches(), schema, names, prune))
             return pa.Table.from_batches(batches, schema=proj)
 
@@ -912,6 +929,7 @@ def decode_table(
     else:
 
         def decode_local(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            _task_init()
             yield from _stripe_batches(batches, schema, names, prune)
 
         out = blobs_df.mapInArrow(decode_local, spark_schema)
@@ -954,18 +972,19 @@ def decode_to_files(
     int(); string-keyed pruning is supported by read_orc_distributed,
     not by this sink — r7 advice)."""
     blobs_df, schema, names = _decode_setup(blobs_df, None, spark_schema, columns, prune)
-    proj = pa.schema([schema.field(nm) for nm in names])
 
     def dec_write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _task_init()
-        writer = _PartWriter(output_dir, proj, _BYTES_PER_FILE, **_DECODED_PARQUET)
+        writer = _PartWriter(
+            output_dir, functools.partial(pq.ParquetWriter, **_DECODED_PARQUET), ".parquet", _BYTES_PER_FILE
+        )
         for batch in _stripe_batches(batches, schema, names, prune):
             writer.write(batch)
         writer.close()
         yield pa.record_batch(
             [
                 pa.array([writer.part_id], pa.int32()),
-                pa.array([writer.n_files], pa.int32()),
+                pa.array([len(writer.files)], pa.int32()),
                 pa.array([writer.rows], pa.int64()),
                 pa.array([writer.bytes], pa.int64()),
             ],

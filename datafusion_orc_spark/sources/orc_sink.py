@@ -5,15 +5,17 @@ per input partition — the write-side complement of the distributed scan
 no writer, so this is beyond-reference surface).
 
 Shape mirrors encode_files (operators/encode.py): rows never leave the
-task (the ORC bytes are built and written executor-side through the
-object-store seam), only a tiny stats row per part file returns to the
-driver — shuffle-free, plan-asserted in tests/test_orc_sink.py. Memory
-is bounded by ``rows_per_file``: a partition streaming more rows than
-that rolls to a new part file instead of accumulating.
+task, only a tiny stats row per part file returns to the driver —
+shuffle-free, plan-asserted in tests/test_orc_sink.py. Each task
+re-slices its rows into stripes (``_stripes``) and streams them through
+the shared part-file roller (``_PartWriter``) into ``OrcWriter``, one
+stripe per write: task memory is one stripe, and a file rolls at the
+first stripe boundary past ``bytes_per_file``.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 import pyarrow as pa
@@ -35,7 +37,6 @@ def write_orc_distributed(
     output_dir: str,
     stripe_rows: int = 65536,
     compression: str = "snappy",
-    rows_per_file: int = 1 << 20,
     bytes_per_file: int = 256 * 1024 * 1024,
     row_index_stride: int | None = None,
     bloom_filter_columns: list[str] | None = None,
@@ -49,74 +50,33 @@ def write_orc_distributed(
     staged per task attempt like encode_files' part files (local:
     attempt-suffixed tmp name, then rename; object stores: one atomic
     PUT), and are readable by ORC C++ / ORC-Java / Spark / our own reader
-    (conformance: tests/test_orc_sink.py)."""
-    from datafusion_orc_spark.operators.encode import _ensure_workers_can_import, _open_part, _task_init
+    (conformance: tests/test_orc_sink.py). ``n_bytes`` is a file's
+    on-disk size."""
+    from datafusion_orc_spark.format.orc_writer import OrcWriter
+    from datafusion_orc_spark.operators.encode import _ensure_workers_can_import, _PartWriter, _stripes, _task_init
     from datafusion_orc_spark.sources.objectstore import resolve_store
 
     _ensure_workers_can_import(df)
     store, out_path = resolve_store(output_dir)
     store.makedirs(out_path)
+    open_writer = functools.partial(
+        OrcWriter, compression=compression, row_index_stride=row_index_stride,
+        bloom_filter_columns=bloom_filter_columns, bloom_filter_fpp=bloom_filter_fpp,
+    )
 
     def sink(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        from datafusion_orc_spark.format.orc_writer import write_orc
-
         _task_init()
-        tc = TaskContext.get()
-        part_id, attempt = tc.partitionId(), tc.attemptNumber()
-        k = 0
-        pending: list[pa.RecordBatch] = []
-        n_pending = 0
-        b_pending = 0  # Arrow buffer bytes — rows alone under-bound wide rows
-
-        def flush() -> Iterator[pa.RecordBatch]:
-            nonlocal k, pending, n_pending, b_pending
-            if not pending:
-                return
-            tbl = pa.Table.from_batches(pending)
-            pending, n_pending, b_pending = [], 0, 0
-            name = f"part-{part_id:05d}-{k:03d}.orc"
-            k += 1
-            import io
-
-            buf = io.BytesIO()
-            write_orc(
-                tbl, buf, stripe_rows=stripe_rows, compression=compression,
-                row_index_stride=row_index_stride,
-                bloom_filter_columns=bloom_filter_columns,
-                bloom_filter_fpp=bloom_filter_fpp,
-            )
-            raw = buf.getvalue()
-            fh, publish = _open_part(store, out_path, name, attempt)
-            fh.write(raw)
-            publish()
+        writer = _PartWriter(output_dir, open_writer, ".orc", bytes_per_file)
+        for stripe in _stripes(batches, stripe_rows):
+            writer.write(stripe)
+        writer.close()
+        for path, n_rows, n_bytes in writer.files:
             yield pa.RecordBatch.from_pydict({
-                "path": [f"{out_path}/{name}"],
-                "part": [part_id],
-                "n_rows": [tbl.num_rows],
-                "n_bytes": [len(raw)],
-                "n_stripes": [-(-tbl.num_rows // stripe_rows)],
+                "path": [path],
+                "part": [writer.part_id],
+                "n_rows": [n_rows],
+                "n_bytes": [n_bytes],
+                "n_stripes": [-(-n_rows // stripe_rows)],
             })
-
-        for b in batches:
-            # slice at the roll boundaries: one incoming Arrow batch may
-            # exceed rows_per_file OR bytes_per_file on its own (Spark's
-            # maxRecordsPerBatch is independent of the sink's roll size,
-            # and wide rows hit the byte bound long before the row bound)
-            row_bytes = max(1, b.get_total_buffer_size() // max(1, b.num_rows))
-            while b.num_rows:
-                take = min(
-                    b.num_rows,
-                    rows_per_file - n_pending,
-                    max(1, (bytes_per_file - b_pending) // row_bytes),
-                )
-                pending.append(b.slice(0, take))
-                n_pending += take
-                b_pending += take * row_bytes
-                b = b.slice(take)
-                if n_pending >= rows_per_file or b_pending >= bytes_per_file:
-                    yield from flush()
-        yield from flush()
 
     return df.mapInArrow(sink, STATS_SCHEMA)

@@ -159,9 +159,10 @@ def read_orc_distributed(
 
     from datafusion_orc_spark.operators.encode import (
         _list_inputs,
+        _merge_where,
         _task_frame,
+        _task_init,
         _task_splits,
-        prune_bounds_from_predicate,
     )
     from datafusion_orc_spark.sources.objectstore import (
         LocalStore,
@@ -169,10 +170,7 @@ def read_orc_distributed(
         resolve_store,
     )
 
-    if where is not None:
-        derived = prune_bounds_from_predicate(where)
-        if derived:
-            prune = {**derived, **(prune or {})}
+    prune = _merge_where(prune, where)
     if opener is None:
         paths = _list_inputs(path_or_glob, file_extension)
         store, _ = resolve_store(path_or_glob)
@@ -190,6 +188,9 @@ def read_orc_distributed(
             )
     splits, merged = plan_splits(paths, split_bytes, opener)
     if columns is not None:
+        unknown = set(columns) - set(merged.names)
+        if unknown:
+            raise ValueError(f"read_orc_distributed: unknown columns {sorted(unknown)}")
         merged = pa.schema([merged.field(c) for c in columns])
     # Spark's Arrow bridge rejects nanosecond timestamps: surface ORC
     # TIMESTAMP as microseconds (Spark's native precision); the decode
@@ -209,6 +210,7 @@ def read_orc_distributed(
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from datafusion_orc_spark.format.orc_reader import OrcReader
 
+        _task_init()
         for path, first, cnt in _task_splits(batches, splits):
             if cnt == 0:
                 continue

@@ -61,6 +61,14 @@ def test_projection_pushdown_single_column(spark, tmp_path):
     assert df.count() == 3000
 
 
+def test_projection_unknown_column_raises_value_error(spark, tmp_path):
+    """An unknown projected column is named in a ValueError, as in
+    decode_table and roundtrip_files, not a pyarrow KeyError."""
+    path, _ = _mk(tmp_path, "t.orc", n=100, stripe_rows=100)
+    with pytest.raises(ValueError, match=r"unknown columns \['nope', 'zz'\]"):
+        read_orc_distributed(spark, path, columns=["a", "zz", "nope"])
+
+
 def test_schema_merge_union_with_null_padding(spark, tmp_path):
     pa_, _ = _mk(tmp_path, "a.orc", n=1000, cols=("a", "b"), stripe_rows=1000)
     pb_, _ = _mk(tmp_path, "b.orc", n=800, cols=("a", "c"), stripe_rows=1000, seed=9)

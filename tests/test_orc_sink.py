@@ -56,19 +56,40 @@ def test_sink_plan_has_no_exchange(spark, tmp_path):
     assert "Exchange" not in plan, plan
 
 
-def test_sink_rolls_files_at_rows_per_file(spark, tmp_path):
+def test_sink_rolls_files_at_stripe_boundaries(spark, tmp_path):
+    """One task's output rolls to a new part file at the first stripe
+    boundary past bytes_per_file, so every part file but the task's last
+    holds only whole stripe_rows stripes."""
     out = str(tmp_path / "rolled")
     df = spark.range(10_000).selectExpr("id as k").coalesce(1)
+    # 1000 int64 rows are ~8 KB in memory: 3 stripes per file
     stats = write_orc_distributed(
-        df, out, stripe_rows=1000, rows_per_file=3000
+        df, out, stripe_rows=1000, bytes_per_file=20_000
     ).collect()
-    # 10000 rows / >=3000-row roll threshold -> 3-4 part files from ONE task
     assert len(stats) >= 3
     assert sum(r["n_rows"] for r in stats) == 10_000
-    got = pa.concat_tables(
-        [pyarrow.orc.ORCFile(f).read() for f in sorted(glob.glob(f"{out}/*.orc"))]
-    )
+    files = [pyarrow.orc.ORCFile(f) for f in sorted(glob.glob(f"{out}/*.orc"))]
+    for f in files[:-1]:
+        assert [f.read_stripe(i).num_rows for i in range(f.nstripes)] == [1000] * f.nstripes
+    got = pa.concat_tables([f.read() for f in files])
     assert sorted(got.column("k").to_pylist()) == list(range(10_000))
+
+
+def test_sink_single_partition_matches_write_orc(spark, tmp_path):
+    """One partition through the sink (``_stripes`` -> ``_PartWriter`` ->
+    ``OrcWriter``) writes the same bytes as ``write_orc`` of the same
+    rows, with row groups and bloom filters on."""
+    from datafusion_orc_spark.format.orc_writer import write_orc
+
+    out = str(tmp_path / "one")
+    df = spark.range(5000).selectExpr("id * 7 % 5003 as k", "concat('v', id % 37) as s").coalesce(1)
+    kw = dict(stripe_rows=1200, compression="zlib", row_index_stride=500, bloom_filter_columns=["k", "s"])
+    write_orc_distributed(df, out, **kw).collect()
+    (part,) = glob.glob(f"{out}/*.orc")
+    ref = str(tmp_path / "ref.orc")
+    write_orc(pyarrow.orc.ORCFile(part).read(), ref, **kw)
+    with open(part, "rb") as a, open(ref, "rb") as b:
+        assert a.read() == b.read()
 
 
 def test_write_orc_through_store_file_object():
@@ -94,12 +115,12 @@ def test_write_orc_through_store_file_object():
 
 
 def test_sink_rolls_files_at_bytes_per_file(spark, tmp_path):
-    """Wide rows must roll on BYTES, not only rows — rows_per_file alone
-    would buffer gigabytes of wide rows before the first flush."""
+    """Wide rows roll on bytes: each 1000-row stripe of 4 KB rows
+    crosses the 4 MB bound on its own."""
     out = str(tmp_path / "byte_rolled")
     df = spark.range(4_000).selectExpr("id as k", "repeat('x', 4000) as pad").coalesce(1)
     stats = write_orc_distributed(
-        df, out, stripe_rows=1000, rows_per_file=1_000_000, bytes_per_file=4_000_000
+        df, out, stripe_rows=1000, bytes_per_file=4_000_000
     ).collect()
     assert len(stats) >= 3, stats  # ~16 MB of pad / 4 MB roll
     assert sum(r["n_rows"] for r in stats) == 4_000

@@ -49,6 +49,34 @@ def test_our_reader_reads_our_files(tmp_path):
         assert ours.column(name).combine_chunks().equals(tbl.column(name).combine_chunks()), name
 
 
+def test_orc_writer_streams_each_stripe_before_close(tmp_path):
+    """OrcWriter writes each stripe's bytes when the stripe is written,
+    not at close(): the file-like sink's size after each write_table is
+    that stripe's end offset in the footer. close() leaves a file-like
+    open, and the file reads back whole."""
+    import io
+
+    from datafusion_orc_spark.format.orc_reader import OrcReader
+    from datafusion_orc_spark.format.orc_writer import OrcWriter
+
+    tbl = _f1_table(3000)
+    buf = io.BytesIO()
+    writer = OrcWriter(buf, tbl.schema, compression="snappy")
+    sizes = []
+    for start in range(0, tbl.num_rows, 1000):
+        writer.write_table(tbl.slice(start, 1000))
+        sizes.append(buf.tell())
+    writer.close()
+    assert not buf.closed
+    path = tmp_path / "streamed.orc"
+    path.write_bytes(buf.getvalue())
+    stripes = OrcReader(str(path)).footer.stripes
+    assert sizes == [s.offset + s.index_length + s.data_length + s.footer_length for s in stripes]
+    back = pyarrow.orc.ORCFile(str(path)).read()
+    for name in tbl.schema.names:
+        assert back.column(name).combine_chunks().equals(tbl.column(name).combine_chunks()), name
+
+
 def test_size_not_worse_than_orc_cxx(tmp_path):
     """Compressed-size gate vs the reference family, like-for-like
     (both uncompressed containers, pure encoding efficiency)."""
