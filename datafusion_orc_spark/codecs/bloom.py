@@ -30,6 +30,8 @@ import math
 
 import numpy as np
 
+from datafusion_orc_spark.codecs.varint import varint_encode_scalar
+
 _C1 = np.uint64(0x87C37B91114253D5)
 _C2 = np.uint64(0x4CF5AD432745937F)
 _N1 = np.uint64(0x52DCE729)
@@ -259,26 +261,16 @@ def bloom_might_contain(bitset: np.ndarray, k: int, hash64: int | np.ndarray) ->
     return bool(((word >> (pos & 63).astype(np.uint64)) & np.uint64(1)).all())
 
 
-def _pb_varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        out.append(b | (0x80 if v else 0))
-        if not v:
-            return bytes(out)
-
-
 def serialize_bloom_index(filters: list[tuple[np.ndarray, int]]) -> bytes:
     """[(bitset uint64 words, k)] -> BloomFilterIndex wire bytes
     (one BloomFilter per row group; utf8Bitset field = the words
     little-endian, the BLOOM_FILTER_UTF8 representation)."""
     body = b""
     for words, k in filters:
-        bf = _pb_varint((1 << 3) | 0) + _pb_varint(k)
+        bf = varint_encode_scalar((1 << 3) | 0) + varint_encode_scalar(k)
         bs = np.asarray(words, dtype="<u8").tobytes()
-        bf += _pb_varint((3 << 3) | 2) + _pb_varint(len(bs)) + bs
-        body += _pb_varint((1 << 3) | 2) + _pb_varint(len(bf)) + bf
+        bf += varint_encode_scalar((3 << 3) | 2) + varint_encode_scalar(len(bs)) + bs
+        body += varint_encode_scalar((1 << 3) | 2) + varint_encode_scalar(len(bf)) + bf
     return body
 
 

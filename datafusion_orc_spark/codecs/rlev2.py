@@ -99,34 +99,6 @@ def _encode_direct(out: bytearray, vals: np.ndarray, signed: bool, u: np.ndarray
     out.extend(bit_pack(u, w))
 
 
-def _encode_delta(out: bytearray, vals: np.ndarray, signed: bool, deltas: np.ndarray | None = None) -> None:
-    n = len(vals)
-    base = int(vals[0])
-    if deltas is None:
-        deltas = np.diff(vals)
-    d0 = int(deltas[0]) if n > 1 else 0
-    fixed = n <= 2 or bool(np.all(deltas == deltas[0]))
-    if fixed:
-        wc = 0
-        packed = b""
-    else:
-        mags = np.abs(deltas[1:]).astype(np.uint64)
-        w = closest_fixed_width(max(1, int(mags.max()).bit_length()))
-        if w == 1:
-            w = 2  # delta encoding cannot express width 1 (code 0 means fixed)
-        wc = width_code(w)
-        packed = bit_pack(mags, w)
-    out.append((_DELTA << 6) | (wc << 1) | ((n - 1) >> 8))
-    out.append((n - 1) & 0xFF)
-    out.extend(
-        varint_encode_scalar(
-            zigzag_scalar(base) if signed else (base & 0xFFFFFFFFFFFFFFFF)
-        )
-    )
-    out.extend(varint_encode_scalar(zigzag_scalar(d0)))
-    out.extend(packed)
-
-
 def _try_encode_patched_base(
     out: bytearray, vals: np.ndarray, signed: bool, wd: int | None = None
 ) -> bool:
@@ -187,21 +159,6 @@ def _try_encode_patched_base(
     out.extend(bit_pack(data, w90))
     out.extend(bit_pack(entries, combined))
     return True
-
-
-def _delta_encodable(vals: np.ndarray) -> bool:
-    """Monotonic AND direction-consistent with the decoder's sign rule.
-
-    The decoder applies packed delta magnitudes with the sign of the
-    *first* delta; a non-increasing run starting flat (e.g. [2,2,1])
-    would decode wrong, so it must not pick DELTA.
-    """
-    d = np.diff(vals)
-    if len(d) == 0:
-        return True
-    if bool(np.all(d >= 0)):
-        return True
-    return bool(d[0] < 0 and np.all(d <= 0))
 
 
 def _group_bitpack(
@@ -315,7 +272,8 @@ def _plan_literals(
     range_ok = (span >= 0) & (span < (1 << 62))
 
     # delta eligibility: monotonic within the chunk, direction matching
-    # the first delta's sign (see _delta_encodable). Chunk-boundary and
+    # the first delta's sign (the decoder applies every packed magnitude
+    # with the first delta's sign, so [2, 2, 1] must not pick DELTA). Chunk-boundary and
     # region-end deltas are neutralized before the segmented min.
     if n > 1 and K:
         nonneg = d >= 0
@@ -424,7 +382,7 @@ def _plan_literals(
         nb_base = (bit_widths(ubase) + 6) // 7  # varint byte counts
         nb_d0 = (bit_widths(ud0) + 6) // 7
         # packed-mag widths (deltas[1:] magnitudes; width 1 is reserved
-        # for "fixed", so it bumps to 2 — same rule as _encode_delta)
+        # for "fixed", so it bumps to 2: delta encoding cannot express it)
         keep = np.ones(len(dd), dtype=bool)
         keep[loc] = False
         mags_all = np.abs(dd[keep]).astype(np.uint64)
@@ -470,7 +428,6 @@ def _plan_literals(
     return {
         "cs": cs,
         "ce": ce,
-        "delta_ok": delta_ok,
         "pb_ok": pb_ok,
         "wfix": wfix,
         "run_starts": run_starts.tolist(),
@@ -487,7 +444,6 @@ def _emit_region_runs(
     out: bytearray,
     v: np.ndarray,
     u: np.ndarray,
-    d: np.ndarray,
     plan: dict,
     region: int,
     rc: int,
@@ -496,11 +452,13 @@ def _emit_region_runs(
     """Emit every planned run of ``region`` (plan cursor ``rc`` ->
     new cursor). Batched DIRECT runs pack their whole span in one
     bit_pack and tile the 2-byte headers with one strided write;
-    DELTA/PATCHED_BASE/tail chunks encode individually."""
+    DIRECT tail and DELTA chunks are slices of the planned blob;
+    PATCHED_BASE chunks encode individually (DIRECT when the exact
+    check rejects them)."""
     run_starts = plan["run_starts"]
     run_region = plan["run_region"]
     cs, ce = plan["cs"], plan["ce"]
-    delta_ok, pb_ok = plan["delta_ok"], plan["pb_ok"]
+    pb_ok = plan["pb_ok"]
     dpos, d_off, dview = plan["dpos"], plan["d_off"], plan["dview"]
     while rc < len(run_starts) and run_region[rc] == region:
         a, b = run_starts[rc], plan["run_ends"][rc]
@@ -517,13 +475,11 @@ def _emit_region_runs(
         else:
             for c in range(a, b):
                 dp = dpos[c]
-                if dp >= 0:  # pre-encoded DIRECT chunk: one blob slice
+                if dp >= 0:  # pre-encoded DIRECT or DELTA chunk: one blob slice
                     out += dview[d_off[dp] : d_off[dp + 1]]
                     continue
                 s, e = int(cs[c]), int(ce[c])
-                if delta_ok[c]:
-                    _encode_delta(out, v[s:e], signed, deltas=d[s : e - 1])
-                elif pb_ok[c] and _try_encode_patched_base(
+                if pb_ok[c] and _try_encode_patched_base(
                     out, v[s:e], signed, wd=int(plan["wfix"][c])
                 ):
                     pass
@@ -567,10 +523,9 @@ def rle_v2_encode(vals: np.ndarray, signed: bool = True) -> bytes:
     rep_lens = run_lens[rep_mask]
 
     def constant_delta(val: int, take: int) -> bytes:
-        # fixed-delta-0 run built directly from scalars: byte-identical
-        # to _encode_delta(np.full(take, val)) without the array alloc +
-        # vector passes (one long run emits one of these per 512-chunk
-        # tail; token stripes carry hundreds)
+        # fixed-delta-0 DELTA run of ``take`` copies of ``val``, built from
+        # scalars (one long run emits one of these per 512-chunk tail;
+        # token stripes carry hundreds)
         b = bytearray()
         b.append((_DELTA << 6) | ((take - 1) >> 8))
         b.append((take - 1) & 0xFF)
@@ -581,10 +536,9 @@ def rle_v2_encode(vals: np.ndarray, signed: bool = True) -> bytes:
         return bytes(b)
 
     def emit_repeat(start: int, length: int) -> None:
+        # runs of 3-10 values never reach here: they are all in the
+        # ``sr`` blob below
         val = int(v[start])
-        if length <= _MAX_SHORT_REPEAT:
-            _encode_short_repeat(out, val, length, signed)
-            return
         pos = 0
         full_chunk: bytes | None = None  # all full 512-chunks are identical
         while pos < length:
@@ -664,8 +618,7 @@ def rle_v2_encode(vals: np.ndarray, signed: bool = True) -> bytes:
         items.append(("lit", len(region_spans)))
         region_spans.append((cursor, n))
 
-    u = d = None
-    plan = None
+    u = plan = None
     if region_spans:
         u = zigzag_encode(v) if signed else v.view(np.uint32 if v.dtype == np.int32 else np.uint64)
         d = np.diff(v) if n > 1 else np.empty(0, dtype=v.dtype)
@@ -675,7 +628,7 @@ def rle_v2_encode(vals: np.ndarray, signed: bool = True) -> bytes:
     for item in items:
         kind = item[0]
         if kind == "lit":
-            rc = _emit_region_runs(out, v, u, d, plan, item[1], rc, signed)
+            rc = _emit_region_runs(out, v, u, plan, item[1], rc, signed)
         elif kind == "sr":
             out += sr_view[item[1] : item[2]]
         else:

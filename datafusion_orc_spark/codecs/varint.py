@@ -139,7 +139,8 @@ def varint_encode_scalar(x: int) -> bytes:
 
 
 def zigzag_scalar(x: int) -> int:
-    return (x << 1) ^ (x >> 63) if x >= 0 else ((-x - 1) << 1) + 1
+    """Zigzag of one int of any size (ORC decimal mantissas exceed int64)."""
+    return x << 1 if x >= 0 else ((-x - 1) << 1) + 1
 
 
 def varint_encode_signed(vals: np.ndarray) -> bytes:

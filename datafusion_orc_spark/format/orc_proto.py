@@ -1,5 +1,5 @@
 """D1 — minimal protobuf parsing for ORC metadata (postscript, footer,
-stripe footer).
+stripe footer), and the ORC type kinds with their Arrow types.
 
 The ORC metadata messages are plain proto2; we hand-roll a reader for the
 handful of messages the read path needs (the reference delegates this to
@@ -13,17 +13,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    result = 0
-    shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
+from datafusion_orc_spark.codecs.varint import varint_decode_scalar
 
 
 def parse_message(buf: bytes) -> dict[int, list]:
@@ -37,12 +29,12 @@ def parse_message(buf: bytes) -> dict[int, list]:
     pos = 0
     n = len(buf)
     while pos < n:
-        key, pos = _read_varint(buf, pos)
+        key, pos = varint_decode_scalar(buf, pos)
         fnum, wtype = key >> 3, key & 0x7
         if wtype == 0:
-            val, pos = _read_varint(buf, pos)
+            val, pos = varint_decode_scalar(buf, pos)
         elif wtype == 2:
-            ln, pos = _read_varint(buf, pos)
+            ln, pos = varint_decode_scalar(buf, pos)
             val = buf[pos : pos + ln]
             pos += ln
         elif wtype == 5:  # fixed32
@@ -61,7 +53,7 @@ def parse_packed_varints(buf: bytes) -> list[int]:
     out = []
     pos = 0
     while pos < len(buf):
-        v, pos = _read_varint(buf, pos)
+        v, pos = varint_decode_scalar(buf, pos)
         out.append(v)
     return out
 
@@ -102,6 +94,40 @@ class OrcType:
 # Type.Kind enum values (orc_proto.proto)
 BOOLEAN, BYTE, SHORT, INT, LONG, FLOAT, DOUBLE, STRING, BINARY, TIMESTAMP = range(10)
 LIST, MAP, STRUCT, UNION, DECIMAL, DATE, VARCHAR, CHAR, TIMESTAMP_INSTANT = range(10, 19)
+
+# ORC kind <-> Arrow type, for every kind the kind alone maps (ref:
+# file_format.rs:50-52 maps the type tree 1:1). Timestamps read as UTC
+# nanoseconds; TIMESTAMP_INSTANT is the tz-aware one. DECIMAL and
+# LIST/MAP/STRUCT/UNION take their Arrow type from the type entry's
+# precision/scale or children.
+ARROW_TYPES = {
+    BOOLEAN: pa.bool_(),
+    BYTE: pa.int8(),
+    SHORT: pa.int16(),
+    INT: pa.int32(),
+    LONG: pa.int64(),
+    FLOAT: pa.float32(),
+    DOUBLE: pa.float64(),
+    STRING: pa.string(),
+    BINARY: pa.binary(),
+    TIMESTAMP: pa.timestamp("ns"),
+    DATE: pa.date32(),
+    VARCHAR: pa.string(),
+    CHAR: pa.string(),
+    TIMESTAMP_INSTANT: pa.timestamp("ns", tz="UTC"),
+}
+# the inverse, as the writer declares: an Arrow string is a STRING (a
+# CHAR/VARCHAR comes only from write_orc's string_kinds)
+ORC_KINDS = {t: k for k, t in ARROW_TYPES.items() if k not in (VARCHAR, CHAR)}
+
+# ORC kind -> how its bloom filter hashes a value (spec "Bloom Filter
+# Index"): Murmur3-64 of the bytes, or Thomas Wang's 64-bit mix of the
+# int64 value / of the float64's IEEE-754 bits (codecs/bloom.py)
+BLOOM_HASH_KINDS = {
+    **dict.fromkeys((STRING, VARCHAR, CHAR, BINARY), "bytes"),
+    **dict.fromkeys((BYTE, SHORT, INT, LONG, DATE), "int"),
+    **dict.fromkeys((FLOAT, DOUBLE), "float"),
+}
 
 # Stream.Kind enum values
 S_PRESENT, S_DATA, S_LENGTH, S_DICTIONARY_DATA, S_DICTIONARY_COUNT, S_SECONDARY, S_ROW_INDEX = range(7)

@@ -13,6 +13,9 @@ LZ4/ZSTD compression and the v1 DIRECT/DICTIONARY (RLEv1) encodings of
 ORC 0.11 writers, plus UNION (non-null rows -> Arrow dense union,
 conformance-tested against an ORC-Java-written uniontype file; union
 columns with null rows raise — Arrow dense unions carry no validity).
+Each ORC kind reads as its ``orc_proto.ARROW_TYPES`` type (decimals and
+nested kinds from their type entry); ``OrcReader.arrow_types`` holds
+every column id's Arrow type, computed once per file.
 
 Used for conformance tests (decode the corpus bit-identically vs
 pyarrow.orc) and as the F5 stream-level oracle (our RLEv2 decoder applied
@@ -35,20 +38,11 @@ from datafusion_orc_spark.codecs.rlev2 import rle_v2_decode
 from datafusion_orc_spark.codecs.varint import (
     varint_decode,
     varint_decode_big,
+    varint_decode_scalar,
     zigzag_decode,
+    zigzag_decode_scalar,
 )
 from datafusion_orc_spark.format import orc_proto as proto
-
-
-def _snappy_uncompressed_len(chunk: bytes) -> int:
-    result, shift, pos = 0, 0, 0
-    while True:
-        b = chunk[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result
-        shift += 7
 
 
 def decompress_stream(raw: bytes, compression: int) -> bytes:
@@ -70,7 +64,7 @@ def decompress_stream(raw: bytes, compression: int) -> bytes:
         elif compression == 1:  # ZLIB (raw deflate)
             out += zlib.decompress(chunk, -15)
         elif compression == 2:  # SNAPPY
-            size = _snappy_uncompressed_len(chunk)
+            size, _ = varint_decode_scalar(chunk, 0)  # snappy's length preamble
             out += pa.Codec("snappy").decompress(chunk, size).to_pybytes()
         elif compression == 3:  # LZO1X block (no native codec: pure-py decode)
             from datafusion_orc_spark.codecs.lzoblock import lzo1x_decompress
@@ -93,8 +87,8 @@ def _validity_buffer(valid: np.ndarray) -> pa.Buffer | None:
     return pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
 
 
-def _decimal_array(t, mantissa, scales, valid: np.ndarray, n: int) -> pa.Array:
-    """Build a decimal128 array from decoded mantissas + per-value scales.
+def _decimal_array(typ: pa.Decimal128Type, mantissa, scales, valid: np.ndarray, n: int) -> pa.Array:
+    """Build a ``typ`` array from decoded mantissas + per-value scales.
 
     Vectorized when precision <= 18 and every per-value scale aligns to
     the type scale by a non-negative power of 10 that keeps the scaled
@@ -104,9 +98,8 @@ def _decimal_array(t, mantissa, scales, valid: np.ndarray, n: int) -> pa.Array:
     int64 pairs. Falls back to a python Decimal loop for >18-digit
     mantissas or pathological scale streams.
     """
-    typ = pa.decimal128(t.precision or 38, t.scale)
-    if isinstance(mantissa, np.ndarray) and (t.precision or 38) <= 18:
-        adj = (int(t.scale) - scales.astype(np.int64))
+    if isinstance(mantissa, np.ndarray) and typ.precision <= 18:
+        adj = (typ.scale - scales.astype(np.int64))
         # guard both signs explicitly: np.abs(INT64_MIN) == INT64_MIN
         # (negative), so an adversarial mantissa would pass an abs-based
         # check and wrap in the power-of-10 multiply below
@@ -135,6 +128,32 @@ def _decimal_array(t, mantissa, scales, valid: np.ndarray, n: int) -> pa.Array:
         else:
             py.append(None)
     return pa.array(py, type=typ)
+
+
+def _arrow_types(types: list[proto.OrcType]) -> list[pa.DataType]:
+    """The Arrow type of every ORC column id (``proto.ARROW_TYPES``;
+    decimals and nested kinds from their entry). Ids are pre-order, so
+    every child comes after its parent: one pass from the last id up
+    finds each child's type already built."""
+    out: list[pa.DataType] = [None] * len(types)
+    for col in reversed(range(len(types))):
+        t = types[col]
+        kids = [out[sub] for sub in t.subtypes]
+        if t.kind in proto.ARROW_TYPES:
+            out[col] = proto.ARROW_TYPES[t.kind]
+        elif t.kind == proto.DECIMAL:
+            out[col] = pa.decimal128(t.precision or 38, t.scale)
+        elif t.kind == proto.LIST:
+            out[col] = pa.list_(kids[0])
+        elif t.kind == proto.MAP:
+            out[col] = pa.map_(kids[0], kids[1])
+        elif t.kind == proto.STRUCT:
+            out[col] = pa.struct([pa.field(nm, kid) for nm, kid in zip(t.field_names, kids)])
+        elif t.kind == proto.UNION:
+            out[col] = pa.dense_union([pa.field(str(i), kid) for i, kid in enumerate(kids)])
+        else:
+            raise NotImplementedError(f"ORC type kind {t.kind}")
+    return out
 
 
 class _StripeReader:
@@ -234,6 +253,7 @@ class _StripeReader:
         None only when a seek's index entry is missing (the caller then
         decodes from the stripe start and slices)."""
         t = self.orc.footer.types[col]
+        typ = self.orc.arrow_types[col]
         enc = self.encodings[col].kind
         if group is None:
 
@@ -279,25 +299,17 @@ class _StripeReader:
         n_vals = int(valid.sum())
         k = t.kind
         if k == proto.BOOLEAN:
-            return self._primitive(pa.bool_(), bools(proto.S_DATA, n_vals), valid, n)
+            return self._primitive(typ, bools(proto.S_DATA, n_vals), valid, n)
         if k == proto.BYTE:
-            return self._primitive(pa.int8(), rle(proto.S_DATA, n_vals, None).view(np.int8), valid, n)
+            return self._primitive(typ, rle(proto.S_DATA, n_vals, None).view(np.int8), valid, n)
         if k in (proto.SHORT, proto.INT, proto.LONG, proto.DATE):
             vals = rle(proto.S_DATA, n_vals, signed=True)
-            typ = {
-                proto.SHORT: pa.int16(),
-                proto.INT: pa.int32(),
-                proto.LONG: pa.int64(),
-                proto.DATE: pa.date32(),
-            }[k]
-            np_t = np.int32 if k == proto.DATE else typ.to_pandas_dtype()
-            return self._primitive(typ, vals.astype(np_t), valid, n)
+            return self._primitive(typ, vals.astype(f"<i{typ.bit_width // 8}"), valid, n)
         if k in (proto.FLOAT, proto.DOUBLE):
             buf, _ = at(proto.S_DATA, self._POS_RAW)
-            vals = np.frombuffer(buf, dtype="<f4" if k == proto.FLOAT else "<f8", count=n_vals)
-            return self._primitive(pa.float32() if k == proto.FLOAT else pa.float64(), vals, valid, n)
+            vals = np.frombuffer(buf, dtype=f"<f{typ.bit_width // 8}", count=n_vals)
+            return self._primitive(typ, vals, valid, n)
         if k in (proto.STRING, proto.VARCHAR, proto.CHAR, proto.BINARY):
-            typ = pa.binary() if k == proto.BINARY else pa.string()
             if enc in (proto.E_DICTIONARY, proto.E_DICTIONARY_V2):
                 # the dictionary itself is stripe-wide: never seeked
                 idx = rle(proto.S_DATA, n_vals, signed=False)
@@ -336,21 +348,20 @@ class _StripeReader:
             # SIGNED nanos instead (handled above) and never hit this.
             abs_secs -= ((abs_secs < 0) & (nanos > 999999)).astype(np.int64)
             total = abs_secs * 1_000_000_000 + nanos
-            typ = pa.timestamp("ns", tz="UTC" if k == proto.TIMESTAMP_INSTANT else None)
             return self._primitive(typ, total, valid, n)
         if k == proto.DECIMAL:
             # DATA = unbounded varint mantissas (raw stream: 1 position),
             # SECONDARY = per-value scales (RLE)
             buf, _ = at(proto.S_DATA, self._POS_RAW)
-            if (t.precision or 38) > 18:
+            if typ.precision > 18:
                 # unbounded varint mantissas (python ints) for >64-bit
                 big, _ = varint_decode_big(buf, n_vals)
-                mantissa = [(m >> 1) ^ -(m & 1) for m in big]
+                mantissa = [zigzag_decode_scalar(m) for m in big]
             else:
                 u, _ = varint_decode(buf, n_vals)
                 mantissa = zigzag_decode(u)
             scales = rle(proto.S_SECONDARY, n_vals, signed=True)
-            return _decimal_array(t, mantissa, scales, valid, n)
+            return _decimal_array(typ, mantissa, scales, valid, n)
         if k in (proto.LIST, proto.MAP):
             # the LENGTH values say how many child values these rows own;
             # a seeking child enters via its OWN RowIndexEntry (ORC records
@@ -366,23 +377,16 @@ class _StripeReader:
             if any(c is None for c in children):
                 return None
             buffers = [_validity_buffer(valid), pa.py_buffer(offsets.tobytes())]
-            if k == proto.LIST:
-                return pa.ListArray.from_buffers(
-                    pa.list_(children[0].type), n, buffers, children=children
-                )
-            keys, items = children
-            entry_fields = [pa.field("key", keys.type, nullable=False), pa.field("value", items.type)]
-            struct = pa.StructArray.from_arrays(children, fields=entry_fields)
-            return pa.MapArray.from_buffers(
-                pa.map_(keys.type, items.type), n, buffers, children=[struct]
-            )
+            if k == proto.MAP:
+                children = [pa.StructArray.from_arrays(children, fields=[typ.key_field, typ.item_field])]
+            return pa.Array.from_buffers(typ, n, buffers, children=children)
         if k == proto.STRUCT:
             children = [self.decode_column(sc, n_vals, group, entries_for) for sc in t.subtypes]
             if any(c is None for c in children):
                 return None
-            names = t.field_names
+            fields = list(typ)
             if n_vals == n:
-                return pa.StructArray.from_arrays(children, names)
+                return pa.StructArray.from_arrays(children, fields=fields)
             # expand children through validity
             mask = pa.array(~valid)
             # all-null rows: children are EMPTY arrays, so the take-by-0
@@ -391,12 +395,12 @@ class _StripeReader:
             if n_vals == 0:
                 return pa.StructArray.from_arrays(
                     [pa.nulls(n, type=ch.type) for ch in children],
-                    names, mask=mask,
+                    fields=fields, mask=mask,
                 )
             idx = np.full(n, -1, dtype=np.int64)
             idx[valid] = np.arange(n_vals)
             take = pa.array(np.where(valid, idx, 0))
-            return pa.StructArray.from_arrays([ch.take(take) for ch in children], names, mask=mask)
+            return pa.StructArray.from_arrays([ch.take(take) for ch in children], fields=fields, mask=mask)
         if k == proto.UNION:
             # ORC UNION: DATA = per-row child tag (byte RLE); child i holds
             # only the rows tagged i, densely — exactly Arrow's DENSE union
@@ -484,6 +488,7 @@ class OrcReader:
         f_end = len(tail) - 1 - ps_len
         footer_raw = tail[f_end - self.postscript.footer_length : f_end]
         self.footer = proto.parse_footer(decompress_stream(footer_raw, self.postscript.compression))
+        self.arrow_types = _arrow_types(self.footer.types)
 
     def _read(self, offset: int, length: int) -> bytes:
         self._f.seek(offset)
@@ -517,20 +522,6 @@ class OrcReader:
             out |= self._subtree_ids(sub)
         return out
 
-    _BLOOM_KIND_BY_TYPE = {
-        proto.STRING: "bytes",
-        proto.VARCHAR: "bytes",
-        proto.CHAR: "bytes",
-        proto.BINARY: "bytes",
-        proto.BYTE: "int",
-        proto.SHORT: "int",
-        proto.INT: "int",
-        proto.LONG: "int",
-        proto.DATE: "int",
-        proto.FLOAT: "float",
-        proto.DOUBLE: "float",
-    }
-
     def _bloom_surviving_groups(
         self,
         sr: "_StripeReader",
@@ -553,7 +544,7 @@ class OrcReader:
                 continue
             if not sr.has_stream(col, proto.S_BLOOM_FILTER_UTF8):
                 continue
-            hkind = self._BLOOM_KIND_BY_TYPE.get(self.footer.types[col].kind)
+            hkind = proto.BLOOM_HASH_KINDS.get(self.footer.types[col].kind)
             if hkind is None:
                 continue
             val = lo
@@ -573,37 +564,9 @@ class OrcReader:
     def schema(self) -> pa.Schema:
         """ORC type tree -> Arrow schema (ref: file_format.rs:50-52)."""
         root = self.footer.types[0]
-        fields = []
-        for name, sub in zip(root.field_names, root.subtypes):
-            fields.append(pa.field(name, self._arrow_type(sub)))
-        return pa.schema(fields)
-
-    def _arrow_type(self, col: int) -> pa.DataType:
-        t = self.footer.types[col]
-        k = t.kind
-        simple = {
-            proto.BOOLEAN: pa.bool_(), proto.BYTE: pa.int8(), proto.SHORT: pa.int16(),
-            proto.INT: pa.int32(), proto.LONG: pa.int64(), proto.FLOAT: pa.float32(),
-            proto.DOUBLE: pa.float64(), proto.STRING: pa.string(), proto.VARCHAR: pa.string(),
-            proto.CHAR: pa.string(), proto.BINARY: pa.binary(), proto.DATE: pa.date32(),
-            proto.TIMESTAMP: pa.timestamp("ns"),
-            proto.TIMESTAMP_INSTANT: pa.timestamp("ns", tz="UTC"),
-        }
-        if k in simple:
-            return simple[k]
-        if k == proto.DECIMAL:
-            return pa.decimal128(t.precision or 38, t.scale)
-        if k == proto.LIST:
-            return pa.list_(self._arrow_type(t.subtypes[0]))
-        if k == proto.MAP:
-            return pa.map_(self._arrow_type(t.subtypes[0]), self._arrow_type(t.subtypes[1]))
-        if k == proto.STRUCT:
-            return pa.struct([pa.field(nm, self._arrow_type(sc)) for nm, sc in zip(t.field_names, t.subtypes)])
-        if k == proto.UNION:
-            return pa.dense_union(
-                [pa.field(str(i), self._arrow_type(sc)) for i, sc in enumerate(t.subtypes)]
-            )
-        raise NotImplementedError(f"type kind {k}")
+        return pa.schema(
+            [pa.field(name, self.arrow_types[sub]) for name, sub in zip(root.field_names, root.subtypes)]
+        )
 
     def iter_stripes(
         self,
@@ -756,12 +719,9 @@ class OrcReader:
         by name (ref: physical_exec.rs:69-78 name->index mask); ``prune``
         = statistics pushdown (see iter_stripes)."""
         batches = list(self.iter_stripes(columns, stripes, prune=prune))
-        root = self.footer.types[0]
-        names = root.field_names
-        sel = list(range(len(names))) if columns is None else [names.index(c) for c in columns]
-        schema = pa.schema([pa.field(names[i], self._arrow_type(root.subtypes[i])) for i in sel])
-        if not batches:
-            return pa.Table.from_batches([], schema=schema)
+        schema = self.schema()
+        if columns is not None:
+            schema = pa.schema([schema.field(schema.names.index(c)) for c in columns])
         return pa.Table.from_batches(batches, schema=schema)
 
 

@@ -14,8 +14,10 @@ header — the corpus the reference ships is SNAPPY), DICTIONARY_V2 with
 SORTED symbol tables for strings (ORC writer heuristic: dictionary when
 distinct/total <= 0.8, mirroring orc.dictionary.key.threshold), the full
 pre-order type tree of boolean/int8/16/32/64/float/double/string/
-binary/date/timestamp/decimal (incl. 38-digit)/list/map/struct/union,
-nullable via PRESENT streams, multiple stripes, and statistics:
+binary/date/timestamp/decimal (incl. 38-digit)/list/map/struct/union
+(``_type_tree``; primitive kinds from ``orc_proto.ORC_KINDS``, the
+inverse of the reader's ``orc_proto.ARROW_TYPES``), nullable via
+PRESENT streams, multiple stripes, and statistics:
 per-stripe + file-level ColumnStatistics (footer field 7 + Metadata
 section) and ROW_INDEX with MULTIPLE row groups per stripe
 (rowIndexStride default 10000) carrying REAL per-stream seek positions
@@ -35,8 +37,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from datafusion_orc_spark.codecs.bitpack import bit_widths
 from datafusion_orc_spark.codecs.byterle import bool_rle_encode, byte_rle_encode
 from datafusion_orc_spark.codecs.rlev2 import rle_v2_encode
+from datafusion_orc_spark.codecs.varint import varint_encode, varint_encode_scalar, zigzag_scalar
 from datafusion_orc_spark.format import orc_proto as proto
 
 MAGIC = b"ORC"
@@ -99,41 +103,28 @@ def compress_stream(raw: bytes, kind: int, block: int = 262144, return_chunks: b
 
 # ------------------------------------------------------------ protobuf write
 
-def _varint(x: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = x & 0x7F
-        x >>= 7
-        if x:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def _field_varint(tag: int, value: int) -> bytes:
-    return _varint((tag << 3) | 0) + _varint(value)
+    return varint_encode_scalar((tag << 3) | 0) + varint_encode_scalar(value)
 
 
 def _field_bytes(tag: int, data: bytes) -> bytes:
-    return _varint((tag << 3) | 2) + _varint(len(data)) + data
+    return varint_encode_scalar((tag << 3) | 2) + varint_encode_scalar(len(data)) + data
 
 
 def _packed_varints(tag: int, values: list[int]) -> bytes:
-    payload = b"".join(_varint(v) for v in values)
+    payload = b"".join(varint_encode_scalar(v) for v in values)
     return _field_bytes(tag, payload)
 
 
 def _field_sint(tag: int, value: int) -> bytes:
     """proto sint64: zigzag + varint."""
-    zz = (value << 1) ^ (value >> 63)
-    return _varint((tag << 3) | 0) + _varint(zz & 0xFFFFFFFFFFFFFFFF)
+    return _field_varint(tag, zigzag_scalar(value))
 
 
 def _field_double(tag: int, value: float) -> bytes:
     import struct
 
-    return _varint((tag << 3) | 1) + struct.pack("<d", value)
+    return varint_encode_scalar((tag << 3) | 1) + struct.pack("<d", value)
 
 
 # ------------------------------------------------------------ column stats
@@ -157,9 +148,10 @@ def _collect_stats(arr: pa.Array, typ: pa.DataType) -> dict:
         # min_max/sum work on the native width (pc.sum accumulates in
         # int64) — casting a 7.9M-value token child to int64 first was
         # a pure copy on the writer's hottest stats path. date32 still
-        # casts (its scalars surface as datetime.date, not int).
+        # casts (its scalars surface as datetime.date, not int), to
+        # int32: pyarrow casts date32 to no other integer type.
         if pa.types.is_date32(typ):
-            dense = dense.cast(pa.int64())
+            dense = dense.cast(pa.int32())
         mm = pc.min_max(dense)
         s["kind"] = "int"
         s["min"], s["max"] = int(mm["min"].as_py()), int(mm["max"].as_py())
@@ -233,47 +225,73 @@ def _serialize_stats(s: dict) -> bytes:
     return body
 
 
-# positions-per-stream arity for RowIndexEntry (ORC v1 "Row Group Index"):
-# uncompressed — raw byte streams record [byte offset]; RLE streams add
-# [values into run]; boolean adds [bit offset]. Compression prepends a
-# [chunk offset] to each (handled by the +1 in _entry_positions).
-_POS_RAW, _POS_RLE, _POS_BOOL = 1, 2, 3
-
-
-def _stream_pos_arity(kind: int, typ: pa.DataType, enc: int) -> int:
-    if kind == proto.S_PRESENT:
-        return _POS_BOOL
-    if kind == proto.S_DATA:
-        if typ == pa.bool_():
-            return _POS_BOOL
-        if typ in (pa.float32(), pa.float64()):
-            return _POS_RAW
-        if typ in (pa.string(), pa.binary()) and enc != proto.E_DICTIONARY_V2:
-            return _POS_RAW
-        return _POS_RLE  # ints, byte RLE, dictionary indices
-    if kind == proto.S_SECONDARY:
-        return _POS_RLE
-    if kind == proto.S_LENGTH:
-        # list/string-direct LENGTH is row-variant; a dictionary's entry
-        # lengths are per-symbol, not per-row — never positioned
-        return 0 if enc == proto.E_DICTIONARY_V2 else _POS_RLE
-    return 0  # DICTIONARY_DATA etc: not positioned (not row-variant)
-
-
 # ------------------------------------------------------------ type tree
 
-_PRIM_KINDS = {
-    pa.bool_(): proto.BOOLEAN,
-    pa.int8(): proto.BYTE,
-    pa.int16(): proto.SHORT,
-    pa.int32(): proto.INT,
-    pa.int64(): proto.LONG,
-    pa.float32(): proto.FLOAT,
-    pa.float64(): proto.DOUBLE,
-    pa.string(): proto.STRING,
-    pa.binary(): proto.BINARY,
-    pa.date32(): proto.DATE,
-}
+_CHAR_KINDS = {"char": proto.CHAR, "varchar": proto.VARCHAR}
+
+
+def _type_tree(
+    schema: pa.Schema, string_kinds: dict[str, tuple[str, int]] | None = None
+) -> list[proto.OrcType]:
+    """The footer type tree of ``schema``, indexed by ORC column id:
+    pre-order, root struct = 0. Each node reserves its id before its
+    children are walked, so a node's subtype ids are what their walks
+    return. Kinds come from ``proto.ORC_KINDS``; a timestamp of any unit
+    is stored as UTC nanoseconds, so it maps as the ns type with its zone
+    (if any) read as UTC.
+
+    ``string_kinds``: {top-level column name: ("char"|"varchar",
+    max_len)} — Arrow has no char/varchar types, so a foreign CHAR file
+    read through Arrow and rewritten would silently widen to STRING;
+    this propagates the declared kind + maximumLength (ORC Type field 4)
+    into the footer while the streams stay the STRING layout (identical
+    per the spec)."""
+    types: list[proto.OrcType] = []
+
+    def walk(typ: pa.DataType) -> int:
+        my_id = len(types)
+        t = proto.OrcType(kind=proto.STRUCT)
+        types.append(t)
+        if pa.types.is_timestamp(typ):
+            typ = pa.timestamp("ns", "UTC" if typ.tz else None)
+        if typ in proto.ORC_KINDS:
+            t.kind = proto.ORC_KINDS[typ]
+        elif pa.types.is_decimal(typ):
+            t.kind, t.precision, t.scale = proto.DECIMAL, typ.precision, typ.scale
+        elif pa.types.is_list(typ):
+            t.kind, t.subtypes = proto.LIST, [walk(typ.value_type)]
+        elif pa.types.is_map(typ):
+            t.kind, t.subtypes = proto.MAP, [walk(typ.key_type), walk(typ.item_type)]
+        elif pa.types.is_struct(typ):
+            t.subtypes = [walk(f.type) for f in typ]
+            t.field_names = [f.name for f in typ]
+        elif pa.types.is_union(typ):
+            t.kind, t.subtypes = proto.UNION, [walk(typ.field(i).type) for i in range(typ.num_fields)]
+        else:
+            raise NotImplementedError(str(typ))
+        return my_id
+
+    walk(pa.struct(schema))
+    for f, cid in zip(schema, types[0].subtypes):
+        if string_kinds and f.name in string_kinds and f.type == pa.string():
+            kind, max_len = string_kinds[f.name]
+            types[cid].kind = _CHAR_KINDS[kind.lower()]
+            types[cid].maximum_length = int(max_len)
+    return types
+
+
+def _type_entry(t: proto.OrcType) -> bytes:
+    """One footer Type message (orc_proto.proto field numbers)."""
+    body = _field_varint(1, t.kind)
+    if t.kind in (proto.LIST, proto.MAP, proto.STRUCT, proto.UNION):
+        body += _packed_varints(2, t.subtypes)
+    for name in t.field_names:
+        body += _field_bytes(3, name.encode())
+    if t.kind in (proto.CHAR, proto.VARCHAR):
+        body += _field_varint(4, t.maximum_length)
+    if t.kind == proto.DECIMAL:
+        body += _field_varint(5, t.precision) + _field_varint(6, t.scale)
+    return body
 
 
 # ------------------------------------------------------------ column encode
@@ -364,19 +382,13 @@ def _encode_orc_column(
     """
     n = len(arr)
     gs = [0] if not group_starts else [int(g) for g in group_starts]
-    multi = len(gs) > 1
     streams: list[tuple[int, bytes]] = []
     positions: list[list[list[int]]] = []
     if arr.null_count:
         valid = pc.is_valid(arr).to_numpy(zero_copy_only=False)
-        if multi:
-            pres, c_out, c_in = bool_rle_encode(valid, return_controls=True)
-            ppos = [_ctrl_pos(c_out, c_in, g // 8) + [g % 8] for g in gs]
-        else:
-            pres = bool_rle_encode(valid)
-            ppos = [[0, 0, 0]]
+        pres, c_out, c_in = bool_rle_encode(valid, return_controls=True)
         streams.append((proto.S_PRESENT, pres))
-        positions.append(ppos)
+        positions.append([_ctrl_pos(c_out, c_in, g // 8) + [g % 8] for g in gs])
         dense = arr.drop_null()
         cum = np.zeros(n + 1, dtype=np.int64)
         np.cumsum(valid, out=cum[1:])
@@ -389,25 +401,15 @@ def _encode_orc_column(
 
     if typ == pa.bool_():
         flags = dense.to_numpy(zero_copy_only=False).astype(bool)
-        if multi:
-            data, c_out, c_in = bool_rle_encode(flags, return_controls=True)
-            dpos = [_ctrl_pos(c_out, c_in, v // 8) + [v % 8] for v in vstarts]
-        else:
-            data = bool_rle_encode(flags)
-            dpos = [[0, 0, 0]]
+        data, c_out, c_in = bool_rle_encode(flags, return_controls=True)
         streams.append((proto.S_DATA, data))
-        positions.append(dpos)
+        positions.append([_ctrl_pos(c_out, c_in, v // 8) + [v % 8] for v in vstarts])
         enc = proto.E_DIRECT
     elif typ == pa.int8():
         raw = dense.to_numpy(zero_copy_only=False).view(np.uint8)
-        if multi:
-            data, c_out, c_in = byte_rle_encode(raw, return_controls=True)
-            dpos = [_ctrl_pos(c_out, c_in, v) for v in vstarts]
-        else:
-            data = byte_rle_encode(raw)
-            dpos = [[0, 0]]
+        data, c_out, c_in = byte_rle_encode(raw, return_controls=True)
         streams.append((proto.S_DATA, data))
-        positions.append(dpos)
+        positions.append([_ctrl_pos(c_out, c_in, v) for v in vstarts])
         enc = proto.E_DIRECT
     elif typ in (pa.int16(), pa.int32(), pa.int64()) or pa.types.is_date32(typ):
         # int16/int32/date stay 32-bit into the encoder: rle_v2_encode
@@ -510,15 +512,9 @@ def _encode_orc_column(
     elif pa.types.is_union(typ):
         # DATA = per-row child tag, byte-RLE (dense unions carry no nulls)
         tags = np.frombuffer(dense.buffers()[1], dtype=np.int8, count=len(dense), offset=dense.offset)
-        raw = tags.view(np.uint8)
-        if multi:
-            data, c_out, c_in = byte_rle_encode(raw, return_controls=True)
-            dpos = [_ctrl_pos(c_out, c_in, v) for v in vstarts]
-        else:
-            data = byte_rle_encode(raw)
-            dpos = [[0, 0]]
+        data, c_out, c_in = byte_rle_encode(tags.view(np.uint8), return_controls=True)
         streams.append((proto.S_DATA, data))
-        positions.append(dpos)
+        positions.append([_ctrl_pos(c_out, c_in, v) for v in vstarts])
         enc = proto.E_DIRECT
     elif pa.types.is_decimal(typ):
         # ORC DECIMAL: DATA = zigzag varint mantissas (unbounded ints),
@@ -533,40 +529,23 @@ def _encode_orc_column(
             mant = raw16[:, 0].view(np.int64)
             with np.errstate(over="ignore"):
                 u = ((mant << 1) ^ (mant >> 63)).view(np.uint64)
-            from datafusion_orc_spark.codecs.varint import varint_encode
-
             data = varint_encode(u)
-            # per-value varint byte lengths -> raw positions at vstarts
-            from datafusion_orc_spark.codecs.bitpack import bit_widths as _bw
-
-            vlens = np.maximum(1, -(-_bw(np.maximum(u, 1)) // 7))
-            voff = np.zeros(nd + 1, dtype=np.int64)
-            np.cumsum(vlens, out=voff[1:])
-            dpos = [[int(voff[v])] for v in vstarts]
+            vlens = np.maximum(1, -(-bit_widths(np.maximum(u, 1)) // 7))
         else:
-            parts = []
-            voff_l = [0]
-            for d in dense.to_pylist():
-                # exact int mantissa via as_tuple: Decimal.scaleb under the
-                # default context (prec=28) silently ROUNDS >28-significant-
-                # digit mantissas, corrupting wide (up to 38-digit) decimals
-                m = _decimal_to_int_exact(d, typ.scale) if d is not None else 0
-                zz = (-m << 1) - 1 if m < 0 else (m << 1)  # zigzag, arbitrary precision
-                b = bytearray()
-                x = zz
-                while True:
-                    if x > 0x7F:
-                        b.append((x & 0x7F) | 0x80)
-                        x >>= 7
-                    else:
-                        b.append(x)
-                        break
-                parts.append(bytes(b))
-                voff_l.append(voff_l[-1] + len(b))
+            # exact int mantissa via as_tuple: Decimal.scaleb under the
+            # default context (prec=28) silently ROUNDS >28-significant-
+            # digit mantissas, corrupting wide (up to 38-digit) decimals
+            parts = [
+                varint_encode_scalar(zigzag_scalar(_decimal_to_int_exact(d, typ.scale)))
+                for d in dense.to_pylist()
+            ]
             data = b"".join(parts)
-            dpos = [[voff_l[v]] for v in vstarts]
+            vlens = np.array([len(b) for b in parts], dtype=np.int64)
+        # per-value varint byte lengths -> raw positions at vstarts
+        voff = np.zeros(nd + 1, dtype=np.int64)
+        np.cumsum(vlens, out=voff[1:])
         streams.append((proto.S_DATA, data))
-        positions.append(dpos)
+        positions.append([[int(voff[v])] for v in vstarts])
         scales = np.full(nd, typ.scale, dtype=np.int64)
         d2, p2 = _rle_grouped(scales, vstarts, signed=True)
         streams.append((proto.S_SECONDARY, d2))
@@ -620,8 +599,7 @@ class OrcWriter:
             row_index_stride = 10000  # ORC default; multiple row groups/stripe
         self.row_index_stride = row_index_stride
         self.bloom_filter_fpp = bloom_filter_fpp
-        # pre-order ORC type ids, root struct = 0
-        self.types = _reorder_root_first(schema, string_kinds)
+        self.types = _type_tree(schema, string_kinds)
 
         self.bloom_ids: dict[int, str] = {}  # ORC column id -> hash kind
         if bloom_filter_columns and not row_index_stride:
@@ -633,21 +611,16 @@ class OrcWriter:
                 "row_index_stride=0 disables the row-group index that bloom "
                 "filters attach to"
             )
-        if bloom_filter_columns:
-            by_name: dict[str, tuple[int, pa.DataType]] = {}
-            nid = 1
-            for f in schema:
-                by_name[f.name] = (nid, f.type)
-                nid += _type_width(f.type)
-            for cname in bloom_filter_columns:
-                cid, ctyp = by_name[cname]
-                hkind = _BLOOM_HASH_KINDS.get(ctyp)
-                if hkind is None:
-                    raise TypeError(
-                        f"bloom_filter_columns[{cname!r}]: no ORC bloom hash "
-                        f"for type {ctyp} (string/binary/int/date/float only)"
-                    )
-                self.bloom_ids[cid] = hkind
+        by_name = {f.name: (cid, f.type) for f, cid in zip(schema, self.types[0].subtypes)}
+        for cname in bloom_filter_columns or ():
+            cid, ctyp = by_name[cname]
+            hkind = proto.BLOOM_HASH_KINDS.get(self.types[cid].kind)
+            if hkind is None:
+                raise TypeError(
+                    f"bloom_filter_columns[{cname!r}]: no ORC bloom hash "
+                    f"for type {ctyp} (string/binary/int/date/float only)"
+                )
+            self.bloom_ids[cid] = hkind
 
         self.stripe_infos: list[bytes] = []
         self.stripe_stats: list[list[dict]] = []  # per stripe: per ORC column id
@@ -680,7 +653,7 @@ class OrcWriter:
         # maps ORC ids -> (array, type, group starts in the column's own
         # row space — list children translate row groups to value ranges)
         col_arrays: dict[int, tuple[pa.Array, pa.DataType, list[int]]] = {}
-        _assign_arrays(self.schema, table, col_arrays, row_group_starts)
+        _assign_arrays(self.types, table, col_arrays, row_group_starts)
         data_bytes: list[bytes] = []
         data_meta: list[tuple[int, int, int]] = []  # (column, kind, length)
         encodings: list[tuple[int, int]] = [(proto.E_DIRECT, 0)]  # root struct
@@ -817,8 +790,8 @@ class OrcWriter:
         footer = _field_varint(1, 3) + _field_varint(2, content_length)
         for si in self.stripe_infos:
             footer += _field_bytes(3, si)
-        for tb in self.types:
-            footer += _field_bytes(4, tb)
+        for t in self.types:
+            footer += _field_bytes(4, _type_entry(t))
         footer += _field_varint(6, self.n_rows)
         # file-level ColumnStatistics: per-column merge across stripes
         if self.stripe_stats:
@@ -861,7 +834,7 @@ def write_orc(
     ``string_kinds``: {column: ("char"|"varchar", max_len)} footer-type
     overrides for string columns — preserves CHAR/VARCHAR declarations
     (with maximumLength) across a read-modify-write of a foreign file
-    instead of silently widening to STRING (see _reorder_root_first).
+    instead of silently widening to STRING (see _type_tree).
     Checked over the whole table before any byte reaches ``path``.
 
     ``compression``: none|snappy|zlib|lzo|lz4|zstd — applied per-stream (and
@@ -899,33 +872,6 @@ def write_orc(
     writer.close()
 
 
-def _type_width(typ: pa.DataType) -> int:
-    """Number of ORC type-tree ids this Arrow type occupies (pre-order)."""
-    if pa.types.is_list(typ):
-        return 1 + _type_width(typ.value_type)
-    if pa.types.is_map(typ):
-        return 1 + _type_width(typ.key_type) + _type_width(typ.item_type)
-    if pa.types.is_struct(typ):
-        return 1 + sum(_type_width(f.type) for f in typ)
-    if pa.types.is_union(typ):
-        return 1 + sum(_type_width(typ.field(i).type) for i in range(typ.num_fields))
-    return 1
-
-
-_BLOOM_HASH_KINDS = {
-    pa.string(): "bytes",
-    pa.binary(): "bytes",
-    pa.large_string(): "bytes",
-    pa.int8(): "int",
-    pa.int16(): "int",
-    pa.int32(): "int",
-    pa.int64(): "int",
-    pa.date32(): "int",
-    pa.float32(): "float",
-    pa.float64(): "float",
-}
-
-
 def _bloom_group_hashes(arr, typ: pa.DataType, lo: int, hi: int, hkind: str) -> np.ndarray:
     """uint64 bloom hashes of one row group's NON-NULL values, hashed
     per the ORC spec (Murmur3-64 of utf8 bytes / Wang mix of int64)."""
@@ -951,112 +897,22 @@ def _bloom_group_hashes(arr, typ: pa.DataType, lo: int, hi: int, hkind: str) -> 
     return wang_hash64(x.view(np.uint64))
 
 
-def _reorder_root_first(
-    schema: pa.Schema, string_kinds: dict[str, tuple[str, int]] | None = None
-) -> list[bytes]:
-    """Serialize the type tree with proper pre-order ORC ids (root=0).
-
-    ``string_kinds``: {top-level column name: ("char"|"varchar",
-    max_len)} — Arrow has no char/varchar types, so a foreign CHAR file
-    read through Arrow and rewritten would silently widen to STRING;
-    this propagates the declared kind + maximumLength (ORC Type field 4)
-    into the footer while the streams stay the STRING layout (identical
-    per the spec)."""
-    sub_ids = []
-    next_id = 1
-    for f in schema:
-        sub_ids.append(next_id)
-        next_id += _type_width(f.type)
-    root = _field_varint(1, proto.STRUCT) + _packed_varints(2, sub_ids)
-    for f in schema:
-        root += _field_bytes(3, f.name.encode())
-    ordered: list[bytes] = [root]
-    _CHAR_KINDS = {"char": proto.CHAR, "varchar": proto.VARCHAR}
-    overrides = {
-        sid: string_kinds[f.name]
-        for f, sid in zip(schema, sub_ids)
-        if string_kinds and f.name in string_kinds and f.type == pa.string()
-    }
-
-    def add2(typ: pa.DataType, my_id: int) -> None:
-        if my_id in overrides:
-            kind, max_len = overrides[my_id]
-            ordered.append(
-                _field_varint(1, _CHAR_KINDS[kind.lower()]) + _field_varint(4, int(max_len))
-            )
-        elif typ in _PRIM_KINDS:
-            ordered.append(_field_varint(1, _PRIM_KINDS[typ]))
-        elif pa.types.is_timestamp(typ):
-            # tz-aware Arrow timestamps -> TIMESTAMP_INSTANT (kind 18),
-            # naive -> TIMESTAMP; the stream encoding is identical (UTC
-            # seconds-from-2015 + nanos), only the declared kind differs
-            ordered.append(
-                _field_varint(1, proto.TIMESTAMP_INSTANT if typ.tz else proto.TIMESTAMP)
-            )
-        elif pa.types.is_decimal(typ):
-            ordered.append(
-                _field_varint(1, proto.DECIMAL)
-                + _field_varint(5, typ.precision)
-                + _field_varint(6, typ.scale)
-            )
-        elif pa.types.is_list(typ):
-            ordered.append(_field_varint(1, proto.LIST) + _packed_varints(2, [my_id + 1]))
-            add2(typ.value_type, my_id + 1)
-        elif pa.types.is_map(typ):
-            kid = my_id + 1
-            vid = kid + _type_width(typ.key_type)
-            ordered.append(_field_varint(1, proto.MAP) + _packed_varints(2, [kid, vid]))
-            add2(typ.key_type, kid)
-            add2(typ.item_type, vid)
-        elif pa.types.is_struct(typ):
-            cids = []
-            nid = my_id + 1
-            for f in typ:
-                cids.append(nid)
-                nid += _type_width(f.type)
-            ent = _field_varint(1, proto.STRUCT) + _packed_varints(2, cids)
-            for f in typ:
-                ent += _field_bytes(3, f.name.encode())
-            ordered.append(ent)
-            for f, cid in zip(typ, cids):
-                add2(f.type, cid)
-        elif pa.types.is_union(typ):
-            cids = []
-            nid = my_id + 1
-            fields = [typ.field(i) for i in range(typ.num_fields)]
-            for f in fields:
-                cids.append(nid)
-                nid += _type_width(f.type)
-            ordered.append(_field_varint(1, proto.UNION) + _packed_varints(2, cids))
-            for f, cid in zip(fields, cids):
-                add2(f.type, cid)
-        else:
-            raise NotImplementedError(str(typ))
-
-    for f, sid in zip(schema, sub_ids):
-        add2(f.type, sid)
-    return ordered
-
-
-def _assign_arrays(schema: pa.Schema, tbl: pa.Table, out: dict, group_starts: list[int]) -> None:
-    """Map ORC column ids (pre-order, root=0) -> (array, type, group
+def _assign_arrays(types: list[proto.OrcType], tbl: pa.Table, out: dict, group_starts: list[int]) -> None:
+    """Map ORC column ids (``_type_tree``'s) -> (array, type, group
     starts). Root columns inherit the stripe's row-group starts; a list
     child's groups are the flattened value offsets at those rows (null
     lists contribute 0), so its RowIndexEntry positions seek to the
     first child value of each row group."""
-    next_id = 1
 
-    def walk(arr: pa.Array, typ: pa.DataType, gstarts: list[int]) -> None:
-        nonlocal next_id
-        my_id = next_id
-        next_id += 1
+    def walk(my_id: int, arr: pa.Array, typ: pa.DataType, gstarts: list[int]) -> None:
         out[my_id] = (arr, typ, gstarts)
+        sub = types[my_id].subtypes
         a = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
         if pa.types.is_list(typ):
             lens = pc.list_value_length(a).fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
             cum = np.zeros(len(lens) + 1, dtype=np.int64)
             np.cumsum(lens, out=cum[1:])
-            walk(pc.list_flatten(a), typ.value_type, [int(cum[g]) for g in gstarts])
+            walk(sub[0], pc.list_flatten(a), typ.value_type, [int(cum[g]) for g in gstarts])
         elif pa.types.is_map(typ):
             # ORC MAP: children carry entries of NON-NULL rows only
             offs = np.frombuffer(a.buffers()[1], dtype=np.int32, count=len(a) + 1, offset=a.offset * 4).astype(np.int64)
@@ -1070,8 +926,8 @@ def _assign_arrays(schema: pa.Schema, tbl: pa.Table, out: dict, group_starts: li
             keys = a.keys.take(pa.array(take, type=pa.int64()))
             items = a.items.take(pa.array(take, type=pa.int64()))
             child_starts = [int(cum[g]) for g in gstarts]
-            walk(keys, typ.key_type, child_starts)
-            walk(items, typ.item_type, child_starts)
+            walk(sub[0], keys, typ.key_type, child_starts)
+            walk(sub[1], items, typ.item_type, child_starts)
         elif pa.types.is_struct(typ):
             valid = pc.is_valid(a).to_numpy(zero_copy_only=False)
             cumv = np.zeros(len(a) + 1, dtype=np.int64)
@@ -1081,7 +937,7 @@ def _assign_arrays(schema: pa.Schema, tbl: pa.Table, out: dict, group_starts: li
             for i, f in enumerate(typ):
                 # children carry values of NON-NULL struct rows only
                 ch = a.field(i) if not a.null_count else a.field(i).take(sel)
-                walk(ch, f.type, child_starts)
+                walk(sub[i], ch, f.type, child_starts)
         elif pa.types.is_union(typ):
             # ORC UNION: child i holds rows tagged i, densely, in ROW order
             tags = np.frombuffer(a.buffers()[1], dtype=np.int8, count=len(a), offset=a.offset)
@@ -1091,8 +947,8 @@ def _assign_arrays(schema: pa.Schema, tbl: pa.Table, out: dict, group_starts: li
                 cumt = np.zeros(len(a) + 1, dtype=np.int64)
                 np.cumsum(m, out=cumt[1:])
                 ch = a.field(i).take(pa.array(offsets[m], type=pa.int64()))
-                walk(ch, typ.field(i).type, [int(cumt[g]) for g in gstarts])
+                walk(sub[i], ch, typ.field(i).type, [int(cumt[g]) for g in gstarts])
 
-    for i, f in enumerate(schema):
+    for i, (f, cid) in enumerate(zip(tbl.schema, types[0].subtypes)):
         col = tbl.column(i)
-        walk(col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col, f.type, list(group_starts))
+        walk(cid, col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col, f.type, list(group_starts))

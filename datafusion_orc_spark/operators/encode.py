@@ -360,16 +360,26 @@ def _task_splits(batches: Iterator[pa.RecordBatch], splits: list) -> Iterator[tu
             yield splits[i]
 
 
-def _split_frame(spark, path_or_glob, stripe_rows: int, target: int | None) -> tuple[DataFrame, list, int]:
+def _split_frame(
+    spark, path_or_glob, stripe_rows: int, target: int | None, columns: list[str] | None = None
+) -> tuple[DataFrame, list, int]:
     """The task frame of a parquet scan, its ``(path, rg, row_start,
     row_end)`` splits, planned from footers alone (``target=None``: one
-    per non-empty row group), and its ``min(target, splits)`` partitions."""
+    per non-empty row group), and its ``min(target, splits)`` partitions.
+    Raises ValueError naming any of ``columns`` missing from a file's
+    schema: a parquet scan would drop such a name without an error."""
     rg_sizes: list[tuple[str, int, int]] = []
+    unknown: set[str] = set()
     for p in _list_inputs(path_or_glob, ".parquet"):
-        md = _open_parquet(p).metadata
+        pf = _open_parquet(p)
+        if columns is not None:
+            unknown |= set(columns) - set(pf.schema_arrow.names)
+        md = pf.metadata
         for rg in range(md.num_row_groups):
             if md.row_group(rg).num_rows:
                 rg_sizes.append((p, rg, md.row_group(rg).num_rows))
+    if unknown:
+        raise ValueError(f"encode: unknown columns {sorted(unknown)}")
     target = target or len(rg_sizes)
     splits = _plan_row_splits(rg_sizes, target, stripe_rows)
     n_parts = max(1, min(target, len(splits)))
@@ -580,7 +590,7 @@ def encode_files(
     re-run/benchmark output directories.
     """
     job_token = _job_token(job_token)
-    sdf, splits, n_parts = _split_frame(spark, path_or_glob, stripe_rows, parallelism)
+    sdf, splits, n_parts = _split_frame(spark, path_or_glob, stripe_rows, parallelism, columns)
     if recycle_output and output_dir is not None:
         # in-place overwrite has no tmp+rename fence, so two CONCURRENT
         # attempts of one task (speculative execution) could interleave

@@ -226,12 +226,16 @@ def own_bloom_file(tmp_path_factory):
             "doc_id": pa.array([f"doc-{2 * i:07d}" for i in perm]),  # evens only
             "num": pa.array((perm * 2).astype(np.int64)),
             "payload": pa.array(rng.integers(0, 100, size=n)),
+            # even day numbers only, every 9th row null
+            "day": pa.array(
+                [None if i % 9 == 0 else int(2 * p) for i, p in enumerate(perm)], type=pa.date32()
+            ),
         }
     )
     path = str(tmp_path_factory.mktemp("ownbloom") / "own.orc")
     write_orc(
         tbl, path, stripe_rows=20000, row_index_stride=5000,
-        compression="snappy", bloom_filter_columns=["doc_id", "num"],
+        compression="snappy", bloom_filter_columns=["doc_id", "num", "day"],
     )
     return path, tbl
 
@@ -267,6 +271,25 @@ def test_bloom_point_prune_int(own_bloom_file):
     assert 0 < got.num_rows < tbl.num_rows
 
 
+def test_bloom_point_prune_date(own_bloom_file):
+    """A date32 bloom hashes the day number (nulls skipped): an absent
+    day drops its groups, a present one keeps its row."""
+    import datetime
+
+    from datafusion_orc_spark.format.orc_reader import OrcReader
+
+    path, tbl = own_bloom_file
+    r = OrcReader(path)
+    got = r.read(prune={"day": (12345, 12345)})  # odd: never written
+    assert got.num_rows <= 10000
+    assert datetime.date(1970, 1, 1) + datetime.timedelta(days=12345) not in got["day"].to_pylist()
+    v = tbl["day"][1].as_py()
+    days = (v - datetime.date(1970, 1, 1)).days
+    got = r.read(prune={"day": (days, days)})
+    assert v in got["day"].to_pylist()
+    assert 0 < got.num_rows < tbl.num_rows
+
+
 def test_bloom_point_prune_string(own_bloom_file):
     from datafusion_orc_spark.format.orc_reader import OrcReader
 
@@ -296,8 +319,8 @@ def test_bloom_file_readable_by_orc_cpp(own_bloom_file):
     path, tbl = own_bloom_file
     back = po.ORCFile(path).read()
     assert back.num_rows == tbl.num_rows
-    assert back["num"].combine_chunks().equals(tbl["num"].combine_chunks())
-    assert back["doc_id"].combine_chunks().equals(tbl["doc_id"].combine_chunks())
+    for name in ("num", "doc_id", "day"):
+        assert back[name].combine_chunks().equals(tbl[name].combine_chunks()), name
 
 
 def test_bloom_unsupported_column_type_raises(tmp_path):

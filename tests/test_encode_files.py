@@ -45,6 +45,17 @@ def test_encode_files_inline_blobs_match_table_encode(spark):
         assert am[c][1] == bm[c][1], c  # same row counts per column
 
 
+@pytest.mark.parametrize("columns", [["nope"], ["l_orderkey", "nope"]])
+def test_encode_files_unknown_columns_raise(spark, columns):
+    """A parquet scan drops an unknown column name without an error, so
+    encode_files checks ``columns`` against the input schemas on the
+    driver and names the unknown ones."""
+    with pytest.raises(ValueError, match=r"unknown columns \['nope'\]"):
+        encode_files(spark, SRC, stripe_rows=2000, columns=columns)
+    stats = encode_files(spark, SRC, stripe_rows=2000, columns=["l_orderkey"], discard_output=True)
+    assert {r["column"] for r in stats.select("column").distinct().collect()} == {"l_orderkey"}
+
+
 def test_encode_files_plan_has_no_exchange(spark):
     from tests.test_plan_shapes import _plan, assert_range_task_frame
 

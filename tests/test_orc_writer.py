@@ -27,6 +27,10 @@ def _f1_table(n=5000, seed=42):
         "nullable": pa.array([None if i % 7 == 0 else int(i) for i in range(n)], type=pa.int64()),
         "tiny": pa.array((rng.integers(-128, 128, n)).astype(np.int8)),
         "blob": pa.array([bytes([i % 256]) * (i % 5) for i in range(n)], type=pa.binary()),
+        "day": pa.array(
+            [None if i % 6 == 0 else int(d) for i, d in enumerate(rng.integers(-3000, 20000, n))],
+            type=pa.date32(),
+        ),
     })
 
 
