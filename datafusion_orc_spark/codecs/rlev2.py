@@ -8,11 +8,22 @@ outcomes verified against ORC-Java-written streams in SURVEY.md §4.3
 (/root/reference) consumes these streams via orc-rust (Cargo.toml:41).
 
 Encoder strategy (the E9-adjacent run chooser, SURVEY.md §4.3 heuristic):
-  1. segment the input into equal-value runs (vectorized);
-  2. runs of 3..10 -> SHORT_REPEAT; runs >10 -> DELTA with fixed delta 0;
-  3. everything else forms literal segments, chunked to <=512 values:
-     monotonic -> DELTA; p90-width << max-width with <=31 outliers ->
-     PATCHED_BASE; else DIRECT.
+  1. segment the input into equal-value runs; runs of 32+ values are
+     repeats, and so are runs of 3..31 when those cover >=25% of the
+     values;
+  2. repeats of 3..10 -> SHORT_REPEAT; longer ones -> fixed-delta-0 DELTA
+     runs of <=512 values (never leaving a 1-value run);
+  3. the gaps between repeats are literal regions, each cut into
+     512-value chunks from its start: a region of <=64 values is one
+     DIRECT run; otherwise monotone -> DELTA, p90 width below the max
+     width with 1..31 outliers (a 1-in-4 sample gate, then an exact
+     check that must beat DIRECT) -> PATCHED_BASE, else DIRECT.
+Every step is a vector pass over all runs of a kind at once, never a
+loop over regions or chunks: each kind builds the bytes of all its runs
+(headers, varints and one bit-packing pass over the runs of mixed
+widths) as keyed pieces, and one sort by stream position and one gather
+assemble the stream. So the Python work per call is fixed, whatever the
+number of regions.
 
 Decode returns int64 in two passes. Pass 1 walks the run headers in one
 scalar loop and records each run's kind, value count and payload
@@ -30,6 +41,8 @@ from __future__ import annotations
 import numpy as np
 
 from datafusion_orc_spark.codecs.bitpack import (
+    CLOSEST_TABLE,
+    CODE_TABLE,
     WIDTH_TABLE,
     bit_pack,
     bit_unpack_runs,
@@ -37,15 +50,12 @@ from datafusion_orc_spark.codecs.bitpack import (
     byte_windows,
     closest_fixed_width,
     decode_width,
-    width_code,
 )
 from datafusion_orc_spark.codecs.varint import (
     varint_decode_scalar,
     varint_encode,
-    varint_encode_scalar,
     zigzag_decode,
     zigzag_encode,
-    zigzag_scalar,
 )
 
 _MAX_RUN = 512
@@ -71,422 +81,332 @@ _DELTA = 3
 _KIND_NAMES = ("SHORT_REPEAT", "DIRECT", "PATCHED_BASE", "DELTA")
 _U64 = 1 << 64
 _BYTE_WIDTHS = {8: np.uint8, 16: ">u2", 32: ">u4", 64: ">u8"}
-
-
-def _msb_bytes(value: int, nbytes: int) -> bytes:
-    return int(value).to_bytes(nbytes, "big")
-
-
-def _encode_short_repeat(out: bytearray, value: int, count: int, signed: bool) -> None:
-    # unsigned streams may carry int64 bit patterns of negative values
-    # (ORC timestamp SECONDARY with signed nanos): emit the uint64 pattern
-    u = zigzag_scalar(value) if signed else (int(value) & 0xFFFFFFFFFFFFFFFF)
-    w = max(1, (u.bit_length() + 7) // 8)
-    out.append((_SHORT_REPEAT << 6) | ((w - 1) << 3) | (count - 3))
-    out.extend(_msb_bytes(u, w))
-
-
-def _encode_direct(out: bytearray, vals: np.ndarray, signed: bool, u: np.ndarray | None = None) -> None:
-    if u is None:
-        if signed:
-            u = zigzag_encode(vals)
-        else:
-            u = vals.view(np.uint32 if vals.dtype == np.int32 else np.uint64)
-    w = closest_fixed_width(max(1, int(u.max()).bit_length()))
-    n = len(vals)
-    out.append((_DIRECT << 6) | (width_code(w) << 1) | ((n - 1) >> 8))
-    out.append((n - 1) & 0xFF)
-    out.extend(bit_pack(u, w))
-
-
-def _try_encode_patched_base(
-    out: bytearray, vals: np.ndarray, signed: bool, wd: int | None = None
-) -> bool:
-    """PATCHED_BASE (no zigzag; min-subtraction makes values non-negative).
-
-    Returns False when the shape doesn't profit (caller falls back to
-    DIRECT). Mirrors ORC-Java's p90 width heuristic (SURVEY.md §4.3).
-    ``wd``: precomputed DIRECT width of the chunk (skips the zigzag +
-    width re-scan for the size comparison).
-    """
-    n = len(vals)
-    mn = int(vals.min())
-    if mn == -(1 << 63):  # |base| unrepresentable with sign-bit layout
-        return False
-    u_dt = np.uint32 if vals.dtype == np.int32 else np.uint64
-    with np.errstate(over="ignore"):
-        reduced = (vals - vals.dtype.type(mn)).view(u_dt)
-    widths = bit_widths(reduced)
-    wmax = closest_fixed_width(int(widths.max()))
-    # p90 width = smallest w covering >=90% of values (bincount, no interpolation)
-    cum = np.cumsum(np.bincount(widths, minlength=65))
-    w90 = closest_fixed_width(int(np.argmax(cum >= -(-9 * n // 10))))
-    if w90 >= wmax:
-        return False
-    patch_idx = np.flatnonzero(widths > w90)
-    if not (0 < len(patch_idx) <= _MAX_PATCHES):
-        return False
-    gaps = np.diff(patch_idx, prepend=0)
-    gaps[0] = patch_idx[0]
-    if int(gaps.max()) > 255:
-        return False  # would need dummy patches; DIRECT instead
-    patch_vals = reduced[patch_idx] >> np.uint64(w90)
-    pw = closest_fixed_width(int(bit_widths(patch_vals).max()))
-    pgw = max(1, int(bit_widths(gaps.astype(np.uint64)).max()))
-    if pgw + pw > 64:
-        return False
-    combined = closest_fixed_width(pgw + pw)
-    mag = -mn if mn < 0 else mn
-    bw = max(1, (mag.bit_length() + 1 + 7) // 8)
-    if bw > 8:
-        return False
-    # size check vs DIRECT
-    pb_size = 4 + bw + (n * w90 + 7) // 8 + (len(patch_idx) * combined + 7) // 8
-    if wd is None:
-        u_direct = zigzag_encode(vals) if signed else vals.astype(np.uint64)
-        wd = closest_fixed_width(int(bit_widths(u_direct).max()))
-    if pb_size >= 2 + (n * wd + 7) // 8:
-        return False
-
-    data = reduced & ((np.uint64(1) << np.uint64(w90)) - np.uint64(1)) if w90 < 64 else reduced
-    entries = (gaps.astype(np.uint64) << np.uint64(pw)) | patch_vals
-    out.append((_PATCHED_BASE << 6) | (width_code(w90) << 1) | ((n - 1) >> 8))
-    out.append((n - 1) & 0xFF)
-    out.append(((bw - 1) << 5) | width_code(pw))
-    out.append(((pgw - 1) << 5) | len(patch_idx))
-    base_field = mag | (1 << (bw * 8 - 1)) if mn < 0 else mag
-    out.extend(_msb_bytes(base_field, bw))
-    out.extend(bit_pack(data, w90))
-    out.extend(bit_pack(entries, combined))
-    return True
-
-
-def _group_bitpack(
-    vals: np.ndarray, counts: np.ndarray, width: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Pack ``counts[i]`` consecutive values per chunk at ``width`` bits,
-    each chunk zero-padded to a byte boundary — byte-identical to
-    per-chunk :func:`bit_pack` but one vectorized pass for the whole
-    group. Returns (bytes array chunk-major, per-chunk byte counts)."""
-    bcount = (counts * width + 7) // 8
-    tot = int(counts.sum())
-    if width % 8 == 0 and width in (8, 16, 32, 64):
-        be = {8: np.uint8, 16: ">u2", 32: ">u4", 64: ">u8"}[width]
-        return vals.astype(be).view(np.uint8), bcount
-    wb = (width + 7) // 8
-    isz = vals.dtype.itemsize
-    bemat = np.ascontiguousarray(vals.view(np.uint8).reshape(tot, isz)[:, wb - 1 :: -1])
-    flat = np.ascontiguousarray(
-        np.unpackbits(bemat.reshape(-1)).reshape(tot, wb * 8)[:, wb * 8 - width :]
-    ).reshape(-1)
-    # values are chunk-major, so each chunk's bits are a CONTIGUOUS span
-    # of the flat matrix; per-chunk packbits zero-pads the final partial
-    # byte exactly like per-chunk bit_pack. (A bit-level fancy-index
-    # scatter into padded blocks was ~100x slower at group scale —
-    # latency-bound, plus GB-sized index temporaries.)
-    mbits = counts * width
-    if not (mbits % 8).any():
-        return np.packbits(flat), bcount  # no per-chunk pad: one call
-    bit_off = np.cumsum(mbits) - mbits
-    parts = [
-        np.packbits(flat[o : o + c])
-        for o, c in zip(bit_off.tolist(), mbits.tolist())
-    ]
-    return np.concatenate(parts), bcount
+_UNSIGNED = {np.int32: np.uint32, np.int64: np.uint64}
+_I64_MIN = -(1 << 63)
+# stream assembly joins byte slices when pieces average at least this many
+# bytes (a slice costs about as much as gathering 64 bytes one by one)
+_MIN_SLICE_BYTES = 64
 
 
 def _gather(base: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """Index array concatenating [base[i], base[i]+counts[i]) spans."""
-    tot = int(counts.sum())
-    return np.repeat(base, counts) + (
-        np.arange(tot) - np.repeat(np.cumsum(counts) - counts, counts)
-    )
+    """Index array concatenating the spans [base[i], base[i] + counts[i])."""
+    ends = counts.cumsum()
+    return (base - (ends - counts)).repeat(counts) + np.arange(int(ends[-1]) if len(ends) else 0)
 
 
-def _plan_literals(
-    v: np.ndarray, u: np.ndarray, d: np.ndarray, regions: np.ndarray, signed: bool
-) -> dict:
-    """Chunk + mode planning for ALL literal regions of one stream in ONE
-    vectorized pass.
-
-    r4 measured the per-region planning setup (~20 vector ops per
-    `_encode_literal_segment` call) as the dominant writer cost on
-    run-fragmented token streams (~1k regions/stripe): python-level work
-    now scales with the number of DIRECT width-runs plus DELTA/PB
-    chunks, never with the number of regions. Byte-for-byte identical
-    output to the per-region planner: chunking restarts at each region
-    boundary, regions of <=64 values stay single DIRECT runs, and the
-    PATCHED_BASE advisory sample keeps its region-relative 1-in-4
-    phase.
-
-    ``regions`` is an (R, 2) array of [lo, hi) literal spans in stream
-    order (gaps are the repeat runs emitted by the caller). Returns
-    global per-chunk arrays plus the DIRECT-batch run grouping; chunk
-    stats come from ``np.*.reduceat`` over a segment list that
-    interleaves chunk starts with "garbage" segments covering the
-    repeat-run gaps (discarded after the reduction).
-    """
-    from datafusion_orc_spark.codecs.bitpack import CLOSEST_TABLE, CODE_TABLE
-
-    n = len(v)
-    lo, hi = regions[:, 0], regions[:, 1]
-    rlen = hi - lo
-    nch = -(-rlen // _MAX_RUN)
-    fc = np.zeros(len(lo) + 1, dtype=np.int64)
-    np.cumsum(nch, out=fc[1:])
-    K = int(fc[-1])
-    rid = np.repeat(np.arange(len(lo)), nch)
-    cs = lo[rid] + (np.arange(K) - fc[rid]) * _MAX_RUN
-    ce = np.minimum(cs + _MAX_RUN, hi[rid])
-    sizes = ce - cs
-    tiny = (rlen <= 64)[rid]  # <=64-value regions: one plain DIRECT run
-
-    # reduceat segment list = chunk starts + garbage starts at region
-    # ends (so the last chunk of a region never absorbs repeat values)
-    g_starts = hi[hi < n]
-    seg = np.concatenate([cs, g_starts])
-    is_chunk = np.zeros(len(seg), dtype=bool)
-    is_chunk[:K] = True
-    order = np.argsort(seg, kind="stable")
-    seg = seg[order]
-    is_chunk = is_chunk[order]
-
-    cmin = np.minimum.reduceat(v, seg)[is_chunk]
-    cmax = np.maximum.reduceat(v, seg)[is_chunk]
-    if signed:
-        # zigzag is monotone up for v>=0 and monotone up toward -inf for
-        # v<0, so the chunk's max zigzag value is attained at cmin or
-        # cmax — no reduceat over the 8M-value zigzag stream needed
-        c0 = cmin.astype(np.int64)
-        c1 = cmax.astype(np.int64)
-        with np.errstate(over="ignore"):
-            umax = np.maximum(
-                ((c0 << 1) ^ (c0 >> 63)).view(np.uint64),
-                ((c1 << 1) ^ (c1 >> 63)).view(np.uint64),
-            )
-    else:
-        umax = np.maximum.reduceat(u, seg)[is_chunk]
-    w_dir = bit_widths(umax)
-    with np.errstate(over="ignore"):
-        span = cmax.astype(np.int64) - cmin.astype(np.int64)
-    range_ok = (span >= 0) & (span < (1 << 62))
-
-    # delta eligibility: monotonic within the chunk, direction matching
-    # the first delta's sign (the decoder applies every packed magnitude
-    # with the first delta's sign, so [2, 2, 1] must not pick DELTA). Chunk-boundary and
-    # region-end deltas are neutralized before the segmented min.
-    if n > 1 and K:
-        nonneg = d >= 0
-        nonpos = d <= 0
-        cross = ce - 1
-        cross = cross[cross < n - 1]
-        nonneg[cross] = True
-        nonpos[cross] = True
-        red = np.minimum(seg, n - 2)
-        inc = np.minimum.reduceat(nonneg, red)[is_chunk]
-        dec = np.minimum.reduceat(nonpos, red)[is_chunk]
-        d0 = d[np.minimum(cs, n - 2)]
-        delta_ok = (sizes >= 3) & range_ok & ~tiny & (inc | (dec & (d0 < 0)))
-    else:
-        delta_ok = np.zeros(K, dtype=bool)
-
-    # PATCHED_BASE eligibility — advisory gate on a 1-in-4 SAMPLE of
-    # each chunk (p90 width via per-chunk width histograms); the
-    # per-chunk encoder re-validates exactly and falls back to DIRECT
-    # when the gate was optimistic, so sampling never affects
-    # correctness. Sample offsets are region-relative (same phase as the
-    # old per-region planner).
-    pb_ok = np.zeros(K, dtype=bool)
-    eligible = (~delta_ok) & (sizes >= 16) & (cmin != -(1 << 63)) & range_ok & ~tiny
-    if eligible.any():
-        stride = 4
-        ns_reg = -(-rlen // stride)
-        fs = np.zeros(len(lo) + 1, dtype=np.int64)
-        np.cumsum(ns_reg, out=fs[1:])
-        S = int(fs[-1])
-        srid = np.repeat(np.arange(len(lo)), ns_reg)
-        soff = (np.arange(S) - fs[srid]) * stride
-        spos = lo[srid] + soff
-        schunk = fc[srid] + soff // _MAX_RUN
-        u_dt = np.uint32 if v.dtype == np.int32 else np.uint64
-        with np.errstate(over="ignore"):
-            reduced_s = (v[spos] - cmin[schunk]).view(u_dt)
-        rw = bit_widths(reduced_s)
-        hist = np.bincount(schunk * 65 + rw, minlength=K * 65).reshape(K, 65)
-        cum = np.cumsum(hist, axis=1)
-        n_s = np.bincount(schunk, minlength=K)
-        thresh = np.maximum(-(-9 * n_s // 10), 1)  # ceil(0.9 * sample size)
-        w90 = CLOSEST_TABLE[np.argmax(cum >= thresh[:, None], axis=1)]
-        wmax_red = CLOSEST_TABLE[np.max(np.where(hist > 0, np.arange(65)[None, :], 0), axis=1)]
-        covered = np.take_along_axis(cum, np.minimum(w90, 64)[:, None].astype(np.int64), 1)[:, 0]
-        patches_scaled = (n_s - covered) * stride  # extrapolate sample->chunk
-        pb_ok = eligible & (w90 < wmax_red) & (patches_scaled >= 1) & (patches_scaled <= _MAX_PATCHES * 2)
-
-    # DIRECT-batch run grouping: maximal runs of consecutive full DIRECT
-    # chunks with equal fixed width WITHIN one region (a region change
-    # always breaks the run — repeat bytes interleave between regions)
-    wfix = CLOSEST_TABLE[np.maximum(w_dir, 1)]
-    special = delta_ok | pb_ok
-    batch = (~special) & (sizes == _MAX_RUN)
-    grp = np.where(batch, wfix.astype(np.int64), -1)
-    change = np.ones(K, dtype=bool)
-    if K > 1:
-        change[1:] = (grp[1:] != grp[:-1]) | (rid[1:] != rid[:-1])
-    run_starts = np.flatnonzero(change)
-
-    # ---- pre-encoded chunk blob (DIRECT tails + tiny regions + DELTA) --
-    #
-    # Every non-batched DIRECT chunk and every DELTA chunk is encoded
-    # here in grouped vectorized passes (values gathered once per width
-    # group, one packbits per group, headers/varints scattered into a
-    # single blob); emission becomes one slice per chunk. PATCHED_BASE
-    # chunks stay per-chunk (their exact re-validation can fall back to
-    # DIRECT). All bytes are identical to the per-chunk encoders.
-    dpos = np.full(K, -1, dtype=np.int64)
-    pieces: list[tuple[np.ndarray, np.ndarray]] = []  # (chunk ids, per-chunk bytes)
-
-    dmask = (~special) & ~batch
-    if dmask.any():
-        dsel = np.flatnonzero(dmask)
-        m = sizes[dsel]
-        w = wfix[dsel].astype(np.int64)
-        nb = 2 + (m * w + 7) // 8
-        off = np.zeros(len(dsel) + 1, dtype=np.int64)
-        np.cumsum(nb, out=off[1:])
-        blob = np.zeros(int(off[-1]), dtype=np.uint8)
-        blob[off[:-1]] = (_DIRECT << 6) | (CODE_TABLE[w] << 1) | ((m - 1) >> 8)
-        blob[off[:-1] + 1] = (m - 1) & 0xFF
-        for wv in np.unique(w):
-            wv = int(wv)
-            g = w == wv
-            msz = sizes[dsel[g]]
-            gbytes, bcount = _group_bitpack(u[_gather(cs[dsel[g]], msz)], msz, wv)
-            blob[_gather(off[:-1][g] + 2, bcount)] = gbytes
-        pieces.append((dsel, np.diff(off)))
-        d_blob_direct = blob
-    else:
-        d_blob_direct = None
-
-    d_blob_delta = None
-    if delta_ok.any():
-        dl = np.flatnonzero(delta_ok)
-        msz = sizes[dl]
-        dm = msz - 1  # deltas per chunk (>= 2: delta needs sizes >= 3)
-        dd = d[_gather(cs[dl], dm)]  # all chunk deltas, chunk-major
-        loc = np.cumsum(dm) - dm
-        fixedc = np.maximum.reduceat(dd, loc) == np.minimum.reduceat(dd, loc)
-        base = v[cs[dl]].astype(np.int64)
-        d0v = dd[loc].astype(np.int64)
-        ubase = zigzag_encode(base) if signed else base.view(np.uint64)
-        ud0 = zigzag_encode(d0v)
-        nb_base = (bit_widths(ubase) + 6) // 7  # varint byte counts
-        nb_d0 = (bit_widths(ud0) + 6) // 7
-        # packed-mag widths (deltas[1:] magnitudes; width 1 is reserved
-        # for "fixed", so it bumps to 2: delta encoding cannot express it)
-        keep = np.ones(len(dd), dtype=bool)
-        keep[loc] = False
-        mags_all = np.abs(dd[keep]).astype(np.uint64)
-        mcnt = dm - 1
-        mloc = np.cumsum(mcnt) - mcnt
-        wch = CLOSEST_TABLE[bit_widths(np.maximum.reduceat(mags_all, mloc))].astype(np.int64)
-        wch[wch == 1] = 2
-        pack_bytes = np.where(fixedc, 0, (mcnt * wch + 7) // 8)
-        nb = 2 + nb_base + nb_d0 + pack_bytes
-        off = np.zeros(len(dl) + 1, dtype=np.int64)
-        np.cumsum(nb, out=off[1:])
-        blob = np.zeros(int(off[-1]), dtype=np.uint8)
-        blob[off[:-1]] = (
-            (_DELTA << 6) | (np.where(fixedc, 0, CODE_TABLE[wch]) << 1) | ((msz - 1) >> 8)
-        )
-        blob[off[:-1] + 1] = (msz - 1) & 0xFF
-        blob[_gather(off[:-1] + 2, nb_base)] = np.frombuffer(varint_encode(ubase), np.uint8)
-        blob[_gather(off[:-1] + 2 + nb_base, nb_d0)] = np.frombuffer(varint_encode(ud0), np.uint8)
-        data_off = off[:-1] + 2 + nb_base + nb_d0
-        nf = ~fixedc
-        for wv in np.unique(wch[nf]):
-            g = nf & (wch == wv)
-            gbytes, bcount = _group_bitpack(
-                mags_all[_gather(mloc[g], mcnt[g])], mcnt[g], int(wv)
-            )
-            blob[_gather(data_off[g], bcount)] = gbytes
-        pieces.append((dl, np.diff(off)))
-        d_blob_delta = blob
-
-    d_off: list[int] = []
-    dview: memoryview | None = None
-    if pieces:
-        all_ids = np.concatenate([p[0] for p in pieces])
-        all_nb = np.concatenate([p[1] for p in pieces])
-        blobs = [b for b in (d_blob_direct, d_blob_delta) if b is not None]
-        comb = np.concatenate(blobs) if len(blobs) > 1 else blobs[0]
-        st = np.zeros(len(all_nb) + 1, dtype=np.int64)
-        np.cumsum(all_nb, out=st[1:])
-        dpos[all_ids] = np.arange(len(all_ids))
-        d_off = st.tolist()
-        dview = memoryview(comb.tobytes())
-
-    return {
-        "cs": cs,
-        "ce": ce,
-        "pb_ok": pb_ok,
-        "wfix": wfix,
-        "run_starts": run_starts.tolist(),
-        "run_ends": np.append(run_starts[1:], K).tolist(),
-        "run_region": rid[run_starts].tolist(),
-        "run_grp": grp[run_starts].tolist(),
-        "dpos": dpos.tolist(),
-        "d_off": d_off,
-        "dview": dview,
-    }
+def _starts(counts: np.ndarray) -> np.ndarray:
+    """Where each of consecutive spans of ``counts`` starts."""
+    return counts.cumsum() - counts
 
 
-def _emit_region_runs(
-    out: bytearray,
-    v: np.ndarray,
-    u: np.ndarray,
-    plan: dict,
-    region: int,
-    rc: int,
-    signed: bool,
-) -> int:
-    """Emit every planned run of ``region`` (plan cursor ``rc`` ->
-    new cursor). Batched DIRECT runs pack their whole span in one
-    bit_pack and tile the 2-byte headers with one strided write;
-    DIRECT tail and DELTA chunks are slices of the planned blob;
-    PATCHED_BASE chunks encode individually (DIRECT when the exact
-    check rejects them)."""
-    run_starts = plan["run_starts"]
-    run_region = plan["run_region"]
-    cs, ce = plan["cs"], plan["ce"]
-    pb_ok = plan["pb_ok"]
-    dpos, d_off, dview = plan["dpos"], plan["d_off"], plan["dview"]
-    while rc < len(run_starts) and run_region[rc] == region:
-        a, b = run_starts[rc], plan["run_ends"][rc]
-        w = plan["run_grp"][rc]
-        if w >= 0:
-            nrun = b - a
-            packed = bit_pack(u[cs[a] : ce[b - 1]], w)
-            block = (_MAX_RUN * w) // 8
-            arr = np.empty((nrun, block + 2), dtype=np.uint8)
-            arr[:, 0] = (_DIRECT << 6) | (width_code(w) << 1) | ((_MAX_RUN - 1) >> 8)
-            arr[:, 1] = (_MAX_RUN - 1) & 0xFF
-            arr[:, 2:] = np.frombuffer(packed, dtype=np.uint8).reshape(nrun, block)
-            out += arr.tobytes()
+def _unsigned64(vals: np.ndarray, signed: bool) -> np.ndarray:
+    """The uint64 a run header carries for each value: zigzag when
+    signed, else the int64 bit pattern."""
+    sv = vals.astype(np.int64)
+    return ((sv << 1) ^ (sv >> 63)).view(np.uint64) if signed else sv.view(np.uint64)
+
+
+def _put_msb(blob: np.ndarray, at: np.ndarray, u: np.ndarray, nb: np.ndarray) -> None:
+    """Write the low ``nb[i]`` bytes of each uint64 ``u[i]``, most
+    significant first, into ``blob`` from byte ``at[i]``: one pass per
+    byte position, so at most 8."""
+    for k in range(int(nb.max())):
+        m = nb > k
+        blob[at[m] + k] = (u[m] >> (8 * (nb[m] - 1 - k)).astype(np.uint64)) & np.uint64(0xFF)
+
+
+def _segment_max(vals: np.ndarray, seg: np.ndarray, k: int) -> np.ndarray:
+    """Per-segment max of non-negative ``vals`` (0 for an empty segment)."""
+    out = np.zeros(k, dtype=np.int64)
+    np.maximum.at(out, seg, vals)
+    return out
+
+
+def _packed_pieces(
+    key: np.ndarray, vals: np.ndarray, widths: np.ndarray, counts: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Bit-pack piece i's ``counts[i]`` values (``vals`` is piece-major)
+    MSB-first at ``widths[i]`` bits, each piece zero-padded to a byte, as
+    pieces (keys, byte counts, bytes back to back). One :func:`bit_pack`
+    when the pieces share a width and no pad falls inside; else pieces
+    of up to 64 bits pack as words (:func:`_pack_words`), full 512-value
+    pieces (which end on a byte) one width at a time, and the rest in
+    mixed-width passes of up to ~2^22 bits each, which bounds the bit
+    index of :func:`_pack_mixed`."""
+    mbits = counts * widths
+    nb = (mbits + 7) >> 3
+    w = int(widths[0])
+    if (widths == w).all() and not (mbits[:-1] & 7).any():
+        return key, nb, np.frombuffer(bit_pack(vals, w), np.uint8)
+    # group 0: pieces of one word; w > 0: full 512-value pieces of width
+    # w; < 0: the rest, one group per ~2^22 bits (2^19 bytes)
+    rest = (counts < _MAX_RUN) & (mbits > 64)
+    block = _starts(np.where(rest, nb, 0)) >> 19
+    group = np.where(mbits <= 64, 0, np.where(rest, -1 - block, widths))
+    if (group[1:] < group[:-1]).any():
+        order = np.argsort(group, kind="stable")
+        vals = vals[_gather(_starts(counts)[order], counts[order])]
+        key, nb, widths, counts, group = key[order], nb[order], widths[order], counts[order], group[order]
+    cuts = [0, *(np.flatnonzero(group[1:] != group[:-1]) + 1).tolist(), len(group)]
+    vcut = np.concatenate(([0], counts.cumsum()))[cuts].tolist()
+    parts = []
+    for a, b, va, vb in zip(cuts[:-1], cuts[1:], vcut[:-1], vcut[1:]):
+        if group[a] > 0:
+            parts.append(np.frombuffer(bit_pack(vals[va:vb], int(group[a])), np.uint8))
+        elif group[a] == 0:
+            parts.append(_pack_words(vals[va:vb], widths[a:b], counts[a:b], nb[a:b]))
         else:
-            for c in range(a, b):
-                dp = dpos[c]
-                if dp >= 0:  # pre-encoded DIRECT or DELTA chunk: one blob slice
-                    out += dview[d_off[dp] : d_off[dp + 1]]
-                    continue
-                s, e = int(cs[c]), int(ce[c])
-                if pb_ok[c] and _try_encode_patched_base(
-                    out, v[s:e], signed, wd=int(plan["wfix"][c])
-                ):
-                    pass
-                else:
-                    _encode_direct(out, v[s:e], signed, u=u[s:e])
-        rc += 1
-    return rc
+            parts.append(_pack_mixed(vals[va:vb], widths[a:b], counts[a:b], nb[a:b]))
+    return key, nb, parts[0] if len(parts) == 1 else np.concatenate(parts)
+
+
+def _pack_words(
+    vals: np.ndarray, widths: np.ndarray, counts: np.ndarray, nb: np.ndarray
+) -> np.ndarray:
+    """:func:`_packed_pieces` bytes for pieces of up to 64 bits: each
+    piece is one uint64 word, its values shifted into place from the
+    most significant bit, and its bytes are the word's first ``nb``."""
+    pid = np.arange(len(counts)).repeat(counts)
+    shift = 64 - (np.arange(1, len(vals) + 1) - _starts(counts)[pid]) * widths[pid]
+    word = np.add.reduceat(vals.astype(np.uint64) << shift.astype(np.uint64), _starts(counts))
+    return word.astype(">u8").view(np.uint8)[_gather(8 * np.arange(len(counts)), nb)]
+
+
+def _pack_mixed(
+    vals: np.ndarray, widths: np.ndarray, counts: np.ndarray, nb: np.ndarray
+) -> np.ndarray:
+    """:func:`_packed_pieces` bytes for pieces of any widths and sizes:
+    each piece's values, then a zero row as wide as its pad, as rows of
+    a bit matrix; one gather keeps each row's own low bits."""
+    k = len(counts)
+    rows = len(vals) + k
+    x = np.zeros(rows, dtype=np.uint64)
+    w = np.empty(rows, dtype=np.int64)
+    at = np.arange(len(vals)) + np.arange(k).repeat(counts)
+    x[at] = vals
+    w[at] = widths.repeat(counts)
+    w[counts.cumsum() + np.arange(k)] = (nb << 3) - counts * widths
+    wb = (int(widths.max()) + 7) >> 3
+    # the low wb bytes of each row, most significant first
+    bits = np.unpackbits(np.ascontiguousarray(x.view(np.uint8).reshape(rows, 8)[:, wb - 1 :: -1]))
+    return np.packbits(bits[_gather(8 * wb * np.arange(1, rows + 1) - w, w)])
+
+
+def _repeat_pieces(v: np.ndarray, starts: np.ndarray, lens: np.ndarray, signed: bool) -> list[tuple]:
+    """The runs of every repeat, one piece each: SHORT_REPEAT for 3..10
+    values, else fixed-delta-0 DELTA runs of up to 512 values. No run of
+    1 value is left (DELTA needs 2): 513 left over split 511 + 2."""
+    u = _unsigned64(v[starts], signed)
+    cnt, pos = lens, starts
+    if (lens > _MAX_RUN).any():  # long runs: 512-value pieces, then the rest
+        full = (lens - 2) // _MAX_RUN
+        rem = lens - _MAX_RUN * full  # 2..513
+        npc = full + 1 + (rem > _MAX_RUN)
+        rid = np.arange(len(lens)).repeat(npc)
+        k = np.arange(len(rid)) - _starts(npc).repeat(npc)
+        fr, rem = full[rid], rem[rid]
+        cnt = np.where(k < fr, _MAX_RUN, np.where(k > fr, 2, rem - 2 * (rem > _MAX_RUN)))
+        pos = starts[rid] + _MAX_RUN * np.minimum(k, fr) + (_MAX_RUN - 1) * (k > fr)
+        u = u[rid]
+    bits = bit_widths(u)
+    sr = (cnt >= _MIN_REPEAT) & (cnt <= _MAX_SHORT_REPEAT)
+    wb = (bits + 7) >> 3  # SHORT_REPEAT value bytes
+    vlen = (bits + 6) // 7  # DELTA base varint bytes
+    nb = np.where(sr, 1 + wb, 3 + vlen)
+    off = _starts(nb)
+    blob = np.zeros(int(nb.sum()), dtype=np.uint8)
+    blob[off] = np.where(
+        sr, (_SHORT_REPEAT << 6) | ((wb - 1) << 3) | (cnt - 3), (_DELTA << 6) | ((cnt - 1) >> 8)
+    )
+    if sr.any():
+        _put_msb(blob, off[sr] + 1, u[sr], wb[sr])
+    cd = ~sr
+    if cd.any():
+        blob[off[cd] + 1] = (cnt[cd] - 1) & 0xFF
+        blob[_gather(off[cd] + 2, vlen[cd])] = np.frombuffer(varint_encode(u[cd]), np.uint8)
+        # the last byte stays 0: varint(zigzag(0)), the fixed delta
+    return [(4 * pos, nb, blob)]
+
+
+def _p90_widths(seg: np.ndarray, widths: np.ndarray, sizes: np.ndarray) -> tuple:
+    """Per segment of ``sizes`` values, from their bit ``widths``: the
+    cumulative width histogram, the p90 width (the smallest table width
+    covering >=90% of the values) and the max table width."""
+    k = len(sizes)
+    hist = np.bincount(seg * 65 + widths, minlength=k * 65).reshape(k, 65)
+    cum = hist.cumsum(axis=1)
+    w90 = CLOSEST_TABLE[np.argmax(cum >= (-(-9 * sizes // 10))[:, None], axis=1)]
+    wmax = CLOSEST_TABLE[np.max(np.where(hist > 0, np.arange(65), 0), axis=1)]
+    return cum, w90, wmax
+
+
+def _pb_sample_gate(vl: np.ndarray, cs: np.ndarray, m: np.ndarray, mn: np.ndarray) -> np.ndarray:
+    """Advisory PATCHED_BASE gate on every 4th value of each candidate
+    chunk: the sampled p90 width is below the sampled max width, and the
+    sample scaled up has 1..62 patches. The exact check decides."""
+    ns = (m + 3) >> 2
+    sid = np.arange(len(cs)).repeat(ns)
+    soff = 4 * (np.arange(len(sid)) - _starts(ns).repeat(ns))
+    red = (vl[cs.repeat(ns) + soff] - mn[sid]).view(_UNSIGNED[vl.dtype.type])
+    cum, w90, wmax = _p90_widths(sid, bit_widths(red), ns)
+    patches = (ns - cum[np.arange(len(cs)), w90]) * 4
+    return (w90 < wmax) & (patches >= 1) & (patches <= 2 * _MAX_PATCHES)
+
+
+def _patched_base_pieces(
+    vl: np.ndarray, cs: np.ndarray, m: np.ndarray, mn: np.ndarray, wd: np.ndarray, pos: np.ndarray
+) -> tuple[np.ndarray, list[tuple]]:
+    """The exact PATCHED_BASE check of every candidate chunk, and the
+    pieces of the runs that pass (no zigzag: the chunk minimum is the
+    base).
+
+    A chunk passes when its p90 width is below its max width, 1..31
+    values are wider, no gap between patches exceeds 255, a patch entry
+    fits 64 bits, and the run is smaller than DIRECT at width ``wd``.
+    Returns the pass mask and the pieces."""
+    k = len(cs)
+    cid = np.arange(k).repeat(m)
+    red = (vl[_gather(cs, m)] - mn[cid]).view(_UNSIGNED[vl.dtype.type])
+    widths = bit_widths(red)
+    _, w90, wmax = _p90_widths(cid, widths, m)
+    w90 = w90.astype(np.int64)
+    pidx = np.flatnonzero(widths > w90[cid])
+    pc = cid[pidx]
+    npatch = np.bincount(pc, minlength=k)
+    gaps = pidx - _starts(m)[pc]
+    same = np.flatnonzero(pc[1:] == pc[:-1]) + 1
+    gaps[same] = pidx[same] - pidx[same - 1]
+    pv = red[pidx].astype(np.uint64) >> w90[pc].astype(np.uint64)
+    pw = CLOSEST_TABLE[_segment_max(bit_widths(pv), pc, k)].astype(np.int64)
+    pgw = np.maximum(_segment_max(bit_widths(gaps.astype(np.uint64)), pc, k), 1)
+    comb = CLOSEST_TABLE[np.minimum(pgw + pw, 64)].astype(np.int64)
+    mag = np.abs(mn.astype(np.int64)).view(np.uint64)
+    bw = (bit_widths(mag) + 8) >> 3  # base bytes, with a sign bit
+    ok = (
+        (w90 < wmax) & (npatch >= 1) & (npatch <= _MAX_PATCHES)
+        & (_segment_max(gaps, pc, k) <= 255) & (pgw + pw <= 64)
+        & (4 + bw + (m * w90 + 7 >> 3) + (npatch * comb + 7 >> 3) < 2 + (m * wd + 7 >> 3))
+    )
+    if not ok.any():
+        return ok, []
+    sign = np.where(mn[ok] < 0, np.uint64(1) << (8 * bw[ok] - 1).astype(np.uint64), np.uint64(0))
+    m, w90, pw, pgw, comb, bw, npatch, pos = (a[ok] for a in (m, w90, pw, pgw, comb, bw, npatch, pos))
+    off = _starts(4 + bw)
+    head = np.zeros(int(off[-1] + 4 + bw[-1]), dtype=np.uint8)
+    head[off] = (_PATCHED_BASE << 6) | (CODE_TABLE[w90] << 1) | ((m - 1) >> 8)
+    head[off + 1] = (m - 1) & 0xFF
+    head[off + 2] = ((bw - 1) << 5) | CODE_TABLE[pw]
+    head[off + 3] = ((pgw - 1) << 5) | npatch
+    _put_msb(head, off + 4, mag[ok] | sign, bw)
+    data = red[ok[cid]] & ((np.uint64(1) << w90.astype(np.uint64)) - np.uint64(1)).repeat(m)
+    pid = np.arange(len(m)).repeat(npatch)
+    entries = (gaps[ok[pc]].astype(np.uint64) << pw[pid].astype(np.uint64)) | pv[ok[pc]]
+    return ok, [
+        (4 * pos, 4 + bw, head),
+        _packed_pieces(4 * pos + 1, data, w90, m),
+        _packed_pieces(4 * pos + 2, entries, comb, npatch),
+    ]
+
+
+def _delta_pieces(
+    vl: np.ndarray, d: np.ndarray, cs: np.ndarray, m: np.ndarray, signed: bool, pos: np.ndarray
+) -> list[tuple]:
+    """The pieces of the DELTA runs of monotone chunks: base, first
+    delta, then the magnitudes of the other deltas bit-packed (none when
+    every delta is equal). Width 1 is the header's "fixed" mark, so 1-bit
+    magnitudes pack at 2."""
+    dm = m - 1
+    dd = d[_gather(cs, dm)]  # every chunk's deltas, chunk-major
+    loc = _starts(dm)
+    fixed = np.maximum.reduceat(dd, loc) == np.minimum.reduceat(dd, loc)
+    ubase = _unsigned64(vl[cs], signed)
+    ud0 = _unsigned64(dd[loc], True)
+    nb_base = (bit_widths(ubase) + 6) // 7  # varint byte counts
+    nb_d0 = (bit_widths(ud0) + 6) // 7
+    tail = np.ones(len(dd), dtype=bool)
+    tail[loc] = False
+    mags = np.abs(dd[tail]).astype(np.uint64)
+    mcnt = dm - 1
+    mloc = _starts(mcnt)
+    wch = CLOSEST_TABLE[bit_widths(np.maximum.reduceat(mags, mloc))].astype(np.int64)
+    wch[wch == 1] = 2
+    nb = 2 + nb_base + nb_d0
+    off = _starts(nb)
+    head = np.zeros(int(nb.sum()), dtype=np.uint8)
+    head[off] = (_DELTA << 6) | (np.where(fixed, 0, CODE_TABLE[wch]) << 1) | ((m - 1) >> 8)
+    head[off + 1] = (m - 1) & 0xFF
+    head[_gather(off + 2, nb_base)] = np.frombuffer(varint_encode(ubase), np.uint8)
+    head[_gather(off + 2 + nb_base, nb_d0)] = np.frombuffer(varint_encode(ud0), np.uint8)
+    pieces = [(4 * pos, nb, head)]
+    packed = ~fixed
+    if packed.any():
+        if not packed.all():
+            mags = mags[_gather(mloc[packed], mcnt[packed])]
+        pieces.append(_packed_pieces(4 * pos[packed] + 1, mags, wch[packed], mcnt[packed]))
+    return pieces
+
+
+def _literal_pieces(v: np.ndarray, lo: np.ndarray, hi: np.ndarray, signed: bool) -> list[tuple]:
+    """The pieces of the runs of every literal region [lo[r], hi[r]),
+    each region cut into 512-value chunks from its start. A chunk of a region over 64 values
+    whose span is below 2^62 is DELTA when it is monotone (in the
+    direction of its first delta), else PATCHED_BASE when the sample gate
+    and the exact check pass; every other chunk is DIRECT."""
+    rlen = hi - lo
+    # the literal values, region after region: every chunk is a slice
+    vl = v if rlen[0] == len(v) else v[_gather(lo, rlen)]
+    cs, pos, m = _starts(rlen), lo, rlen  # chunk starts in vl and in v, sizes
+    big = rlen > 64  # a region of <=64 values is one DIRECT run
+    if (rlen > _MAX_RUN).any():
+        nch = (rlen + _MAX_RUN - 1) // _MAX_RUN
+        rid = np.arange(len(lo)).repeat(nch)
+        k = _MAX_RUN * (np.arange(len(rid)) - _starts(nch).repeat(nch))
+        cs, pos, big = cs[rid] + k, pos[rid] + k, big[rid]
+        m = np.minimum(rlen[rid] - k, _MAX_RUN)
+    cmin = np.minimum.reduceat(vl, cs)
+    cmax = np.maximum.reduceat(vl, cs)
+    ul = zigzag_encode(vl) if signed else vl.view(_UNSIGNED[vl.dtype.type])
+    if signed:  # the max zigzag value of a chunk is at its min or its max
+        umax = np.maximum(_unsigned64(cmin, True), _unsigned64(cmax, True))
+    else:
+        umax = np.maximum.reduceat(ul, cs)
+    wd = CLOSEST_TABLE[bit_widths(umax)].astype(np.int64)
+    direct = np.ones(len(cs), dtype=bool)
+    pieces = []
+    if big.any():
+        span = cmax.astype(np.int64) - cmin.astype(np.int64)  # wraps past 2^63
+        fits = big & (span >= 0) & (span < (1 << 62))
+        d = vl[1:] - vl[:-1]
+        # a chunk is monotone when no delta inside it has the wrong sign;
+        # the delta across each chunk boundary is masked out
+        down = np.zeros(len(vl), dtype=bool)
+        up = np.zeros(len(vl), dtype=bool)
+        np.less(d, 0, out=down[:-1])
+        np.greater(d, 0, out=up[:-1])
+        down[cs[1:] - 1] = up[cs[1:] - 1] = False
+        d0 = d[np.minimum(cs, len(d) - 1)]
+        mono = ~np.logical_or.reduceat(down, cs) | (~np.logical_or.reduceat(up, cs) & (d0 < 0))
+        delta = fits & (m >= 3) & mono
+        if delta.any():
+            pieces += _delta_pieces(vl, d, cs[delta], m[delta], signed, pos[delta])
+            direct &= ~delta
+        cand = np.flatnonzero(fits & ~delta & (m >= 16) & (cmin != _I64_MIN))
+        if len(cand):
+            cand = cand[_pb_sample_gate(vl, cs[cand], m[cand], cmin[cand])]
+        if len(cand):
+            ok, pb = _patched_base_pieces(vl, cs[cand], m[cand], cmin[cand], wd[cand], pos[cand])
+            pieces += pb
+            direct[cand[ok]] = False
+    if direct.any():
+        if not direct.all():
+            cs, m, wd, pos = cs[direct], m[direct], wd[direct], pos[direct]
+            ul = ul[_gather(cs, m)]
+        head = np.empty((len(m), 2), dtype=np.uint8)
+        head[:, 0] = (_DIRECT << 6) | (CODE_TABLE[wd] << 1) | ((m - 1) >> 8)
+        head[:, 1] = (m - 1) & 0xFF
+        pieces.append((4 * pos, np.full(len(m), 2), head.reshape(-1)))
+        pieces.append(_packed_pieces(4 * pos + 1, ul, wd, m))
+    return pieces
 
 
 def rle_v2_encode(vals: np.ndarray, signed: bool = True) -> bytes:
@@ -495,6 +415,12 @@ def rle_v2_encode(vals: np.ndarray, signed: bool = True) -> bytes:
     int32 input runs the whole pipeline in 32-bit (half the memory
     traffic — tokens are array<int32>); it promotes to int64 only when
     the value span could overflow 32-bit delta arithmetic.
+
+    Each run kind builds the bytes of all its runs at once, as pieces
+    (sort keys, byte counts, the bytes back to back): a run's header and
+    then its packed sections, keyed 4 x its first value's stream
+    position + 0, 1, 2. One sort by key and one copy (a byte gather, or a
+    slice join when pieces are long) assemble the stream.
     """
     if vals.dtype == np.int32 and len(vals):
         v = np.ascontiguousarray(vals)
@@ -505,135 +431,39 @@ def rle_v2_encode(vals: np.ndarray, signed: bool = True) -> bytes:
     n = len(v)
     if n == 0:
         return b""
-    out = bytearray()
-    # equal-run segmentation (vectorized)
     change = np.empty(n, dtype=bool)
     change[0] = True
     np.not_equal(v[1:], v[:-1], out=change[1:])
-    run_starts = np.flatnonzero(change)
-    run_lens = np.empty(len(run_starts), dtype=np.int64)
-    run_lens[:-1] = run_starts[1:] - run_starts[:-1]
-    run_lens[-1] = n - run_starts[-1]
-    rep_mask = run_lens >= _MIN_REPEAT_SPLIT
-    if not rep_mask.all():
-        short = (run_lens >= _MIN_REPEAT) & ~rep_mask
-        if int(run_lens[short].sum()) >= _SHORT_RUN_COVERAGE * n:
-            rep_mask |= short  # run-dominated data: SR runs pay off
-    rep_starts = run_starts[rep_mask]
-    rep_lens = run_lens[rep_mask]
-
-    def constant_delta(val: int, take: int) -> bytes:
-        # fixed-delta-0 DELTA run of ``take`` copies of ``val``, built from
-        # scalars (one long run emits one of these per 512-chunk tail;
-        # token stripes carry hundreds)
-        b = bytearray()
-        b.append((_DELTA << 6) | ((take - 1) >> 8))
-        b.append((take - 1) & 0xFF)
-        b += varint_encode_scalar(
-            zigzag_scalar(val) if signed else (val & 0xFFFFFFFFFFFFFFFF)
-        )
-        b.append(0)  # varint(zigzag(0)): fixed delta 0
-        return bytes(b)
-
-    def emit_repeat(start: int, length: int) -> None:
-        # runs of 3-10 values never reach here: they are all in the
-        # ``sr`` blob below
-        val = int(v[start])
-        pos = 0
-        full_chunk: bytes | None = None  # all full 512-chunks are identical
-        while pos < length:
-            take = min(_MAX_RUN, length - pos)
-            if length - pos - take == 1:
-                take -= 1  # avoid a trailing 1-length chunk (delta needs >=2)
-            if take <= _MAX_SHORT_REPEAT and 3 <= take:
-                _encode_short_repeat(out, val, take, signed)
-            elif take == _MAX_RUN:
-                if full_chunk is None:
-                    full_chunk = constant_delta(val, take)
-                out.extend(full_chunk)  # extend, not +=: += would rebind the closure var
-            else:
-                out.extend(constant_delta(val, take))
-            pos += take
-
-    # batch SHORT_REPEAT emission: runs of 3..10 values encode as
-    # header + 1-8 value bytes; build ALL of them in one vectorized pass
-    # and collapse maximal chains of ADJACENT short runs into single
-    # byte-slice appends — run-dominated data (skewed dictionary
-    # indices) was paying ~75% of the encode wall in per-run python
-    # (zigzag/bit_length/to_bytes x 700k calls on a 4M-value stream)
-    n_rep = len(rep_starts)
-    pure_sr = rep_lens <= _MAX_SHORT_REPEAT
-    sr_view = None
-    if pure_sr.any():
-        sv = v[rep_starts[pure_sr]].astype(np.int64)
-        with np.errstate(over="ignore"):
-            u = ((sv << 1) ^ (sv >> 63)).view(np.uint64) if signed else sv.view(np.uint64)
-        wb = ((bit_widths(u) + 7) // 8).astype(np.int64)  # 1..8 value bytes
-        srl = rep_lens[pure_sr]
-        sr_off = np.zeros(len(wb) + 1, dtype=np.int64)
-        np.cumsum(1 + wb, out=sr_off[1:])
-        blob = np.zeros(int(sr_off[-1]), dtype=np.uint8)
-        blob[sr_off[:-1]] = (_SHORT_REPEAT << 6) | ((wb - 1) << 3) | (srl - 3)
-        for k in range(int(wb.max())):  # MSB-first value bytes, <=8 passes
-            m_ = wb > k
-            blob[sr_off[:-1][m_] + 1 + k] = (
-                u[m_] >> ((wb[m_] - 1 - k).astype(np.uint64) * np.uint64(8))
-            ) & np.uint64(0xFF)
-        sr_view = memoryview(blob.tobytes())
-        sr_pos = np.full(n_rep, -1, dtype=np.int64)
-        sr_pos[pure_sr] = np.arange(int(pure_sr.sum()))
-        sr_off_l = sr_off.tolist()
-        sr_pos_l = sr_pos.tolist()
-    # emission units: a unit is either one non-SR run or a maximal chain
-    # of gap-free short runs (their precomputed bytes are contiguous)
-    adj = np.zeros(n_rep, dtype=bool)
-    if n_rep > 1:
-        adj[1:] = (
-            pure_sr[1:] & pure_sr[:-1] & (rep_starts[1:] == rep_starts[:-1] + rep_lens[:-1])
-        )
-    heads = np.flatnonzero(~adj).tolist()
-    starts_l, lens_l = rep_starts.tolist(), rep_lens.tolist()
-
-    # Two passes over the emission schedule: first collect the literal
-    # regions (the gaps between repeat units), plan ALL their chunks in
-    # one vectorized pass (_plan_literals — python work no longer scales
-    # with region count), then walk the schedule emitting repeat bytes
-    # and planned literal runs in stream order.
-    items: list[tuple] = []  # ("lit", region#) | ("sr", lo, hi) | ("rep", s, len)
-    region_spans: list[tuple[int, int]] = []
-    cursor = 0
-    for ui, i in enumerate(heads):
-        j = (heads[ui + 1] - 1) if ui + 1 < len(heads) else n_rep - 1
-        s = starts_l[i]
-        if s > cursor:
-            items.append(("lit", len(region_spans)))
-            region_spans.append((cursor, s))
-        if sr_view is not None and sr_pos_l[i] >= 0:
-            items.append(("sr", sr_off_l[sr_pos_l[i]], sr_off_l[sr_pos_l[j] + 1]))
-            cursor = starts_l[j] + lens_l[j]
-        else:
-            items.append(("rep", s, lens_l[i]))
-            cursor = s + lens_l[i]
-    if cursor < n:
-        items.append(("lit", len(region_spans)))
-        region_spans.append((cursor, n))
-
-    u = plan = None
-    if region_spans:
-        u = zigzag_encode(v) if signed else v.view(np.uint32 if v.dtype == np.int32 else np.uint64)
-        d = np.diff(v) if n > 1 else np.empty(0, dtype=v.dtype)
-        plan = _plan_literals(v, u, d, np.asarray(region_spans, dtype=np.int64), signed)
-
-    rc = 0
-    for item in items:
-        kind = item[0]
-        if kind == "lit":
-            rc = _emit_region_runs(out, v, u, plan, item[1], rc, signed)
-        elif kind == "sr":
-            out += sr_view[item[1] : item[2]]
-        else:
-            emit_repeat(item[1], item[2])
-    return bytes(out)
+    starts = np.flatnonzero(change)
+    lens = np.empty(len(starts), dtype=np.int64)
+    lens[:-1] = starts[1:] - starts[:-1]
+    lens[-1] = n - starts[-1]
+    rep = lens >= _MIN_REPEAT_SPLIT
+    if not rep.all():
+        short = (lens >= _MIN_REPEAT) & ~rep
+        if int(lens[short].sum()) >= _SHORT_RUN_COVERAGE * n:
+            rep |= short  # run-dominated data: SR runs pay off
+    pieces = []
+    if rep.any():
+        starts, lens = starts[rep], lens[rep]
+        pieces += _repeat_pieces(v, starts, lens, signed)
+        lo = np.concatenate(([0], starts + lens))
+        hi = np.append(starts, n)
+        lo, hi = lo[hi > lo], hi[hi > lo]
+    else:
+        lo, hi = np.zeros(1, dtype=np.int64), np.full(1, n)
+    if len(lo):
+        pieces += _literal_pieces(v, lo, hi, signed)
+    if len(pieces) == 1:
+        return pieces[0][2].tobytes()
+    key, nb, src = (np.concatenate(p) for p in zip(*pieces))
+    order = np.argsort(key, kind="stable")  # merges the kinds' sorted keys
+    at, nb = _starts(nb)[order], nb[order]
+    if len(nb) * _MIN_SLICE_BYTES > len(src):  # short pieces: one byte gather
+        return src[_gather(at, nb)].tobytes()
+    # long pieces (the bulk of a wide stream): join slices, no byte index
+    view = memoryview(src)
+    return b"".join(map(view.__getitem__, map(slice, at.tolist(), (at + nb).tolist())))
 
 
 def _truncated(kind: str, pos: int, size: int) -> ValueError:

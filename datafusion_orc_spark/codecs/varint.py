@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from datafusion_orc_spark.codecs.bitpack import bit_widths
+
 
 def zigzag_encode(vals: np.ndarray) -> np.ndarray:
     """Signed -> unsigned: (n << 1) ^ (n >> bits-1).
@@ -32,28 +34,18 @@ def zigzag_decode(vals: np.ndarray) -> np.ndarray:
 def varint_encode(vals: np.ndarray) -> bytes:
     """Encode unsigned 64-bit values as concatenated LEB128 varints.
 
-    Vectorized: builds the (n, 10) 7-bit-group matrix, masks out unused
-    groups, sets continuation bits, and compacts — no per-value loop.
+    Vectorized over the output bytes, no per-value loop: value i takes
+    ceil(bit_length / 7) bytes (at least one), byte j of it holds bits
+    7j..7j+6, and every byte but the value's last sets the continuation
+    bit.
     """
     u = np.asarray(vals, dtype=np.uint64)
-    n = len(u)
-    if n == 0:
+    if len(u) == 0:
         return b""
-    shifts = (np.uint64(7) * np.arange(10, dtype=np.uint64))[None, :]
-    groups = ((u[:, None] >> shifts) & np.uint64(0x7F)).astype(np.uint8)
-    # number of groups per value = ceil(bitlen/7), min 1
-    nbytes = np.ones(n, dtype=np.int64)
-    x = u >> np.uint64(7)
-    while np.any(x):
-        nz = x > 0
-        nbytes[nz] += 1
-        x = x >> np.uint64(7)
-    # continuation bit on all but the last group of each value
-    col = np.arange(10)[None, :]
-    used = col < nbytes[:, None]
-    cont = col < (nbytes - 1)[:, None]
-    groups[cont] |= 0x80
-    return groups[used].tobytes()
+    nb = (bit_widths(u) + 6) // 7
+    group = np.arange(int(nb.sum())) - (nb.cumsum() - nb).repeat(nb)
+    low7 = ((u.repeat(nb) >> (7 * group).astype(np.uint64)) & np.uint64(0x7F)).astype(np.uint8)
+    return (low7 | ((group < (nb - 1).repeat(nb)) << 7).astype(np.uint8)).tobytes()
 
 
 def varint_decode(buf: np.ndarray | bytes, n: int, pos: int = 0) -> tuple[np.ndarray, int]:

@@ -45,6 +45,16 @@ from datafusion_orc_spark.codecs.varint import (
 from datafusion_orc_spark.format import orc_proto as proto
 
 
+_EPOCH_ORDINAL = _dt.date(1970, 1, 1).toordinal()
+
+
+def _day_number(bound):
+    """A DATE column's prune bound as the day number its statistics and
+    bloom filters hold: a ``datetime.date`` converts, anything else (an
+    int day, None) passes through."""
+    return bound.toordinal() - _EPOCH_ORDINAL if isinstance(bound, _dt.date) else bound
+
+
 def decompress_stream(raw: bytes, compression: int) -> bytes:
     """D2 — per-stream chunked decompression (3-byte LE header =
     (len << 1) | isOriginal; verified on the corpus postscript)."""
@@ -547,11 +557,8 @@ class OrcReader:
             hkind = proto.BLOOM_HASH_KINDS.get(self.footer.types[col].kind)
             if hkind is None:
                 continue
-            val = lo
-            if self.footer.types[col].kind == proto.DATE and hasattr(val, "toordinal"):
-                val = (val - _dt.date(1970, 1, 1)).days
             filters = parse_bloom_index(sr.stream(col, proto.S_BLOOM_FILTER_UTF8))
-            h = hash_for_value(val, hkind)
+            h = hash_for_value(lo, hkind)
             cand = range(n_groups) if groups is None else groups
             groups = [
                 g
@@ -605,11 +612,13 @@ class OrcReader:
             for i in sel:
                 needed_ids |= self._subtree_ids(root.subtypes[i])
         idxs = range(len(self.footer.stripes)) if stripes is None else stripes
-        prune_ids = (
-            {root.subtypes[names.index(c)]: b for c, b in prune.items() if c in names}
-            if prune
-            else {}
-        )
+        prune_ids = {}
+        for c, (lo, hi) in (prune or {}).items():
+            if c in names:
+                col = root.subtypes[names.index(c)]
+                if self.footer.types[col].kind == proto.DATE:
+                    lo, hi = _day_number(lo), _day_number(hi)
+                prune_ids[col] = (lo, hi)
         sstats = self.stripe_statistics() if prune_ids else []
         if needed_ids is not None and prune_ids:
             # prune columns may sit outside the projection; their

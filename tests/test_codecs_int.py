@@ -174,6 +174,43 @@ def test_rlev2_empty_and_tiny():
         _roundtrip(np.array(v, dtype=np.int64))
 
 
+def _python_calls(fn, *args, **kwargs) -> int:
+    """Python-level function calls (profiler "call" events) of one call."""
+    import sys
+
+    calls = 0
+
+    def prof(frame, event, arg):
+        nonlocal calls
+        calls += event == "call"
+
+    sys.setprofile(prof)
+    try:
+        fn(*args, **kwargs)
+    finally:
+        sys.setprofile(None)
+    return calls
+
+
+def test_rlev2_encode_python_work_does_not_grow_with_regions():
+    """The encoder emits every run kind in vector passes: 8x the literal
+    regions (a run-fragmented stream of 65536 values against one of
+    8192) costs the same number of Python-level calls, within 1.2x."""
+    rng = np.random.default_rng(3)
+
+    def fragmented(n):
+        lens = rng.integers(1, 21, size=n)
+        return np.repeat(rng.integers(0, 3, size=n), lens)[:n].astype(np.int64)
+
+    small, large = fragmented(8192), fragmented(65536)
+    for signed in (True, False):
+        rle_v2_encode(small, signed=signed)  # warm numpy's lazy imports
+        a = _python_calls(rle_v2_encode, small, signed=signed)
+        b = _python_calls(rle_v2_encode, large, signed=signed)
+        assert a == _python_calls(rle_v2_encode, small, signed=signed)  # deterministic
+        assert b <= 1.2 * a, (a, b)
+
+
 def test_rlev2_random_fuzz():
     rng = np.random.default_rng(42)
     for _ in range(25):

@@ -462,3 +462,34 @@ def test_every_row_group_seeks_to_its_slice(tmp_path, compression):
                 expect = full.column(nm).slice(row0 + g * stride, rows).combine_chunks()
                 assert got.equals(expect), (row0, g, nm)
         row0 += info.number_of_rows
+
+
+def test_date_prune_bounds_match_int_day_bounds(tmp_path):
+    """A DATE column prunes on ``datetime.date`` bounds exactly as on the
+    same bounds as int day numbers: the same rows and the same stripes
+    skipped, for a range and for a bloom-checked point predicate."""
+    import datetime
+
+    n = 30_000
+    days = np.arange(n, dtype=np.int32) // 3  # sorted: stripes hold disjoint day ranges
+    tbl = pa.table({"d": pa.array(days, pa.date32()), "v": np.arange(n, dtype=np.int64)})
+    path = str(tmp_path / "dates.orc")
+    write_orc(tbl, path, stripe_rows=8192, bloom_filter_columns=["d"])
+    reader = OrcReader(path)
+    epoch = datetime.date(1970, 1, 1)
+
+    def scan(prune):
+        kept = [
+            s for s in range(len(reader.footer.stripes))
+            if any(True for _ in reader.iter_stripes(stripes=[s], prune=prune))
+        ]
+        rows = pa.Table.from_batches(list(reader.iter_stripes(prune=prune))).column("v").to_pylist()
+        return kept, rows
+
+    for lo, hi in ((3000, 4000), (5000, 5000), (None, 1000)):
+        as_date = [None if b is None else epoch + datetime.timedelta(days=b) for b in (lo, hi)]
+        kept, rows = scan({"d": (lo, hi)})
+        assert scan({"d": tuple(as_date)}) == (kept, rows)
+        assert len(kept) < len(reader.footer.stripes)
+        want = [i for i, d in enumerate(days.tolist()) if (lo is None or d >= lo) and d <= hi]
+        assert set(want) <= set(rows)

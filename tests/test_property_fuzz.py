@@ -12,9 +12,9 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from datafusion_orc_spark.codecs.bitpack import bit_pack, bit_unpack, width_code
+from datafusion_orc_spark.codecs.bitpack import bit_pack, bit_unpack, closest_fixed_width, width_code
 from datafusion_orc_spark.codecs.byterle import bool_rle_decode, bool_rle_encode
-from datafusion_orc_spark.codecs.rlev2 import _try_encode_patched_base, rle_v2_decode, rle_v2_encode
+from datafusion_orc_spark.codecs.rlev2 import rle_v2_decode, rle_v2_encode
 from datafusion_orc_spark.codecs.varint import varint_encode_scalar, zigzag_scalar
 from datafusion_orc_spark.operators.encode import _encode_stream, _plan_row_splits, _stripes
 from datafusion_orc_spark.codecs.strings import fsst_decode, fsst_encode, fsst_train
@@ -213,12 +213,30 @@ def _rlev2_run(draw) -> tuple[bytes, int]:
         mags = draw(st.lists(st.integers(0, 2**w - 1), min_size=1, max_size=510))
         return _delta_run(len(mags) + 2, ubase, d0, w, mags), len(mags) + 2
     m = draw(st.integers(64, 256))
-    small = np.array(draw(st.lists(st.integers(0, 15), min_size=m, max_size=m)), dtype=np.int64)
-    idx = draw(st.lists(st.integers(0, m - 1), min_size=1, max_size=4, unique=True))
-    small[idx] = 2**30 + np.arange(len(idx))
-    out = bytearray()
-    assert _try_encode_patched_base(out, small + draw(st.integers(-(2**40), 2**40)), signed=True)
-    return bytes(out), m
+    low = draw(st.lists(st.integers(0, 15), min_size=m, max_size=m))
+    idx = sorted(draw(st.lists(st.integers(0, m - 1), min_size=1, max_size=4, unique=True)))
+    return _pb_run(draw(st.integers(-(2**40), 2**40)), low, idx, [2**26 + j for j in range(len(idx))]), m
+
+
+def _pb_run(base: int, low: list[int], idx: list[int], high: list[int]) -> bytes:
+    """One PATCHED_BASE run: 4-bit ``low`` values over ``base``, the
+    values at ``idx`` (ascending, gaps <= 255) widened by ``high`` bits."""
+    m = len(low)
+    pw = closest_fixed_width(max(h.bit_length() for h in high))
+    gaps = [idx[0]] + [b - a for a, b in zip(idx, idx[1:])]
+    pgw = max(1, max(g.bit_length() for g in gaps))
+    mag = abs(base)
+    bw = max(1, (mag.bit_length() + 8) // 8)
+    head = bytes([
+        (2 << 6) | (width_code(4) << 1) | ((m - 1) >> 8), (m - 1) & 0xFF,
+        ((bw - 1) << 5) | width_code(pw), ((pgw - 1) << 5) | len(idx),
+    ])
+    base_field = mag | (1 << (8 * bw - 1)) if base < 0 else mag
+    entries = np.array([(g << pw) | h for g, h in zip(gaps, high)], dtype=np.uint64)
+    return (
+        head + base_field.to_bytes(bw, "big") + bit_pack(np.array(low, dtype=np.uint64), 4)
+        + bit_pack(entries, closest_fixed_width(pgw + pw))
+    )
 
 
 @given(st.lists(_rlev2_run(), min_size=1, max_size=12), st.booleans(), st.data())
@@ -231,6 +249,66 @@ def test_rlev2_batched_matches_reference_on_mixed_headers(runs, signed, data):
     total = sum(c for _, c in runs)
     _assert_batched_matches(buf, total, signed)
     _assert_batched_matches(buf, data.draw(st.integers(1, total)), signed)
+
+
+def _assert_rlev2_round_trip(v: np.ndarray) -> None:
+    """Both decoders return ``v`` from its signed and, for values an
+    unsigned stream can carry, its unsigned encoding."""
+    for signed in (True, False):
+        if not signed and v.dtype == np.int32 and (v < 0).any():
+            continue
+        enc = rle_v2_encode(v, signed=signed)
+        want = v.astype(np.int64)
+        assert np.array_equal(rle_v2_decode(enc, len(v), signed), want)
+        assert np.array_equal(rle_v2_decode_reference(enc, len(v), signed), want)
+
+
+@st.composite
+def _split_stream(draw) -> np.ndarray:
+    """Equal runs of 3..31 values between short literal stretches, so the
+    runs cover >=25% of the values and split the literals into regions."""
+    parts = []
+    for _ in range(draw(st.integers(1, 60))):
+        parts += draw(st.lists(st.integers(-40, 40), max_size=6))
+        parts += [draw(st.integers(-40, 40))] * draw(st.integers(3, 31))
+    dtype = draw(st.sampled_from([np.int32, np.int64]))
+    return np.array(parts, dtype=np.int64).astype(dtype) * draw(st.sampled_from([1, 1000, 2**20]))
+
+
+@st.composite
+def _patched_stream(draw) -> np.ndarray:
+    """Small-value chunks with 1..31 wide outliers, each followed by an
+    equal run, so patched-base candidates start and end at region
+    boundaries and straddle 512-value chunks."""
+    parts = []
+    for _ in range(draw(st.integers(1, 4))):
+        m = draw(st.integers(16, 700))
+        base = draw(st.integers(-(2**30), 2**30))
+        rnd = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+        chunk = rnd.integers(0, 16, size=m) + base
+        idx = rnd.choice(m, size=min(m, draw(st.integers(1, 31))), replace=False)
+        chunk[idx] += draw(st.sampled_from([2**12, 2**20, 2**31]))
+        parts.append(chunk)
+        parts.append(np.full(draw(st.sampled_from([3, 10, 11, 32, 513])), draw(st.integers(-5, 5)) + base))
+    v = np.concatenate(parts)
+    return v.astype(np.int32) if draw(st.booleans()) and np.abs(v).max() < 2**31 else v
+
+
+@given(_split_stream())
+def test_rlev2_region_split_streams_round_trip(v):
+    _assert_rlev2_round_trip(v)
+
+
+@given(_patched_stream())
+def test_rlev2_patched_base_between_repeats_round_trips(v):
+    _assert_rlev2_round_trip(v)
+
+
+@given(st.one_of(st.lists(i64, max_size=3), st.lists(i32, max_size=3)), st.sampled_from([np.int32, np.int64]))
+def test_rlev2_lengths_0_to_3_round_trip(vals, dtype):
+    if dtype == np.int32 and any(not -(2**31) <= x < 2**31 for x in vals):
+        vals = [x % 2**31 for x in vals]
+    _assert_rlev2_round_trip(np.array(vals, dtype=dtype))
 
 
 # ---- roundtrip_files split planner -----------------------------------------
