@@ -22,12 +22,15 @@ are composed from one copy of each piece:
 - ``_PartWriter``: byte-rolled part files written from inside the task
   through a writer factory (parquet here, ORC in sources/orc_sink.py),
   staged per task attempt by ``_open_part``;
-- ``_decode_setup``: projection and stripe pruning on the blob table;
+- ``_decode_setup``: prune bounds checked against the schema on the
+  driver (``_merge_where``) and the ``column IN (...)`` cut of the blob
+  table to the projected and bound columns;
 - ``_stripe_groups``: the one loop that regroups blob rows into stripes
-  (zero-copy blob slices, ``prune`` drops stripes on their
-  [vmin, vmax]); ``_stripe_batches`` decodes each stripe it yields,
-  with sub-block pruning. The stripeblob DataSource
-  (sources/stripeblob_datasource.py) reads through the same two.
+  (zero-copy blob slices) and the one stripe-prune rule: ``prune``
+  drops a stripe on its [vmin, vmax], inside the task;
+  ``_stripe_batches`` decodes each stripe it yields, with sub-block
+  pruning. The stripeblob DataSource (sources/stripeblob_datasource.py)
+  reads through the same two.
 
 The entry points:
 
@@ -731,15 +734,17 @@ _INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
 
 def _tighten_bound(bounds: dict[str, tuple[int, int]], col: str, op: str, val: int) -> None:
     """AND ``col <op> val`` (op in >, >=, <, <=, =, ==) into the
-    {column: (lo, hi)} prune bounds. An open end is the full int64 range:
-    any narrower sentinel would become a real bound and drop the stripes
+    {column: (lo, hi)} prune bounds. A strict comparison gives the
+    inclusive bound (``x < 5`` -> hi 5): right for every numeric type
+    (``hi = 4`` would drop a stripe of 4.5s) at the cost of at most one
+    extra block at the bound. An open end is the full int64 range: any
+    narrower sentinel would become a real bound and drop the stripes
     whose values lie beyond it."""
     lo, hi = bounds.get(col, (_INT64_MIN, _INT64_MAX))
-    eq = op in ("=", "==")
-    if eq or op[0] == ">":
-        lo = max(lo, val + 1 if op == ">" else val)
-    if eq or op[0] == "<":
-        hi = min(hi, val - 1 if op == "<" else val)
+    if op[0] != "<":
+        lo = max(lo, val)
+    if op[0] != ">":
+        hi = min(hi, val)
     bounds[col] = (lo, hi)
 
 
@@ -778,47 +783,52 @@ def prune_bounds_from_predicate(where: str) -> dict[str, tuple[int, int]]:
     return out
 
 
-def _merge_where(prune: dict | None, where: str | None) -> dict | None:
+def _merge_where(prune: dict | None, where: str | None, names: list[str]) -> dict | None:
     """``prune`` plus the bounds ``prune_bounds_from_predicate`` derives
-    from ``where``; an explicit ``prune`` bound wins over a derived one."""
+    from ``where``, checked on the driver against the schema's column
+    ``names``. An explicit ``prune`` key outside the schema raises, as
+    an unknown projection column does; a derived bound whose name is not
+    exactly a schema column (Spark resolves ``where`` case-insensitively)
+    is dropped: pruning is best-effort and the residual ``filter(where)``
+    stays exact. An explicit bound wins over a derived one."""
+    unknown = set(prune or ()) - set(names)
+    if unknown:
+        raise ValueError(f"unknown prune columns {sorted(unknown)}")
     derived = prune_bounds_from_predicate(where) if where is not None else {}
-    return {**derived, **(prune or {})} if derived else prune
+    merged = {c: b for c, b in derived.items() if c in names} | (prune or {})
+    return merged or None
 
 
 def _decode_setup(
-    blobs_df: DataFrame, schema: pa.Schema | None, spark_schema, columns: list[str] | None, prune
-) -> tuple[DataFrame, pa.Schema, list[str]]:
-    """Shared decode setup: returns the blob table cut to the stripes
-    whose [vmin, vmax] can meet every ``prune`` bound and to the
-    projected columns, the Arrow schema, and the projection in SCHEMA
-    order. The output StructType keeps schema order, so the decoded
-    batches must too: a caller-order projection decoded fine but
-    mis-bound column vectors JVM-side."""
+    blobs_df: DataFrame, schema: pa.Schema | None, spark_schema, columns: list[str] | None, prune, where=None
+) -> tuple[DataFrame, pa.Schema, list[str], dict | None]:
+    """Shared decode setup: returns the blob table cut to the rows the
+    decode reads, the Arrow schema, the projection in SCHEMA order and
+    the checked prune bounds (``_merge_where``). The output StructType
+    keeps schema order, so the decoded batches must too: a caller-order
+    projection decoded fine but mis-bound column vectors JVM-side.
+
+    The cut is a ``column IN (...)`` filter over the projection and the
+    bound columns; a bound column outside the projection keeps its
+    [vmin, vmax] for ``_stripe_groups`` but crosses with empty ``data``."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     _ensure_workers_can_import(blobs_df)
     if schema is None:
         schema = to_arrow_schema(spark_schema)
     names = list(schema.names)
+    prune = _merge_where(prune, where, names)
     if columns is not None:
         unknown = set(columns) - set(names)
         if unknown:
             raise ValueError(f"decode: unknown columns {sorted(unknown)}")
         names = [nm for nm in names if nm in set(columns)]
-    if prune:
-        keep = None
-        for col, (lo, hi) in prune.items():
-            cond = (
-                (F.col("column") == col)
-                & (F.col("vmax") >= F.lit(int(lo)))
-                & (F.col("vmin") <= F.lit(int(hi)))
-            )
-            ids = blobs_df.filter(cond).select("stripe_id")
-            keep = ids if keep is None else keep.join(ids, "stripe_id")
-        blobs_df = blobs_df.join(F.broadcast(keep.distinct()), "stripe_id")
-    if columns is not None:
-        blobs_df = blobs_df.filter(F.col("column").isin(columns))
-    return blobs_df, schema, names
+        bound_only = sorted(set(prune or ()) - set(names))
+        blobs_df = blobs_df.filter(F.col("column").isin(names + bound_only))
+        if bound_only:
+            data = F.when(F.col("column").isin(names), F.col("data")).otherwise(F.lit(b""))
+            blobs_df = blobs_df.withColumn("data", data)
+    return blobs_df, schema, names, prune
 
 
 def _stripe_groups(
@@ -835,7 +845,9 @@ def _stripe_groups(
     221-symbol count as -35 and decoded every string to b"".
 
     ``prune``: a stripe with any blob row whose [vmin, vmax] misses its
-    column's (lo, hi) bound is dropped, with its columns already held."""
+    column's (lo, hi) bound is dropped, with its columns already held; a
+    NULL vmin (no integer stats) keeps it. This is the one stripe-prune
+    rule of every blob read, so a bound column must be ``expected``."""
     pending: dict[int, dict[str, memoryview]] = {}
     skipped: set[int] = set()
     for b in batches:
@@ -878,8 +890,10 @@ def _stripe_batches(
     assembles, with sub-block (D19 ROW_INDEX-stride) pruning when bounds
     are known: blocks whose local [min, max] cannot match are dropped
     before Arrow assembly, and a stripe whose every block fails yields
-    nothing."""
-    for blobs in _stripe_groups(batches, set(names), prune):
+    nothing. A bound column outside ``names`` is assembled for its
+    stripe stats only: its blob is neither decoded nor block-pruned."""
+    for blobs in _stripe_groups(batches, set(names).union(prune or ()), prune):
+        blobs = {nm: blobs[nm] for nm in names}
         ranges = prune_row_ranges(blobs, prune) if prune else None
         if ranges != []:
             yield decode_stripe(blobs, schema, columns=names, row_ranges=ranges)
@@ -903,13 +917,17 @@ def decode_table(
     ``prune``: {column: (lo, hi)} — stripe pruning on the per-stripe
     min/max stats (the engine-side analogue of ORC ROW_INDEX seek /
     the reference's stubbed stats interface, SURVEY.md S7/D19): stripes
-    whose [vmin, vmax] cannot intersect [lo, hi] are never decoded.
-    Rows outside the range within surviving stripes still come back —
-    apply the residual filter on the decoded frame.
+    whose [vmin, vmax] cannot intersect [lo, hi] are never decoded,
+    inside the decode task. A bound column need not be projected; one
+    outside the schema raises ValueError. Columns without integer stats
+    (NULL vmin) are never pruned. Rows outside the range within
+    surviving stripes still come back — apply the residual filter on the
+    decoded frame.
 
     ``where``: SQL predicate string — the self-driving version of
-    ``prune``: integer comparison conjuncts are auto-derived into stripe
-    bounds (prune_bounds_from_predicate) AND the full predicate is
+    ``prune``: integer comparison conjuncts on exactly-named schema
+    columns are auto-derived into stripe bounds
+    (prune_bounds_from_predicate) AND the full predicate is
     applied to the decoded rows, so the result is exactly filtered with
     no manual hint (the DataSource pushFilters analogue).
 
@@ -922,8 +940,7 @@ def decode_table(
     ``groupBy(stripe_id).applyInArrow`` for blob tables whose stripes
     were scattered across partitions by an arbitrary repartition.
     """
-    prune = _merge_where(prune, where)
-    blobs_df, schema, names = _decode_setup(blobs_df, schema, spark_schema, columns, prune)
+    blobs_df, schema, names, prune = _decode_setup(blobs_df, schema, spark_schema, columns, prune, where)
     if columns is not None:
         spark_schema = StructType([f for f in spark_schema.fields if f.name in columns])
 
@@ -978,10 +995,10 @@ def decode_to_files(
     foreachBatch ``rows.write.parquet`` job was measured at >50% of the
     micro-batch wall (BENCH r6 sink-mode sweep).
 
-    ``prune`` bounds are INTEGER-column-only here (bounds are cast with
-    int(); string-keyed pruning is supported by read_orc_distributed,
-    not by this sink — r7 advice)."""
-    blobs_df, schema, names = _decode_setup(blobs_df, None, spark_schema, columns, prune)
+    ``prune`` bounds prune stripes as in ``decode_table``: only against
+    integer-column stats (string-keyed pruning is supported by
+    read_orc_distributed, not by this sink)."""
+    blobs_df, schema, names, prune = _decode_setup(blobs_df, None, spark_schema, columns, prune)
 
     def dec_write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _task_init()

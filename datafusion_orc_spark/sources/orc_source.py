@@ -134,13 +134,15 @@ def read_orc_distributed(
     """Scan ORC files with OUR reader, one task per stripe-range.
 
     ``where``: a SQL predicate string — simple integer comparison
-    conjuncts are auto-derived into ``prune`` bounds (same parser as
-    decode_table(where=)) and the FULL predicate is re-applied exactly
-    on the scanned rows, so pruning is pure speedup, never semantics.
+    conjuncts on exactly-named columns are auto-derived into ``prune``
+    bounds (same parser as decode_table(where=)) and the FULL predicate
+    is re-applied exactly on the scanned rows, so pruning is pure
+    speedup, never semantics.
     ``prune``: {column: (lo, hi)} statistics pushdown — each task skips
     stripes via the file Metadata stats (zero reads) and row groups via
     ROW_INDEX (format/orc_reader.py iter_stripes); conservative, callers
-    re-apply the exact predicate on the returned rows.
+    re-apply the exact predicate on the returned rows. A ``prune`` key
+    outside the files' merged schema raises ValueError.
 
     ``columns`` is the projection pushed into the per-stripe decode
     (name -> ORC column mask, the physical_exec.rs:69-78 analogue);
@@ -170,7 +172,6 @@ def read_orc_distributed(
         resolve_store,
     )
 
-    prune = _merge_where(prune, where)
     if opener is None:
         paths = _list_inputs(path_or_glob, file_extension)
         store, _ = resolve_store(path_or_glob)
@@ -187,6 +188,7 @@ def read_orc_distributed(
                 f"to scan anyway"
             )
     splits, merged = plan_splits(paths, split_bytes, opener)
+    prune = _merge_where(prune, where, merged.names)
     if columns is not None:
         unknown = set(columns) - set(merged.names)
         if unknown:

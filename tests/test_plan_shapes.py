@@ -115,16 +115,18 @@ def test_wholestage_codegen_in_agg(spark):
     assert "WholeStageCodegen" in plan
 
 
-def test_decode_prune_is_broadcast(spark):
-    """Stripe pruning must broadcast the surviving-stripe-id set, not
-    shuffle the blob table."""
+def test_decode_prune_has_no_join(spark):
+    """Stripe pruning happens inside the decode task, on a bound column
+    that is projected and on one that is not: the blob table is scanned
+    once, with no join and no Exchange."""
     from datafusion_orc_spark.operators.encode import decode_table, encode_table
 
     df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     blobs = encode_table(df, stripe_rows=2000)
-    dec = decode_table(blobs, None, df.schema, prune={"l_orderkey": (0, 100)})
-    plan = _plan(dec)
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
+    for columns in (None, ["l_partkey"]):
+        dec = decode_table(blobs, None, df.schema, columns=columns, prune={"l_orderkey": (0, 100)})
+        plan = _plan(dec)
+        assert "Join" not in plan and "Exchange" not in plan, plan
 
 
 def test_jaccard_candidate_join_is_thin(spark):

@@ -16,7 +16,13 @@ from datafusion_orc_spark.codecs.bitpack import bit_pack, bit_unpack, closest_fi
 from datafusion_orc_spark.codecs.byterle import bool_rle_decode, bool_rle_encode
 from datafusion_orc_spark.codecs.rlev2 import rle_v2_decode, rle_v2_encode
 from datafusion_orc_spark.codecs.varint import varint_encode_scalar, zigzag_scalar
-from datafusion_orc_spark.operators.encode import _encode_stream, _plan_row_splits, _stripes
+from datafusion_orc_spark.operators.encode import (
+    _encode_stream,
+    _plan_row_splits,
+    _stripe_batches,
+    _stripe_groups,
+    _stripes,
+)
 from datafusion_orc_spark.codecs.strings import fsst_decode, fsst_encode, fsst_train
 from datafusion_orc_spark.format.stripe import decode_column, encode_column
 from tests.rlev2_reference import rle_v2_decode_reference
@@ -420,3 +426,70 @@ def test_encode_stream_raises_on_packing_overflow():
         next(out)
     with pytest.raises(ValueError, match="part_id=65536"):
         next(_encode_stream(iter(one), 1 << 16, 1))
+
+
+# ---- in-task stripe pruning -------------------------------------------------
+
+_PRUNE_COLS = ["a", "b", "c", "d"]
+_PRUNE_SCHEMA = pa.schema([(c, pa.int64()) for c in _PRUNE_COLS])
+
+
+@st.composite
+def _pruned_blob_table(draw):
+    """Blob rows of 1-6 stripes x 4 columns in random order and random
+    batches, as ``_decode_setup`` hands them to a task: each column is
+    ``sid`` rows of ``10 * sid + column index``, with a random
+    [vmin, vmax] that is sometimes NULL. A random projection in schema
+    order and random bounds on projected and unprojected columns; an
+    unprojected column's blob is empty, as the JVM projection leaves it."""
+    projected = draw(st.sets(st.sampled_from(_PRUNE_COLS), min_size=1))
+    names = [c for c in _PRUNE_COLS if c in projected]
+    bound = st.tuples(st.integers(-25, 35), st.integers(-25, 35)).map(sorted).map(tuple)
+    prune = draw(st.dictionaries(st.sampled_from(_PRUNE_COLS), bound, max_size=3))
+    rows = []
+    for sid in range(1, draw(st.integers(1, 6)) + 1):
+        for ci, col in enumerate(_PRUNE_COLS):
+            stat = draw(st.one_of(st.none(), st.tuples(st.integers(-20, 30), st.integers(0, 10))))
+            vmin, vmax = (None, None) if stat is None else (stat[0], stat[0] + stat[1])
+            blob = bytes(encode_column(pa.array([10 * sid + ci] * sid, pa.int64()))[0]) if col in names else b""
+            rows.append((sid, col, vmin, vmax, blob))
+    rows = [rows[i] for i in draw(st.permutations(range(len(rows))))]
+    sids, cols, vmins, vmaxs, data = zip(*rows)
+    rb = pa.record_batch({
+        "stripe_id": pa.array(sids, pa.int64()),
+        "column": pa.array(cols, pa.string()),
+        "vmin": pa.array(vmins, pa.int64()),
+        "vmax": pa.array(vmaxs, pa.int64()),
+        "data": pa.array(data, pa.binary()),
+    })
+    cuts = sorted(draw(st.lists(st.integers(0, len(rows)), max_size=6)))
+    edges = [0, *cuts, len(rows)]
+    return [rb.slice(lo, hi - lo) for lo, hi in zip(edges, edges[1:])], rows, names, prune
+
+
+@given(_pruned_blob_table())
+def test_in_task_prune_keeps_exactly_the_stripes_that_meet_every_bound(drawn):
+    """``_stripe_groups`` + ``_stripe_batches`` keep a stripe iff every
+    bound column's [vmin, vmax] meets its bound (a NULL vmin keeps it),
+    bound columns projected or not, and decode the projection only."""
+    batches, rows, names, prune = drawn
+    stats = {(sid, col): (vmin, vmax) for sid, col, vmin, vmax, _ in rows}
+    kept = sorted(
+        sid for sid in {r[0] for r in rows}
+        if all(
+            stats[sid, col][0] is None or (stats[sid, col][1] >= lo and stats[sid, col][0] <= hi)
+            for col, (lo, hi) in prune.items()
+        )
+    )
+    blob_of = {(sid, col): blob for sid, col, _, _, blob in rows}
+    got = []
+    for g in _stripe_groups(iter(batches), set(names) | set(prune), prune):
+        assert set(g) == set(names) | set(prune)
+        got += [s for s in {r[0] for r in rows} if all(bytes(g[c]) == blob_of[s, c] for c in g)]
+    assert sorted(got) == kept
+    decoded = list(_stripe_batches(iter(batches), _PRUNE_SCHEMA, names, prune))
+    assert all(b.schema.names == names for b in decoded)
+    assert sorted(b.column(0)[0].as_py() // 10 for b in decoded) == kept
+    for b in decoded:
+        sid = b.column(0)[0].as_py() // 10
+        assert b.to_pydict() == {c: [10 * sid + _PRUNE_COLS.index(c)] * sid for c in names}

@@ -1,9 +1,11 @@
 """Stripe pruning on per-stripe min/max stats (S7/D19 analogue)."""
 
+import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_orc_spark.operators.encode import decode_table, encode_table
+from datafusion_orc_spark.operators.encode import decode_table, encode_table, prune_bounds_from_predicate
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -56,20 +58,20 @@ def test_pruning_stats_present(spark):
 
 
 def test_prune_bounds_from_predicate_parser():
-    from datafusion_orc_spark.operators.encode import prune_bounds_from_predicate
-
     b = prune_bounds_from_predicate(
         "l_orderkey > 100 AND l_orderkey <= 400 and l_partkey = 7 "
         "AND 250 >= l_suppkey AND l_comment = 'x' AND l_quantity < 1.5"
     )
-    assert b["l_orderkey"] == (101, 400)
+    # strict comparisons give the inclusive bound: right for non-integer
+    # columns too (a stripe of 4.5s meets "d < 5")
+    assert b["l_orderkey"] == (100, 400)
     assert b["l_partkey"] == (7, 7)
     assert b["l_suppkey"][1] == 250
     assert "l_comment" not in b and "l_quantity" not in b  # non-int: ignored
     # OR disables pruning entirely (a disjunct can rescue dropped rows)
     assert prune_bounds_from_predicate("l_orderkey > 100 OR l_partkey = 1") == {}
     # an open end is the full int64 range, not a narrower sentinel
-    assert prune_bounds_from_predicate("x > 5") == {"x": (6, 2**63 - 1)}
+    assert prune_bounds_from_predicate("x > 5") == {"x": (5, 2**63 - 1)}
 
 
 @pytest.mark.parametrize("where,base", [("x > 5", (1 << 62) + 1), ("x < 5", -(1 << 62) - 20001)])
@@ -103,8 +105,8 @@ def test_decode_where_auto_prunes_and_filters(spark):
         got.agg(F.sum("l_quantity")).collect()[0][0]
         == expected.agg(F.sum("l_quantity")).collect()[0][0]
     )
-    # and the plan decodes fewer stripes: the broadcast keep-set join is
-    # present and bounds the blob scan to the surviving stripe ids
+    # and the bound is selective: the decode task drops most stripes on
+    # their l_orderkey [vmin, vmax] before decoding them
     surviving = (
         blobs.filter(
             (F.col("column") == "l_orderkey")
@@ -347,3 +349,70 @@ def test_rowidx_trailing_empty_rows_keep_final_value():
     got = st.decode_column(blob, arr.type, row_ranges=ranges)
     flat = got.flatten().to_numpy()
     assert n_vals - 1 in flat
+
+
+@pytest.fixture(scope="module")
+def sorted_blobs(spark):
+    """lineitem sorted by l_orderkey in 500-row stripes: disjoint key
+    ranges per stripe, NULL vmin/vmax on the double columns."""
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").orderBy("l_orderkey").coalesce(1)
+    blobs = encode_table(li, stripe_rows=500).cache()
+    yield li, blobs
+    blobs.unpersist()
+
+
+@pytest.mark.parametrize("where", ["l_quantity < 5", "L_ORDERKEY < 401"])
+def test_decode_where_matches_spark_filter(sorted_blobs, where):
+    """A bound on a column without integer stats (double l_quantity)
+    keeps every stripe, and a bound whose name Spark resolves only
+    case-insensitively is dropped: both decodes equal Spark's filter."""
+    li, blobs = sorted_blobs
+    expected = li.filter(where).count()
+    assert expected > 0
+    assert decode_table(blobs, None, li.schema, where=where).count() == expected
+
+
+def test_unknown_prune_column_raises(spark, sorted_blobs, tmp_path):
+    """An explicit bound on a column the schema lacks fails on the
+    driver, as an unknown projection column does, instead of pruning
+    every stripe away."""
+    from datafusion_orc_spark.format.orc_writer import write_orc
+    from datafusion_orc_spark.sources.orc_source import read_orc_distributed
+
+    li, blobs = sorted_blobs
+    with pytest.raises(ValueError, match=r"unknown prune columns \['typo'\]"):
+        decode_table(blobs, None, li.schema, prune={"typo": (1, 4)})
+    path = str(tmp_path / "a.orc")
+    write_orc(pa.table({"a": pa.array([1, 2, 3], pa.int64())}), path)
+    with pytest.raises(ValueError, match=r"unknown prune columns \['typo'\]"):
+        read_orc_distributed(spark, path, prune={"typo": (1, 4)})
+
+
+@pytest.mark.parametrize("shuffle", [False, True])
+def test_prune_on_unprojected_column(sorted_blobs, shuffle):
+    """A bound on a column outside the projection drops stripes on that
+    column's [vmin, vmax]: exactly the surviving stripes' rows come back."""
+    li, blobs = sorted_blobs
+    lo, hi = 100, 400
+    hit = (F.col("column") == "l_orderkey") & (F.col("vmax") >= lo) & (F.col("vmin") <= hi)
+    ids = [r[0] for r in blobs.filter(hit).select("stripe_id").collect()]
+    assert 0 < len(ids) < blobs.select("stripe_id").distinct().count() / 2
+    expected = decode_table(blobs.filter(F.col("stripe_id").isin(ids)), None, li.schema, columns=["l_partkey"])
+    got = decode_table(
+        blobs, None, li.schema, columns=["l_partkey"], prune={"l_orderkey": (lo, hi)}, shuffle=shuffle
+    )
+    assert got.columns == ["l_partkey"]
+    assert sorted(got.collect()) == sorted(expected.collect())
+
+
+def test_strict_bound_keeps_non_integer_stripe(spark, tmp_path):
+    """``d < 5`` must keep a stripe of 4.5s: a strict bound is the
+    inclusive one, not ``hi = 4``."""
+    from datafusion_orc_spark.format.orc_reader import OrcReader
+    from datafusion_orc_spark.format.orc_writer import write_orc
+    from datafusion_orc_spark.sources.orc_source import read_orc_distributed
+
+    path = str(tmp_path / "d.orc")
+    write_orc(pa.table({"d": np.r_[np.full(1000, 4.5), np.full(1000, 9.5)]}), path, stripe_rows=1000)
+    assert OrcReader(path).read(prune=prune_bounds_from_predicate("d < 5")).num_rows == 1000
+    assert read_orc_distributed(spark, path, where="d < 5").count() == 1000
