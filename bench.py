@@ -385,13 +385,16 @@ def main() -> None:
                      "roundtrip_lineitem_agg"]
     query_walls: dict[str, list[float]] = {n: [] for n in bench_queries}
     for name in bench_queries:
+        spark.sparkContext.setJobDescription(f"bench: {name} warmup")
         QUERIES[name][0](spark, SF_DIR).collect()  # warmup, untimed
-    for _epoch in range(3):
+    for epoch in range(3):
         for name in bench_queries:
             fn, _ = QUERIES[name]
+            spark.sparkContext.setJobDescription(f"bench: {name} epoch {epoch}")
             t0 = time.time()
             fn(spark, SF_DIR).collect()
             query_walls[name].append(round(time.time() - t0, 3))
+    spark.sparkContext.setJobDescription(None)
     import statistics as _stats
 
     for name in bench_queries:

@@ -421,10 +421,17 @@ def rle_v2_encode(vals: np.ndarray, signed: bool = True) -> bytes:
     then its packed sections, keyed 4 x its first value's stream
     position + 0, 1, 2. One sort by key and one copy (a byte gather, or a
     slice join when pieces are long) assemble the stream.
+
+    Unsigned, a negative value is written as its uint64 bit pattern, so
+    it decodes back to itself. The 32-bit pipeline would write DIRECT
+    runs with its 32-bit pattern instead (-1 decoded as 2**32 - 1 there
+    and as -1 in a SHORT_REPEAT run), so unsigned int32 input holding a
+    negative value is promoted too.
     """
     if vals.dtype == np.int32 and len(vals):
         v = np.ascontiguousarray(vals)
-        if int(v.max()) - int(v.min()) >= (1 << 31):
+        vmin = int(v.min())
+        if int(v.max()) - vmin >= (1 << 31) or (vmin < 0 and not signed):
             v = v.astype(np.int64)  # diffs would wrap in int32
     else:
         v = np.ascontiguousarray(vals, dtype=np.int64)

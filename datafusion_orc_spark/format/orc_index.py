@@ -95,10 +95,22 @@ def stripe_stats_from_metadata(buf: bytes) -> list[list[dict]]:
     return out
 
 
+INT64_MIN, INT64_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def open_ends(lo, hi) -> tuple:
+    """A prune bound with its open ends as None. An open end is written
+    as the int64 extreme (``prune_bounds_from_predicate``): no bound for
+    an integer column, but compared as a number it is a real one for a
+    double column and drops a stripe of 1e20s from ``d > 5``."""
+    return (None if lo == INT64_MIN else lo, None if hi == INT64_MAX else hi)
+
+
 def _bounds_may_match(stats: dict, lo, hi) -> bool:
     """Conservative: True unless the stats PROVE no value in [lo, hi]."""
     if not stats:
         return True
+    lo, hi = open_ends(lo, hi)
     mn, mx = stats.get("min"), stats.get("max")
     if mn is not None and hi is not None and mn > hi:
         return False

@@ -43,6 +43,7 @@ from datafusion_orc_spark.codecs.varint import (
     varint_decode_signed,
     varint_encode_signed,
 )
+from datafusion_orc_spark.format.orc_index import open_ends
 from datafusion_orc_spark.format.orc_reader import _validity_buffer
 
 FORMAT_VERSION = 2  # v2: runfor RUN_POS/EXC_POS switched to delta+bitpack
@@ -610,7 +611,13 @@ def prune_row_ranges(
             continue
         _rows, mins, maxs = bs
         n_blocks = max(n_blocks, len(mins))
-        ids = set(np.flatnonzero((maxs >= int(lo)) & (mins <= int(hi))).tolist())
+        lo, hi = open_ends(lo, hi)
+        keep = np.ones(len(mins), dtype=bool)
+        if lo is not None:
+            keep &= maxs >= int(lo)
+        if hi is not None:
+            keep &= mins <= int(hi)
+        ids = set(np.flatnonzero(keep).tolist())
         sel = ids if sel is None else (sel & ids)
     if sel is None or len(sel) == n_blocks:
         return None  # no index, or every block survives: whole-stripe decode

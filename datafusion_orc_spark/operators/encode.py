@@ -78,6 +78,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from datafusion_orc_spark.format.orc_index import INT64_MAX, INT64_MIN, open_ends
 from datafusion_orc_spark.format.stripe import decode_stripe, encode_stripe, prune_row_ranges
 from datafusion_orc_spark.sources.objectstore import LocalStore, resolve_store
 
@@ -599,7 +600,8 @@ def encode_files(
         # attempts of one task (speculative execution) could interleave
         # writes into the same path — refuse up front. Plain retries are
         # safe: they stage through an attempt-suffixed tmp + rename.
-        spec = spark.sparkContext.getConf().get("spark.speculation", "false")
+        # one key read: getConf() copies the whole SparkConf over py4j
+        spec = spark.sparkContext._conf.get("spark.speculation", "false")
         if (spec or "false").lower() == "true":
             raise ValueError(
                 "recycle_output=True is incompatible with speculative "
@@ -729,7 +731,6 @@ def roundtrip_files(
 
 
 _PRED_RE = None
-_INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
 
 
 def _tighten_bound(bounds: dict[str, tuple[int, int]], col: str, op: str, val: int) -> None:
@@ -737,10 +738,11 @@ def _tighten_bound(bounds: dict[str, tuple[int, int]], col: str, op: str, val: i
     {column: (lo, hi)} prune bounds. A strict comparison gives the
     inclusive bound (``x < 5`` -> hi 5): right for every numeric type
     (``hi = 4`` would drop a stripe of 4.5s) at the cost of at most one
-    extra block at the bound. An open end is the full int64 range: any
-    narrower sentinel would become a real bound and drop the stripes
-    whose values lie beyond it."""
-    lo, hi = bounds.get(col, (_INT64_MIN, _INT64_MAX))
+    extra block at the bound. An open end is the int64 extreme, which
+    every reader compares as unbounded (``open_ends``): a narrower
+    sentinel would become a real bound and drop the stripes whose values
+    lie beyond it."""
+    lo, hi = bounds.get(col, (INT64_MIN, INT64_MAX))
     if op[0] != "<":
         lo = max(lo, val)
     if op[0] != ">":
@@ -846,10 +848,13 @@ def _stripe_groups(
 
     ``prune``: a stripe with any blob row whose [vmin, vmax] misses its
     column's (lo, hi) bound is dropped, with its columns already held; a
-    NULL vmin (no integer stats) keeps it. This is the one stripe-prune
-    rule of every blob read, so a bound column must be ``expected``."""
+    NULL vmin (no integer stats) keeps it, and so does an open end. This
+    is the one stripe-prune rule of every blob read, so a bound column
+    must be ``expected``."""
     pending: dict[int, dict[str, memoryview]] = {}
     skipped: set[int] = set()
+    if prune:
+        prune = {c: open_ends(*b) for c, b in prune.items()}
     for b in batches:
         if not b.num_rows:
             continue
@@ -866,7 +871,7 @@ def _stripe_groups(
                 continue
             if prune and col in prune and vmins[i] is not None:
                 lo, hi = prune[col]
-                if vmaxs[i] < lo or vmins[i] > hi:
+                if (lo is not None and vmaxs[i] < lo) or (hi is not None and vmins[i] > hi):
                     skipped.add(sid)
                     pending.pop(sid, None)
                     continue

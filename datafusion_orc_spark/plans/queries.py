@@ -16,6 +16,19 @@ Sections:
 
 All Spark code is DataFrame/SQL (JVM-vectorized); Python only inside
 mapInArrow codec kernels.
+
+Sorted results the driver collects: an aggregate whose final group key
+has a fixed small domain (``l_returnflag``, ``l_returnflag,
+l_linestatus``, ``source``) ends in ``.coalesce(1).orderBy(keys)``.
+A global sort over many partitions plans a RangePartitioner sampling
+job, a range exchange and one sort task per partition for a handful of
+rows: 0.07-0.12 s of a 0.6-0.7 s query. Over ``Coalesce 1`` Spark
+plans no sort exchange: the partial rows cross one hash exchange and
+the final aggregate and the sort run in one task. The final aggregate
+merges the same partial buffers in the same map-output order, so the
+rows are bit-identical. Results that grow with the input (top-k,
+window ranks, band/bucket pairs, ``pack_sequences``) keep a plain
+``orderBy``: one task would serialize their sort.
 """
 
 from __future__ import annotations
@@ -102,6 +115,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
             F.count(F.lit(1)).alias("count_order"),
         )
+        .coalesce(1)
         .orderBy("l_returnflag", "l_linestatus")
     )
 
@@ -686,6 +700,7 @@ def q_roundtrip_lineitem_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ok_min").alias("min_ok"),
             F.max("ok_max").alias("max_ok"),
         )
+        .coalesce(1)
         .orderBy("l_returnflag")
     )
 
@@ -724,6 +739,7 @@ def q_roundtrip_tokens_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tok").alias("total_tokens"),
             F.sum("tok_sum").alias("token_value_sum"),
         )
+        .coalesce(1)
         .orderBy("source")
     )
 
@@ -761,8 +777,8 @@ def q_orc_scan_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         "SELECT l_returnflag, COUNT(*) AS n, SUM(l_quantity) AS sum_qty, "
         "ROUND(SUM(l_extendedprice), 2) AS sum_price "
-        "FROM lineitem_orc GROUP BY l_returnflag ORDER BY l_returnflag"
-    )
+        "FROM lineitem_orc GROUP BY l_returnflag"
+    ).coalesce(1).orderBy("l_returnflag")
 
 
 SQL_ORC_SCAN_AGG = """
@@ -808,8 +824,8 @@ def q_orc_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"SELECT l_returnflag, COUNT(*) AS n, CAST(SUM(l_quantity) AS BIGINT) AS sum_qty "
         f"FROM lineitem_orc_pruned "
         f"WHERE l_orderkey BETWEEN {_PRUNE_LO} AND {_PRUNE_HI} "
-        f"GROUP BY l_returnflag ORDER BY l_returnflag"
-    )
+        f"GROUP BY l_returnflag"
+    ).coalesce(1).orderBy("l_returnflag")
 
 
 SQL_ORC_PRUNED_SCAN = f"""
@@ -845,6 +861,7 @@ def q_roundtrip_datasource_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tok").alias("total_tokens"),
             F.min("doc_id").alias("first_doc"),
         )
+        .coalesce(1)
         .orderBy("source")
     )
 
@@ -922,6 +939,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_distinct_tok").alias("total_distinct_tokens"),
             F.round(F.avg("n_words"), 6).alias("avg_words"),
         )
+        .coalesce(1)
         .orderBy("source")
     )
 
@@ -1053,6 +1071,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("docs"),
             F.countDistinct("fp").alias("distinct_fp"),
         )
+        .coalesce(1)
         .orderBy("source")
     )
 
@@ -1080,6 +1099,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("h").alias("distinct_docs"),
             (F.count(F.lit(1)) - F.countDistinct("h")).alias("exact_dupes"),
         )
+        .coalesce(1)
         .orderBy("source")
     )
 
@@ -1158,6 +1178,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("docs"),
             F.countDistinct("simhash").alias("distinct_simhash"),
         )
+        .coalesce(1)
         .orderBy("source")
     )
 
@@ -2003,6 +2024,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").alias("kept_chars"),
             F.min("doc_id").alias("first_doc"),
         )
+        .coalesce(1)
         .orderBy("source")
     )
 
@@ -2105,6 +2127,7 @@ def q_scrub_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("num_n") > 0, 1).otherwise(0)).alias("docs_with_num"),
             F.sum("num_n").alias("nums"),
         )
+        .coalesce(1)
         .orderBy("source")
     )
 
@@ -2151,8 +2174,8 @@ def q_orc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(SUM(l_orderkey) AS BIGINT) AS sum_okey, "
         "SUM(l_quantity) AS sum_qty, "
         "ROUND(SUM(l_extendedprice), 2) AS sum_price "
-        "FROM lineitem_sink GROUP BY l_returnflag ORDER BY l_returnflag"
-    )
+        "FROM lineitem_sink GROUP BY l_returnflag"
+    ).coalesce(1).orderBy("l_returnflag")
 
 
 SQL_ORC_SINK_ROUNDTRIP = """
@@ -2431,6 +2454,7 @@ def q_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "dropped_contaminated"
             ),
         )
+        .coalesce(1)
         .orderBy("source")
     )
 
@@ -2521,6 +2545,7 @@ def q_streaming_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tok").alias("total_tokens"),
             F.sum("tok_sum").alias("token_value_sum"),
         )
+        .coalesce(1)
         .orderBy("source")
     )
 
@@ -2736,6 +2761,7 @@ def q_sink_files_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tok").alias("total_tokens"),
             F.sum("tok_sum").alias("token_value_sum"),
         )
+        .coalesce(1)
         .orderBy("source")
     )
 

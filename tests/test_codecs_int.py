@@ -168,6 +168,15 @@ def test_rlev2_unsigned_lengths():
     _roundtrip(v, signed=False)
 
 
+def test_rlev2_unsigned_int32_negatives_decode_alike():
+    """An unsigned int32 stream holding -1 in a SHORT_REPEAT run and in a
+    DIRECT run decoded as -1 and 2**32 - 1: it is written as the int64
+    stream of the same values, so both runs decode as -1."""
+    v = np.array([-1] * 10 + [3, 9, 1, 7, 2, -1, 5, 8, 0, 4], dtype=np.int32)
+    enc = _roundtrip(v, signed=False)
+    assert enc == rle_v2_encode(v.astype(np.int64), signed=False)
+
+
 def test_rlev2_empty_and_tiny():
     assert rle_v2_encode(np.array([], dtype=np.int64)) == b""
     for v in ([5], [5, 9], [5, 9, 2], [1, 1], [1, 1, 1]):

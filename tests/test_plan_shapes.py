@@ -25,6 +25,20 @@ def assert_range_task_frame(plan: str) -> None:
     assert "Exchange" not in plan, plan
 
 
+def assert_one_task_tail(plan: str) -> None:
+    """A sorted small aggregate's tail: the global ``Sort`` sits on
+    ``Coalesce 1`` over the final aggregate, the plan holds exactly one
+    Exchange (the hash exchange of the partial rows), and no range
+    exchange, so no RangePartitioner sampling job runs."""
+    import re
+
+    tree = plan.split("\n\n")[0]
+    assert re.search(r"\+- Sort \(\d+\)\n\s+\+- Coalesce \(\d+\)\n\s+\+- HashAggregate", tree), plan
+    assert re.search(r"^\(\d+\) Coalesce\n.*\nArguments: 1$", plan, flags=re.M), plan
+    assert len(re.findall(r"\+- Exchange \(\d+\)", tree)) == 1, plan
+    assert "rangepartitioning" not in plan, plan
+
+
 def test_filter_pushdown_reaches_scan(spark):
     df = (
         spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
@@ -194,6 +208,14 @@ def test_orc_scan_plan_has_no_exchange(spark, tmp_path):
     assert_range_task_frame(_plan(df))
     assert df.rdd.getNumPartitions() == 5  # one task per stripe split
     assert df.agg(F.sum("a")).collect()[0][0] == 5000 * 4999 // 2
+
+
+def test_orc_pruned_scan_tail_is_one_task(spark):
+    """The orc query sorts its per-flag result on the DataFrame, over
+    ``Coalesce 1``: its SQL has no ORDER BY, so no range exchange."""
+    from datafusion_orc_spark.plans.queries import q_orc_pruned_scan
+
+    assert_one_task_tail(_plan(q_orc_pruned_scan(spark, SF_DIR)))
 
 
 def test_quantized_emb_cache_released(spark):

@@ -179,18 +179,18 @@ def test_roundtrip_files_transform_multi_flush(spark, tmp_path):
 
 def test_fused_roundtrip_plan_shape(spark):
     """The fused plan must carry NO parquet scan (the python workers scan
-    row-group slices directly), exactly ONE MapInArrow, and no
-    data-bearing Exchange — the only exchanges sit after the per-task
-    partial aggregate (final agg + result sort over a few rows/task)."""
+    row-group slices directly), exactly ONE MapInArrow, and one
+    Exchange: the hash exchange of the per-task partial rows. The final
+    aggregate and the result sort run in one task over ``Coalesce 1``,
+    with no range exchange. sf0.01 plans 4 splits; sf0.001's single
+    split would need no exchange at all."""
     from datafusion_orc_spark.plans.queries import q_roundtrip_lineitem_fused
+    from tests.test_plan_shapes import _plan, assert_one_task_tail
 
-    df = q_roundtrip_lineitem_fused(spark, SF)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = _plan(q_roundtrip_lineitem_fused(spark, os.path.join(os.path.dirname(SF), "sf0.01")))
     assert "Scan parquet" not in plan
     assert plan.count("MapInArrow") == 2  # one node + its detail block
-    assert plan.count("Exchange") <= 4  # node + detail each for agg/sort only
+    assert_one_task_tail(plan)
 
 
 def test_roundtrip_files_plan_is_a_range_task_frame(spark):

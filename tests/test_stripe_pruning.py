@@ -416,3 +416,33 @@ def test_strict_bound_keeps_non_integer_stripe(spark, tmp_path):
     write_orc(pa.table({"d": np.r_[np.full(1000, 4.5), np.full(1000, 9.5)]}), path, stripe_rows=1000)
     assert OrcReader(path).read(prune=prune_bounds_from_predicate("d < 5")).num_rows == 1000
     assert read_orc_distributed(spark, path, where="d < 5").count() == 1000
+
+
+@pytest.mark.parametrize("stripe_rows,stride", [(500, None), (1000, 500)])
+@pytest.mark.parametrize("where", ["d > 5", "d < 5"])
+def test_open_end_keeps_doubles_beyond_int64(tmp_path, where, stripe_rows, stride):
+    """An open end compares as unbounded: ``d > 5`` keeps the 1e20s and
+    ``d < 5`` the -1e20s, which lie beyond the int64 extreme the open end
+    is written as. Stripe stats prune the one-stripe-per-value layout,
+    row-group stats the one-stripe, two-row-group layout."""
+    from datafusion_orc_spark.format.orc_reader import OrcReader
+    from datafusion_orc_spark.format.orc_writer import write_orc
+    from datafusion_orc_spark.operators.encode import _merge_where
+
+    path = str(tmp_path / "d.orc")
+    d = np.r_[np.full(500, 1e20), np.full(500, -1e20)]
+    write_orc(pa.table({"d": d}), path, stripe_rows=stripe_rows, row_index_stride=stride)
+    got = pa.Table.from_batches(OrcReader(path).iter_stripes(prune=_merge_where(None, where, ["d"])))
+    assert got.num_rows == 500
+    assert set(got.column("d").to_pylist()) == {1e20 if ">" in where else -1e20}
+
+
+def test_prune_row_ranges_open_ends():
+    """The blob block prune reads an int64 extreme or None as no bound."""
+    from datafusion_orc_spark.format import stripe as st
+
+    n = 3 * st.SUB_BLOCK_ROWS
+    blob, _ = st.encode_column(pa.array(np.arange(n, dtype=np.int64)))
+    hi = prune_bounds_from_predicate(f"k >= {n - 1}")["k"][1]
+    assert st.prune_row_ranges({"k": blob}, {"k": (n - 1, hi)}) == [(2 * st.SUB_BLOCK_ROWS, n)]
+    assert st.prune_row_ranges({"k": blob}, {"k": (None, 0)}) == [(0, st.SUB_BLOCK_ROWS)]
