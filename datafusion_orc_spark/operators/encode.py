@@ -11,9 +11,13 @@ are composed from one copy of each piece:
 - ``_list_inputs`` / ``_open_parquet``: glob, directory or single-path
   listing and parquet opens through the object-store seam
   (sources/objectstore.py, the reference's ``ObjectStoreReader``);
-- ``_split_frame``: driver-side planning from parquet footers
-  (``_plan_row_splits``) over a ``spark.range`` ``_task_frame``;
-  ``_task_splits`` and ``_read_range`` stream a task's row ranges;
+- ``_fetch_footers`` -> ``_plan_row_splits`` -> ``_task_frame``: the
+  one scan planner, for parquet (``_split_frame``: row groups cut at
+  stripe_rows) and ORC (sources/orc_source.py ``plan_splits``: files
+  cut at stripes) alike: footers read through a bounded pool, one split
+  planner, one ``spark.range`` frame over ``min(target, splits)``
+  partitions; ``_task_splits`` and ``_read_range`` stream a task's row
+  ranges;
 - ``_stripes``: re-slices any batch stream into stripes of
   ``stripe_rows`` rows (the reference's scan batch unit,
   file_source.rs:31, and the ORC stripe, SURVEY.md §1.4/§1.5);
@@ -118,6 +122,8 @@ _BLOB_PA_SCHEMA = pa.schema(
 
 DEFAULT_STRIPE_ROWS = 32768
 _BYTES_PER_FILE = 256 * 1024 * 1024
+# concurrent footer reads per planned scan (``_fetch_footers``)
+META_FETCH_CONCURRENCY = 8
 # decode_to_files output: parquet dictionary encoding and page statistics
 # on a high-entropy array<int32> token column cost ~2x the whole write
 # (measured 620 -> 320 ms per 16k-row group), for stats no reader of a
@@ -200,6 +206,17 @@ def _open_parquet(path: str) -> pq.ParquetFile:
     return pq.ParquetFile(p if isinstance(store, LocalStore) else store.open_input(p))
 
 
+def _fetch_footers(paths: list[str], fetch) -> list:
+    """``fetch(path)`` for every path, in order, through a bounded thread
+    pool: footer reads are small ranged reads, so a few threads hide IO
+    latency over many files (the reference's meta_fetch_concurrency,
+    file_format.rs:83-88)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(min(META_FETCH_CONCURRENCY, max(1, len(paths)))) as ex:
+        return list(ex.map(fetch, paths))
+
+
 def _blob_batch(stripe_id: int, part_id: int, blobs: dict[str, bytes], stats: list[dict]) -> pa.RecordBatch:
     return pa.RecordBatch.from_pydict(
         {
@@ -279,12 +296,16 @@ def _encode_stream(
 
 
 def _plan_row_splits(
-    rg_sizes: list[tuple[str, int, int]], target: int, stripe_rows: int
+    rg_sizes: list[tuple[str, int, int]], target: int, quantum: int
 ) -> list[tuple[str, int, int, int]]:
-    """Split parquet row groups ``(path, rg, n_rows)`` into
-    ``(path, rg, row_start, row_end)`` task ranges for ``target`` tasks.
+    """The one split planner: split groups ``(path, group, n_rows)`` into
+    ``(path, group, row_start, row_end)`` task ranges for ``target``
+    tasks, cut at multiples of ``quantum`` rows (a "stripe"). A parquet
+    scan passes its row groups with ``quantum=stripe_rows``; an ORC scan
+    passes each file as one group of ``n`` stripes with ``quantum=1``, so
+    its ranges are stripe ranges.
 
-    At least ``target`` row groups: one split each. Fewer: stripe-aligned
+    At least ``target`` groups: one split each. Fewer: stripe-aligned
     row-range subdivision into exactly ``min(target, total stripes)``
     splits. Two balance rules (measured on the 6-row-group sf1.0 shape,
     where the old round()-per-row-group planner made 36 splits for
@@ -311,7 +332,7 @@ def _plan_row_splits(
     if len(rg_sizes) >= target:
         return [(p, rg, 0, n) for p, rg, n in rg_sizes]
     total_rows = sum(n for _, _, n in rg_sizes)
-    n_stripes = {(p, rg): max(1, (n + stripe_rows - 1) // stripe_rows) for p, rg, n in rg_sizes}
+    n_stripes = {(p, rg): max(1, (n + quantum - 1) // quantum) for p, rg, n in rg_sizes}
     budget = min(target, sum(n_stripes.values()))
     quota = {(p, rg): min(n_stripes[(p, rg)], budget * n / max(1, total_rows)) for p, rg, n in rg_sizes}
     k_of = {k2: max(1, int(q)) for k2, q in quota.items()}
@@ -341,20 +362,28 @@ def _plan_row_splits(
             per[i] += 1
         pos = 0
         for c in per:
-            s, e = pos * stripe_rows, min(n, (pos + c) * stripe_rows)
+            s, e = pos * quantum, min(n, (pos + c) * quantum)
             splits.append((p, rg, s, e))
             pos += c
     return splits
 
 
-def _task_frame(spark, n_splits: int, n_parts: int) -> DataFrame:
-    """``spark.range`` ids over ``n_parts`` partitions, partition ``i``
-    holding ``[i*n/p, (i+1)*n/p)``; the split list rides in the task
-    closure (``_task_splits``). Not a parallelize()d split list: that
-    frame runs a second Python worker per task to make its JVM rows."""
-    sdf = spark.range(0, n_splits, 1, n_parts)
+def _task_frame(spark, splits: list, target: int) -> tuple[DataFrame, list, int]:
+    """The task frame of a planned scan: ``spark.range`` ids over
+    ``min(target, len(splits))`` partitions, partition ``i`` holding ids
+    ``[i*n/p, (i+1)*n/p)``; returns it with the splits in id order and
+    the partition count. With more splits than partitions the splits are
+    reordered strided, so each contiguous id range gets a round-robin
+    sample of files, balancing skewed file sizes without a shuffle. The
+    split list rides in the task closure (``_task_splits``), not in a
+    parallelize()d frame: that frame runs a second Python worker per task
+    to make its JVM rows."""
+    n_parts = max(1, min(target, len(splits)))
+    if n_parts < len(splits):
+        splits = [splits[i] for k in range(n_parts) for i in range(k, len(splits), n_parts)]
+    sdf = spark.range(0, len(splits), 1, n_parts)
     _ensure_workers_can_import(sdf)
-    return sdf
+    return sdf, splits, n_parts
 
 
 def _task_splits(batches: Iterator[pa.RecordBatch], splits: list) -> Iterator[tuple]:
@@ -367,31 +396,27 @@ def _task_splits(batches: Iterator[pa.RecordBatch], splits: list) -> Iterator[tu
 def _split_frame(
     spark, path_or_glob, stripe_rows: int, target: int | None, columns: list[str] | None = None
 ) -> tuple[DataFrame, list, int]:
-    """The task frame of a parquet scan, its ``(path, rg, row_start,
+    """The ``_task_frame`` of a parquet scan over ``(path, rg, row_start,
     row_end)`` splits, planned from footers alone (``target=None``: one
-    per non-empty row group), and its ``min(target, splits)`` partitions.
-    Raises ValueError naming any of ``columns`` missing from a file's
-    schema: a parquet scan would drop such a name without an error."""
+    per non-empty row group). Raises ValueError naming any of ``columns``
+    missing from a file's schema: a parquet scan would drop such a name
+    without an error."""
+    paths = _list_inputs(path_or_glob, ".parquet")
+
+    def footer(p):
+        pf = _open_parquet(p)
+        md = pf.metadata
+        return pf.schema_arrow.names, [md.row_group(rg).num_rows for rg in range(md.num_row_groups)]
+
     rg_sizes: list[tuple[str, int, int]] = []
     unknown: set[str] = set()
-    for p in _list_inputs(path_or_glob, ".parquet"):
-        pf = _open_parquet(p)
-        if columns is not None:
-            unknown |= set(columns) - set(pf.schema_arrow.names)
-        md = pf.metadata
-        for rg in range(md.num_row_groups):
-            if md.row_group(rg).num_rows:
-                rg_sizes.append((p, rg, md.row_group(rg).num_rows))
+    for p, (names, rows) in zip(paths, _fetch_footers(paths, footer)):
+        unknown |= set(columns or ()) - set(names)
+        rg_sizes += [(p, rg, n) for rg, n in enumerate(rows) if n]
     if unknown:
         raise ValueError(f"encode: unknown columns {sorted(unknown)}")
     target = target or len(rg_sizes)
-    splits = _plan_row_splits(rg_sizes, target, stripe_rows)
-    n_parts = max(1, min(target, len(splits)))
-    if n_parts < len(splits):
-        # strided reorder: each contiguous id range gets a round-robin
-        # sample of files, balancing skewed file sizes without a shuffle
-        splits = [splits[i] for k in range(n_parts) for i in range(k, len(splits), n_parts)]
-    return _task_frame(spark, len(splits), n_parts), splits, n_parts
+    return _task_frame(spark, _plan_row_splits(rg_sizes, target, stripe_rows), target)
 
 
 def _read_range(

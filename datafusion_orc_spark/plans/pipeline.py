@@ -24,11 +24,13 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_orc_spark.operators.encode import DEFAULT_STRIPE_ROWS, encode_table
+from datafusion_orc_spark.sources.objectstore import resolve_store
 
 
 def salted_repartition(df: DataFrame, n_partitions: int, key: str = "doc_id") -> DataFrame:
@@ -41,15 +43,27 @@ def salted_repartition(df: DataFrame, n_partitions: int, key: str = "doc_id") ->
 
 
 def _manifest_path(output_dir: str) -> str:
-    return os.path.join(output_dir, "_MANIFEST.json")
+    return f"{output_dir.rstrip('/')}/_MANIFEST.json"
 
 
 def read_manifest(output_dir: str) -> dict:
-    path = _manifest_path(output_dir)
-    if not os.path.exists(path):
-        return {"snapshot_id": None, "chunks": {}}
-    with open(path) as f:
-        return json.load(f)
+    """The ``_MANIFEST.json`` of a job's output directory, on any store
+    (sources/objectstore.py); ``{}`` when there is none."""
+    store, norm = resolve_store(output_dir)
+    path = _manifest_path(norm)
+    if not store.exists(path):
+        return {}
+    with store.open_input(path) as f:
+        return json.loads(f.read())
+
+
+def chunk_dirs(output_dir: str, manifest: dict) -> list[str]:
+    """The committed ``chunk=<i>`` directories of a job's output, in
+    chunk order. A directory whose manifest lists no chunks (or that has
+    no manifest) is its own one blob directory."""
+    if "chunks" not in manifest:
+        return [output_dir]
+    return [f"{output_dir.rstrip('/')}/chunk={c}" for c in sorted(manifest["chunks"])]
 
 
 def _write_manifest_atomic(output_dir: str, manifest: dict) -> None:
@@ -57,6 +71,69 @@ def _write_manifest_atomic(output_dir: str, manifest: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
     os.replace(tmp, _manifest_path(output_dir))  # atomic commit
+
+
+def _run_chunks(
+    output_dir: str,
+    n_chunks: int,
+    input_snapshot_id: str | None,
+    schema_json: Callable[[], str],
+    encode_chunk: Callable[[int, str, int], DataFrame],
+    input_files: list[list[str]] | None = None,
+) -> dict:
+    """Encode and commit every chunk the manifest of ``output_dir`` does
+    not list yet; returns the final manifest.
+
+    ``encode_chunk(chunk, chunk_dir, job_token)`` writes one chunk's blobs
+    to ``chunk_dir`` and returns a DataFrame of their stats rows. The job
+    token derives from the snapshot id, so a resumed job reproduces each
+    chunk's stripe_ids. The rows' lineage aggregate (plus
+    ``input_files[chunk]`` when given) is the chunk's manifest entry,
+    committed atomically. ``schema_json()`` is read for a new manifest
+    only.
+    """
+    os.makedirs(output_dir, exist_ok=True)
+    manifest = read_manifest(output_dir)
+    if manifest.get("snapshot_id") is None:
+        manifest = {
+            "snapshot_id": input_snapshot_id or uuid.uuid4().hex,
+            "n_chunks": n_chunks,
+            "schema_json": schema_json(),  # for the stripeblob DataSource
+            "chunks": {},
+        }
+        _write_manifest_atomic(output_dir, manifest)
+    assert manifest.get("n_chunks", n_chunks) == n_chunks, "chunking changed across resume"
+    snapshot = manifest["snapshot_id"]
+    head = snapshot[:8]
+    for chunk in range(n_chunks):
+        key = str(chunk)
+        if key in manifest["chunks"]:
+            continue  # resume: already committed
+        t0 = time.time()
+        job_token = (int(head, 16) ^ chunk) & 0xFFFF if all(c in "0123456789abcdef" for c in head) else chunk
+        stats = encode_chunk(chunk, os.path.join(output_dir, f"chunk={chunk}"), job_token)
+        agg = stats.agg(
+            F.count(F.lit(1)).alias("blob_rows"),
+            F.countDistinct("stripe_id").alias("stripes"),
+            F.sum("raw_bytes").alias("raw_bytes"),
+            F.sum("enc_bytes").alias("enc_bytes"),
+            F.sum(F.col("crc32").cast("decimal(38,0)")).alias("crc_sum"),
+        ).collect()[0]
+        entry = {"input_snapshot_id": snapshot}
+        if input_files is not None:
+            entry["input_files"] = input_files[chunk]
+        manifest["chunks"][key] = {
+            **entry,
+            "blob_rows": agg["blob_rows"],
+            "stripes": agg["stripes"],
+            "raw_bytes": int(agg["raw_bytes"] or 0),
+            "enc_bytes": int(agg["enc_bytes"] or 0),
+            "crc_sum": str(agg["crc_sum"]),
+            "wall_sec": round(time.time() - t0, 3),
+            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        }
+        _write_manifest_atomic(output_dir, manifest)
+    return manifest
 
 
 def encode_job(
@@ -77,55 +154,20 @@ def encode_job(
     ``output_dir/chunk=i``, and committed to the manifest atomically.
     Returns the final manifest.
     """
-    os.makedirs(output_dir, exist_ok=True)
-    manifest = read_manifest(output_dir)
-    if manifest["snapshot_id"] is None:
-        manifest["snapshot_id"] = input_snapshot_id or uuid.uuid4().hex
-        manifest["n_chunks"] = n_chunks
-        manifest["schema_json"] = df.schema.json()  # for the stripeblob DataSource
-        _write_manifest_atomic(output_dir, manifest)
-    assert manifest.get("n_chunks", n_chunks) == n_chunks, "n_chunks changed across resume"
+    schema = df.schema
+    df = df.withColumn("_chunk", F.pmod(F.xxhash64(F.col(chunk_key)), F.lit(n_chunks)))
 
-    chunk_col = F.pmod(F.xxhash64(F.col(chunk_key)), F.lit(n_chunks))
-    df = df.withColumn("_chunk", chunk_col)
-
-    for chunk in range(n_chunks):
-        key = str(chunk)
-        if key in manifest["chunks"]:
-            continue  # resume: already committed
-        t0 = time.time()
+    def encode_chunk(chunk, chunk_dir, job_token):
         part = salted_repartition(
             df.filter(F.col("_chunk") == chunk).drop("_chunk"),
             partitions_per_chunk,
             key=chunk_key,
         )
-        job_token = (int(manifest["snapshot_id"][:8], 16) ^ chunk) & 0xFFFF if all(
-            c in "0123456789abcdef" for c in manifest["snapshot_id"][:8]
-        ) else chunk
-        blobs = encode_table(part, stripe_rows=stripe_rows, job_token=job_token)
-        chunk_dir = os.path.join(output_dir, f"chunk={chunk}")
-        blobs.write.mode("overwrite").parquet(chunk_dir)
+        encode_table(part, stripe_rows=stripe_rows, job_token=job_token).write.mode("overwrite").parquet(chunk_dir)
         # lineage record from the written blobs (read back: cheap metadata agg)
-        written = spark.read.parquet(chunk_dir)
-        agg = written.agg(
-            F.count(F.lit(1)).alias("blob_rows"),
-            F.countDistinct("stripe_id").alias("stripes"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-            F.sum(F.col("crc32").cast("decimal(38,0)")).alias("crc_sum"),
-        ).collect()[0]
-        manifest["chunks"][key] = {
-            "input_snapshot_id": manifest["snapshot_id"],
-            "blob_rows": agg["blob_rows"],
-            "stripes": agg["stripes"],
-            "raw_bytes": int(agg["raw_bytes"] or 0),
-            "enc_bytes": int(agg["enc_bytes"] or 0),
-            "crc_sum": str(agg["crc_sum"]),
-            "wall_sec": round(time.time() - t0, 3),
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        _write_manifest_atomic(output_dir, manifest)
-    return manifest
+        return spark.read.parquet(chunk_dir)
+
+    return _run_chunks(output_dir, n_chunks, input_snapshot_id, schema.json, encode_chunk)
 
 
 def encode_files_job(
@@ -139,74 +181,36 @@ def encode_files_job(
     """File-granular resumable encode: the 100-TB fast path.
 
     Same manifest/checkpoint semantics as :func:`encode_job`, but chunks
-    are groups of input parquet FILES and each chunk runs through
-    ``encode_files`` — python workers scan row groups directly with
-    pyarrow and write blob part files from inside the task, so row data
-    never crosses the JVM. Skew handling is structural here: tasks are
-    row-group ranges (uniform bytes) rather than key-hash partitions, so
-    a skewed ``source`` key cannot unbalance them; use :func:`encode_job`
-    when the input is an arbitrary DataFrame instead of files.
+    are groups of input parquet FILES (``input_dir`` listed through the
+    object-store seam) and each chunk runs through ``encode_files`` —
+    python workers scan row groups directly with pyarrow and write blob
+    part files from inside the task, so row data never crosses the JVM.
+    Skew handling is structural here: tasks are row-group ranges
+    (uniform bytes) rather than key-hash partitions, so a skewed
+    ``source`` key cannot unbalance them; use :func:`encode_job` when the
+    input is an arbitrary DataFrame instead of files.
     """
-    import glob as _glob
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    from datafusion_orc_spark.operators.encode import encode_files
+    from datafusion_orc_spark.operators.encode import _list_inputs, _open_parquet, encode_files
 
-    paths = sorted(_glob.glob(os.path.join(input_dir, "*.parquet")))
-    if not paths:
-        raise FileNotFoundError(input_dir)
+    paths = _list_inputs(input_dir, ".parquet")
     chunks = [paths[i : i + files_per_chunk] for i in range(0, len(paths), files_per_chunk)]
 
-    os.makedirs(output_dir, exist_ok=True)
-    manifest = read_manifest(output_dir)
-    if manifest["snapshot_id"] is None:
-        from pyspark.sql.pandas.types import from_arrow_schema
+    def encode_chunk(chunk, chunk_dir, job_token):
+        return encode_files(spark, chunks[chunk], stripe_rows=stripe_rows, job_token=job_token, output_dir=chunk_dir)
 
-        import pyarrow.parquet as pq
-
-        manifest["snapshot_id"] = input_snapshot_id or uuid.uuid4().hex
-        manifest["n_chunks"] = len(chunks)
-        manifest["schema_json"] = from_arrow_schema(pq.read_schema(paths[0])).json()
-        _write_manifest_atomic(output_dir, manifest)
-    assert manifest.get("n_chunks") == len(chunks), "chunking changed across resume"
-
-    for chunk, chunk_paths in enumerate(chunks):
-        key = str(chunk)
-        if key in manifest["chunks"]:
-            continue  # resume: already committed
-        t0 = time.time()
-        job_token = (int(manifest["snapshot_id"][:8], 16) ^ chunk) & 0xFFFF if all(
-            c in "0123456789abcdef" for c in manifest["snapshot_id"][:8]
-        ) else chunk
-        chunk_dir = os.path.join(output_dir, f"chunk={chunk}")
-        stats = encode_files(
-            spark, chunk_paths, stripe_rows=stripe_rows,
-            job_token=job_token, output_dir=chunk_dir,
-        )
-        agg = stats.agg(
-            F.count(F.lit(1)).alias("blob_rows"),
-            F.countDistinct("stripe_id").alias("stripes"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-            F.sum(F.col("crc32").cast("decimal(38,0)")).alias("crc_sum"),
-        ).collect()[0]
-        manifest["chunks"][key] = {
-            "input_snapshot_id": manifest["snapshot_id"],
-            "input_files": chunk_paths,
-            "blob_rows": agg["blob_rows"],
-            "stripes": agg["stripes"],
-            "raw_bytes": int(agg["raw_bytes"] or 0),
-            "enc_bytes": int(agg["enc_bytes"] or 0),
-            "crc_sum": str(agg["crc_sum"]),
-            "wall_sec": round(time.time() - t0, 3),
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        _write_manifest_atomic(output_dir, manifest)
-    return manifest
+    return _run_chunks(
+        output_dir,
+        len(chunks),
+        input_snapshot_id,
+        lambda: from_arrow_schema(_open_parquet(paths[0]).schema_arrow).json(),
+        encode_chunk,
+        chunks,
+    )
 
 
 def read_encoded(spark: SparkSession, output_dir: str) -> DataFrame:
     """Blob table across all committed chunks (metadata-only planning —
     the EP3 analogue, SURVEY.md §3)."""
-    manifest = read_manifest(output_dir)
-    paths = [os.path.join(output_dir, f"chunk={c}") for c in sorted(manifest["chunks"])]
-    return spark.read.parquet(*paths)
+    return spark.read.parquet(*chunk_dirs(output_dir, read_manifest(output_dir)))

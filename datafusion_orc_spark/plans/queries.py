@@ -33,11 +33,14 @@ window ranks, band/bucket pairs, ``pack_sequences``) keep a plain
 
 from __future__ import annotations
 
+import hashlib
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_orc_spark import FORMAT_VERSION
 from datafusion_orc_spark.functions import dialect as dl
 
 SPARK, DUCK = 0, 1
@@ -48,6 +51,15 @@ STOPWORDS_FR = ["le", "la", "et", "les", "des", "est", "un", "une"]
 
 
 _TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
+
+
+def _fixture_dir(sf_dir: str, kind: str | None, prefix: str) -> str:
+    """The temp-dir path of a query's materialized fixture, keyed on the
+    scale-factor directory, the blob format version and ``kind``, so a
+    changed format or input gets a fresh directory and an existing one is
+    reused."""
+    key = f"{sf_dir}:v{FORMAT_VERSION}" + (f":{kind}" if kind else "")
+    return f"{tempfile.gettempdir()}/dos_{prefix}_{hashlib.md5(key.encode()).hexdigest()[:8]}"
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -758,18 +770,14 @@ def q_orc_scan_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's pure-python ORC reader scans it distributed
     (one task per file), SQL aggregates over the temp view; oracle =
     the same aggregate on the raw parquet."""
-    import hashlib
     import os
-    import tempfile
 
-    from datafusion_orc_spark import FORMAT_VERSION
     from datafusion_orc_spark.sources.orc_source import read_orc_distributed
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag"
     )
-    tag = hashlib.md5(f"{sf_dir}:v{FORMAT_VERSION}".encode()).hexdigest()[:8]
-    out = f"{tempfile.gettempdir()}/dos_orc_scan_{tag}"
+    out = _fixture_dir(sf_dir, None, "orc_scan")
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         li.repartition(4).write.mode("overwrite").option("compression", "snappy").orc(out)
     df = read_orc_distributed(spark, f"{out}/*.orc")
@@ -798,18 +806,14 @@ def q_orc_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact predicate is re-applied on the returned rows, so the
     result matches the oracle bit-for-bit regardless of how much the
     stats pruned."""
-    import hashlib
     import os
-    import tempfile
 
-    from datafusion_orc_spark import FORMAT_VERSION
     from datafusion_orc_spark.sources.orc_source import read_orc_distributed
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag"
     )
-    tag = hashlib.md5(f"{sf_dir}:v{FORMAT_VERSION}:pruned".encode()).hexdigest()[:8]
-    out = f"{tempfile.gettempdir()}/dos_orc_pruned_{tag}"
+    out = _fixture_dir(sf_dir, "pruned", "orc_pruned")
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         # sort by the prune key so ORC-Java's stripe/row-group stats are
         # selective — the layout a real ingest pipeline would produce
@@ -840,17 +844,12 @@ def q_roundtrip_datasource_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full storage-layer round-trip through the `stripeblob` DataSource:
     tokenize -> resumable encode_job to disk -> spark.read.format(
     "stripeblob") -> aggregate. Oracle recomputes from raw text."""
-    import hashlib
-    import tempfile
-
-    from datafusion_orc_spark import FORMAT_VERSION
     from datafusion_orc_spark.plans.pipeline import encode_job
     from datafusion_orc_spark.sources.stripeblob_datasource import register
     from datafusion_orc_spark.sources.tokens import tokenized_sequences
 
     seqs = tokenized_sequences(spark, sf_dir)
-    tag = hashlib.md5(f"{sf_dir}:v{FORMAT_VERSION}".encode()).hexdigest()[:8]
-    out = f"{tempfile.gettempdir()}/dos_stripeblob_{tag}"
+    out = _fixture_dir(sf_dir, None, "stripeblob")
     encode_job(spark, seqs, out, n_chunks=2, partitions_per_chunk=4, stripe_rows=2048)
     register(spark)
     dec = spark.read.format("stripeblob").load(out)
@@ -2148,19 +2147,15 @@ def q_orc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's distributed reader -> aggregate. Oracle = the same
     aggregate on the raw parquet, so the whole write+read path must be
     value-exact."""
-    import hashlib
     import os
-    import tempfile
 
-    from datafusion_orc_spark import FORMAT_VERSION
     from datafusion_orc_spark.sources.orc_sink import write_orc_distributed
     from datafusion_orc_spark.sources.orc_source import read_orc_distributed
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity", "l_extendedprice", "l_returnflag"
     )
-    tag = hashlib.md5(f"{sf_dir}:v{FORMAT_VERSION}:sink".encode()).hexdigest()[:8]
-    out = f"{tempfile.gettempdir()}/dos_orc_sink_{tag}"
+    out = _fixture_dir(sf_dir, "sink", "orc_sink")
     if not os.path.exists(os.path.join(out, "_DONE")):
         stats = write_orc_distributed(
             li.repartition(4), out, stripe_rows=16384, compression="snappy"
@@ -2200,11 +2195,8 @@ def q_orc_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result is value-exact regardless of pruning. Oracle = the same
     lookup on the raw parquet. The probed key is MAX(l_orderkey) —
     present at every SF, computed identically by both dialects."""
-    import hashlib
     import os
-    import tempfile
 
-    from datafusion_orc_spark import FORMAT_VERSION
     from datafusion_orc_spark.sources.orc_sink import write_orc_distributed
     from datafusion_orc_spark.sources.orc_source import read_orc_distributed
 
@@ -2212,8 +2204,7 @@ def q_orc_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_linenumber", "l_quantity"
     )
     key = li.agg(F.max("l_orderkey")).collect()[0][0]
-    tag = hashlib.md5(f"{sf_dir}:v{FORMAT_VERSION}:bloom".encode()).hexdigest()[:8]
-    out = f"{tempfile.gettempdir()}/dos_orc_bloom_{tag}"
+    out = _fixture_dir(sf_dir, "bloom", "orc_bloom")
     if not os.path.exists(os.path.join(out, "_DONE")):
         stats = write_orc_distributed(
             li.repartition(2), out, stripe_rows=16384, compression="snappy",
@@ -2503,19 +2494,15 @@ def q_streaming_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     only if the full streaming path — file-source listing, checkpointed
     batch ids, per-batch decode, append sink — reproduces every token
     bit-identically."""
-    import hashlib
     import os
     import shutil
-    import tempfile
 
-    from datafusion_orc_spark import FORMAT_VERSION
     from datafusion_orc_spark.operators.encode import encode_table
     from datafusion_orc_spark.sources.tokens import tokenized_sequences
     from datafusion_orc_spark.streaming.incremental import start_incremental_decode
 
     seqs = tokenized_sequences(spark, sf_dir).repartition(8)
-    tag = hashlib.md5(f"{sf_dir}:v{FORMAT_VERSION}:stream_rt".encode()).hexdigest()[:8]
-    root = f"{tempfile.gettempdir()}/dos_stream_rt_{tag}"
+    root = _fixture_dir(sf_dir, "stream_rt", "stream_rt")
     blob_dir, out_dir, ckpt = f"{root}/blobs", f"{root}/decoded", f"{root}/ckpt"
     done = f"{root}/_DONE"
     if not os.path.exists(done):
@@ -2682,19 +2669,15 @@ def q_orc_string_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-applied on decoded rows. The probed key is the MAX doc_id — the
     lpad re-keying makes lexicographic max == numeric max, so both
     dialects compute the same needle."""
-    import hashlib
     import os
-    import tempfile
 
-    from datafusion_orc_spark import FORMAT_VERSION
     from datafusion_orc_spark.sources.orc_sink import write_orc_distributed
     from datafusion_orc_spark.sources.orc_source import read_orc_distributed
     from datafusion_orc_spark.sources.tokens import tokenized_sequences
 
     seqs = tokenized_sequences(spark, sf_dir).select("doc_id", "n_tok", "source")
     key = seqs.agg(F.max("doc_id")).collect()[0][0]
-    tag = hashlib.md5(f"{sf_dir}:v{FORMAT_VERSION}:strbloom".encode()).hexdigest()[:8]
-    out = f"{tempfile.gettempdir()}/dos_orc_strbloom_{tag}"
+    out = _fixture_dir(sf_dir, "strbloom", "orc_strbloom")
     if not os.path.exists(os.path.join(out, "_DONE")):
         stats = write_orc_distributed(
             seqs.repartition(2), out, stripe_rows=16384, compression="snappy",
@@ -2729,18 +2712,14 @@ def q_sink_files_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     source. Green iff the full write path — attempt-fenced tmp+rename,
     per-stripe row groups, byte rolling — reproduces every token
     bit-identically. Oracle = SQL_ROUNDTRIP_TOKENS_AGG."""
-    import hashlib
     import os
     import shutil
-    import tempfile
 
-    from datafusion_orc_spark import FORMAT_VERSION
     from datafusion_orc_spark.operators.encode import decode_to_files, encode_table
     from datafusion_orc_spark.sources.tokens import tokenized_sequences
 
     seqs = tokenized_sequences(spark, sf_dir).repartition(8)
-    tag = hashlib.md5(f"{sf_dir}:v{FORMAT_VERSION}:sinkfiles".encode()).hexdigest()[:8]
-    out = f"{tempfile.gettempdir()}/dos_sink_files_{tag}"
+    out = _fixture_dir(sf_dir, "sinkfiles", "sink_files")
     done = f"{out}/_DONE"
     if not os.path.exists(done):
         shutil.rmtree(out, ignore_errors=True)

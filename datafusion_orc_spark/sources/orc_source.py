@@ -5,10 +5,12 @@ reference plugs a per-file ORC->Arrow opener into DataFusion's scan
 (`OrcOpener::open`, src/physical_exec.rs:57-91; one `FileOpenFuture`
 per `PartitionedFile`, byte-range splits via `with_file_byte_range`,
 physical_exec.rs:79-82); here the driver reads only file TAILS (schema
-+ stripe directory), plans one Spark task per stripe-range, and each
-task streams per-stripe Arrow record batches out of ``mapInArrow`` —
-stripe-level parallelism, ranged reads, no whole-file materialization,
-no shuffle.
++ stripe directory) through a bounded footer pool, plans stripe ranges
+with the engine's one split planner (the parquet scan's
+``_plan_row_splits``: each file one group, the stripe the unit,
+``defaultParallelism`` the target), and each task streams per-stripe
+Arrow record batches out of ``mapInArrow`` — stripe-level parallelism,
+ranged reads, no whole-file materialization, no shuffle.
 
 Schema handling mirrors `file_format.rs:90-103` (`Schema::try_merge`
 over path-sorted files): the merged schema is the field union in
@@ -24,10 +26,6 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 
-# split planning: pack contiguous stripes of one file into a task until
-# the task holds ~this many (compressed) bytes — the Spark-side analogue
-# of spark.sql.files.maxPartitionBytes for our scan
-DEFAULT_SPLIT_BYTES = 128 * 1024 * 1024
 DEFAULT_BATCH_ROWS = 8192
 
 
@@ -76,62 +74,42 @@ def merge_schemas(schemas: list[pa.Schema]) -> pa.Schema:
     return pa.schema(list(fields.values()))
 
 
-# bounded driver-side metadata concurrency (the reference's
-# meta_fetch_concurrency, file_format.rs:83-88): footer reads are tiny
-# ranged reads, so a small thread pool hides IO latency over many files
-META_FETCH_CONCURRENCY = 8
+def plan_splits(paths: list[str], target: int, opener=None):
+    """Tail-read every file (metadata only, through the footer pool),
+    return (splits, merged_schema).
 
-
-def plan_splits(paths: list[str], split_bytes: int = DEFAULT_SPLIT_BYTES, opener=None):
-    """Tail-read every file (metadata only, concurrently), return
-    (splits, merged_schema).
-
-    Each split is (path, first_stripe, n_stripes): contiguous stripes of
-    one file packed up to ``split_bytes`` of stripe data — so one huge
-    multi-stripe file fans out over many tasks instead of one straggler.
+    Each split is ``(path, 0, first_stripe, end_stripe)``, planned by the
+    engine's one split planner (operators/encode.py ``_plan_row_splits``)
+    with each file as one group and the stripe as the unit: ``target`` or
+    more files give one split per file, fewer fan their stripes out to
+    ``min(target, stripes)`` splits. A file with no stripes gets no
+    split; its schema still merges.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     from datafusion_orc_spark.format.orc_reader import OrcReader
+    from datafusion_orc_spark.operators.encode import _fetch_footers, _plan_row_splits
 
     ordered = sorted(paths)
 
     def fetch(p):
         r = OrcReader(p, opener=opener)
-        return r.schema(), r.footer.stripes
+        return r.schema(), len(r.footer.stripes)
 
-    with ThreadPoolExecutor(min(META_FETCH_CONCURRENCY, max(1, len(ordered)))) as ex:
-        metas = list(ex.map(fetch, ordered))
-
-    schemas = []
-    splits: list[tuple[str, int, int]] = []
-    for p, (schema, stripes) in zip(ordered, metas):
-        schemas.append(schema)
-        start, acc = 0, 0
-        for i, info in enumerate(stripes):
-            acc += info.index_length + info.data_length + info.footer_length
-            if acc >= split_bytes:
-                splits.append((p, start, i - start + 1))
-                start, acc = i + 1, 0
-        if start < len(stripes):
-            splits.append((p, start, len(stripes) - start))
-        if not stripes:
-            splits.append((p, 0, 0))  # schema-only file: contributes 0 rows
-    return splits, merge_schemas(schemas)
+    metas = _fetch_footers(ordered, fetch)
+    groups = [(p, 0, n) for p, (_, n) in zip(ordered, metas) if n]
+    return _plan_row_splits(groups, target, 1), merge_schemas([sch for sch, _ in metas])
 
 
 def read_orc_distributed(
     spark: SparkSession,
     path_or_glob: str,
     columns: list[str] | None = None,
-    split_bytes: int = DEFAULT_SPLIT_BYTES,
     batch_rows: int = DEFAULT_BATCH_ROWS,
-    opener=None,
     file_extension: str | None = ".orc",
     prune: dict | None = None,
     where: str | None = None,
 ) -> DataFrame:
-    """Scan ORC files with OUR reader, one task per stripe-range.
+    """Scan ORC files with OUR reader: the stripe ranges of
+    :func:`plan_splits` over ``defaultParallelism`` tasks.
 
     ``where``: a SQL predicate string — simple integer comparison
     conjuncts on exactly-named columns are auto-derived into ``prune``
@@ -147,13 +125,11 @@ def read_orc_distributed(
     ``columns`` is the projection pushed into the per-stripe decode
     (name -> ORC column mask, the physical_exec.rs:69-78 analogue);
     ``batch_rows`` bounds each streamed Arrow batch (file_source.rs:31).
-    ``opener``: optional picklable ``path -> seekable binary file``
-    callable — the ObjectStoreReader seam (object_store_reader.rs:39-59).
-    When None, the path's scheme picks the store automatically
-    (sources/objectstore.py): plain paths read through os.open, while
-    ``s3://``-style URIs get ranged reads + listing through
-    fsspec/pyarrow.fs, on the driver (metadata) and executors (stripes)
-    alike.
+    The path's scheme picks the store, the ObjectStoreReader seam
+    (object_store_reader.rs:39-59, sources/objectstore.py): plain paths
+    read through os.open, while ``s3://``-style URIs get ranged reads +
+    listing through fsspec/pyarrow.fs, on the driver (metadata) and
+    executors (stripes) alike.
     ``file_extension``: reject non-matching paths, the reference's
     extension validation (lib.rs:138-146); None disables the check.
     """
@@ -172,13 +148,9 @@ def read_orc_distributed(
         resolve_store,
     )
 
-    if opener is None:
-        paths = _list_inputs(path_or_glob, file_extension)
-        store, _ = resolve_store(path_or_glob)
-        if not isinstance(store, LocalStore):
-            opener = StoreOpener(store)
-    else:
-        paths = [path_or_glob]
+    paths = _list_inputs(path_or_glob, file_extension)
+    store, _ = resolve_store(path_or_glob)
+    opener = None if isinstance(store, LocalStore) else StoreOpener(store)
     if file_extension is not None:
         bad = [p for p in paths if not p.endswith(file_extension)]
         if bad:
@@ -187,7 +159,8 @@ def read_orc_distributed(
                 f"'{file_extension}' (e.g. {bad[0]!r}); pass file_extension=None "
                 f"to scan anyway"
             )
-    splits, merged = plan_splits(paths, split_bytes, opener)
+    target = spark.sparkContext.defaultParallelism
+    splits, merged = plan_splits(paths, target, opener)
     prune = _merge_where(prune, where, merged.names)
     if columns is not None:
         unknown = set(columns) - set(merged.names)
@@ -206,22 +179,20 @@ def read_orc_distributed(
     spark_schema = from_arrow_schema(merged)
     out_names = list(merged.names)
 
-    # one task per split, no Exchange (operators/encode.py _task_frame)
-    sdf = _task_frame(spark, len(splits), len(splits))
+    # no Exchange: the splits ride in the task closure
+    sdf, splits, _ = _task_frame(spark, splits, target)
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from datafusion_orc_spark.format.orc_reader import OrcReader
 
         _task_init()
-        for path, first, cnt in _task_splits(batches, splits):
-            if cnt == 0:
-                continue
+        for path, _, first, end in _task_splits(batches, splits):
             r = OrcReader(path, opener=opener)
             have = set(r.schema().names)
             local_cols = [c for c in out_names if c in have]
             for rb in r.iter_stripes(
                 columns=local_cols,
-                stripes=list(range(first, first + cnt)),
+                stripes=list(range(first, end)),
                 batch_rows=batch_rows,
                 prune=prune,
             ):
@@ -251,7 +222,7 @@ def register_orc(
     API shape of the reference's `SessionContextOrcExt::register_orc`
     (lib.rs:158-169; its example then runs `ctx.sql("select ... from
     table1")`). Options forward to :func:`read_orc_distributed`
-    (columns/split_bytes/prune/where/opener/...)."""
+    (columns/batch_rows/prune/where/file_extension)."""
     df = read_orc_distributed(spark, path_or_glob, **options)
     df.createOrReplaceTempView(name)
     return df

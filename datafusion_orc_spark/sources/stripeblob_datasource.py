@@ -54,6 +54,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from datafusion_orc_spark.operators.encode import _stripe_batches, _tighten_bound
+from datafusion_orc_spark.plans.pipeline import chunk_dirs, read_manifest
 from datafusion_orc_spark.sources.objectstore import LocalStore, resolve_store
 
 _OPS = {GreaterThan: ">", GreaterThanOrEqual: ">=", LessThan: "<", LessThanOrEqual: "<=", EqualTo: "="}
@@ -64,29 +65,12 @@ class _BlobFilePartition(InputPartition):
         self.path = path
 
 
-def _load_manifest(store, path: str) -> dict | None:
-    mp = f"{path.rstrip('/')}/_MANIFEST.json"
-    if not store.exists(mp):
-        return None
-    with store.open_input(mp) as f:
-        return json.loads(f.read().decode())
-
-
 class StripeBlobReader(DataSourceReader):
     def __init__(self, path: str, schema: StructType):
         self._schema = schema
         self._prune: dict[str, tuple[int, int]] = {}
         store, norm = resolve_store(path)
-        manifest = _load_manifest(store, norm)
-        if manifest is not None and "chunks" in manifest:
-            chunk_dirs = [
-                f"{norm.rstrip('/')}/chunk={c}" for c in sorted(manifest["chunks"])
-            ]
-        else:
-            chunk_dirs = [norm]
-        self._files: list[str] = []
-        for d in chunk_dirs:
-            self._files.extend(store.list(d, suffix=".parquet"))
+        self._files = [f for d in chunk_dirs(norm, read_manifest(norm)) for f in store.list(d, suffix=".parquet")]
 
     def pushFilters(self, filters: Sequence[Filter]) -> Iterator[Filter]:
         """Record min/max-provable filters for stripe pruning; return
@@ -127,10 +111,8 @@ class StripeBlobDataSource(DataSource):
         return "stripeblob"
 
     def schema(self) -> StructType:
-        path = self.options["path"]
-        store, norm = resolve_store(path)
-        manifest = _load_manifest(store, norm)
-        if manifest is None or "schema_json" not in manifest:
+        manifest = read_manifest(self.options["path"])
+        if "schema_json" not in manifest:
             raise ValueError("manifest has no schema_json; pass .schema(...) explicitly")
         full = StructType.fromJson(json.loads(manifest["schema_json"]))
         return self._project(full)

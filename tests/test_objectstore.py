@@ -109,10 +109,10 @@ def test_plan_splits_over_memory_store():
 
     uri = _write_orc_to_memory()
     st = MemoryStore()
-    splits, schema = plan_splits([uri], split_bytes=1 << 14, opener=StoreOpener(st))
+    splits, schema = plan_splits([uri], 4, opener=StoreOpener(st))
     assert schema.names == ["a", "b"]
-    assert len(splits) > 1  # small split_bytes fans one file into many tasks
-    assert sum(n for _p, _s, n in splits) == 10  # 50k rows / 5k stripe_rows
+    assert len(splits) == 4  # one 10-stripe file fans out to the target
+    assert sum(e - s for _p, _g, s, e in splits) == 10  # 50k rows / 5k stripe_rows
 
 
 def _blob_table_to_memory(spark, base="memory://bt"):
@@ -215,6 +215,37 @@ def test_read_orc_distributed_accepts_directory(spark, tmp_path):
         write_orc(t, str(tmp_path / f"f{i}.orc"), stripe_rows=64)
     df = read_orc_distributed(spark, str(tmp_path))
     assert df.count() == 200
+
+
+def test_encode_files_job_lists_input_through_store(spark, tmp_path, monkeypatch):
+    """encode_files_job lists its input directory and reads the manifest
+    schema through the store seam, as encode_files does; the encode
+    itself is stubbed (memory:// files do not exist in workers)."""
+    from datafusion_orc_spark.operators import encode
+    from datafusion_orc_spark.plans.pipeline import encode_files_job, read_manifest
+
+    st = MemoryStore()
+    uris = [f"memory://in/f{i}.parquet" for i in range(3)]
+    for u in uris:
+        with st.open_output(u) as f:
+            pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}), f)
+    with st.open_output("memory://in/_SUCCESS") as f:
+        f.write(b"")
+    seen = []
+
+    def fake_encode_files(spark_, paths, **kw):
+        seen.append(paths)
+        return spark_.createDataFrame(
+            [(len(seen), 10, 4, 7)], "stripe_id long, raw_bytes long, enc_bytes long, crc32 long"
+        )
+
+    monkeypatch.setattr(encode, "encode_files", fake_encode_files)
+    out = str(tmp_path / "enc")
+    m = encode_files_job(spark, "memory://in", out, files_per_chunk=2)
+    assert seen == [uris[:2], uris[2:]]
+    assert [m["chunks"][k]["input_files"] for k in ("0", "1")] == seen
+    assert json.loads(m["schema_json"])["fields"][0]["name"] == "k"
+    assert read_manifest(out) == m
 
 
 def test_projected_read_skips_unprojected_streams():

@@ -2,10 +2,14 @@
 the distributed ORC scan (reference parity: physical_exec.rs:79-82 byte
 ranges, file_source.rs:31 batched streams, file_format.rs:90-103 merge)."""
 
+from unittest.mock import patch
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.orc
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from datafusion_orc_spark.format.orc_reader import OrcReader
 from datafusion_orc_spark.format.orc_writer import write_orc
@@ -32,21 +36,60 @@ def _mk(tmp_path, name, n=5000, cols=("a", "b"), stripe_rows=1000, seed=7):
 
 
 def test_plan_splits_fans_out_one_big_file(tmp_path):
-    """One multi-stripe file must become multiple tasks (no straggler)."""
+    """One multi-stripe file must become multiple tasks (no straggler):
+    its stripes split into ``min(target, stripes)`` contiguous ranges."""
     path, _ = _mk(tmp_path, "big.orc", n=10_000, stripe_rows=1000)
-    splits, schema = plan_splits([path], split_bytes=1)  # force 1 stripe/split
-    assert len(splits) == 10
-    assert all(p == path and n == 1 for p, _s, n in splits)
-    assert [s for _p, s, _n in splits] == list(range(10))
-    # and with a huge budget it collapses to one split covering all stripes
-    splits1, _ = plan_splits([path], split_bytes=1 << 40)
-    assert splits1 == [(path, 0, 10)]
+    splits, schema = plan_splits([path], 10)  # one stripe per split
+    assert splits == [(path, 0, s, s + 1) for s in range(10)]
+    # four tasks: remainder stripes go to the earliest ranges
+    splits4, _ = plan_splits([path], 4)
+    assert splits4 == [(path, 0, 0, 3), (path, 0, 3, 6), (path, 0, 6, 8), (path, 0, 8, 10)]
+    # and with one task it collapses to one split covering all stripes
+    splits1, _ = plan_splits([path], 1)
+    assert splits1 == [(path, 0, 0, 10)]
+
+
+def test_plan_splits_schema_only_file_merges_columns_but_no_split(tmp_path):
+    """A file with no stripes contributes its columns to the merged
+    schema but no split (no empty task)."""
+    full, _ = _mk(tmp_path, "a.orc", n=2000, cols=("a", "b"), stripe_rows=1000)
+    empty = str(tmp_path / "b.orc")
+    # ORC C++ writes a zero-row table with no stripe at all
+    pyarrow.orc.write_table(pa.table({"a": pa.array([], pa.int64()), "c": pa.array([], pa.float64())}), empty)
+    assert OrcReader(empty).footer.stripes == []
+    splits, schema = plan_splits([empty, full], 4)
+    assert schema.names == ["a", "b", "c"]
+    assert splits == [(full, 0, 0, 1), (full, 0, 1, 2)]
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(st.integers(0, 12), min_size=1, max_size=10), st.integers(1, 16))
+def test_plan_splits_covers_every_stripe_once(stripes, target):
+    """Over random per-file stripe counts (zeros included) and targets:
+    every stripe of every file is covered exactly once, in order; no
+    split is empty; at most max(target, files) splits."""
+    metas = {f"f{i:02d}.orc": n for i, n in enumerate(stripes)}
+
+    class _Footer:
+        def __init__(self, p, opener=None):
+            self.footer = type("F", (), {"stripes": [None] * metas[p]})
+
+        def schema(self):
+            return pa.schema([("a", pa.int64())])
+
+    with patch("datafusion_orc_spark.format.orc_reader.OrcReader", _Footer):
+        splits, _ = plan_splits(list(metas)[::-1], target)
+    assert len(splits) <= max(target, len(metas))
+    assert all(s < e for _p, _g, s, e in splits)
+    for p, n in metas.items():
+        ranges = [(s, e) for sp, _g, s, e in splits if sp == p]
+        assert [i for s, e in ranges for i in range(s, e)] == list(range(n))
 
 
 def test_distributed_scan_matches_pyarrow(spark, tmp_path):
     path, tbl = _mk(tmp_path, "t.orc", n=7000, stripe_rows=1000)
-    df = read_orc_distributed(spark, path, split_bytes=1, batch_rows=256)
-    assert df.rdd.getNumPartitions() == 7  # one task per stripe
+    df = read_orc_distributed(spark, path, batch_rows=256)
+    assert df.rdd.getNumPartitions() == 4  # 7 stripes over local[4]
     got = df.toPandas().sort_values(["a", "b"], ignore_index=True)
     want = (
         pyarrow.orc.ORCFile(path).read().to_pandas().sort_values(["a", "b"], ignore_index=True)
@@ -56,7 +99,7 @@ def test_distributed_scan_matches_pyarrow(spark, tmp_path):
 
 def test_projection_pushdown_single_column(spark, tmp_path):
     path, tbl = _mk(tmp_path, "t.orc", n=3000, stripe_rows=1000)
-    df = read_orc_distributed(spark, path, columns=["a"], split_bytes=1)
+    df = read_orc_distributed(spark, path, columns=["a"])
     assert df.columns == ["a"]
     assert df.count() == 3000
 
@@ -72,7 +115,7 @@ def test_projection_unknown_column_raises_value_error(spark, tmp_path):
 def test_schema_merge_union_with_null_padding(spark, tmp_path):
     pa_, _ = _mk(tmp_path, "a.orc", n=1000, cols=("a", "b"), stripe_rows=1000)
     pb_, _ = _mk(tmp_path, "b.orc", n=800, cols=("a", "c"), stripe_rows=1000, seed=9)
-    df = read_orc_distributed(spark, str(tmp_path / "*.orc"), split_bytes=1)
+    df = read_orc_distributed(spark, str(tmp_path / "*.orc"))
     assert set(df.columns) == {"a", "b", "c"}
     assert df.count() == 1800
     assert df.filter("b IS NULL").count() == 800  # b.orc rows padded

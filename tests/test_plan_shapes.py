@@ -204,9 +204,9 @@ def test_orc_scan_plan_has_no_exchange(spark, tmp_path):
     t = pa.table({"a": pa.array(np.arange(5000, dtype=np.int64))})
     p = str(tmp_path / "scan.orc")
     write_orc(t, p, stripe_rows=1000)
-    df = read_orc_distributed(spark, p, split_bytes=1)
+    df = read_orc_distributed(spark, p)
     assert_range_task_frame(_plan(df))
-    assert df.rdd.getNumPartitions() == 5  # one task per stripe split
+    assert df.rdd.getNumPartitions() == 4  # 5 stripes over local[4]
     assert df.agg(F.sum("a")).collect()[0][0] == 5000 * 4999 // 2
 
 
