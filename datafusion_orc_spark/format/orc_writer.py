@@ -31,6 +31,7 @@ stats alone.
 
 from __future__ import annotations
 
+import functools
 import zlib
 
 import numpy as np
@@ -793,14 +794,12 @@ class OrcWriter:
         for t in self.types:
             footer += _field_bytes(4, _type_entry(t))
         footer += _field_varint(6, self.n_rows)
-        # file-level ColumnStatistics: per-column merge across stripes
-        if self.stripe_stats:
-            n_cols = len(self.stripe_stats[0])
-            for col_id in range(n_cols):
-                merged = self.stripe_stats[0][col_id]
-                for stats in self.stripe_stats[1:]:
-                    merged = _merge_stats(merged, stats[col_id])
-                footer += _field_bytes(7, _serialize_stats(merged))
+        # file-level ColumnStatistics: per-column merge across stripes; a
+        # file with no stripe gets one zero-count entry per column, as
+        # ORC C++ writes it
+        empty = [[{"n": 0, "has_null": False}]] * len(self.types)
+        for col_stats in zip(*self.stripe_stats) if self.stripe_stats else empty:
+            footer += _field_bytes(7, _serialize_stats(functools.reduce(_merge_stats, col_stats)))
         footer += _field_varint(8, self.row_index_stride)
         footer = compress_stream(footer, comp, block_size)
         ps = (
@@ -828,8 +827,9 @@ def write_orc(
     bloom_filter_fpp: float = 0.05,
 ) -> None:
     """Write an Arrow table as an ORC v1 file: ``OrcWriter`` fed one
-    ``stripe_rows`` slice per stripe (an empty table gets one 0-row
-    stripe). ``path`` is a path or a writable file-like object.
+    ``stripe_rows`` slice per stripe (an empty table gets no stripe, as
+    ORC C++ writes it). ``path`` is a path or a writable file-like
+    object.
 
     ``string_kinds``: {column: ("char"|"varchar", max_len)} footer-type
     overrides for string columns — preserves CHAR/VARCHAR declarations
@@ -867,7 +867,7 @@ def write_orc(
         path, table.schema, compression, block_size, row_index_stride,
         string_kinds, bloom_filter_columns, bloom_filter_fpp,
     )
-    for start in range(0, max(table.num_rows, 1), stripe_rows):
+    for start in range(0, table.num_rows, stripe_rows):
         writer.write_table(table.slice(start, stripe_rows))
     writer.close()
 

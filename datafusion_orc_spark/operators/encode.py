@@ -25,7 +25,8 @@ are composed from one copy of each piece:
   E9-selected codec and packs its stripe_id;
 - ``_PartWriter``: byte-rolled part files written from inside the task
   through a writer factory (parquet here, ORC in sources/orc_sink.py),
-  staged per task attempt by ``_open_part``;
+  staged per task attempt by ``_open_part``; ``_write_parts`` is the one
+  part-file sink tail, returning a ``PART_STATS_SCHEMA`` row per file;
 - ``_decode_setup``: prune bounds checked against the schema on the
   driver (``_merge_where``) and the ``column IN (...)`` cut of the blob
   table to the projected and bound columns;
@@ -47,10 +48,11 @@ The entry points:
   optional partial aggregate before the JVM.
 - ``decode_table``: ``_decode_setup`` -> ``_stripe_batches``. Encode
   emits a stripe's columns contiguously from one task, so the decode
-  needs no Exchange; ``shuffle=True`` falls back to
-  ``groupBy(stripe_id).applyInArrow`` for scattered blob tables.
-- ``decode_to_files``: ``decode_table``'s partition-local path into a
-  ``_PartWriter``.
+  needs no Exchange; ``shuffle=True`` first co-locates a scattered blob
+  table's stripes (hash repartition and sort on stripe_id), then runs
+  the same task body.
+- ``decode_to_files``: ``_decode_setup`` -> ``_stripe_batches`` ->
+  ``_write_parts``.
 
 Column pruning on decode is a ``column IN (...)`` filter on the blob
 table, the Spark-side analogue of the reference's projection pushdown
@@ -121,7 +123,10 @@ _BLOB_PA_SCHEMA = pa.schema(
 )
 
 DEFAULT_STRIPE_ROWS = 32768
+# a part file rolls at the first batch past this many in-memory bytes
 _BYTES_PER_FILE = 256 * 1024 * 1024
+# roundtrip_files applies batch_transform to chunks of this many rows
+_PARTIAL_FLUSH_ROWS = 1 << 20
 # concurrent footer reads per planned scan (``_fetch_footers``)
 META_FETCH_CONCURRENCY = 8
 # decode_to_files output: parquet dictionary encoding and page statistics
@@ -134,7 +139,7 @@ _DECODED_PARQUET = {"compression": "snappy", "use_dictionary": False, "write_sta
 def _ensure_workers_can_import(df: DataFrame) -> None:
     """Ship the package to executors (addPyFile) once per SparkContext.
 
-    The mapInArrow/applyInArrow UDFs are pickled by reference to this
+    The mapInArrow UDFs are pickled by reference to this
     module, so python workers must be able to import
     ``datafusion_orc_spark`` even when the driver's cwd/PYTHONPATH does
     not include the repo root (e.g. an external verify harness).
@@ -505,7 +510,7 @@ class _PartWriter:
         self.open_writer, self.suffix, self.bytes_per_file = open_writer, suffix, bytes_per_file
         self.writer = None
         self.files: list[tuple[str, int, int]] = []
-        self.rows = self.bytes = self.file_rows = self.file_bytes = 0
+        self.file_rows = self.file_bytes = 0
 
     def write(self, batch: pa.RecordBatch) -> None:
         if self.writer is None:
@@ -514,9 +519,7 @@ class _PartWriter:
             self.fh, self.publish = _open_part(self.store, self.path, self.name, self.attempt, in_place)
             self.writer = self.open_writer(self.fh, batch.schema)
         self.writer.write_table(pa.Table.from_batches([batch]))
-        self.rows += batch.num_rows
         self.file_rows += batch.num_rows
-        self.bytes += batch.nbytes
         self.file_bytes += batch.nbytes
         if self.file_bytes >= self.bytes_per_file:
             self._roll()
@@ -542,6 +545,33 @@ class _PartWriter:
                 continue
             if seq >= len(self.files):
                 os.unlink(p)
+
+
+PART_STATS_SCHEMA = StructType(
+    [
+        StructField("path", StringType(), False),
+        StructField("part", LongType(), False),
+        StructField("n_rows", LongType(), False),
+        StructField("n_bytes", LongType(), False),
+    ]
+)
+
+
+def _write_parts(
+    batches: Iterator[pa.RecordBatch], output_dir: str, open_writer, suffix: str, bytes_per_file: int
+) -> Iterator[pa.RecordBatch]:
+    """The part-file sink tail of a task: every batch through one
+    ``_PartWriter``, then one ``PART_STATS_SCHEMA`` row per published
+    file (``n_bytes`` on disk). A task with no rows writes no file and
+    returns no row."""
+    writer = _PartWriter(output_dir, open_writer, suffix, bytes_per_file)
+    for b in batches:
+        writer.write(b)
+    writer.close()
+    for path, n_rows, n_bytes in writer.files:
+        yield pa.RecordBatch.from_pydict(
+            {"path": [path], "part": [writer.part_id], "n_rows": [n_rows], "n_bytes": [n_bytes]}
+        )
 
 
 def encode_table(df: DataFrame, stripe_rows: int = DEFAULT_STRIPE_ROWS, job_token: int | None = None) -> DataFrame:
@@ -575,7 +605,6 @@ def encode_files(
     parallelism: int | None = None,
     discard_output: bool = False,
     recycle_output: bool = False,
-    bytes_per_file: int = _BYTES_PER_FILE,
 ) -> DataFrame:
     """Parquet files -> blob table WITHOUT moving row data through the JVM.
 
@@ -584,7 +613,7 @@ def encode_files(
     directly with pyarrow (C++ reader, zero-copy into the numpy kernels)
     and — when ``output_dir`` is given — writes its blob rows as parquet
     part files from inside the task (``_PartWriter``, byte-rolled at
-    ``bytes_per_file``), emitting only the tiny stats rows. Compare
+    ``_BYTES_PER_FILE``), emitting only the tiny stats rows. Compare
     encode_table, which encodes an arbitrary DataFrame but pays
     JVM->Python Arrow IPC for every row; here the token arrays never
     cross a process boundary uncompressed. This mirrors the reference's
@@ -645,6 +674,7 @@ def encode_files(
                 if pid >= n_parts or p.endswith(".tmp"):
                     os.unlink(p)
     inline = output_dir is None and not discard_output
+    bytes_per_file = _BYTES_PER_FILE
     stats_schema = StructType([f for f in BLOB_SCHEMA.fields if f.name != "data"])
 
     def enc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -678,7 +708,6 @@ def roundtrip_files(
     parallelism: int | None = None,
     batch_transform=None,
     transform_schema=None,
-    transform_flush_rows: int = 1 << 20,
 ) -> DataFrame:
     """Parquet files -> encode EVERY column -> decode ``columns`` -> rows,
     fused inside each task (the encode_files architecture applied to the
@@ -703,7 +732,7 @@ def roundtrip_files(
     row-group counts no row group is split.
 
     ``batch_transform``: optional ``pa.Table -> pa.Table`` applied to
-    the decoded projection in chunks of ``transform_flush_rows`` rows
+    the decoded projection in chunks of ``_PARTIAL_FLUSH_ROWS`` rows
     (one application per task at bench split sizes; bounded memory at
     100-TB split counts), with ``transform_schema`` as the output
     StructType — the §2.3 "aggregate before you shuffle" hook: its
@@ -730,6 +759,7 @@ def roundtrip_files(
         else StructType([f for f in spark_schema.fields if f.name in set(names)])
     )
     ns = f"{job_token:04x}"
+    flush_rows = _PARTIAL_FLUSH_ROWS
 
     def rt(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _task_init()
@@ -746,7 +776,7 @@ def roundtrip_files(
                     continue
                 decoded.append(dec)
                 decoded_rows += dec.num_rows
-                if decoded_rows >= transform_flush_rows:
+                if decoded_rows >= flush_rows:
                     yield from batch_transform(pa.Table.from_batches(decoded)).to_batches()
                     decoded, decoded_rows = [], 0
         if decoded:
@@ -966,45 +996,25 @@ def decode_table(
     stripe contiguously from one task, so a stripe's blob rows are
     co-partitioned and the decode needs NO Exchange (the
     StripeBlobReader pattern; at scale a groupBy here would reshuffle
-    every encoded byte on every read). ``shuffle=True`` falls back to
-    ``groupBy(stripe_id).applyInArrow`` for blob tables whose stripes
-    were scattered across partitions by an arbitrary repartition.
+    every encoded byte on every read). ``shuffle=True`` is for blob
+    tables whose stripes were scattered across partitions by an
+    arbitrary repartition: a hash exchange on stripe_id co-locates each
+    stripe's blob rows, and a sort on stripe_id keeps
+    ``_stripe_groups`` holding one stripe at a time; the decode task is
+    the same.
     """
     blobs_df, schema, names, prune = _decode_setup(blobs_df, schema, spark_schema, columns, prune, where)
     if columns is not None:
         spark_schema = StructType([f for f in spark_schema.fields if f.name in columns])
-
     if shuffle:
-        proj = pa.schema([schema.field(nm) for nm in names])
+        blobs_df = blobs_df.repartition("stripe_id").sortWithinPartitions("stripe_id")
 
-        def decode_fn(table: pa.Table) -> pa.Table:
-            _task_init()
-            batches = list(_stripe_batches(table.to_batches(), schema, names, prune))
-            return pa.Table.from_batches(batches, schema=proj)
+    def decode_local(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _task_init()
+        yield from _stripe_batches(batches, schema, names, prune)
 
-        out = blobs_df.groupBy("stripe_id").applyInArrow(decode_fn, spark_schema)
-    else:
-
-        def decode_local(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            _task_init()
-            yield from _stripe_batches(batches, schema, names, prune)
-
-        out = blobs_df.mapInArrow(decode_local, spark_schema)
+    out = blobs_df.mapInArrow(decode_local, spark_schema)
     return out.filter(where) if where is not None else out
-
-
-# NOTE (r7 advice): ``bytes_written`` reports the UNCOMPRESSED in-memory
-# Arrow bytes streamed through the writer (a stable, codec-independent
-# volume measure), NOT the post-compression on-disk file size — size the
-# output directory for disk accounting.
-DECODE_STATS_SCHEMA = StructType(
-    [
-        StructField("part_id", IntegerType(), False),
-        StructField("n_files", IntegerType(), False),
-        StructField("rows", LongType(), False),
-        StructField("bytes_written", LongType(), False),
-    ]
-)
 
 
 def decode_to_files(
@@ -1018,37 +1028,26 @@ def decode_to_files(
     part files from INSIDE the task — the encode_files write path
     applied to the decode direction. Decoded rows never cross into the
     JVM (no Arrow transfer, no per-batch Spark write job, no commit
-    protocol): each task streams its stripes through one ``_PartWriter``
+    protocol): each task streams its stripes through ``_write_parts``
     (a snappy row group per decoded stripe, no dictionary, no page
-    statistics) and returns a single stats row. This is the streaming
-    sink's fast path (start_incremental_decode sink="files"), where the
-    foreachBatch ``rows.write.parquet`` job was measured at >50% of the
-    micro-batch wall (BENCH r6 sink-mode sweep).
+    statistics) and returns a ``PART_STATS_SCHEMA`` row per file. This
+    is the streaming sink's fast path (start_incremental_decode
+    sink="files"), where the foreachBatch ``rows.write.parquet`` job was
+    measured at >50% of the micro-batch wall (BENCH r6 sink-mode sweep).
 
     ``prune`` bounds prune stripes as in ``decode_table``: only against
     integer-column stats (string-keyed pruning is supported by
     read_orc_distributed, not by this sink)."""
     blobs_df, schema, names, prune = _decode_setup(blobs_df, None, spark_schema, columns, prune)
+    open_writer = functools.partial(pq.ParquetWriter, **_DECODED_PARQUET)
+    bytes_per_file = _BYTES_PER_FILE
 
     def dec_write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _task_init()
-        writer = _PartWriter(
-            output_dir, functools.partial(pq.ParquetWriter, **_DECODED_PARQUET), ".parquet", _BYTES_PER_FILE
-        )
-        for batch in _stripe_batches(batches, schema, names, prune):
-            writer.write(batch)
-        writer.close()
-        yield pa.record_batch(
-            [
-                pa.array([writer.part_id], pa.int32()),
-                pa.array([len(writer.files)], pa.int32()),
-                pa.array([writer.rows], pa.int64()),
-                pa.array([writer.bytes], pa.int64()),
-            ],
-            names=["part_id", "n_files", "rows", "bytes_written"],
-        )
+        stripes = _stripe_batches(batches, schema, names, prune)
+        yield from _write_parts(stripes, output_dir, open_writer, ".parquet", bytes_per_file)
 
-    return blobs_df.mapInArrow(dec_write, DECODE_STATS_SCHEMA)
+    return blobs_df.mapInArrow(dec_write, PART_STATS_SCHEMA)
 
 
 def verify_roundtrip(df: DataFrame, stripe_rows: int = DEFAULT_STRIPE_ROWS) -> tuple[bool, dict]:

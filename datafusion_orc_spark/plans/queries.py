@@ -2725,7 +2725,7 @@ def q_sink_files_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(out, ignore_errors=True)
         blobs = encode_table(seqs, stripe_rows=4096)
         stats = decode_to_files(blobs, seqs.schema, out).collect()
-        assert sum(r["rows"] for r in stats) > 0
+        assert sum(r["n_rows"] for r in stats) > 0
         open(done, "w").close()
     dec = spark.read.schema(seqs.schema).option("pathGlobFilter", "*.parquet").parquet(out)
     return (

@@ -4,13 +4,13 @@ per input partition — the write-side complement of the distributed scan
 (sources/orc_source.py; the reference itself is read-only, lib.rs has
 no writer, so this is beyond-reference surface).
 
-Shape mirrors encode_files (operators/encode.py): rows never leave the
-task, only a tiny stats row per part file returns to the driver —
+Shape mirrors decode_to_files (operators/encode.py): rows never leave
+the task, only a tiny stats row per part file returns to the driver —
 shuffle-free, plan-asserted in tests/test_orc_sink.py. Each task
 re-slices its rows into stripes (``_stripes``) and streams them through
-the shared part-file roller (``_PartWriter``) into ``OrcWriter``, one
+the shared part-file sink (``_write_parts``) into ``OrcWriter``, one
 stripe per write: task memory is one stripe, and a file rolls at the
-first stripe boundary past ``bytes_per_file``.
+first stripe boundary past ``_BYTES_PER_FILE``.
 """
 
 from __future__ import annotations
@@ -21,15 +21,6 @@ from collections.abc import Iterator
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-STATS_SCHEMA = StructType([
-    StructField("path", StringType(), False),
-    StructField("part", LongType(), False),
-    StructField("n_rows", LongType(), False),
-    StructField("n_bytes", LongType(), False),
-    StructField("n_stripes", LongType(), False),
-])
 
 
 def write_orc_distributed(
@@ -37,23 +28,29 @@ def write_orc_distributed(
     output_dir: str,
     stripe_rows: int = 65536,
     compression: str = "snappy",
-    bytes_per_file: int = 256 * 1024 * 1024,
     row_index_stride: int | None = None,
     bloom_filter_columns: list[str] | None = None,
     bloom_filter_fpp: float = 0.05,
 ) -> DataFrame:
     """df -> ``output_dir``/part-*.orc via OUR ORC writer, in parallel.
 
-    Returns the (lazy) per-file stats DataFrame; the write happens when
-    it is consumed (``.collect()``/``.count()`` — same contract as
-    encode_files). Files are written through the object-store seam,
-    staged per task attempt like encode_files' part files (local:
-    attempt-suffixed tmp name, then rename; object stores: one atomic
-    PUT), and are readable by ORC C++ / ORC-Java / Spark / our own reader
-    (conformance: tests/test_orc_sink.py). ``n_bytes`` is a file's
-    on-disk size."""
+    Returns the (lazy) ``PART_STATS_SCHEMA`` DataFrame, one row per
+    file; the write happens when it is consumed (``.collect()``/
+    ``.count()`` — same contract as encode_files). Files are written
+    through the object-store seam, staged per task attempt like
+    encode_files' part files (local: attempt-suffixed tmp name, then
+    rename; object stores: one atomic PUT), and are readable by ORC C++
+    / ORC-Java / Spark / our own reader (conformance:
+    tests/test_orc_sink.py). ``n_bytes`` is a file's on-disk size."""
     from datafusion_orc_spark.format.orc_writer import OrcWriter
-    from datafusion_orc_spark.operators.encode import _ensure_workers_can_import, _PartWriter, _stripes, _task_init
+    from datafusion_orc_spark.operators.encode import (
+        _BYTES_PER_FILE,
+        PART_STATS_SCHEMA,
+        _ensure_workers_can_import,
+        _stripes,
+        _task_init,
+        _write_parts,
+    )
     from datafusion_orc_spark.sources.objectstore import resolve_store
 
     _ensure_workers_can_import(df)
@@ -63,20 +60,10 @@ def write_orc_distributed(
         OrcWriter, compression=compression, row_index_stride=row_index_stride,
         bloom_filter_columns=bloom_filter_columns, bloom_filter_fpp=bloom_filter_fpp,
     )
+    bytes_per_file = _BYTES_PER_FILE
 
     def sink(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _task_init()
-        writer = _PartWriter(output_dir, open_writer, ".orc", bytes_per_file)
-        for stripe in _stripes(batches, stripe_rows):
-            writer.write(stripe)
-        writer.close()
-        for path, n_rows, n_bytes in writer.files:
-            yield pa.RecordBatch.from_pydict({
-                "path": [path],
-                "part": [writer.part_id],
-                "n_rows": [n_rows],
-                "n_bytes": [n_bytes],
-                "n_stripes": [-(-n_rows // stripe_rows)],
-            })
+        yield from _write_parts(_stripes(batches, stripe_rows), output_dir, open_writer, ".orc", bytes_per_file)
 
-    return df.mapInArrow(sink, STATS_SCHEMA)
+    return df.mapInArrow(sink, PART_STATS_SCHEMA)

@@ -53,9 +53,9 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from datafusion_orc_spark.operators.encode import _stripe_batches, _tighten_bound
+from datafusion_orc_spark.operators.encode import _open_parquet, _stripe_batches, _task_init, _tighten_bound
 from datafusion_orc_spark.plans.pipeline import chunk_dirs, read_manifest
-from datafusion_orc_spark.sources.objectstore import LocalStore, resolve_store
+from datafusion_orc_spark.sources.objectstore import resolve_store
 
 _OPS = {GreaterThan: ">", GreaterThanOrEqual: ">=", LessThan: "<", LessThanOrEqual: "<=", EqualTo: "="}
 
@@ -86,13 +86,11 @@ class StripeBlobReader(DataSourceReader):
         return [_BlobFilePartition(p) for p in self._files]
 
     def read(self, partition: _BlobFilePartition):
-        import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        _task_init()
         schema = to_arrow_schema(self._schema)
-        store, norm = resolve_store(partition.path)
-        pf = pq.ParquetFile(norm if isinstance(store, LocalStore) else store.open_input(norm))
-        batches = pf.iter_batches(
+        batches = _open_parquet(partition.path).iter_batches(
             batch_size=1 << 16,
             columns=["stripe_id", "column", "data", "vmin", "vmax"],
             use_threads=False,

@@ -137,8 +137,8 @@ def start_incremental_decode(
                     {
                         "batch_id": batch_id,
                         "wall_sec": wall,
-                        "out_rows": sum(r["rows"] for r in stats),
-                        "n_files": sum(r["n_files"] for r in stats),
+                        "out_rows": sum(r["n_rows"] for r in stats),
+                        "n_files": len(stats),
                     },
                     f,
                 )
@@ -150,7 +150,7 @@ def start_incremental_decode(
         # path the batch engine uses. decode_table(shuffle=False) raises
         # if the co-location assumption is ever violated (a foreign blob
         # layout, a giant part file split mid-stripe); only then do we
-        # pay the groupBy Exchange.
+        # pay the stripe_id Exchange.
         def run(shuffle: bool) -> int | None:
             rows = decode_table(batch_df, None, spark_schema, shuffle=shuffle, where=where)
             if sink == "count":

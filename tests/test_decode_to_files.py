@@ -2,11 +2,23 @@
 decoded rows never enter the JVM; one open ParquetWriter per task."""
 
 import glob
+import os
 
 import pyspark.sql.functions as F
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def assert_part_stats(stats, rows_read: int) -> None:
+    """The part-file sink contract of ``decode_to_files`` and
+    ``write_orc_distributed``: one ``PART_STATS_SCHEMA`` row per
+    published file, its on-disk size, and every row read back counted
+    once."""
+    assert all(os.path.exists(r["path"]) for r in stats), stats
+    assert [r["n_bytes"] for r in stats] == [os.path.getsize(r["path"]) for r in stats]
+    assert len({r["path"] for r in stats}) == len(stats)
+    assert sum(r["n_rows"] for r in stats) == rows_read
 
 
 def test_decode_to_files_roundtrips_exactly(spark, tmp_path):
@@ -17,9 +29,10 @@ def test_decode_to_files_roundtrips_exactly(spark, tmp_path):
     blobs = encode_table(seqs, stripe_rows=256)
     out = str(tmp_path / "dec")
     stats = decode_to_files(blobs, seqs.schema, out).collect()
-    assert sum(r["rows"] for r in stats) == seqs.count()
-    assert all(r["n_files"] >= 1 for r in stats)
     back = spark.read.schema(seqs.schema).parquet(out)
+    assert_part_stats(stats, back.count())
+    assert back.count() == seqs.count()
+    assert sorted(r["path"] for r in stats) == sorted(glob.glob(f"{out}/*"))
     # no tmp leftovers, canonical names only
     names = [p.split("/")[-1] for p in glob.glob(f"{out}/*")]
     assert all(n.startswith("part-") and n.endswith(".parquet") for n in names)
@@ -45,13 +58,19 @@ def test_decode_to_files_prunes_stripes(spark, tmp_path):
     blobs = encode_table(li, stripe_rows=500)
     out = str(tmp_path / "pruned")
     stats = decode_to_files(blobs, li.schema, out, prune={"l_orderkey": (100, 400)}).collect()
-    got = sum(r["rows"] for r in stats)
+    got = sum(r["n_rows"] for r in stats)
     # pruned decode writes fewer rows than the table, and every matching
     # row survives (residual rows inside surviving stripes may remain)
     assert 0 < got < li.count()
     back = spark.read.schema(li.schema).parquet(out)
+    assert_part_stats(stats, back.count())
     want = li.filter(F.col("l_orderkey").between(100, 400))
     assert back.filter(F.col("l_orderkey").between(100, 400)).count() == want.count()
+
+    # a prune that drops every stripe: no stats row, no part file
+    none_out = str(tmp_path / "none")
+    assert decode_to_files(blobs, li.schema, none_out, prune={"l_orderkey": (-9, -1)}).collect() == []
+    assert glob.glob(f"{none_out}/part-*") == []
 
 
 def test_streaming_files_sink(spark, tmp_path):
@@ -124,4 +143,10 @@ def test_scattered_blob_table_raises_the_streaming_fallback_message(spark, tmp_p
         ).collect()[0])
 
     assert h(decode_table(scattered, None, seqs.schema, shuffle=True)) == h(seqs)
+    # with stripe pruning and the residual filter: the same rows as the
+    # local decode of the blob table before it was scattered
+    where = "n_tok > 40"
+    shuffled = h(decode_table(scattered, None, seqs.schema, shuffle=True, where=where))
+    assert 0 < shuffled[0] < seqs.count()
+    assert shuffled == h(decode_table(blobs, None, seqs.schema, where=where))
     scattered.unpersist()

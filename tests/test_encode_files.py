@@ -172,8 +172,8 @@ def test_encode_files_recycle_output(spark, tmp_path):
     assert fresh_files == files_2
 
 
-def test_encode_files_byte_rolled_output(spark, tmp_path):
-    """Part files roll on bytes_per_file, not per row-group split: the
+def test_encode_files_byte_rolled_output(spark, tmp_path, monkeypatch):
+    """Part files roll on _BYTES_PER_FILE, not per row-group split: the
     default consolidates a task's splits into one large file (the
     100-TB layout — object stores want few big files); a tiny threshold
     rolls mid-task; both decode to identical rows."""
@@ -196,9 +196,10 @@ def test_encode_files_byte_rolled_output(spark, tmp_path):
     assert all(os.path.basename(p).split("-")[2] == "000.parquet" for p in big_files)
 
     small = str(tmp_path / "small")
+    # read on the driver at call time and shipped in the task closure
+    monkeypatch.setattr("datafusion_orc_spark.operators.encode._BYTES_PER_FILE", 64 * 1024)
     encode_files(
-        spark, SRC, stripe_rows=2000, output_dir=small, parallelism=2,
-        job_token=5, bytes_per_file=64 * 1024,
+        spark, SRC, stripe_rows=2000, output_dir=small, parallelism=2, job_token=5
     ).collect()
     small_files = glob.glob(f"{small}/part-*.parquet")
     assert len(small_files) > 2  # rolled mid-task

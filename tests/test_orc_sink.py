@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datafusion_orc_spark.sources.orc_sink import write_orc_distributed
+from tests.test_decode_to_files import assert_part_stats
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -27,6 +28,7 @@ def test_sink_roundtrip_all_readers(spark, tmp_path):
     # ORC C++ (pyarrow)
     cxx = pa.concat_tables([pyarrow.orc.ORCFile(f).read() for f in files])
     assert cxx.num_rows == n
+    assert_part_stats(stats, cxx.num_rows)
     # Spark's ORC-Java reader: full-table agg parity with the source
     back = spark.read.orc(out)
     src_agg = df.agg(
@@ -56,16 +58,15 @@ def test_sink_plan_has_no_exchange(spark, tmp_path):
     assert "Exchange" not in plan, plan
 
 
-def test_sink_rolls_files_at_stripe_boundaries(spark, tmp_path):
+def test_sink_rolls_files_at_stripe_boundaries(spark, tmp_path, monkeypatch):
     """One task's output rolls to a new part file at the first stripe
-    boundary past bytes_per_file, so every part file but the task's last
+    boundary past _BYTES_PER_FILE, so every part file but the task's last
     holds only whole stripe_rows stripes."""
     out = str(tmp_path / "rolled")
     df = spark.range(10_000).selectExpr("id as k").coalesce(1)
     # 1000 int64 rows are ~8 KB in memory: 3 stripes per file
-    stats = write_orc_distributed(
-        df, out, stripe_rows=1000, bytes_per_file=20_000
-    ).collect()
+    monkeypatch.setattr("datafusion_orc_spark.operators.encode._BYTES_PER_FILE", 20_000)
+    stats = write_orc_distributed(df, out, stripe_rows=1000).collect()
     assert len(stats) >= 3
     assert sum(r["n_rows"] for r in stats) == 10_000
     files = [pyarrow.orc.ORCFile(f) for f in sorted(glob.glob(f"{out}/*.orc"))]
@@ -73,6 +74,7 @@ def test_sink_rolls_files_at_stripe_boundaries(spark, tmp_path):
         assert [f.read_stripe(i).num_rows for i in range(f.nstripes)] == [1000] * f.nstripes
     got = pa.concat_tables([f.read() for f in files])
     assert sorted(got.column("k").to_pylist()) == list(range(10_000))
+    assert_part_stats(stats, got.num_rows)
 
 
 def test_sink_single_partition_matches_write_orc(spark, tmp_path):
@@ -114,14 +116,13 @@ def test_write_orc_through_store_file_object():
     assert len(r.footer.stripes) == 4
 
 
-def test_sink_rolls_files_at_bytes_per_file(spark, tmp_path):
+def test_sink_rolls_files_at_bytes_per_file(spark, tmp_path, monkeypatch):
     """Wide rows roll on bytes: each 1000-row stripe of 4 KB rows
     crosses the 4 MB bound on its own."""
     out = str(tmp_path / "byte_rolled")
     df = spark.range(4_000).selectExpr("id as k", "repeat('x', 4000) as pad").coalesce(1)
-    stats = write_orc_distributed(
-        df, out, stripe_rows=1000, bytes_per_file=4_000_000
-    ).collect()
+    monkeypatch.setattr("datafusion_orc_spark.operators.encode._BYTES_PER_FILE", 4_000_000)
+    stats = write_orc_distributed(df, out, stripe_rows=1000).collect()
     assert len(stats) >= 3, stats  # ~16 MB of pad / 4 MB roll
     assert sum(r["n_rows"] for r in stats) == 4_000
     got = pa.concat_tables(

@@ -106,6 +106,27 @@ def test_empty_and_single_row(tmp_path):
             assert back.column(name).to_pylist() == tbl.column(name).to_pylist()
 
 
+def test_empty_table_writes_no_stripe(spark, tmp_path):
+    """A zero-row table is written as ORC C++ writes it: no stripe, one
+    zero-count ColumnStatistics per column, the schema in the footer.
+    Every reader sees 0 rows with the schema, and the split planner
+    plans no task for it."""
+    from datafusion_orc_spark.format.orc_reader import OrcReader
+    from datafusion_orc_spark.sources.orc_source import plan_splits
+
+    tbl = pa.table({"a": pa.array([], pa.int64()), "s": pa.array([], pa.string())})
+    path = str(tmp_path / "empty.orc")
+    write_orc(tbl, path, compression="snappy")
+    f = pyarrow.orc.ORCFile(path)
+    assert (f.nstripes, f.nrows) == (0, 0)
+    assert f.read().equals(tbl)
+    assert OrcReader(path).footer.stripes == []
+    assert read_orc(path).equals(tbl)
+    back = spark.read.orc(path)
+    assert back.columns == ["a", "s"] and back.count() == 0
+    assert plan_splits([path], 4) == ([], tbl.schema)
+
+
 # ---------------------------------------------------------------- compression
 
 def test_compressed_writes_read_back_by_orc_cxx(tmp_path):

@@ -103,7 +103,16 @@ def test_decode_shuffled_blobs_raises_then_fallback_works(spark):
     try:
         with pytest.raises(Exception, match="repartitioned|missing columns"):
             decode_table(blobs, None, df.schema).count()
-        assert decode_table(blobs, None, df.schema, shuffle=True).count() == df.count()
+        shuffled = decode_table(blobs, None, df.schema, shuffle=True)
+        assert shuffled.count() == df.count()
+        # one task body: a stripe_id hash exchange feeds the same
+        # MapInArrow decode as shuffle=False, no group-by UDF. The cached
+        # blob table's own plan (the encode) prints under InMemoryRelation
+        plan = shuffled._sc._jvm.PythonSQLUtils.explainString(shuffled._jdf.queryExecution(), "simple")
+        decode = plan.split("InMemoryRelation")[0]
+        assert "FlatMapGroupsInArrow" not in plan, plan
+        assert decode.count("MapInArrow") == 1, plan
+        assert "Exchange hashpartitioning(stripe_id" in decode, plan
     finally:
         blobs.unpersist()
 

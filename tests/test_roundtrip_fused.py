@@ -128,8 +128,8 @@ def test_roundtrip_files_projection_and_transform(spark, tmp_path):
     assert rows == expect
 
 
-def test_roundtrip_files_transform_multi_flush(spark, tmp_path):
-    """With transform_flush_rows below the task's row count the partial
+def test_roundtrip_files_transform_multi_flush(spark, tmp_path, monkeypatch):
+    """With _PARTIAL_FLUSH_ROWS below the task's row count the partial
     transform runs several times per task; the combined result must be
     identical to a single application (partials are re-combined
     downstream)."""
@@ -162,10 +162,11 @@ def test_roundtrip_files_transform_multi_flush(spark, tmp_path):
     )
 
     def run(flush):
+        # read on the driver at call time and shipped in the task closure
+        monkeypatch.setattr("datafusion_orc_spark.operators.encode._PARTIAL_FLUSH_ROWS", flush)
         part = roundtrip_files(
             spark, path, sschema, columns=["a", "b"], stripe_rows=256,
             batch_transform=partial, transform_schema=out_schema,
-            transform_flush_rows=flush,
         )
         return {
             r["b"]: (r["total"], r["n"])
