@@ -54,8 +54,3 @@ def __getattr__(name: str):
 
 def __dir__():
     return sorted(list(globals()) + list(_API))
-
-# Bump whenever any on-disk format (stripe blobs, ORC writer output,
-# manifest layout) changes shape: /tmp caches written by queries are keyed
-# on this, so a stale dir from an older code version is never re-served.
-FORMAT_VERSION = 3  # v3: stripe blob wire v2 (runfor side-lists delta+bitpack)

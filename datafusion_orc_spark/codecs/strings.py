@@ -32,12 +32,11 @@ def _greedy_odd_even(mask: np.ndarray) -> np.ndarray:
     """Greedy left-to-right non-overlap selection: within each maximal
     run of True positions, keep every other one starting at the run
     head. Shared by digram matching (fsst_encode) and the generation
-    rewrites (_apply_pairs) — the selection rule must be identical for
-    the cross-stripe replay to reproduce training-time choices.
+    rewrites (_apply_pairs).
 
     int32 index arithmetic + a bitwise parity test: the int64
-    arange/accumulate/% variant measured ~3x slower on the reuse path
-    (int64 modulo is a division per element)."""
+    arange/accumulate/% variant measured ~3x slower (int64 modulo is a
+    division per element)."""
     n = len(mask)
     run_start = mask.copy()
     run_start[1:] &= ~mask[:-1]
@@ -329,9 +328,8 @@ def _apply_pairs(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """One generation REWRITE: greedy non-overlapping replacement of the
     adjacent element pairs whose key maps to a code in ``pair_code``
-    (512*512 -> new code or -1). Shared by training and the cached
-    cross-stripe reuse path — identical selection rules (same-string,
-    combined length <= 8, run-parity non-overlap)."""
+    (512*512 -> new code or -1), under _merge_rounds' selection rules
+    (same-string, combined length <= 8, run-parity non-overlap)."""
     if len(elem_id) < 2:
         return elem_id, elem_len, string_id
     key = elem_id[:-1] * 512 + elem_id[1:]
@@ -359,7 +357,7 @@ def _merge_rounds(
     rounds: int = 3,
     min_count: int = 8,
     sample_elems: int | None = 1 << 18,
-) -> tuple[np.ndarray, FsstTable, list[tuple[np.ndarray, np.ndarray]]]:
+) -> tuple[np.ndarray, FsstTable]:
     """FSST generational construction: per round, concatenate the most
     profitable adjacent element pairs into new symbols (<=8 bytes) and
     rewrite the element stream vectorized (run-parity non-overlap).
@@ -375,12 +373,8 @@ def _merge_rounds(
     full stream (its output IS the encoding). None = select on the full
     stream (the measurement baseline).
 
-    Returns (final elements, final table, gens): ``gens`` is each
-    round's chosen pair map as (keys, codes) — enough to REPLAY the
-    generational rewrites on a different stripe without re-running
-    selection (the cross-stripe cache in fsst_compress_column)."""
+    Returns (final elements, final table)."""
     symbols = list(table.symbols)
-    gens: list[tuple[np.ndarray, np.ndarray]] = []
 
     def expansion(eid: int) -> bytes:
         return symbols[eid] if eid < 256 else bytes([eid - 256])
@@ -438,14 +432,11 @@ def _merge_rounds(
         if sum(g for g, _k, _s in chosen) < 0.002 * len(elem_id):
             break
         pair_code = np.full(512 * 512, -1, dtype=np.int64)
-        gen_keys = np.array([k for _g, k, _s in chosen], dtype=np.int64)
         for _g, k, sym in chosen:
             pair_code[k] = len(symbols)
             symbols.append(sym)
-        table = FsstTable(symbols)
-        gens.append((gen_keys, pair_code[gen_keys]))
         elem_id, elem_len, string_id = _apply_pairs(elem_id, elem_len, string_id, pair_code)
-    return elem_id, FsstTable(symbols), gens
+    return elem_id, FsstTable(symbols)
 
 
 def _emit_elements(elem_id: np.ndarray) -> bytes:
@@ -465,50 +456,16 @@ def _emit_elements(elem_id: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-class _FsstGenEntry:
-    """Cached training artifacts for one column: base table, the
-    per-generation pair maps, the final table, and the training stripe's
-    achieved ratio (the reuse-quality anchor)."""
+def fsst_compress_column(blob: bytes, lengths: np.ndarray) -> tuple[bytes, bytes] | None:
+    """Train + compress a string column (full FSST: base 1-2 byte table,
+    then merge rounds growing symbols to <=8 bytes). Returns
+    (table_bytes, data) or None when unprofitable (<5% savings),
+    mirroring E6's fallback.
 
-    __slots__ = ("base", "gens", "table", "ratio", "uses", "_pair_maps")
-
-    def __init__(self, base, gens, table, ratio):
-        self.base = base
-        self.gens = gens
-        self.table = table
-        self.ratio = ratio
-        self.uses = 0
-        self._pair_maps: list[np.ndarray] | None = None
-
-    def pair_maps(self) -> list[np.ndarray]:
-        """Dense 512*512 -> code maps, one per generation, built once on
-        first reuse — refilling a 2 MB map per stripe per generation was
-        ~10% of the reuse wall. int32: codes < 512, -1 sentinel."""
-        if self._pair_maps is None:
-            maps = []
-            for keys, codes in self.gens:
-                pc = np.full(512 * 512, -1, dtype=np.int32)
-                pc[keys] = codes
-                maps.append(pc)
-            self._pair_maps = maps
-        return self._pair_maps
-
-
-_FSST_GEN_CACHE: dict[str, _FsstGenEntry] = {}
-# retrain anchor: after this many reuses, train fresh once so a slowly
-# drifting column re-anchors its table (cheap insurance at 1/N cost)
-_FSST_REFRESH_EVERY = 64
-# keys are namespaced per job (encode_stripe threads the job_token), so a
-# long-lived worker accumulates dead entries across jobs — bound the dict
-# by evicting insertion-order-oldest (dict preserves insertion order)
-_FSST_CACHE_MAX = 64
-
-
-def fsst_cache_clear() -> None:
-    _FSST_GEN_CACHE.clear()
-
-
-def _fsst_encode_elements(blob: bytes, lengths: np.ndarray, base: FsstTable):
+    Every call trains its own table from ``blob`` alone, so a stripe's
+    encoded bytes depend on that stripe only (the table is stored in the
+    blob for decode)."""
+    base = fsst_train(blob, max_symbols=128)  # leave room for merged symbols
     offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
     np.cumsum(lengths, out=offsets[1:])
     # elements come straight out of the encoder (no re-parse of the byte
@@ -518,59 +475,11 @@ def _fsst_encode_elements(blob: bytes, lengths: np.ndarray, base: FsstTable):
         blob, base, boundaries=offsets[1:-1], return_elements=True
     )
     string_id = np.searchsorted(offsets[1:], src_start, side="right")
-    return elem_id, string_id
-
-
-def fsst_compress_column(
-    blob: bytes, lengths: np.ndarray, cache_key: str | None = None
-) -> tuple[bytes, bytes] | None:
-    """Train + compress a string column (full FSST: base 1-2 byte table,
-    then merge rounds growing symbols to <=8 bytes). Returns
-    (table_bytes, data) or None when unprofitable (<5% savings),
-    mirroring E6's fallback.
-
-    ``cache_key`` (e.g. the column name) enables CROSS-STRIPE reuse: the
-    first stripe trains and caches (base table, per-generation pair
-    maps, final table); later stripes skip training and selection
-    entirely — base-encode, REPLAY the cached generation rewrites, emit.
-    Reuse self-checks: if the reused ratio falls more than 1% below the
-    training stripe's ratio (dissimilar data, or a key collision across
-    tables in a long-lived worker), the stripe trains fresh and the
-    entry is refreshed; every _FSST_REFRESH_EVERY reuses one fresh train
-    re-anchors a slowly drifting column."""
-    ent = _FSST_GEN_CACHE.get(cache_key) if cache_key is not None else None
-    if ent is not None and ent.uses < _FSST_REFRESH_EVERY:
-        elem_id, string_id = _fsst_encode_elements(blob, lengths, ent.base)
-        elem_len = np.where(
-            elem_id < 256, ent.base.out_len[np.minimum(elem_id, 255)], 1
-        ).astype(np.int64)
-        for pair_code in ent.pair_maps():
-            elem_id, elem_len, string_id = _apply_pairs(
-                elem_id, elem_len, string_id, pair_code
-            )
-        data = _emit_elements(elem_id)
-        tbl = ent.table.serialize()
-        size = len(data) + len(tbl)
-        ratio = len(blob) / max(1, size)
-        if size <= 0.95 * max(1, len(blob)) and ratio >= 0.99 * ent.ratio:
-            ent.uses += 1
-            return tbl, data
-        # regression vs the training anchor: fall through to a fresh train
-
-    base = fsst_train(blob, max_symbols=128)  # leave room for merged symbols
-    elem_id, string_id = _fsst_encode_elements(blob, lengths, base)
-    elem_id, table, gens = _merge_rounds(elem_id, base, string_id)
+    elem_id, table = _merge_rounds(elem_id, base, string_id)
     data = _emit_elements(elem_id)
     tbl = table.serialize()
     if len(data) + len(tbl) > 0.95 * max(1, len(blob)):
         return None
-    if cache_key is not None:
-        _FSST_GEN_CACHE.pop(cache_key, None)
-        while len(_FSST_GEN_CACHE) >= _FSST_CACHE_MAX:
-            _FSST_GEN_CACHE.pop(next(iter(_FSST_GEN_CACHE)))
-        _FSST_GEN_CACHE[cache_key] = _FsstGenEntry(
-            base, gens, table, len(blob) / max(1, len(data) + len(tbl))
-        )
     return tbl, data
 
 

@@ -307,21 +307,13 @@ def _int_values(
 
 # ------------------------------------------------------------- encode
 
-def encode_column(
-    arr: pa.Array | pa.ChunkedArray,
-    name: str | None = None,
-    namespace: str | None = None,
-) -> tuple[bytes, dict]:
+def encode_column(arr: pa.Array | pa.ChunkedArray) -> tuple[bytes, dict]:
     """Encode one column of a stripe -> (blob, stats).
 
     Codec choice is E9 (codecs/selector.py); kernels are all vectorized.
     Unsupported types fall back to Arrow IPC (raw_ipc) so every schema
-    round-trips. ``name`` keys the cross-stripe FSST generation cache
-    (long-lived workers reuse one column's trained table across stripes;
-    the cache self-checks ratio and retrains on drift); ``namespace``
-    prefixes that key with a job/table identity so same-named columns of
-    unrelated tables in one worker cannot collide (without it the key is
-    the bare name — single-table assumption).
+    round-trips. The blob depends on ``arr`` alone: an FSST column trains
+    its own table from this stripe's values.
     """
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
@@ -386,8 +378,7 @@ def encode_column(
                 (K_DATA, rle_v2_encode(idx, signed=False)),
             ], blob)
         if codec == "str_fsst":
-            ckey = None if name is None else (f"{namespace}:{name}" if namespace else name)
-            res = fsst_compress_column(blob, lengths, cache_key=ckey)
+            res = fsst_compress_column(blob, lengths)
             if res is not None:
                 tbl, data = res
                 return fin("str_fsst", [
@@ -559,13 +550,12 @@ def encode_stripe(
 ) -> tuple[dict[str, bytes], list[dict]]:
     """Encode a whole stripe -> ({column: blob}, per-column stats).
 
-    ``namespace`` (e.g. the encode job_token) scopes the cross-stripe FSST
-    cache so unrelated tables sharing a column name (e.g. 'text') in one
-    long-lived worker never reuse each other's trained tables."""
+    ``namespace`` is accepted and ignored: the output depends on ``batch``
+    alone. It stays only because perfbench's traced replay passes it."""
     blobs: dict[str, bytes] = {}
     stats: list[dict] = []
     for i, name in enumerate(batch.schema.names):
-        blob, st = encode_column(batch.column(i), name=name, namespace=namespace)
+        blob, st = encode_column(batch.column(i))
         st["column"] = name
         blobs[name] = blob
         stats.append(st)

@@ -134,6 +134,7 @@ META_FETCH_CONCURRENCY = 8
 # (measured 620 -> 320 ms per 16k-row group), for stats no reader of a
 # decoded materialization uses
 _DECODED_PARQUET = {"compression": "snappy", "use_dictionary": False, "write_statistics": False}
+_PKG_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _ensure_workers_can_import(df: DataFrame) -> None:
@@ -147,16 +148,14 @@ def _ensure_workers_can_import(df: DataFrame) -> None:
     sc = df.sparkSession.sparkContext
     if getattr(sc, "_dos_pyfile_added", False):
         return
-    sc.addPyFile(_package_zip(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
+    sc.addPyFile(_package_zip(_PKG_DIR))
     sc._dos_pyfile_added = True
 
 
-def _package_zip(pkg_dir: str) -> str:
-    """Zip the ``.py`` files of ``pkg_dir`` into the temp dir under a name
-    keyed on their paths and contents: an existing zip of that name holds
-    exactly this code and is reused; changed code gets a new name."""
+def _package_files(pkg_dir: str) -> tuple[list[str], str]:
+    """The ``.py`` files of ``pkg_dir``, sorted, and a sha256 hex digest
+    of their paths (relative to its parent) and contents."""
     import hashlib
-    import zipfile
 
     root = os.path.dirname(pkg_dir)
     files = sorted(os.path.join(d, fn) for d, _, fns in os.walk(pkg_dir) for fn in fns if fn.endswith(".py"))
@@ -164,7 +163,25 @@ def _package_zip(pkg_dir: str) -> str:
     for full in files:
         with open(full, "rb") as f:
             h.update(os.path.relpath(full, root).encode() + b"\0" + hashlib.sha256(f.read()).digest())
-    zip_path = os.path.join(tempfile.gettempdir(), f"{os.path.basename(pkg_dir)}_{h.hexdigest()[:16]}.zip")
+    return files, h.hexdigest()
+
+
+@functools.cache
+def code_digest() -> str:
+    """The package's code digest, hashed once per process (a timed query
+    that keys its fixture on it must not re-read the package per call)."""
+    return _package_files(_PKG_DIR)[1]
+
+
+def _package_zip(pkg_dir: str) -> str:
+    """Zip the ``.py`` files of ``pkg_dir`` into the temp dir under a name
+    keyed on their paths and contents: an existing zip of that name holds
+    exactly this code and is reused; changed code gets a new name."""
+    import zipfile
+
+    root = os.path.dirname(pkg_dir)
+    files, digest = _package_files(pkg_dir)
+    zip_path = os.path.join(tempfile.gettempdir(), f"{os.path.basename(pkg_dir)}_{digest[:16]}.zip")
     if not os.path.exists(zip_path):
         tmp = f"{zip_path}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w") as zf:
@@ -283,7 +300,6 @@ def _encode_stream(
     ``seq_end`` is the exclusive end of this split's window: running past
     it would silently collide with the next split's stripe_ids, so it
     raises instead."""
-    ns = f"{job_token:04x}"
     for seq, stripe in enumerate(stripes, seq_start):
         if part_id >= (1 << 16) or seq >= (1 << 31):
             raise ValueError(
@@ -296,7 +312,7 @@ def _encode_stream(
                 f"stripe_id packing overflow: seq={seq} reached this split's "
                 f"window end {seq_end} (65536 stripes/split) — raise stripe_rows"
             )
-        blobs, stats = encode_stripe(stripe, namespace=ns)
+        blobs, stats = encode_stripe(stripe)
         yield _blob_batch((job_token << 47) | (part_id << 31) | seq, part_id, blobs, stats)
 
 
@@ -704,7 +720,6 @@ def roundtrip_files(
     spark_schema,
     columns: list[str] | None = None,
     stripe_rows: int = DEFAULT_STRIPE_ROWS,
-    job_token: int | None = None,
     parallelism: int | None = None,
     batch_transform=None,
     transform_schema=None,
@@ -742,7 +757,6 @@ def roundtrip_files(
     partials are reproducible. The caller owns proving its reduction is
     equivalent to the unfused aggregate.
     """
-    job_token = _job_token(job_token)
     if (batch_transform is None) != (transform_schema is None):
         raise ValueError("batch_transform and transform_schema must be passed together")
     sdf, splits, _ = _split_frame(spark, path_or_glob, stripe_rows, parallelism or spark.sparkContext.defaultParallelism)
@@ -758,7 +772,6 @@ def roundtrip_files(
         if batch_transform is not None
         else StructType([f for f in spark_schema.fields if f.name in set(names)])
     )
-    ns = f"{job_token:04x}"
     flush_rows = _PARTIAL_FLUSH_ROWS
 
     def rt(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -769,7 +782,7 @@ def roundtrip_files(
             # reads bigger than a stripe decode ~20% faster
             src = _read_range(path, rg, r0, r1, max(stripe_rows, 65536))
             for stripe in _stripes(src, stripe_rows):
-                blobs, _stats = encode_stripe(stripe, namespace=ns)
+                blobs, _stats = encode_stripe(stripe)
                 dec = decode_stripe(blobs, stripe.schema, columns=names)
                 if batch_transform is None:
                     yield dec

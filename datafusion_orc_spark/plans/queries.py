@@ -40,8 +40,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datafusion_orc_spark import FORMAT_VERSION
 from datafusion_orc_spark.functions import dialect as dl
+from datafusion_orc_spark.operators.encode import code_digest
 
 SPARK, DUCK = 0, 1
 
@@ -55,10 +55,10 @@ _TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 def _fixture_dir(sf_dir: str, kind: str | None, prefix: str) -> str:
     """The temp-dir path of a query's materialized fixture, keyed on the
-    scale-factor directory, the blob format version and ``kind``, so a
-    changed format or input gets a fresh directory and an existing one is
-    reused."""
-    key = f"{sf_dir}:v{FORMAT_VERSION}" + (f":{kind}" if kind else "")
+    scale-factor directory, the package's code digest and ``kind``: any
+    code change (a codec, a sink, the ORC writer) or another input gets a
+    fresh directory, and an existing one holds what this code wrote."""
+    key = f"{sf_dir}:{code_digest()}" + (f":{kind}" if kind else "")
     return f"{tempfile.gettempdir()}/dos_{prefix}_{hashlib.md5(key.encode()).hexdigest()[:8]}"
 
 

@@ -78,10 +78,12 @@ def start_incremental_decode(
     (e.g. start_incremental_encode's output) and decode each
     micro-batch back to rows, appended as parquet.
 
-    Micro-batches are file-granular, but Spark may coalesce or split
-    files across scan partitions, so the decode uses the shuffle=True
-    stripe regroup — a micro-batch is small, the Exchange is tiny, and
-    correctness never depends on file-to-partition alignment. ``where``
+    Micro-batches are file-granular, so each stripe's blob rows
+    normally sit in one scan partition and the "parquet" and "count"
+    sinks decode with shuffle=False (no Exchange). If Spark splits a
+    stripe across partitions, that decode raises its missing-columns
+    error and the batch reruns with the shuffle=True stripe_id regroup,
+    so correctness never depends on file-to-partition alignment. ``where``
     pushes stripe pruning + the exact residual filter into each batch
     (late-arriving stripes outside the predicate cost no decode CPU).
     Exactly-once: Spark's checkpointed batch ids + append-only output

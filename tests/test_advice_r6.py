@@ -1,10 +1,8 @@
-"""Round-6 advice fixes: INT64_MIN-safe decimal vectorization guard and
-job-namespaced (bounded) cross-stripe FSST generation cache."""
+"""Round-6 advice fixes: INT64_MIN-safe decimal vectorization guard."""
 
 import numpy as np
 import pyarrow as pa
 
-from datafusion_orc_spark.codecs import strings as S
 from datafusion_orc_spark.format import orc_reader as R
 
 
@@ -39,59 +37,3 @@ def test_decimal_wellformed_still_vectorized():
     for got, mi in zip(arr, m):
         assert got.as_py() == D.Decimal(int(mi)).scaleb(-2)
 
-
-def _col(n, seed, prefix):
-    rng = np.random.default_rng(seed)
-    vals = [f"{prefix}-{i:012d}".encode() for i in rng.integers(0, 10**9, n)]
-    return b"".join(vals), np.array([len(v) for v in vals], dtype=np.int64)
-
-
-def test_fsst_cache_namespace_separates_same_column_name():
-    """encode_stripe threads a job namespace into the cache key, so two
-    tables sharing a column name ('text') in one worker train and cache
-    independently — no silent cross-table reuse."""
-    S.fsst_cache_clear()
-    try:
-        blob_a, len_a = _col(6000, 1, "alpha")
-        blob_b, len_b = _col(6000, 2, "bravo")
-        S.fsst_compress_column(blob_a, len_a, cache_key="jobA:text")
-        S.fsst_compress_column(blob_b, len_b, cache_key="jobB:text")
-        assert "jobA:text" in S._FSST_GEN_CACHE
-        assert "jobB:text" in S._FSST_GEN_CACHE
-        assert S._FSST_GEN_CACHE["jobA:text"].uses == 0
-        assert S._FSST_GEN_CACHE["jobB:text"].uses == 0  # B trained fresh
-    finally:
-        S.fsst_cache_clear()
-
-
-def test_fsst_cache_bounded_evicts_oldest():
-    """Per-job keys accumulate in long-lived workers; the cache evicts
-    insertion-order-oldest past _FSST_CACHE_MAX."""
-    S.fsst_cache_clear()
-    try:
-        blob, lengths = _col(6000, 3, "doc")
-        for i in range(S._FSST_CACHE_MAX + 5):
-            S.fsst_compress_column(blob, lengths, cache_key=f"j{i:03d}:c")
-        assert len(S._FSST_GEN_CACHE) <= S._FSST_CACHE_MAX
-        assert "j000:c" not in S._FSST_GEN_CACHE
-        assert f"j{S._FSST_CACHE_MAX + 4:03d}:c" in S._FSST_GEN_CACHE
-    finally:
-        S.fsst_cache_clear()
-
-
-def test_encode_stripe_namespace_threads_to_cache_key():
-    from datafusion_orc_spark.format.stripe import encode_stripe, decode_stripe
-
-    S.fsst_cache_clear()
-    try:
-        rng = np.random.default_rng(7)
-        vals = [f"src-{i:012d}" for i in rng.integers(0, 10**9, 6000)]
-        batch = pa.RecordBatch.from_pydict({"text": pa.array(vals)})
-        blobs, stats = encode_stripe(batch, namespace="1a2b")
-        keys = list(S._FSST_GEN_CACHE)
-        if keys:  # only when the selector picked FSST for this column
-            assert all(k.startswith("1a2b:") for k in keys)
-        back = decode_stripe(blobs, batch.schema)
-        assert back.column(0).to_pylist() == vals
-    finally:
-        S.fsst_cache_clear()

@@ -163,7 +163,7 @@ def test_fsst_sampled_merge_selection_matches_and_is_cheaper(monkeypatch):
     def run(sample):
         counting = _CountingNumpy()
         monkeypatch.setattr(S, "np", counting)
-        ei, tbl, _gens = S._merge_rounds(elem_id, base, string_id, sample_elems=sample)
+        ei, tbl = S._merge_rounds(elem_id, base, string_id, sample_elems=sample)
         assert counting.counted
         return counting.counted, (ei, tbl)
 

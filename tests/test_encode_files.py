@@ -266,3 +266,62 @@ def test_package_zip_is_keyed_on_contents(tmp_path, monkeypatch):
     assert zipfile.ZipFile(second).read("pkg/mod.py") == b"X = 2\n"
     (pkg / "notes.txt").write_text("still not packaged")
     assert _package_zip(str(pkg)) == second
+
+
+def test_encode_files_output_depends_on_input_alone(spark, tmp_path):
+    """Two runs of one input and job_token write sha256-identical part
+    files, although another job's encode ran in the same Python workers
+    between them. Each split alternates narrow-id stripes (which
+    compress well) with wide-id stripes, so a worker's FSST tables would
+    differ from run to run if they carried over between stripes."""
+    import hashlib
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(3)
+
+    def ids(hi):
+        return [f"doc-{i:012d}" for i in rng.integers(0, hi, 4000)]
+
+    src, other = str(tmp_path / "ids.parquet"), str(tmp_path / "other.parquet")
+    pq.write_table(pa.table({"doc_id": sum((ids(10**6) + ids(10**9) for _ in range(8)), [])}), src, row_group_size=16000)
+    pq.write_table(pa.table({"doc_id": ids(10**9) * 4}), other, row_group_size=4000)
+
+    def digests(path, job_token, out):
+        encode_files(spark, path, stripe_rows=4000, job_token=job_token, output_dir=out, parallelism=4).collect()
+        files = sorted(glob.glob(f"{out}/part-*.parquet"))
+        assert files
+        return {os.path.basename(p): hashlib.sha256(open(p, "rb").read()).hexdigest() for p in files}
+
+    first = digests(src, 7, str(tmp_path / "a"))
+    digests(other, 8, str(tmp_path / "b"))
+    assert digests(src, 7, str(tmp_path / "c")) == first
+    codecs = encode_files(spark, src, stripe_rows=4000, discard_output=True).select("codec").distinct().collect()
+    assert [r["codec"] for r in codecs] == ["str_fsst"]
+
+
+def test_fixture_dir_is_keyed_on_package_contents(tmp_path, monkeypatch):
+    """A query fixture's directory is named by the package's code digest:
+    the same code finds the same directory, and an edited package file
+    (seen by the next process, as the digest is hashed once per process)
+    gets a new one, so no fixture written by older code is reused."""
+    from datafusion_orc_spark.operators import encode
+    from datafusion_orc_spark.plans.queries import _fixture_dir
+
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text("X = 1\n")
+    monkeypatch.setattr(encode, "_PKG_DIR", str(pkg))
+    try:
+        encode.code_digest.cache_clear()
+        first = _fixture_dir("/data/sf0.01", "sink", "orc_sink")
+        assert _fixture_dir("/data/sf0.01", "sink", "orc_sink") == first
+        assert _fixture_dir("/data/sf0.1", "sink", "orc_sink") != first
+        (pkg / "mod.py").write_text("X = 2\n")
+        assert _fixture_dir("/data/sf0.01", "sink", "orc_sink") == first  # hashed once per process
+        encode.code_digest.cache_clear()
+        assert _fixture_dir("/data/sf0.01", "sink", "orc_sink") != first
+    finally:
+        encode.code_digest.cache_clear()

@@ -119,6 +119,25 @@ def test_malformed_blob_raises():
         decode_column(blob[:1] + bytes([99]) + blob[2:], pa.bool_())
 
 
+def _doc_ids(seed: int, hi: int, n: int = 8000) -> pa.RecordBatch:
+    rng = np.random.default_rng(seed)
+    return pa.RecordBatch.from_pydict({"doc_id": [f"doc-{i:012d}" for i in rng.integers(0, hi, n)]})
+
+
+def test_encode_stripe_output_depends_on_its_batch_alone():
+    """A stripe's blobs are a function of that stripe: encoding another
+    table with a same-named FSST column in between changes no byte.
+    ``a``'s wider ids train a different table than ``b``'s, and that
+    table would still compress ``b`` well enough to pass for its own."""
+    a, b = _doc_ids(1, 10**9), _doc_ids(2, 10**6)
+    before, stats = encode_stripe(b)
+    assert stats[0]["codec"] == "str_fsst"
+    encode_stripe(a)
+    after, _ = encode_stripe(b)
+    assert after == before
+    assert decode_stripe(after, b.schema).equals(b)
+
+
 @pytest.mark.parametrize("table", ["lineitem", "orders", "events", "documents", "embeddings"])
 def test_driver_tables_roundtrip(table):
     t = pq.read_table(f"/root/testdata/sf0.001/{table}.parquet")
