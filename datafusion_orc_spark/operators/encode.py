@@ -28,14 +28,19 @@ are composed from one copy of each piece:
   staged per task attempt by ``_open_part``; ``_write_parts`` is the one
   part-file sink tail, returning a ``PART_STATS_SCHEMA`` row per file;
 - ``_decode_setup``: prune bounds checked against the schema on the
-  driver (``_merge_where``) and the ``column IN (...)`` cut of the blob
-  table to the projected and bound columns;
+  driver (``_merge_where``) and the choice of blob source. The blob
+  file source: a plain parquet scan of blob part files
+  (``_blob_files``) is planned like the ORC scan (``_blob_splits``:
+  row-group ranges through ``_fetch_footers`` -> ``_plan_row_splits``
+  -> ``_task_frame``), and each task reads its row groups with pyarrow
+  (``_read_blob_splits``). Any other blob table is read by the JVM,
+  cut to the projected and bound columns by ``column IN (...)``;
 - ``_stripe_groups``: the one loop that regroups blob rows into stripes
   (zero-copy blob slices) and the one stripe-prune rule: ``prune``
   drops a stripe on its [vmin, vmax], inside the task;
   ``_stripe_batches`` decodes each stripe it yields, with sub-block
   pruning. The stripeblob DataSource (sources/stripeblob_datasource.py)
-  reads through the same two.
+  plans and reads through the blob file source and the same two.
 
 The entry points:
 
@@ -46,27 +51,32 @@ The entry points:
 - ``roundtrip_files``: ``_split_frame`` -> ``_read_range`` ->
   ``_stripes`` -> encode every column -> decode the projection, with an
   optional partial aggregate before the JVM.
-- ``decode_table``: ``_decode_setup`` -> ``_stripe_batches``. Encode
-  emits a stripe's columns contiguously from one task, so the decode
-  needs no Exchange; ``shuffle=True`` first co-locates a scattered blob
-  table's stripes (hash repartition and sort on stripe_id), then runs
-  the same task body.
+- ``decode_table``: ``_decode_setup`` -> ``_stripe_batches``. A plain
+  scan of blob part files takes the blob file source, so no blob byte
+  crosses the JVM. Encode emits a stripe's columns contiguously from
+  one task, so the decode needs no Exchange; ``shuffle=True`` first
+  co-locates a scattered blob table's stripes (hash repartition and
+  sort on stripe_id, always on the JVM read), then runs the same task
+  body.
 - ``decode_to_files``: ``_decode_setup`` -> ``_stripe_batches`` ->
-  ``_write_parts``.
+  ``_write_parts``, from either blob source.
 
-Column pruning on decode is a ``column IN (...)`` filter on the blob
-table, the Spark-side analogue of the reference's projection pushdown
-(file_source.rs:95-102).
+Column pruning on decode is the Spark-side analogue of the reference's
+projection pushdown (file_source.rs:95-102): ``_stripe_groups`` holds
+only the projected and bound columns' blobs, and the JVM read filters
+the rest out before they cross.
 """
 
 from __future__ import annotations
 
 import functools
 import glob
+import itertools
 import os
 import tempfile
 import uuid
 from collections.abc import Iterator
+from urllib.parse import unquote, urlsplit, urlunsplit
 
 import numpy as np
 import pyarrow as pa
@@ -134,6 +144,8 @@ META_FETCH_CONCURRENCY = 8
 # (measured 620 -> 320 ms per 16k-row group), for stats no reader of a
 # decoded materialization uses
 _DECODED_PARQUET = {"compression": "snappy", "use_dictionary": False, "write_statistics": False}
+# the blob columns a decode task reads: stripe grouping, stats, bytes
+_DECODE_COLUMNS = ["stripe_id", "column", "data", "vmin", "vmax"]
 _PKG_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -869,18 +881,106 @@ def _merge_where(prune: dict | None, where: str | None, names: list[str]) -> dic
     return merged or None
 
 
+def _uri_path(uri: str) -> str:
+    """A path ``DataFrame.inputFiles()`` returns (a percent-escaped URI)
+    as ``resolve_store`` takes it: a local file's path, else the URI with
+    its path unescaped."""
+    parts = urlsplit(uri)
+    if parts.scheme == "file":
+        return unquote(parts.path)
+    return urlunsplit(parts._replace(path=unquote(parts.path)))
+
+
+def _blob_files(blobs_df: DataFrame) -> list[str] | None:
+    """The files of ``blobs_df`` when it is a plain parquet scan of a blob
+    table, else None. A plain scan is not cached, has ``BLOB_SCHEMA``'s
+    columns, and its optimized plan is a non-streaming
+    ``LogicalRelation`` over a parquet ``HadoopFsRelation`` with no
+    partition columns. Any other frame (an ``encode_table`` output, a
+    filtered, cached or hive-partitioned table, a streaming micro-batch)
+    has rows only the JVM can produce."""
+    if blobs_df.is_cached or [(f.name, f.dataType) for f in blobs_df.schema] != [
+        (f.name, f.dataType) for f in BLOB_SCHEMA
+    ]:
+        return None
+    plan = blobs_df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LogicalRelation" or plan.isStreaming():
+        return None
+    rel = plan.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+        or rel.partitionSchema().length()
+    ):
+        return None
+    return [_uri_path(u) for u in blobs_df.inputFiles()]
+
+
+def _blob_splits(paths: list[str], target: int) -> list[tuple[str, int, int, int]]:
+    """Row-group ranges ``(path, 0, rg_start, rg_end)`` of blob part files
+    for ``target`` tasks, planned from footers by the one split planner:
+    each file is one group, its cut points the unit (``quantum=1``).
+
+    A split must hold whole stripes, so a file is cut between two row
+    groups only where the row groups' stripe_id statistics prove that no
+    stripe_id before the cut occurs after it. ``_PartWriter`` writes one
+    stripe per row group in stripe_id order, so every row-group boundary
+    of an ``encode_files`` part file is a cut point; a file without
+    statistics is never cut."""
+
+    def cut_points(p):
+        md = _open_parquet(p).metadata
+        n = md.num_row_groups
+        sid = md.schema.names.index("stripe_id")
+        stats = [md.row_group(g).column(sid).statistics for g in range(n)]
+        cuts = [0]
+        if all(s is not None and s.has_min_max for s in stats):
+            hi = list(itertools.accumulate((s.max for s in stats), max))
+            lo = list(itertools.accumulate((s.min for s in reversed(stats)), min))[::-1]
+            cuts += [g for g in range(1, n) if hi[g - 1] < lo[g]]
+        return cuts + [n] if md.num_rows else []
+
+    cuts = dict(zip(paths, _fetch_footers(paths, cut_points)))
+    groups = [(p, 0, len(c) - 1) for p, c in cuts.items() if c]
+    return [(p, 0, cuts[p][s], cuts[p][e]) for p, _, s, e in _plan_row_splits(groups, target, 1)]
+
+
+def _read_blob_splits(splits) -> Iterator[pa.RecordBatch]:
+    """The blob rows of each ``(path, _, rg_start, rg_end)`` split, read
+    with pyarrow in ``_DECODE_COLUMNS`` only: a decode task's input."""
+    for path, _, g0, g1 in splits:
+        yield from _open_parquet(path).iter_batches(
+            batch_size=1 << 16, row_groups=list(range(g0, g1)), columns=_DECODE_COLUMNS, use_threads=False
+        )
+
+
 def _decode_setup(
-    blobs_df: DataFrame, schema: pa.Schema | None, spark_schema, columns: list[str] | None, prune, where=None
-) -> tuple[DataFrame, pa.Schema, list[str], dict | None]:
-    """Shared decode setup: returns the blob table cut to the rows the
-    decode reads, the Arrow schema, the projection in SCHEMA order and
-    the checked prune bounds (``_merge_where``). The output StructType
-    keeps schema order, so the decoded batches must too: a caller-order
+    blobs_df: DataFrame,
+    schema: pa.Schema | None,
+    spark_schema,
+    columns: list[str] | None,
+    prune,
+    where=None,
+    shuffle: bool = False,
+):
+    """Shared decode setup: returns the frame a decode maps over and the
+    task body that turns the task's input batches into decoded stripes
+    (``_stripe_batches`` of the projection in SCHEMA order, pruned by
+    the bounds ``_merge_where`` checked). The output StructType keeps
+    schema order, so the decoded batches must too: a caller-order
     projection decoded fine but mis-bound column vectors JVM-side.
 
-    The cut is a ``column IN (...)`` filter over the projection and the
-    bound columns; a bound column outside the projection keeps its
-    [vmin, vmax] for ``_stripe_groups`` but crosses with empty ``data``."""
+    The blob file source: a plain parquet scan of blob part files
+    (``_blob_files``) is read by the decode tasks themselves. The frame
+    is a ``_task_frame`` over the files' ``_blob_splits``, and each task
+    reads its row groups with pyarrow, so no blob byte crosses the JVM.
+
+    Any other blob table, and ``shuffle=True``, is read by the JVM, cut to
+    the rows the decode reads by a ``column IN (...)`` filter over the
+    projection and the bound columns; a bound column outside the
+    projection keeps its [vmin, vmax] for ``_stripe_groups`` but crosses
+    with empty ``data``. ``shuffle`` then co-locates each stripe's rows:
+    a hash exchange and sort on stripe_id."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     _ensure_workers_can_import(blobs_df)
@@ -893,12 +993,30 @@ def _decode_setup(
         if unknown:
             raise ValueError(f"decode: unknown columns {sorted(unknown)}")
         names = [nm for nm in names if nm in set(columns)]
-        bound_only = sorted(set(prune or ()) - set(names))
-        blobs_df = blobs_df.filter(F.col("column").isin(names + bound_only))
-        if bound_only:
-            data = F.when(F.col("column").isin(names), F.col("data")).otherwise(F.lit(b""))
-            blobs_df = blobs_df.withColumn("data", data)
-    return blobs_df, schema, names, prune
+    files = None if shuffle else _blob_files(blobs_df)
+    if files is not None:
+        spark = blobs_df.sparkSession
+        target = spark.sparkContext.defaultParallelism
+        frame, splits, _ = _task_frame(spark, _blob_splits(files, target), target)
+
+        def read(batches):
+            return _read_blob_splits(_task_splits(batches, splits))
+
+    else:
+        frame = blobs_df
+        if columns is not None:
+            bound_only = sorted(set(prune or ()) - set(names))
+            frame = frame.filter(F.col("column").isin(names + bound_only))
+            if bound_only:
+                data = F.when(F.col("column").isin(names), F.col("data")).otherwise(F.lit(b""))
+                frame = frame.withColumn("data", data)
+        if shuffle:
+            frame = frame.repartition("stripe_id").sortWithinPartitions("stripe_id")
+
+        def read(batches):
+            return batches
+
+    return frame, lambda batches: _stripe_batches(read(batches), schema, names, prune)
 
 
 def _stripe_groups(
@@ -1009,24 +1127,26 @@ def decode_table(
     stripe contiguously from one task, so a stripe's blob rows are
     co-partitioned and the decode needs NO Exchange (the
     StripeBlobReader pattern; at scale a groupBy here would reshuffle
-    every encoded byte on every read). ``shuffle=True`` is for blob
+    every encoded byte on every read). When ``blobs_df`` is a plain
+    ``spark.read.parquet`` of blob part files, the tasks read the files
+    themselves (the blob file source, ``_decode_setup``): the plan is
+    the decode over a ``Range`` frame, with no parquet scan on the JVM
+    and no blob byte sent to the Python worker. ``shuffle=True`` is for blob
     tables whose stripes were scattered across partitions by an
     arbitrary repartition: a hash exchange on stripe_id co-locates each
     stripe's blob rows, and a sort on stripe_id keeps
     ``_stripe_groups`` holding one stripe at a time; the decode task is
     the same.
     """
-    blobs_df, schema, names, prune = _decode_setup(blobs_df, schema, spark_schema, columns, prune, where)
+    frame, decode = _decode_setup(blobs_df, schema, spark_schema, columns, prune, where, shuffle)
     if columns is not None:
         spark_schema = StructType([f for f in spark_schema.fields if f.name in columns])
-    if shuffle:
-        blobs_df = blobs_df.repartition("stripe_id").sortWithinPartitions("stripe_id")
 
     def decode_local(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _task_init()
-        yield from _stripe_batches(batches, schema, names, prune)
+        yield from decode(batches)
 
-    out = blobs_df.mapInArrow(decode_local, spark_schema)
+    out = frame.mapInArrow(decode_local, spark_schema)
     return out.filter(where) if where is not None else out
 
 
@@ -1051,16 +1171,15 @@ def decode_to_files(
     ``prune`` bounds prune stripes as in ``decode_table``: only against
     integer-column stats (string-keyed pruning is supported by
     read_orc_distributed, not by this sink)."""
-    blobs_df, schema, names, prune = _decode_setup(blobs_df, None, spark_schema, columns, prune)
+    frame, decode = _decode_setup(blobs_df, None, spark_schema, columns, prune)
     open_writer = functools.partial(pq.ParquetWriter, **_DECODED_PARQUET)
     bytes_per_file = _BYTES_PER_FILE
 
     def dec_write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _task_init()
-        stripes = _stripe_batches(batches, schema, names, prune)
-        yield from _write_parts(stripes, output_dir, open_writer, ".parquet", bytes_per_file)
+        yield from _write_parts(decode(batches), output_dir, open_writer, ".parquet", bytes_per_file)
 
-    return blobs_df.mapInArrow(dec_write, PART_STATS_SCHEMA)
+    return frame.mapInArrow(dec_write, PART_STATS_SCHEMA)
 
 
 def verify_roundtrip(df: DataFrame, stripe_rows: int = DEFAULT_STRIPE_ROWS) -> tuple[bool, dict]:

@@ -33,7 +33,10 @@ window ranks, band/bucket pairs, ``pack_sequences``) keep a plain
 
 from __future__ import annotations
 
+import glob
 import hashlib
+import os
+import shutil
 import tempfile
 from collections.abc import Callable
 
@@ -54,12 +57,21 @@ _TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _fixture_dir(sf_dir: str, kind: str | None, prefix: str) -> str:
-    """The temp-dir path of a query's materialized fixture, keyed on the
-    scale-factor directory, the package's code digest and ``kind``: any
-    code change (a codec, a sink, the ORC writer) or another input gets a
-    fresh directory, and an existing one holds what this code wrote."""
-    key = f"{sf_dir}:{code_digest()}" + (f":{kind}" if kind else "")
-    return f"{tempfile.gettempdir()}/dos_{prefix}_{hashlib.md5(key.encode()).hexdigest()[:8]}"
+    """The temp-dir path of a query's materialized fixture,
+    ``dos_{prefix}_{md5(key)[:8]}_{digest[:8]}``: keyed on the
+    scale-factor directory and ``kind``, and on the package's code
+    digest, so any code change (a codec, a sink, the ORC writer) or
+    another input gets a fresh directory, and an existing one holds what
+    this code wrote. When the directory is not there yet (the fixture is
+    about to be built), the sets of the same prefix and key that other
+    code wrote are removed."""
+    key = sf_dir + (f":{kind}" if kind else "")
+    stem = f"{tempfile.gettempdir()}/dos_{prefix}_{hashlib.md5(key.encode()).hexdigest()[:8]}_"
+    out = stem + code_digest()[:8]
+    if not os.path.exists(out):
+        for stale in glob.glob(glob.escape(stem) + "?" * 8):
+            shutil.rmtree(stale, ignore_errors=True)
+    return out
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -770,8 +782,6 @@ def q_orc_scan_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's pure-python ORC reader scans it distributed
     (one task per file), SQL aggregates over the temp view; oracle =
     the same aggregate on the raw parquet."""
-    import os
-
     from datafusion_orc_spark.sources.orc_source import read_orc_distributed
 
     li = _t(spark, sf_dir, "lineitem").select(
@@ -806,8 +816,6 @@ def q_orc_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact predicate is re-applied on the returned rows, so the
     result matches the oracle bit-for-bit regardless of how much the
     stats pruned."""
-    import os
-
     from datafusion_orc_spark.sources.orc_source import read_orc_distributed
 
     li = _t(spark, sf_dir, "lineitem").select(
@@ -2147,8 +2155,6 @@ def q_orc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's distributed reader -> aggregate. Oracle = the same
     aggregate on the raw parquet, so the whole write+read path must be
     value-exact."""
-    import os
-
     from datafusion_orc_spark.sources.orc_sink import write_orc_distributed
     from datafusion_orc_spark.sources.orc_source import read_orc_distributed
 
@@ -2195,8 +2201,6 @@ def q_orc_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result is value-exact regardless of pruning. Oracle = the same
     lookup on the raw parquet. The probed key is MAX(l_orderkey) —
     present at every SF, computed identically by both dialects."""
-    import os
-
     from datafusion_orc_spark.sources.orc_sink import write_orc_distributed
     from datafusion_orc_spark.sources.orc_source import read_orc_distributed
 
@@ -2494,9 +2498,6 @@ def q_streaming_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     only if the full streaming path — file-source listing, checkpointed
     batch ids, per-batch decode, append sink — reproduces every token
     bit-identically."""
-    import os
-    import shutil
-
     from datafusion_orc_spark.operators.encode import encode_table
     from datafusion_orc_spark.sources.tokens import tokenized_sequences
     from datafusion_orc_spark.streaming.incremental import start_incremental_decode
@@ -2669,8 +2670,6 @@ def q_orc_string_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-applied on decoded rows. The probed key is the MAX doc_id — the
     lpad re-keying makes lexicographic max == numeric max, so both
     dialects compute the same needle."""
-    import os
-
     from datafusion_orc_spark.sources.orc_sink import write_orc_distributed
     from datafusion_orc_spark.sources.orc_source import read_orc_distributed
     from datafusion_orc_spark.sources.tokens import tokenized_sequences
@@ -2712,9 +2711,6 @@ def q_sink_files_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     source. Green iff the full write path — attempt-fenced tmp+rename,
     per-stripe row groups, byte rolling — reproduces every token
     bit-identically. Oracle = SQL_ROUNDTRIP_TOKENS_AGG."""
-    import os
-    import shutil
-
     from datafusion_orc_spark.operators.encode import decode_to_files, encode_table
     from datafusion_orc_spark.sources.tokens import tokenized_sequences
 

@@ -10,8 +10,11 @@ src/file_format.rs:118-124):
 
 - schema inference from the job manifest (EP3 metadata-only path,
   SURVEY.md §3);
-- one input partition per blob file (the reference's file-level
-  parallelism, physical_exec.rs:58-90);
+- input partitions planned by the engine's blob file source
+  (operators/encode.py ``_blob_splits``, as ``decode_table`` plans a
+  plain scan of blob part files): row-group ranges that never cut a
+  stripe, over ``min(cores, ranges)`` partitions (the reference's
+  file-level parallelism, physical_exec.rs:58-90, down to the stripe);
 - **filter pushdown -> stripe pruning**: comparison filters on int
   columns are evaluated against the per-stripe min/max stats so
   non-matching stripes are never decoded (beats the reference, whose
@@ -23,11 +26,12 @@ src/file_format.rs:118-124):
   requested blob rows are decoded AND retained (physical_exec.rs:69-78
   analogue).
 - **streaming reads** through the engine's one blob-stripe path
-  (operators/encode.py ``_stripe_groups`` -> ``_stripe_batches``, as
-  ``decode_table``): each partition iterates its blob file's parquet
-  row groups, keeps blob bytes as Arrow buffer slices (no per-blob
-  copy), and decodes each stripe as soon as its projected columns are
-  complete — peak memory is O(stripe), not O(file). Within a surviving
+  (operators/encode.py ``_read_blob_splits`` -> ``_stripe_groups`` ->
+  ``_stripe_batches``, the task body of ``decode_table``'s file
+  source): each partition iterates its row-group ranges, keeps blob
+  bytes as Arrow buffer slices (no per-blob copy), and decodes each
+  stripe as soon as its projected columns are complete — peak memory
+  is O(stripe), not O(file). Within a surviving
   stripe, sub-block (ROW_INDEX-stride) stats drop blocks that cannot
   match the pushed filters.
 
@@ -38,6 +42,7 @@ tables work wherever local ones do.
 from __future__ import annotations
 
 import json
+import os
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -53,22 +58,32 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from datafusion_orc_spark.operators.encode import _open_parquet, _stripe_batches, _task_init, _tighten_bound
+from datafusion_orc_spark.operators.encode import (
+    _blob_splits,
+    _read_blob_splits,
+    _stripe_batches,
+    _task_init,
+    _tighten_bound,
+)
 from datafusion_orc_spark.plans.pipeline import chunk_dirs, read_manifest
 from datafusion_orc_spark.sources.objectstore import resolve_store
 
 _OPS = {GreaterThan: ">", GreaterThanOrEqual: ">=", LessThan: "<", LessThanOrEqual: "<=", EqualTo: "="}
 
 
-class _BlobFilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+class _BlobSplitsPartition(InputPartition):
+    def __init__(self, splits: list[tuple[str, int, int, int]]):
+        self.splits = splits
 
 
 class StripeBlobReader(DataSourceReader):
-    def __init__(self, path: str, schema: StructType):
+    """``parallelism``: the partition target; ``register`` binds the
+    session's ``defaultParallelism``, else the host's cpu count."""
+
+    def __init__(self, path: str, schema: StructType, parallelism: int | None = None):
         self._schema = schema
         self._prune: dict[str, tuple[int, int]] = {}
+        self._target = parallelism or os.cpu_count() or 1
         store, norm = resolve_store(path)
         self._files = [f for d in chunk_dirs(norm, read_manifest(norm)) for f in store.list(d, suffix=".parquet")]
 
@@ -83,26 +98,30 @@ class StripeBlobReader(DataSourceReader):
             yield f  # unsupported-for-exactness: Spark re-applies all
 
     def partitions(self) -> list[InputPartition]:
-        return [_BlobFilePartition(p) for p in self._files]
+        """The ``_blob_splits`` of the table's files, dealt round-robin
+        over ``min(target, splits)`` partitions."""
+        splits = _blob_splits(self._files, self._target)
+        n = max(1, min(self._target, len(splits)))
+        return [_BlobSplitsPartition(splits[k::n]) for k in range(n)]
 
-    def read(self, partition: _BlobFilePartition):
+    def read(self, partition: _BlobSplitsPartition):
         from pyspark.sql.pandas.types import to_arrow_schema
 
         _task_init()
         schema = to_arrow_schema(self._schema)
-        batches = _open_parquet(partition.path).iter_batches(
-            batch_size=1 << 16,
-            columns=["stripe_id", "column", "data", "vmin", "vmax"],
-            use_threads=False,
-        )
-        yield from _stripe_batches(batches, schema, list(schema.names), self._prune)
+        yield from _stripe_batches(_read_blob_splits(partition.splits), schema, list(schema.names), self._prune)
 
 
 class StripeBlobDataSource(DataSource):
     """``spark.read.format("stripeblob").load(path)``.
 
     Options: ``columns`` — comma-separated projection (only these blob
-    rows are decoded; the result schema is limited to them)."""
+    rows are decoded; the result schema is limited to them).
+
+    ``parallelism``: the reader's partition target (``register`` sets
+    it to the session's ``defaultParallelism``)."""
+
+    parallelism: int | None = None
 
     @classmethod
     def name(cls) -> str:
@@ -127,7 +146,7 @@ class StripeBlobDataSource(DataSource):
         return StructType([by_name[c] for c in keep])
 
     def reader(self, schema: StructType) -> StripeBlobReader:
-        return StripeBlobReader(self.options["path"], self._project(schema))
+        return StripeBlobReader(self.options["path"], self._project(schema), self.parallelism)
 
 
 def register(spark) -> None:
@@ -137,7 +156,14 @@ def register(spark) -> None:
 
     _ensure_workers_can_import(spark.range(1))
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(StripeBlobDataSource)
+
+    # defined here, so it pickles by value with the session's core count:
+    # the reader plans its partitions in a planner process with no
+    # SparkContext to ask
+    class _SessionStripeBlob(StripeBlobDataSource):
+        parallelism = spark.sparkContext.defaultParallelism
+
+    spark.dataSource.register(_SessionStripeBlob)
 
 
 def read_stripeblob(spark, path: str, columns: list[str] | None = None):

@@ -142,7 +142,8 @@ def test_stripeblob_reader_over_memory_store(spark):
     base, df = _blob_table_to_memory(spark)
     reader = StripeBlobReader(base, df.schema)
     parts = reader.partitions()
-    assert [p.path for p in parts] == [f"{base}/part-0.parquet"]
+    # one file of one row group: one partition reading all of it
+    assert [p.splits for p in parts] == [[(f"{base}/part-0.parquet", 0, 0, 1)]]
     batches = list(reader.read(parts[0]))
     got = pa.Table.from_batches(batches)
     assert got.num_rows == 2000
