@@ -51,14 +51,6 @@ def decode_width(code: int) -> int:
     return WIDTH_TABLE[code]
 
 
-def bits_required(vals: np.ndarray) -> int:
-    """Max number of bits needed to represent any value (unsigned view)."""
-    if len(vals) == 0:
-        return 1
-    m = int(np.max(vals.view(np.uint64) if vals.dtype == np.int64 else vals.astype(np.uint64)))
-    return max(1, m.bit_length())
-
-
 # 2^(e-1) - 1 for each float64 frexp exponent e in 0..65: a uint64 at or
 # below it had rounded up to the next power of two in float64
 _BELOW_POW2 = np.array([0] + [(1 << (e - 1)) - 1 for e in range(1, 66)], dtype=np.uint64)

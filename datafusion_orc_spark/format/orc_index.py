@@ -1,5 +1,5 @@
-"""ORC ROW_INDEX + statistics readers — the D19 seek surface for
-FOREIGN ORC files (files we did not write).
+"""ORC ROW_INDEX + statistics readers (the D19 seek surface) and the
+one prune rule of both file formats.
 
 The reference delegates decode to orc-rust, which evaluates row-group
 statistics from the per-column ROW_INDEX streams (stride default 10000,
@@ -8,15 +8,26 @@ pruning inputs:
 
 - ``parse_column_statistics``: ColumnStatistics (footer field 7,
   Metadata section, RowIndexEntry field 2) -> {n, has_null, min, max}
-  for int / string / double stats.
+  for int / date / string / double stats.
 - ``parse_row_index``: a stripe's per-column S_ROW_INDEX stream ->
   list of RowIndexEntry dicts (positions + statistics).
 - ``stripe_stats_from_metadata``: the file Metadata section -> per
   stripe, per column statistics (stripe pruning without touching any
   stripe bytes).
-- ``surviving_row_groups``: evaluate {column: (lo, hi)} bounds against
-  a stripe's row index -> sorted row-group ids that may contain
-  matching rows.
+
+Every skip of either format, at every grain (ORC stripes and row
+groups, blob stripes and K_ROWIDX sub-blocks), is decided by the same
+three pieces (elimination from range metadata as one operation at any
+partition grain, *Global Range Encoding for Efficient Partition
+Elimination*, EDBT 2018):
+
+- ``may_match``: can a [min, max] meet a bound (lo, hi)? An open end
+  (None or an int64 extreme, ``open_ends``) and unknown stats bound
+  nothing; scalars or numpy arrays of per-group stats.
+- ``surviving_groups``: intersect the per-column answers -> sorted
+  group ids (None = no stats, keep all; [] = nothing survives).
+- ``group_ranges``: group ids -> merged [start, stop) row ranges,
+  clamped to the stripe's rows.
 
 Everything parses with the generic protobuf walker in orc_proto
 (spec: ORC v1; verified against ORC-Java-written indexes and our own
@@ -26,6 +37,8 @@ writer's, which ORC-Java itself validates in test_orc_writer.py).
 from __future__ import annotations
 
 import struct
+
+import numpy as np
 
 from datafusion_orc_spark.format import orc_proto as proto
 
@@ -37,9 +50,10 @@ def _zigzag(u: int) -> int:
 def parse_column_statistics(buf: bytes) -> dict:
     """ColumnStatistics message -> {"n", "has_null", "min", "max"}.
 
-    min/max are ints (IntegerStatistics field 2), strings
-    (StringStatistics field 4) or floats (DoubleStatistics field 3);
-    None when the message carries no typed stats (e.g. root struct).
+    min/max are ints (IntegerStatistics field 2; DateStatistics field
+    7, in days), strings (StringStatistics field 4) or floats
+    (DoubleStatistics field 3); None when the message carries no typed
+    stats (e.g. root struct).
     """
     msg = proto.parse_message(buf)
     out = {
@@ -48,8 +62,9 @@ def parse_column_statistics(buf: bytes) -> dict:
         "min": None,
         "max": None,
     }
-    if 2 in msg:  # IntegerStatistics {1: sint64 min, 2: sint64 max}
-        sub = proto.parse_message(msg[2][0])
+    ints = msg.get(2) or msg.get(7)
+    if ints:  # Integer {1: sint64 min, 2: sint64 max} / Date {1: sint32, 2: sint32}
+        sub = proto.parse_message(ints[0])
         if 1 in sub:
             out["min"] = _zigzag(sub[1][0])
         if 2 in sub:
@@ -106,33 +121,48 @@ def open_ends(lo, hi) -> tuple:
     return (None if lo == INT64_MIN else lo, None if hi == INT64_MAX else hi)
 
 
-def _bounds_may_match(stats: dict, lo, hi) -> bool:
-    """Conservative: True unless the stats PROVE no value in [lo, hi]."""
-    if not stats:
-        return True
+def may_match(mins, maxs, lo, hi):
+    """The one prune rule: can a [min, max] meet the bound (lo, hi)?
+    Conservative: False only when the stats prove no value lies in
+    [lo, hi]. An open end (None or an int64 extreme) and an unknown
+    min or max (None) bound nothing. ``mins``/``maxs`` are scalars
+    (int, float, str, None) or equal-length numpy arrays, one entry per
+    group; the answer has their shape."""
     lo, hi = open_ends(lo, hi)
-    mn, mx = stats.get("min"), stats.get("max")
-    if mn is not None and hi is not None and mn > hi:
-        return False
-    if mx is not None and lo is not None and mx < lo:
-        return False
-    return True
+    keep = True
+    if lo is not None and maxs is not None:
+        keep = (maxs >= lo) & keep
+    if hi is not None and mins is not None:
+        keep = (mins <= hi) & keep
+    return np.broadcast_to(keep, mins.shape) if isinstance(mins, np.ndarray) else keep
 
 
-def surviving_row_groups(
-    col_indexes: dict[int, list[dict]], prune: dict[int, tuple]
-) -> list[int] | None:
-    """{orc column id: row index entries} x {column id: (lo, hi)} ->
-    sorted surviving row-group ids, or None when no pruned column has an
-    index (keep everything). [] means the whole stripe provably misses.
-    """
+def surviving_groups(keeps) -> list[int] | None:
+    """Intersect per-bound-column ``may_match`` answers (one bool per
+    group) -> sorted ids of the groups every column keeps. None when no
+    bound column has group stats (keep everything: an empty answer is a
+    missing index); [] when nothing survives."""
     sel: set[int] | None = None
-    for col, (lo, hi) in prune.items():
-        entries = col_indexes.get(col)
-        if not entries:
-            continue
-        ids = {g for g, e in enumerate(entries) if _bounds_may_match(e.get("stats", {}), lo, hi)}
-        sel = ids if sel is None else (sel & ids)
-    if sel is None:
+    for keep in keeps:
+        if np.size(keep):
+            ids = set(np.flatnonzero(keep).tolist())
+            sel = ids if sel is None else (sel & ids)
+    return None if sel is None else sorted(sel)
+
+
+def group_ranges(groups: list[int] | None, group_rows: int, n_rows: int) -> list[tuple[int, int]] | None:
+    """Surviving group ids of an ``n_rows`` stripe cut every
+    ``group_rows`` rows -> the [start, stop) row ranges to decode:
+    adjacent groups merge into one range, the last clamps to ``n_rows``.
+    None (decode the whole stripe) when ``groups`` is None or holds every
+    group; [] when nothing survives."""
+    if groups is None or len(groups) == -(-n_rows // group_rows):
         return None
-    return sorted(sel)
+    ranges: list[tuple[int, int]] = []
+    for g in groups:
+        s, e = g * group_rows, min((g + 1) * group_rows, n_rows)
+        if ranges and ranges[-1][1] == s:
+            ranges[-1] = (ranges[-1][0], e)
+        else:
+            ranges.append((s, e))
+    return ranges

@@ -43,6 +43,13 @@ from datafusion_orc_spark.codecs.varint import (
     zigzag_decode_scalar,
 )
 from datafusion_orc_spark.format import orc_proto as proto
+from datafusion_orc_spark.format.orc_index import (
+    group_ranges,
+    may_match,
+    parse_row_index,
+    stripe_stats_from_metadata,
+    surviving_groups,
+)
 
 
 _EPOCH_ORDINAL = _dt.date(1970, 1, 1).toordinal()
@@ -516,8 +523,6 @@ class OrcReader:
                 ps_len_pos = self._len - 1
                 ps_len = self._read(ps_len_pos, 1)[0]
                 meta_start = self._len - 1 - ps_len - self.postscript.footer_length - ml
-                from datafusion_orc_spark.format.orc_index import stripe_stats_from_metadata
-
                 self._stripe_stats = stripe_stats_from_metadata(
                     decompress_stream(self._read(meta_start, ml), self.postscript.compression)
                 )
@@ -628,29 +633,33 @@ class OrcReader:
         for si in idxs:
             info = self.footer.stripes[si]
             if prune_ids and si < len(sstats):
-                from datafusion_orc_spark.format.orc_index import _bounds_may_match
-
                 st = sstats[si]
-                if any(
-                    col < len(st) and not _bounds_may_match(st[col], lo, hi)
+                if not all(
+                    may_match(st[col]["min"], st[col]["max"], lo, hi)
                     for col, (lo, hi) in prune_ids.items()
+                    if col < len(st)
                 ):
                     continue  # whole stripe provably misses: zero reads
             sr = _StripeReader(self, info, needed_ids)
+            col_entries: dict[int, list] = {}
+
+            def entries_for(cid: int) -> list:
+                # lazy per-column index parse: the bound columns' for
+                # group pruning, nested children's on their first seek
+                if cid not in col_entries:
+                    col_entries[cid] = (
+                        parse_row_index(sr.stream(cid, proto.S_ROW_INDEX))
+                        if sr.has_stream(cid, proto.S_ROW_INDEX)
+                        else []
+                    )
+                return col_entries[cid]
+
             row_ranges = None
             if prune_ids and stride:
-                from datafusion_orc_spark.format.orc_index import (
-                    parse_row_index,
-                    surviving_row_groups,
+                groups = surviving_groups(
+                    [may_match(e["stats"].get("min"), e["stats"].get("max"), lo, hi) for e in entries_for(col)]
+                    for col, (lo, hi) in prune_ids.items()
                 )
-
-                idx = {
-                    col: parse_row_index(sr.stream(col, proto.S_ROW_INDEX))
-                    for col in prune_ids
-                    if sr.has_stream(col, proto.S_ROW_INDEX)
-                }
-                groups = surviving_row_groups(idx, prune_ids)
-                n_groups = -(-info.number_of_rows // stride)
                 if groups != []:
                     # POINT predicates (lo == hi) additionally consult the
                     # column's bloom filter index when the writer emitted
@@ -659,38 +668,20 @@ class OrcReader:
                     # can — groups whose filter proves absence drop here
                     # without decoding a value
                     groups = self._bloom_surviving_groups(
-                        sr, prune_ids, groups, n_groups
+                        sr, prune_ids, groups, -(-info.number_of_rows // stride)
                     )
-                if groups == []:
+                row_ranges = group_ranges(groups, stride, info.number_of_rows)
+                if row_ranges == []:
                     continue
-                if groups is not None and len(groups) < n_groups:
-                    row_ranges = [
-                        (g * stride, min((g + 1) * stride, info.number_of_rows))
-                        for g in groups
-                    ]
             batch = None
             if row_ranges is not None:
-                # positional seek: enter every stream at the surviving
-                # group's recorded positions and decode ONLY those rows —
-                # decode CPU inside foreign stripes scales with surviving
-                # rows, not stripe rows. A column whose row index lacks
-                # the group's entry falls back to decoding from the stripe
-                # start + slice below.
-                from datafusion_orc_spark.format.orc_index import parse_row_index
-
-                col_entries: dict[int, list] = {}
-
-                def entries_for(cid: int) -> list:
-                    # lazy per-column index parse: nested children resolve
-                    # their own ROW_INDEX on first touch
-                    if cid not in col_entries:
-                        col_entries[cid] = (
-                            parse_row_index(sr.stream(cid, proto.S_ROW_INDEX))
-                            if sr.has_stream(cid, proto.S_ROW_INDEX)
-                            else []
-                        )
-                    return col_entries[cid]
-
+                # positional seek: enter every stream at the first
+                # surviving group's recorded positions of each range and
+                # decode ONLY the range's rows (adjacent groups run on
+                # as one range) — decode CPU inside foreign stripes
+                # scales with surviving rows, not stripe rows. A column
+                # whose row index lacks the group's entry falls back to
+                # decoding from the stripe start + slice below.
                 per_column = [
                     [sr.decode_column(root.subtypes[i], e - s, s // stride, entries_for) for s, e in row_ranges]
                     for i in sel

@@ -132,8 +132,10 @@ def _field_double(tag: int, value: float) -> bytes:
 #
 # ColumnStatistics (ORC v1 proto): 1=numberOfValues 2=intStatistics
 # 3=doubleStatistics 4=stringStatistics 5=bucketStatistics
-# 8=binaryStatistics 10=hasNull. Int min/max/sum are sint64;
-# double stats are doubles; string sum = total byte length.
+# 7=dateStatistics 8=binaryStatistics 10=hasNull. Int min/max/sum are
+# sint64, date min/max sint32; double stats are doubles; string sum =
+# total byte length. Each row group's stats are collected once; stripe
+# and file stats are their ``_merge_stats``.
 
 def _collect_stats(arr: pa.Array, typ: pa.DataType) -> dict:
     n = len(arr)
@@ -150,15 +152,18 @@ def _collect_stats(arr: pa.Array, typ: pa.DataType) -> dict:
         # int64) — casting a 7.9M-value token child to int64 first was
         # a pure copy on the writer's hottest stats path. date32 still
         # casts (its scalars surface as datetime.date, not int), to
-        # int32: pyarrow casts date32 to no other integer type.
+        # int32: pyarrow casts date32 to no other integer type. A DATE
+        # has the spec's dateStatistics: min/max days, no sum.
         if pa.types.is_date32(typ):
             dense = dense.cast(pa.int32())
+            s["kind"] = "date"
+        else:
+            s["kind"] = "int"
+            total = int(pc.sum(dense).as_py())
+            if -(1 << 63) <= total < (1 << 63):
+                s["sum"] = total
         mm = pc.min_max(dense)
-        s["kind"] = "int"
         s["min"], s["max"] = int(mm["min"].as_py()), int(mm["max"].as_py())
-        total = int(pc.sum(dense).as_py())
-        if -(1 << 63) <= total < (1 << 63):
-            s["sum"] = total
     elif typ in (pa.float32(), pa.float64()):
         mm = pc.min_max(dense)
         s["kind"] = "double"
@@ -201,11 +206,12 @@ def _merge_stats(a: dict, b: dict) -> dict:
 def _serialize_stats(s: dict) -> bytes:
     body = _field_varint(1, s["n"])
     kind = s.get("kind")
-    if kind == "int" and "min" in s:
+    if kind in ("int", "date") and "min" in s:
+        # sint32 date days zigzag exactly as sint64 ints do
         sub = _field_sint(1, s["min"]) + _field_sint(2, s["max"])
         if "sum" in s:
             sub += _field_sint(3, s["sum"])
-        body += _field_bytes(2, sub)
+        body += _field_bytes(2 if kind == "int" else 7, sub)
     elif kind == "double" and "min" in s:
         sub = _field_double(1, s["min"]) + _field_double(2, s["max"])
         if "sum" in s:
@@ -674,7 +680,9 @@ class OrcWriter:
             arr, typ, gstarts = col_arrays[col_id]
             streams, enc, dict_size, stream_pos = _encode_orc_column(arr, typ, gstarts)
             encodings.append((enc, dict_size))
-            stats.append(_collect_stats(arr, typ))
+            gb = [int(g) for g in gstarts] + [len(arr)]
+            gstats = [_collect_stats(arr.slice(a, b - a), typ) for a, b in zip(gb[:-1], gb[1:])]
+            stats.append(functools.reduce(_merge_stats, gstats))
             # frame each stream; map raw seek positions through the
             # compression chunk table ([chunk offset, offset in chunk]
             # replaces the raw byte offset when compressed)
@@ -695,18 +703,12 @@ class OrcWriter:
                         mapped.append(raw_pos)
                 else:
                     mapped.append([])
-            gb = [int(g) for g in gstarts] + [len(arr)]
             entries: list[tuple[list[int], dict]] = []
-            for g in range(len(gstarts) if gstarts else 1):
+            for g, gstat in enumerate(gstats):
                 flat: list[int] = []
                 for per_stream in mapped:
                     if per_stream:
                         flat.extend(per_stream[g])
-                gstat = (
-                    stats[-1]
-                    if len(gb) == 2
-                    else _collect_stats(arr.slice(gb[g], gb[g + 1] - gb[g]), typ)
-                )
                 entries.append((flat, gstat))
             col_index.append(entries)
         # ROW_INDEX streams first (the stripe's index region): one

@@ -43,7 +43,7 @@ from datafusion_orc_spark.codecs.varint import (
     varint_decode_signed,
     varint_encode_signed,
 )
-from datafusion_orc_spark.format.orc_index import open_ends
+from datafusion_orc_spark.format.orc_index import group_ranges, may_match, surviving_groups
 from datafusion_orc_spark.format.orc_reader import _validity_buffer
 
 FORMAT_VERSION = 2  # v2: runfor RUN_POS/EXC_POS switched to delta+bitpack
@@ -145,16 +145,6 @@ def read_block_stats(blob: bytes) -> tuple[int, np.ndarray, np.ndarray] | None:
     block_rows, n_blocks = int(hdr[0]), int(hdr[1])
     inter, _ = varint_decode_signed(raw[pos:], 2 * n_blocks)
     return block_rows, inter[0::2], inter[1::2]
-
-
-def surviving_blocks(blob: bytes, lo: int, hi: int) -> np.ndarray | None:
-    """Block ids whose [min, max] intersects [lo, hi]; None = no index
-    (caller must keep every row)."""
-    bs = read_block_stats(blob)
-    if bs is None:
-        return None
-    _rows, mins, maxs = bs
-    return np.flatnonzero((maxs >= lo) & (mins <= hi))
 
 
 def _assemble(codec: str, n_rows: int, n_nulls: int, streams: list[tuple[int, bytes]]) -> bytes:
@@ -463,10 +453,10 @@ def decode_column(
     if row_ranges is None:
         windows = [(0, n)]
     else:
-        # prune_row_ranges emits SUB_BLOCK_ROWS-aligned ranges; the
-        # stripe's last block is usually partial, so clamp to the stripe
-        # row count — an unclamped end would reshape-crash the ranged
-        # bit_unpack or (widths 9..31) fabricate base-valued phantom rows
+        # clamp to the stripe row count (prune_row_ranges already
+        # does; a caller's block-aligned range may not) — an unclamped
+        # end would reshape-crash the ranged bit_unpack or (widths
+        # 9..31) fabricate base-valued phantom rows
         windows = [(max(0, s), min(n, e)) for s, e in row_ranges if s < n]
     whole = bool(n_nulls) or codec in _WHOLE_CODECS
     rows = [(0, n)] if whole else windows  # the row windows decoded here
@@ -585,37 +575,15 @@ def decode_stripe(
 def prune_row_ranges(
     blobs: dict[str, bytes], prune: dict[str, tuple[int, int]]
 ) -> list[tuple[int, int]] | None:
-    """Sub-block (D19) row ranges of a stripe that can satisfy ``prune``.
-
-    Returns None when no pruned column carries a K_ROWIDX index (keep all
-    rows); [] when provably NO row can match (skip the stripe); else the
-    merged [start, stop) ranges of surviving SUB_BLOCK_ROWS blocks."""
-    sel: set[int] | None = None
-    n_blocks = 0
+    """Sub-block (D19) row ranges of a stripe that can satisfy ``prune``:
+    the ``group_ranges`` of the SUB_BLOCK_ROWS blocks whose K_ROWIDX
+    stats ``may_match`` every bound. None when no pruned column carries
+    an index or every block survives (whole-stripe decode); [] when
+    provably NO row can match (skip the stripe)."""
+    keeps, n_rows = [], 0
     for col, (lo, hi) in prune.items():
-        blob = blobs.get(col)
-        if blob is None:
-            continue
-        bs = read_block_stats(blob)
-        if bs is None:
-            continue
-        _rows, mins, maxs = bs
-        n_blocks = max(n_blocks, len(mins))
-        lo, hi = open_ends(lo, hi)
-        keep = np.ones(len(mins), dtype=bool)
-        if lo is not None:
-            keep &= maxs >= int(lo)
-        if hi is not None:
-            keep &= mins <= int(hi)
-        ids = set(np.flatnonzero(keep).tolist())
-        sel = ids if sel is None else (sel & ids)
-    if sel is None or len(sel) == n_blocks:
-        return None  # no index, or every block survives: whole-stripe decode
-    ranges: list[tuple[int, int]] = []
-    for b in sorted(sel):
-        s, e = b * SUB_BLOCK_ROWS, (b + 1) * SUB_BLOCK_ROWS
-        if ranges and ranges[-1][1] == s:
-            ranges[-1] = (ranges[-1][0], e)
-        else:
-            ranges.append((s, e))
-    return ranges
+        bs = read_block_stats(blobs[col]) if col in blobs else None
+        if bs is not None:
+            keeps.append(may_match(bs[1], bs[2], lo, hi))
+            n_rows = _parse(blobs[col])[1]
+    return group_ranges(surviving_groups(keeps), SUB_BLOCK_ROWS, n_rows)

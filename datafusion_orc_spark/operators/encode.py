@@ -36,11 +36,14 @@ are composed from one copy of each piece:
   (``_read_blob_splits``). Any other blob table is read by the JVM,
   cut to the projected and bound columns by ``column IN (...)``;
 - ``_stripe_groups``: the one loop that regroups blob rows into stripes
-  (zero-copy blob slices) and the one stripe-prune rule: ``prune``
-  drops a stripe on its [vmin, vmax], inside the task;
-  ``_stripe_batches`` decodes each stripe it yields, with sub-block
-  pruning. The stripeblob DataSource (sources/stripeblob_datasource.py)
-  plans and reads through the blob file source and the same two.
+  (zero-copy blob slices), dropping a stripe whose [vmin, vmax] cannot
+  meet its ``prune`` bound, inside the task; ``_stripe_batches`` decodes
+  each stripe it yields, with sub-block pruning
+  (format/stripe.py ``prune_row_ranges``). Both skips ask the one prune
+  rule of both formats, ``format/orc_index.py`` ``may_match``, as the
+  ORC reader's stripe and row-group skips do. The stripeblob DataSource
+  (sources/stripeblob_datasource.py) plans and reads through the blob
+  file source and the same two.
 
 The entry points:
 
@@ -94,7 +97,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from datafusion_orc_spark.format.orc_index import INT64_MAX, INT64_MIN, open_ends
+from datafusion_orc_spark.format.orc_index import INT64_MAX, INT64_MIN, may_match
 from datafusion_orc_spark.format.stripe import decode_stripe, encode_stripe, prune_row_ranges
 from datafusion_orc_spark.sources.objectstore import LocalStore, resolve_store
 
@@ -1032,15 +1035,13 @@ def _stripe_groups(
     negative ints for bytes >= 0x80 — the FSST table parser read a
     221-symbol count as -35 and decoded every string to b"".
 
-    ``prune``: a stripe with any blob row whose [vmin, vmax] misses its
-    column's (lo, hi) bound is dropped, with its columns already held; a
-    NULL vmin (no integer stats) keeps it, and so does an open end. This
-    is the one stripe-prune rule of every blob read, so a bound column
-    must be ``expected``."""
+    ``prune``: a stripe with any blob row whose [vmin, vmax] cannot
+    ``may_match`` its column's (lo, hi) bound is dropped, with its
+    columns already held; a NULL vmin (no integer stats) keeps it, and
+    so does an open end. Every blob read prunes stripes here, so a bound
+    column must be ``expected``."""
     pending: dict[int, dict[str, memoryview]] = {}
     skipped: set[int] = set()
-    if prune:
-        prune = {c: open_ends(*b) for c, b in prune.items()}
     for b in batches:
         if not b.num_rows:
             continue
@@ -1055,12 +1056,10 @@ def _stripe_groups(
         for i, (sid, col) in enumerate(zip(sids, cols)):
             if sid in skipped or col not in expected:
                 continue
-            if prune and col in prune and vmins[i] is not None:
-                lo, hi = prune[col]
-                if (lo is not None and vmaxs[i] < lo) or (hi is not None and vmins[i] > hi):
-                    skipped.add(sid)
-                    pending.pop(sid, None)
-                    continue
+            if prune and col in prune and not may_match(vmins[i], vmaxs[i], *prune[col]):
+                skipped.add(sid)
+                pending.pop(sid, None)
+                continue
             got = pending.setdefault(sid, {})
             got[col] = mv[offs[i] : offs[i + 1]]
             if len(got) == len(expected):

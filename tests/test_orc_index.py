@@ -9,9 +9,10 @@ import pytest
 
 from datafusion_orc_spark.format import orc_proto as proto
 from datafusion_orc_spark.format.orc_index import (
+    may_match,
     parse_row_index,
     stripe_stats_from_metadata,
-    surviving_row_groups,
+    surviving_groups,
 )
 from datafusion_orc_spark.format.orc_reader import OrcReader, _StripeReader, decompress_stream
 from datafusion_orc_spark.format.orc_writer import write_orc
@@ -24,6 +25,15 @@ def _row_indexes(reader: OrcReader, stripe: int) -> dict[int, list[dict]]:
         for col in range(len(reader.footer.types))
         if sr.has_stream(col, proto.S_ROW_INDEX)
     }
+
+
+def _surviving_row_groups(idx: dict[int, list[dict]], prune: dict[int, tuple]) -> list[int] | None:
+    """The row groups of a stripe's parsed indexes that may match every
+    bound, as ``OrcReader.iter_stripes`` selects them."""
+    return surviving_groups(
+        [may_match(e["stats"].get("min"), e["stats"].get("max"), lo, hi) for e in idx.get(col, [])]
+        for col, (lo, hi) in prune.items()
+    )
 
 
 def test_parse_our_writers_multi_group_index(tmp_path):
@@ -43,10 +53,10 @@ def test_parse_our_writers_multi_group_index(tmp_path):
     assert maxs == [9999, 19999, 29999, 39999]
     assert idx[2][0]["stats"]["min"] == "name-000"
     # pruning math
-    assert surviving_row_groups(idx, {1: (25000, 26000)}) == [2]
-    assert surviving_row_groups(idx, {1: (9999, 10000)}) == [0, 1]
-    assert surviving_row_groups(idx, {1: (400000, 500000)}) == []
-    assert surviving_row_groups(idx, {7: (0, 1)}) is None  # no such column index
+    assert _surviving_row_groups(idx, {1: (25000, 26000)}) == [2]
+    assert _surviving_row_groups(idx, {1: (9999, 10000)}) == [0, 1]
+    assert _surviving_row_groups(idx, {1: (400000, 500000)}) == []
+    assert _surviving_row_groups(idx, {7: (0, 1)}) is None  # no such column index
 
 
 def test_parse_spark_orc_java_index(spark, tmp_path):
@@ -66,7 +76,30 @@ def test_parse_spark_orc_java_index(spark, tmp_path):
     assert k_entries[0]["stats"]["min"] == 0 and k_entries[3]["stats"]["max"] == 34999
     assert abs(idx[2][1]["stats"]["max"] - 96.0) < 1e-9  # double stats
     assert idx[3][0]["stats"]["min"] == "v0"             # string stats
-    assert surviving_row_groups(idx, {1: (12000, 12345)}) == [1]
+    assert _surviving_row_groups(idx, {1: (12000, 12345)}) == [1]
+
+
+def test_spark_date_statistics_prune_row_groups(spark, tmp_path):
+    """ORC-Java writes a DATE column's stats as dateStatistics (field
+    7): they parse as day numbers, and a point bound, as a date or as
+    its day number, keeps only its row group."""
+    import datetime
+    import glob
+
+    p = str(tmp_path / "java_dates")
+    spark.range(35000).selectExpr(
+        "id as k", "date_add(date'2020-01-01', cast(id div 100 as int)) as dt"
+    ).coalesce(1).write.orc(p)
+    f = glob.glob(f"{p}/*.orc")[0]
+    r = OrcReader(f)
+    epoch = datetime.date(1970, 1, 1)
+    day0 = (datetime.date(2020, 1, 1) - epoch).days
+    assert r.stripe_statistics()[0][2]["min"] == day0
+    assert [e["stats"]["max"] for e in _row_indexes(r, 0)[2]] == [day0 + 99, day0 + 199, day0 + 299, day0 + 349]
+    d = datetime.date(2020, 1, 1) + datetime.timedelta(days=123)
+    for bound in (d, (d - epoch).days):
+        got = OrcReader(f).read(prune={"dt": (bound, bound)})
+        assert got.column("k").to_pylist() == list(range(10000, 20000))
 
 
 def test_metadata_stripe_stats_parse(spark, tmp_path):

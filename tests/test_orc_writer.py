@@ -364,6 +364,47 @@ def test_orc_java_search_argument_skips_row_groups_within_stripe(spark, tmp_path
     assert surfaced == 10000, surfaced  # one row group of five
 
 
+def test_orc_java_reads_date_statistics(spark, tmp_path):
+    """A DATE column's file, stripe and row-group statistics are the
+    spec's dateStatistics: ORC-Java parses them as DateColumnStatistics
+    with the right days, and a DATE SearchArgument surfaces one row group
+    of the four."""
+    from py4j.java_gateway import get_field
+
+    n = 40000
+    days = np.arange(n, dtype=np.int32) // 4 - 3000  # sorted, pre-1970 too
+    t = pa.table({
+        "d": pa.array([None if i % 9 == 0 else int(v) for i, v in enumerate(days)], type=pa.date32()),
+        "k": pa.array(np.arange(n, dtype=np.int64)),
+    })
+    p = str(tmp_path / "dates.orc")
+    write_orc(t, p, stripe_rows=20000, compression="snappy")  # 2 stripes x 2 groups
+    jvm = spark._jvm
+    gw = spark.sparkContext._gateway
+    reader = jvm.org.apache.orc.OrcFile.createReader(
+        jvm.org.apache.hadoop.fs.Path(p),
+        jvm.org.apache.orc.OrcFile.readerOptions(spark._jsc.hadoopConfiguration()),
+    )
+    file_d = reader.getStatistics()[1]
+    assert file_d.getClass().getName().endswith("DateStatisticsImpl")
+    assert (file_d.getMinimumDayOfEpoch(), file_d.getMaximumDayOfEpoch()) == (-3000, 6999)
+    s1 = reader.getStripeStatistics()[1].getColumnStatistics()[1]
+    assert (s1.getMinimumDayOfEpoch(), s1.getMaximumDayOfEpoch()) == (2000, 6999)
+    SAF = jvm.org.apache.hadoop.hive.ql.io.sarg.SearchArgumentFactory
+    PL = jvm.org.apache.hadoop.hive.ql.io.sarg.PredicateLeaf
+    lo, hi = jvm.java.sql.Date.valueOf("1972-01-01"), jvm.java.sql.Date.valueOf("1972-02-01")
+    sarg = SAF.newBuilder().startAnd().between("d", PL.Type.DATE, lo, hi).end().build()
+    cols = gw.new_array(jvm.java.lang.String, 3)
+    cols[0], cols[1], cols[2] = None, "d", "k"
+    rr = reader.rows(reader.options().searchArgument(sarg, cols))
+    batch = reader.getSchema().createRowBatch()
+    surfaced = 0
+    while rr.nextBatch(batch):
+        surfaced += get_field(batch, "size")
+    rr.close()
+    assert surfaced == 10000, surfaced  # days 730..761: rows 14920..15047, one group
+
+
 def test_spark_row_group_seek_all_types_exact(spark, tmp_path):
     """Mid-stripe seek correctness across EVERY positioned stream shape
     (PRESENT, bool bit-RLE, byte-RLE, RLEv2, raw float, string-direct

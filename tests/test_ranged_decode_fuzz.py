@@ -215,3 +215,80 @@ def test_foreign_orc_positional_seek_fuzz(seed, shape):
             assert a.column(name).combine_chunks().equals(
                 b.column(name).combine_chunks()
             ), name
+
+
+_I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
+
+
+@st.composite
+def int64_runs(draw):
+    """An int64 column of 2-5 sub-blocks: runs, duplicates, random
+    literals and the int64 extremes, in random order."""
+    from datafusion_orc_spark.format.stripe import SUB_BLOCK_ROWS
+
+    n = draw(st.integers(2 * SUB_BLOCK_ROWS, 5 * SUB_BLOCK_ROWS))
+    value = st.one_of(
+        st.sampled_from([_I64_MIN, _I64_MIN + 1, -1, 0, 1, _I64_MAX - 1, _I64_MAX]),
+        st.integers(-1000, 1000),
+        st.integers(_I64_MIN, _I64_MAX),
+    )
+    cuts = draw(st.lists(st.integers(1, n - 1), max_size=11))
+    bounds = [0, *sorted(cuts), n]
+    segs = []
+    for start, stop in zip(bounds[:-1], bounds[1:]):
+        if draw(st.booleans()):  # a run
+            segs.append(np.full(stop - start, draw(value), dtype=np.int64))
+        else:  # literals between two drawn values
+            a, b = sorted((draw(value), draw(value)))
+            rng = np.random.default_rng(draw(st.integers(0, 2**31)))
+            segs.append(rng.integers(a, b, stop - start, dtype=np.int64, endpoint=True))
+    return np.concatenate(segs)
+
+
+def _bound(v):
+    """A prune bound end: open (None or an int64 extreme), a small or
+    random int, or one of the column's own values (a block's exact
+    min or max, where an off-by-one in the rule shows)."""
+    return st.one_of(
+        st.none(),
+        st.sampled_from([_I64_MIN, _I64_MAX, -1, 0, 1]),
+        st.integers(-1000, 1000),
+        st.integers(_I64_MIN, _I64_MAX),
+        st.integers(0, len(v) - 1).map(lambda i: int(v[i])),
+    )
+
+
+@settings(max_examples=30, deadline=None)
+@given(int64_runs(), st.data())
+def test_blob_sub_blocks_and_orc_row_groups_prune_alike(v, data):
+    """One prune rule for both formats: a blob column's sub-block ranges
+    equal the row ranges an ORC reader keeps when the same values are one
+    stripe with a SUB_BLOCK_ROWS row index stride, and every row whose
+    value lies in [lo, hi] falls inside them."""
+    import tempfile
+
+    import pyarrow as pa
+
+    from datafusion_orc_spark.format.orc_reader import OrcReader
+    from datafusion_orc_spark.format.orc_writer import write_orc
+    from datafusion_orc_spark.format.stripe import SUB_BLOCK_ROWS, encode_column, prune_row_ranges
+
+    n = len(v)
+    lo, hi = data.draw(_bound(v)), data.draw(_bound(v))
+    blob, _ = encode_column(pa.array(v))
+    ranges = prune_row_ranges({"v": blob}, {"v": (lo, hi)})
+    in_blob = np.full(n, ranges is None)
+    for s, e in ranges or []:
+        in_blob[s:e] = True
+    with tempfile.NamedTemporaryFile(suffix=".orc") as fh:
+        write_orc(pa.table({"v": v, "row": np.arange(n)}), fh.name, stripe_rows=n, row_index_stride=SUB_BLOCK_ROWS)
+        got = OrcReader(fh.name).read(prune={"v": (lo, hi)})
+    orc_rows = got.column("row").to_numpy()
+    assert np.array_equal(orc_rows, np.flatnonzero(in_blob))
+    assert np.array_equal(got.column("v").to_numpy(), v[orc_rows])
+    match = np.ones(n, dtype=bool)
+    if lo is not None:
+        match &= v >= lo
+    if hi is not None:
+        match &= v <= hi
+    assert np.isin(np.flatnonzero(match), orc_rows).all()

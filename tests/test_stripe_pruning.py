@@ -124,11 +124,11 @@ def test_sub_block_rowidx_stats_roundtrip():
     import numpy as np
     import pyarrow as pa
 
+    from datafusion_orc_spark.format.orc_index import may_match, surviving_groups
     from datafusion_orc_spark.format.stripe import (
         SUB_BLOCK_ROWS,
         encode_column,
         read_block_stats,
-        surviving_blocks,
     )
 
     n = 4 * SUB_BLOCK_ROWS
@@ -142,8 +142,8 @@ def test_sub_block_rowidx_stats_roundtrip():
     assert list(mins) == [i * SUB_BLOCK_ROWS for i in range(4)]
     assert list(maxs) == [(i + 1) * SUB_BLOCK_ROWS - 1 for i in range(4)]
     # query hits exactly one block
-    keep = surviving_blocks(blob, SUB_BLOCK_ROWS + 5, SUB_BLOCK_ROWS + 9)
-    assert list(keep) == [1]
+    keep = surviving_groups([may_match(mins, maxs, SUB_BLOCK_ROWS + 5, SUB_BLOCK_ROWS + 9)])
+    assert keep == [1]
     # small columns carry no index
     blob2, _ = encode_column(pa.array(np.arange(100, dtype=np.int64)))
     assert read_block_stats(blob2) is None
@@ -278,9 +278,9 @@ def test_ranged_decode_clamps_partial_last_block():
 
     # predicate hits only the partial last block
     lo, hi = 10**6 + 20_000, 10**6 + 30_000
-    ranges = st.prune_row_ranges({"k": blob}, {"k": (lo, hi)})
-    assert ranges == [(16_384, 24_576)]  # block-aligned, beyond n
-    got = st.decode_column(blob, arr.type, row_ranges=ranges)
+    assert st.prune_row_ranges({"k": blob}, {"k": (lo, hi)}) == [(16_384, n)]
+    # the decode clamps a block-aligned range that ends beyond n itself
+    got = st.decode_column(blob, arr.type, row_ranges=[(16_384, 24_576)])
     assert len(got) == n - 16_384
     assert got.to_numpy().tolist() == vals[16_384:].tolist()
 
@@ -323,6 +323,7 @@ def test_rowidx_trailing_empty_rows_keep_final_value():
     import pyarrow as pa
 
     from datafusion_orc_spark.format import stripe as st
+    from datafusion_orc_spark.format.orc_index import may_match, surviving_groups
 
     n = 24_000  # blocks: [0,8192) [8192,16384) [16384,24000)
     n_vals = 9_000  # rows 0..8999 have one value; 9000..23999 empty
@@ -342,8 +343,8 @@ def test_rowidx_trailing_empty_rows_keep_final_value():
     assert mins[1] == 8_192 and maxs[1] == n_vals - 1, (mins, maxs)
     # the all-empty block carries sentinel min>max: never survives
     assert mins[2] > maxs[2]
-    keep = st.surviving_blocks(blob, n_vals - 1, n_vals - 1)
-    assert list(keep) == [1]
+    keep = surviving_groups([may_match(mins, maxs, n_vals - 1, n_vals - 1)])
+    assert keep == [1]
     # end-to-end: the matching row decodes through the ranged path
     ranges = st.prune_row_ranges({"t": blob}, {"t": (n_vals - 1, n_vals - 1)})
     got = st.decode_column(blob, arr.type, row_ranges=ranges)
